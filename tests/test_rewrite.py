@@ -10,7 +10,9 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import assemble, rewrite, synth, tiling
 from vtzero_spark.mvt import tile as T
+from vtzero_spark.mvt import pbf
 from vtzero_spark.mvt import values as V
+from vtzero_spark.mvt.errors import MVTError
 
 from test_mvt_fixtures import feat, layer, tile
 
@@ -183,31 +185,62 @@ _KEY = b"fmt"
 _VAL = V.encode_value(V.VT_STRING, "png")
 
 
-def _scalar_filter(buf: bytes, key_b: bytes, val_b: bytes) -> bytes:
-    """Independent reference: per-feature Python loop + DictBuilder
-    rebuild via assemble_layer — no shared code with the vectorized
-    _vartag_features_bytes path."""
-    blobs = []
-    for lv in T.tile_layer_views(buf):
-        layer = T.parse_layer(lv)
-        try:
+def _scalar_filter(buf: bytes, key_b: bytes | None, val_bs=None,
+                   layer_sel: str | None = None) -> bytes:
+    """Independent reference: per-feature Python loop and a
+    property_mapper-style rebuild (each old dictionary index maps to a
+    new one on first use, add_key_without_dup_check) through
+    build_feature/build_layer — no shared code with the vectorized
+    path. ``val_bs``: one wire value, a list (IN-set) or None
+    (has-key); ``key_b`` None passes selected layers through."""
+    if isinstance(val_bs, bytes):
+        val_bs = [val_bs]
+    try:
+        blobs = []
+        for ordinal, lv in enumerate(T.tile_layer_views(buf)):
+            if layer_sel is not None and (
+                    ordinal != int(layer_sel) if layer_sel.isdigit()
+                    else T.layer_name_only(lv) != layer_sel):
+                continue
+            if key_b is None:
+                blobs.append(bytes(lv))
+                continue
+            layer = T.parse_layer(lv)
+            if key_b not in layer.keys:
+                continue
             kidx = layer.keys.index(key_b)
-            vidx = layer.values.index(val_b)
-        except ValueError:
-            continue
-        surv = [
-            f for f in layer.features
-            if any(int(f.tags[i]) == kidx and int(f.tags[i + 1]) == vidx
-                   for i in range(0, f.tags.size, 2))
-        ]
-        if not surv:
-            continue
-        feats = [(f.id, f.geom_type, f.geometry, layer.properties(f))
-                 for f in surv]
-        blobs.append(T.assemble_layer(
-            layer.name.encode("utf-8") if isinstance(layer.name, str)
-            else layer.name,
-            feats, version=layer.version, extent=layer.extent))
+            nv = len(layer.values)
+
+            def hit(k, v):
+                return k == kidx and v < nv and (
+                    val_bs is None or layer.values[v] in val_bs)
+
+            surv = [f for f in layer.features
+                    if any(hit(int(f.tags[i]), int(f.tags[i + 1]))
+                           for i in range(0, f.tags.size, 2))]
+            if not surv:
+                continue
+            kmap: dict[int, int] = {}
+            vmap: dict[int, int] = {}
+            keys, values, feats = [], [], []
+            for f in surv:
+                tags = []
+                for i in range(0, f.tags.size, 2):
+                    k, v = int(f.tags[i]), int(f.tags[i + 1])
+                    if k not in kmap:
+                        kmap[k] = len(keys)
+                        keys.append(layer.key(k))
+                    if v not in vmap:
+                        vmap[v] = len(values)
+                        values.append(layer.value(v))
+                    tags += [kmap[k], vmap[v]]
+                feats.append(T.build_feature(f.id, f.geom_type, f.geometry,
+                                             tags))
+            blobs.append(T.build_layer(
+                layer.name.encode("utf-8", "surrogateescape"), feats, keys,
+                values, version=layer.version, extent=layer.extent))
+    except MVTError:
+        return b""
     return T.build_tile(blobs)
 
 
@@ -305,3 +338,118 @@ def test_fuzz_in_set_matches_scalar_union(buf):
             else layer.name,
             feats, version=layer.version, extent=layer.extent))
     assert got == T.build_tile(blobs)
+
+
+# ------------------------------------------- batch kernel vs per tile
+
+import pyarrow as pa
+
+_INT7 = V.encode_value(V.VT_INT, 7)
+_MODES = [
+    (None, b"fmt", [_VAL]),                 # equality
+    (None, b"fmt", [_VAL, _INT7]),          # IN-set
+    (None, b"rank", None),                  # has-key
+    ("L1", b"fmt", None),                   # layer by name + has-key
+    ("0", b"fmt", [_VAL]),                  # layer by ordinal + equality
+    ("1", None, None),                      # verbatim passthrough
+    ("L0", None, None),
+    (None, None, None),
+]
+
+
+@st.composite
+def _rich_tile(draw):
+    """A tile from _tiles(), garbage bytes, or layers mixing v1
+    headers, duplicate keys, id-less features, out-of-range tag
+    indexes and features with a fixed32 field (which the columnar
+    parse leaves to parse_feature)."""
+    kind = draw(st.sampled_from(["plain", "garbage", "rich"]))
+    if kind == "plain":
+        return draw(_tiles())
+    if kind == "garbage":
+        return draw(st.binary(max_size=40))
+    layer_blobs = []
+    for li in range(draw(st.integers(1, 3))):
+        keys = draw(st.lists(st.sampled_from([b"fmt", b"rank", b"name"]),
+                             min_size=1, max_size=4))
+        values = draw(_values_tab)
+        feats = []
+        for _ in range(draw(st.integers(0, 5))):
+            tags = []
+            for _ in range(draw(st.integers(0, 3))):
+                tags.append(draw(st.integers(0, len(keys))))
+                tags.append(draw(st.integers(0, len(values))))
+            fb = T.build_feature(
+                draw(st.one_of(st.none(), st.integers(0, 2**64 - 1))), 1,
+                [9, draw(st.integers(0, 100)) * 2, 4], tags)
+            if draw(st.integers(0, 7)) == 0:
+                fb += pbf.fixed32_field(9, b"abcd")
+            feats.append(fb)
+        layer_blobs.append(layer(
+            name=f"L{li}".encode(), version=draw(st.sampled_from([1, 2])),
+            feats=feats, keys=keys, values=values))
+    return tile(*layer_blobs)
+
+
+def _batch(bufs) -> pa.RecordBatch:
+    n = len(bufs)
+    return pa.RecordBatch.from_pydict({
+        "z": [1] * n, "x": list(range(n)), "y": [2] * n,
+        "tile_bytes": bufs})
+
+
+def _run_batches(bufs, layer_sel, key_b, val_bs):
+    val_set = None if val_bs is None else set(val_bs)
+    out = pa.Table.from_batches(
+        list(rewrite._rewrite_batches(iter([_batch(bufs)]), layer_sel,
+                                      key_b, val_set)),
+        schema=rewrite._TILE_ARROW)
+    return out["tile_bytes"].to_pylist(), out["num_layers"].to_pylist()
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_rich_tile(), max_size=8))
+def test_fuzz_batch_rewrite_matches_per_tile_and_scalar(bufs):
+    for layer_sel, key_b, val_bs in _MODES:
+        got, nlay = _run_batches(bufs, layer_sel, key_b, val_bs)
+        per_tile = [rewrite.rewrite_tile_bytes(b, layer_sel, key_b, val_bs)
+                    for b in bufs]
+        want = [_scalar_filter(b, key_b, val_bs, layer_sel) for b in bufs]
+        assert got == per_tile == want
+        assert nlay == [T.count_layers(o) for o in got]
+
+
+def test_malformed_tile_empties_only_itself():
+    good = _mini_tile()
+    bufs = [good, b"\x1a\x05garb", good]
+    got, nlay = _run_batches(bufs, None, b"fmt", [_VAL])
+    one = rewrite.filter_tile_bytes(good, _KEY, _VAL)
+    assert one and got == [one, b"", one] and nlay == [1, 0, 1]
+
+
+def test_deviant_layer_alone_goes_to_feature_parser(monkeypatch):
+    """Only the layer holding a pattern-deviant feature is parsed
+    feature by feature; the other layers stay columnar."""
+    deviant = layer(name=b"d", keys=[b"fmt"], values=[_VAL], feats=[
+        T.build_feature(1, 1, POINT, [0, 0]) + pbf.fixed32_field(9, b"abcd"),
+        T.build_feature(2, 1, POINT2, [0, 0]),
+        T.build_feature(3, 1, POINT, [0, 0])])
+    plain = layer(name=b"p", keys=[b"fmt"], values=[_VAL], feats=[
+        T.build_feature(i, 1, POINT, [0, 0]) for i in range(4)])
+    bufs = [tile(plain, deviant), tile(plain), tile(plain, plain)]
+    want = [_scalar_filter(b, _KEY, _VAL) for b in bufs]
+    calls = []
+    real = T.parse_feature
+    monkeypatch.setattr(T, "parse_feature",
+                        lambda v: calls.append(v) or real(v))
+    got, _ = _run_batches(bufs, None, _KEY, [_VAL])
+    assert got == want
+    assert len(calls) == 3
+
+
+def test_rewrite_chunk_boundaries_change_nothing(monkeypatch):
+    bufs = [_mini_tile(), b"\x1a\x05garb", b""] * 4
+    whole = _run_batches(bufs, None, b"fmt", [_VAL])
+    monkeypatch.setattr(T, "SCAN_CHUNK_BYTES", 100)
+    assert len(list(T.scan_chunks([len(b) for b in bufs]))) > 4
+    assert _run_batches(bufs, None, b"fmt", [_VAL]) == whole

@@ -1002,14 +1002,14 @@ class _LayerValueTables:
     __slots__ = ("keys_dec", "canon", "vtype", "sval", "dval", "dmask",
                  "ival", "imask", "err_msgs", "err_flag", "err_any")
 
-    def __init__(self, layer) -> None:
+    def __init__(self, keys: list[bytes], values: list[bytes]) -> None:
         self.keys_dec = [k.decode("utf-8", errors="surrogateescape")
-                         for k in layer.keys]
+                         for k in keys]
         first: dict[str, int] = {}
         self.canon = np.fromiter(
             (first.setdefault(k, i) for i, k in enumerate(self.keys_dec)),
             np.int64, len(self.keys_dec))
-        nv = len(layer.values)
+        nv = len(values)
         self.vtype = np.zeros(nv, np.int32)
         self.sval: list[str | None] = [None] * nv
         self.dval = np.zeros(nv, np.float64)
@@ -1018,7 +1018,7 @@ class _LayerValueTables:
         self.imask = np.zeros(nv, bool)
         self.err_msgs: list[str | None] = [None] * nv
         self.err_flag = np.zeros(nv, bool)
-        for i, vb in enumerate(layer.values):
+        for i, vb in enumerate(values):
             try:
                 tag, pv = V.decode_value(bytes(vb))
             except MVTError as e:
@@ -1062,37 +1062,16 @@ def _bad_feature_status(tags, nk: int, nv: int,
     return "ok"
 
 
-def _resolve_layer_tags(feats, tabs: _LayerValueTables):
-    """Vectorized tag resolution for one layer (per-feature objects
-    in): see _resolve_tags_core."""
-    nf = len(feats)
-    npairs = np.fromiter((f.tags.size >> 1 for f in feats), np.int64, nf)
-    if int(npairs.sum()) == 0:
-        flat = np.empty(0, np.uint64)
-    else:
-        flat = np.concatenate(
-            [np.asarray(f.tags, np.uint64) for f in feats])
-    return _resolve_tags_core(flat, npairs, tabs,
-                              lambda j: feats[j].tags)
-
-
-def _resolve_layer_tags_block(tflat, toff, tabs: _LayerValueTables):
-    """Vectorized tag resolution over a columnar feature block
-    (tile.parse_features_block arrays in): see _resolve_tags_core."""
+def _resolve_layer_tags(tflat, toff, tabs: _LayerValueTables):
+    """Vectorized tag resolution for one layer's features (flat tag
+    values + offsets, as tile.parse_features_block lays them out),
+    validated with array ops (the columnar analog of
+    feature.hpp:298-311 create_properties_map). Returns (kept_key_idx,
+    kept_val_idx, per-feature kept-pair counts, per-feature status
+    list, per-feature bad mask); rare bad features get their exact
+    message from the scalar check."""
+    flat = np.asarray(tflat, np.uint64)
     npairs = np.diff(toff) >> 1
-    return _resolve_tags_core(
-        np.asarray(tflat, np.uint64), npairs, tabs,
-        lambda j: tflat[toff[j]:toff[j + 1]])
-
-
-def _resolve_tags_core(flat, npairs, tabs: _LayerValueTables, get_tags):
-    """Shared tag-resolution core: all features' tag pairs as ONE
-    flat array + per-feature pair counts, validated with array ops
-    (the columnar analog of feature.hpp:298-311
-    create_properties_map). Returns (kept_key_idx, kept_val_idx,
-    per-feature kept-pair counts, per-feature status list,
-    per-feature bad mask); rare bad features get their exact message
-    from the scalar fallback via ``get_tags``."""
     nf = len(npairs)
     nk = len(tabs.keys_dec)
     nv = tabs.vtype.size
@@ -1113,7 +1092,7 @@ def _resolve_tags_core(flat, npairs, tabs: _LayerValueTables, get_tags):
     if featbad.any():
         for j in np.flatnonzero(featbad):
             statuses[j] = _bad_feature_status(
-                get_tags(j), nk, nv, tabs.err_msgs)
+                flat[toff[j]:toff[j + 1]], nk, nv, tabs.err_msgs)
     goodp = ~featbad[pair_feat]
     gki = ki[goodp].astype(np.int64)
     gvi = vi[goodp].astype(np.int64)
@@ -1237,11 +1216,14 @@ def _props_arrow_type():
 
 
 def _decode_tile_batches_arrow(batches, want_props: bool = False):
-    """Arrow-native decode: per layer, the geometry column is built as
-    ONE zero-copy ListArray from the concatenated command values +
-    offsets — command ints never become Python list objects (the read-
-    path analog of the Arrow-native encoder). Rare error rows are
-    emitted as their own small batch.
+    """Arrow-native decode over tile.scan_tile_batch: each chunk of an
+    Arrow batch (tile.SCAN_CHUNK_BYTES input bytes) is parsed as one
+    layer table plus one columnar feature block, and every output
+    column is a gather from them by the feature's layer id. The
+    geometry column is ONE zero-copy ListArray from the block's flat
+    command values + offsets; command ints never become Python
+    objects. Error rows (tiles or layers whose parse raised) follow
+    as one small batch per Arrow batch.
 
     With ``want_props`` the decoded key/value map column is assembled
     columnar too: per-layer dictionaries resolve once into value
@@ -1265,210 +1247,132 @@ def _decode_tile_batches_arrow(batches, want_props: bool = False):
     schema = pa.schema(fields)
 
     for batch in batches:
-        zs = batch.column(batch.schema.get_field_index("z")).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        xs = batch.column(batch.schema.get_field_index("x")).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        ys = batch.column(batch.schema.get_field_index("y")).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        tb = batch.column(batch.schema.get_field_index("tile_bytes"))
-
-        acc: dict[str, list] = {k: [] for k, _ in fields}
-        gflat_parts: list[np.ndarray] = []
-        glens_parts: list[np.ndarray] = []
-        err_rows: list[dict] = []
-        # props accumulators: indices are re-based into the batch-wide
-        # concatenated key/value tables so one gather serves all layers
-        pair_k_parts: list[np.ndarray] = []
-        pair_v_parts: list[np.ndarray] = []
-        counts_parts: list[np.ndarray] = []
-        bad_parts: list[np.ndarray] = []
-        keys_strs: list[str | None] = []
-        val_tabs: list[_LayerValueTables] = []
-        key_base = 0
-        val_base = 0
-
-        for ri in range(len(zs)):
-            z, x, y = int(zs[ri]), int(xs[ri]), int(ys[ri])
-            try:
-                views = T.tile_layer_views(tb[ri].as_py())
-            except MVTError as e:
-                err_rows.append((z, x, y, -1, f"{type(e).__name__}: {e}"))
-                continue
-            for li, lv in enumerate(views):
-                try:
-                    # columnar-first: the common emission pattern
-                    # parses straight to arrays (zero per-feature
-                    # objects); any deviation falls back to the exact
-                    # per-feature parsers — including their error
-                    # semantics (a feature-level FormatError aborts
-                    # the layer, caught right here as before)
-                    layer = T.parse_layer(lv, parse_features=False)
-                    fviews = layer.feature_views
-                    blk = T.parse_features_block(fviews)
-                    if blk is None:
-                        fast = T._parse_features_fast(fviews)
-                        feats = fast if fast is not None else \
-                            [T.parse_feature(fv) for fv in fviews]
-                    else:
-                        feats = None
-                except MVTError as e:
-                    err_rows.append((z, x, y, li, f"{type(e).__name__}: {e}"))
-                    continue
-                nf = len(fviews)
-                if nf == 0:
-                    continue
-                acc["z"].append(np.full(nf, z, np.int64))
-                acc["x"].append(np.full(nf, x, np.int64))
-                acc["y"].append(np.full(nf, y, np.int64))
-                acc["layer_ordinal"].append(np.full(nf, li, np.int32))
-                acc["layer_name"].append([layer.name] * nf)
-                acc["version"].append(np.full(nf, layer.version, np.int32))
-                acc["extent"].append(np.full(nf, layer.extent, np.int32))
-                acc["feature_ordinal"].append(np.arange(nf, dtype=np.int32))
-                if blk is not None:
-                    acc["feature_id"].append((blk["ids"],
-                                              ~blk["has_id"]))
-                    acc["geom_type"].append(
-                        blk["gtypes"].astype(np.int32))
-                    gflat_parts.append(blk["gflat"].astype(np.int64))
-                    glens_parts.append(np.diff(blk["goff"]))
-                    acc["geometry_nbytes"].append(
-                        blk["gnb"].astype(np.int32))
-                    acc["num_properties"].append(
-                        (np.diff(blk["toff"]) >> 1).astype(np.int32))
-                else:
-                    ids_l = [f.id for f in feats]
-                    acc["feature_id"].append((
-                        np.array([0 if v is None else v for v in ids_l],
-                                 np.int64),
-                        np.array([v is None for v in ids_l], bool)))
-                    acc["geom_type"].append(
-                        np.fromiter((f.geom_type for f in feats),
-                                    np.int32, nf))
-                    geoms = [f.geometry for f in feats]
-                    gflat_parts.append(
-                        np.concatenate(geoms).astype(np.int64) if geoms
-                        else np.empty(0, np.int64))
-                    glens_parts.append(
-                        np.fromiter((g.size for g in geoms), np.int64, nf))
-                    acc["geometry_nbytes"].append(
-                        np.fromiter((f.geometry_nbytes for f in feats),
-                                    np.int32, nf))
-                    acc["num_properties"].append(
-                        np.fromiter((f.tags.size // 2 for f in feats),
-                                    np.int32, nf))
-                if want_props:
-                    tabs = _LayerValueTables(layer)
-                    if blk is not None:
-                        kki, kvi, counts, statuses, featbad = \
-                            _resolve_layer_tags_block(
-                                blk["tflat"], blk["toff"], tabs)
-                    else:
-                        kki, kvi, counts, statuses, featbad = \
-                            _resolve_layer_tags(feats, tabs)
-                    pair_k_parts.append(kki + key_base)
-                    pair_v_parts.append(kvi + val_base)
-                    counts_parts.append(counts)
-                    bad_parts.append(featbad)
-                    keys_strs.extend(tabs.keys_dec)
-                    val_tabs.append(tabs)
-                    key_base += len(tabs.keys_dec)
-                    val_base += tabs.vtype.size
-                    acc["decode_status"].append(statuses)
-                else:
-                    acc["decode_status"].append(["ok"] * nf)
-
-        if acc["z"]:
-            glens = np.concatenate(glens_parts)
-            offsets = np.zeros(len(glens) + 1, dtype=np.int32)
-            np.cumsum(glens, out=offsets[1:])
-            geometry = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                pa.array(np.concatenate(gflat_parts)
-                         if gflat_parts else np.empty(0, np.int64),
-                         pa.int64()))
-            props_col = None
-            if want_props:
-                pk = (np.concatenate(pair_k_parts) if pair_k_parts
-                      else np.empty(0, np.int64))
-                pv = (np.concatenate(pair_v_parts) if pair_v_parts
-                      else np.empty(0, np.int64))
-                keys_tab = _pa_str_array(keys_strs, pa)
-                items_tab = pa.StructArray.from_arrays([
-                    pa.array(np.concatenate(
-                        [t.vtype for t in val_tabs])
-                        if val_tabs else np.empty(0, np.int32), pa.int32()),
-                    _pa_str_array([s for t in val_tabs for s in t.sval],
-                                  pa),
-                    pa.array(np.concatenate(
-                        [t.dval for t in val_tabs])
-                        if val_tabs else np.empty(0, np.float64),
-                        pa.float64(),
-                        mask=~np.concatenate([t.dmask for t in val_tabs])
-                        if val_tabs else None),
-                    pa.array(np.concatenate(
-                        [t.ival for t in val_tabs])
-                        if val_tabs else np.empty(0, np.int64),
-                        pa.int64(),
-                        mask=~np.concatenate([t.imask for t in val_tabs])
-                        if val_tabs else None),
-                ], names=["vtype", "sval", "dval", "ival"])
-                pair_keys = keys_tab.take(pa.array(pk, pa.int64()))
-                pair_items = items_tab.take(pa.array(pv, pa.int64()))
-                counts_all = (np.concatenate(counts_parts) if counts_parts
-                              else np.empty(0, np.int64))
-                bad_all = (np.concatenate(bad_parts) if bad_parts
-                           else np.empty(0, bool))
-                good_counts = counts_all[~bad_all]
-                offs = np.zeros(good_counts.size + 1, np.int32)
-                np.cumsum(good_counts, out=offs[1:])
-                good_map = pa.MapArray.from_arrays(
-                    pa.array(offs, pa.int32()), pair_keys, pair_items)
-                # bad features -> null map via take with null index
-                idx = (np.cumsum(~bad_all) - 1).astype(np.int32)
-                props_col = good_map.take(
-                    pa.array(idx, pa.int32(), mask=bad_all))
-            cols = []
-            for name, typ in fields:
-                if name == "geometry":
-                    cols.append(geometry)
-                elif name == "properties":
-                    cols.append(props_col)
-                elif name == "layer_name":
-                    cols.append(_pa_str_array(
-                        [v for ch in acc[name] for v in ch], pa))
-                elif name == "feature_id":
-                    cols.append(pa.array(
-                        np.concatenate([ch[0] for ch in acc[name]]),
-                        typ,
-                        mask=np.concatenate([ch[1] for ch in acc[name]])))
-                elif name == "decode_status":
-                    cols.append(pa.array(
-                        [v for ch in acc[name] for v in ch], typ))
-                else:
-                    cols.append(pa.array(np.concatenate(acc[name]), typ))
-            yield pa.RecordBatch.from_arrays(cols, schema=schema)
+        zxy = [batch.column(c).to_numpy(zero_copy_only=False)
+               .astype(np.int64) for c in ("z", "x", "y")]
+        bufs = batch.column("tile_bytes").to_pylist()
+        err_rows: list[tuple] = []
+        for lo, hi in T.scan_chunks([len(b) for b in bufs]):
+            s = T.scan_tile_batch(bufs[lo:hi])
+            err_rows += [(lo + ti, -1, e)
+                         for ti, e in enumerate(s.tile_err) if e]
+            err_rows += [(lo + int(s.tile[li]), int(s.ordinal[li]), e)
+                         for li, e in enumerate(s.err) if e]
+            if s.features["ids"].size:
+                yield _decode_scan_batch(s, [c[lo:hi] for c in zxy],
+                                         want_props, schema, pa)
         if err_rows:
-            z_, x_, y_, li_, st_ = zip(*err_rows)
+            # tile order, each tile's layers in order
+            err_rows.sort(key=lambda r: r[0])
+            ti_, li_, e_ = zip(*err_rows)
+            ti_ = np.array(ti_, np.int64)
             n = len(err_rows)
             none = [None] * n
             err_cols = [
-                pa.array(list(z_), pa.int64()),
-                pa.array(list(x_), pa.int64()),
-                pa.array(list(y_), pa.int64()),
-                pa.array(list(li_), pa.int32()),
+                pa.array(zxy[0][ti_], pa.int64()),
+                pa.array(zxy[1][ti_], pa.int64()),
+                pa.array(zxy[2][ti_], pa.int64()),
+                pa.array(li_, pa.int32()),
                 pa.array(none, pa.string()),
                 pa.array(none, pa.int32()), pa.array(none, pa.int32()),
                 pa.array([-1] * n, pa.int32()),
                 pa.array(none, pa.int64()), pa.array(none, pa.int32()),
                 pa.array(none, pa.list_(pa.int64())),
                 pa.array(none, pa.int32()), pa.array(none, pa.int32()),
-                pa.array(list(st_), pa.string()),
+                pa.array([f"{type(e).__name__}: {e}" for e in e_],
+                         pa.string()),
             ]
             if want_props:
                 err_cols.append(pa.nulls(n, _props_arrow_type()))
             yield pa.RecordBatch.from_arrays(err_cols, schema=schema)
+
+
+def _decode_scan_batch(s, zxy, want_props: bool, schema, pa):
+    """One RecordBatch of feature rows from a tile scan (see
+    _decode_tile_batches_arrow)."""
+    F = s.features
+    fl = F["layer"]
+    nf = fl.size
+    ft = s.tile[fl]
+    goff = F["goff"].astype(np.int32)
+    toff = F["toff"]
+    cols = {
+        "z": zxy[0][ft], "x": zxy[1][ft], "y": zxy[2][ft],
+        "layer_ordinal": s.ordinal[fl],
+        "layer_name": _pa_str_array(s.name, pa).take(pa.array(fl)),
+        "version": s.version[fl], "extent": s.extent[fl],
+        "feature_ordinal": np.arange(nf) - s.foff[fl],
+        "feature_id": pa.array(F["ids"].astype(np.int64), pa.int64(),
+                               mask=~F["has_id"]),
+        "geom_type": F["gtypes"],
+        "geometry": pa.ListArray.from_arrays(
+            pa.array(goff, pa.int32()),
+            pa.array(F["gflat"].astype(np.int64), pa.int64())),
+        "geometry_nbytes": F["gnb"],
+        "num_properties": np.diff(toff) >> 1,
+    }
+    if not want_props:
+        cols["decode_status"] = pa.array(["ok"] * nf, pa.string())
+    else:
+        # props accumulators: indices are re-based into the batch-wide
+        # concatenated key/value tables so one gather serves all layers
+        pair_k_parts: list[np.ndarray] = []
+        pair_v_parts: list[np.ndarray] = []
+        counts_parts: list[np.ndarray] = []
+        bad_parts: list[np.ndarray] = []
+        status: list[str] = []
+        keys_strs: list[str | None] = []
+        val_tabs: list[_LayerValueTables] = []
+        key_base = 0
+        val_base = 0
+        for li in np.flatnonzero(np.diff(s.foff)).tolist():
+            tabs = _LayerValueTables(
+                s.keys[s.koff[li]:s.koff[li + 1]],
+                s.values[s.voff[li]:s.voff[li + 1]])
+            a, b = s.foff[li], s.foff[li + 1]
+            kki, kvi, counts, statuses, featbad = \
+                _resolve_layer_tags(
+                    F["tflat"][toff[a]:toff[b]], toff[a:b + 1] - toff[a],
+                    tabs)
+            pair_k_parts.append(kki + key_base)
+            pair_v_parts.append(kvi + val_base)
+            counts_parts.append(counts)
+            bad_parts.append(featbad)
+            status += statuses
+            keys_strs.extend(tabs.keys_dec)
+            val_tabs.append(tabs)
+            key_base += len(tabs.keys_dec)
+            val_base += tabs.vtype.size
+        keys_tab = _pa_str_array(keys_strs, pa)
+        items_tab = pa.StructArray.from_arrays([
+            pa.array(np.concatenate([t.vtype for t in val_tabs]),
+                     pa.int32()),
+            _pa_str_array([v for t in val_tabs for v in t.sval], pa),
+            pa.array(np.concatenate([t.dval for t in val_tabs]),
+                     pa.float64(),
+                     mask=~np.concatenate([t.dmask for t in val_tabs])),
+            pa.array(np.concatenate([t.ival for t in val_tabs]),
+                     pa.int64(),
+                     mask=~np.concatenate([t.imask for t in val_tabs])),
+        ], names=["vtype", "sval", "dval", "ival"])
+        pair_keys = keys_tab.take(
+            pa.array(np.concatenate(pair_k_parts), pa.int64()))
+        pair_items = items_tab.take(
+            pa.array(np.concatenate(pair_v_parts), pa.int64()))
+        bad_all = np.concatenate(bad_parts)
+        good_counts = np.concatenate(counts_parts)[~bad_all]
+        offs = np.zeros(good_counts.size + 1, np.int32)
+        np.cumsum(good_counts, out=offs[1:])
+        good_map = pa.MapArray.from_arrays(
+            pa.array(offs, pa.int32()), pair_keys, pair_items)
+        # bad features -> null map via take with null index
+        idx = (np.cumsum(~bad_all) - 1).astype(np.int32)
+        cols["properties"] = good_map.take(
+            pa.array(idx, pa.int32(), mask=bad_all))
+        cols["decode_status"] = pa.array(status, pa.string())
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] if isinstance(cols[f.name], (pa.Array, pa.ChunkedArray))
+         else pa.array(cols[f.name], f.type) for f in schema],
+        schema=schema)
 
 
 def decode_tiles_arrow(tiles: DataFrame, properties: bool = False) -> DataFrame:

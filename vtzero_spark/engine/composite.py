@@ -290,7 +290,7 @@ def _overzoom_point_layer_fast(layer: T.Layer, k: int
         gf[1::3] = nzx[sel]
         gf[2::3] = nzy[sel]
         goff = np.arange(sel.size + 1, dtype=np.int64) * 3
-        fb = _vartag_features_bytes(
+        fb, _ = _vartag_features_bytes(
             ids[sel], has_id[sel],
             np.full(sel.size, G.GEOM_POINT, np.int64),
             gf, goff, new_tags, s_toff)

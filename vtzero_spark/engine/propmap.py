@@ -109,7 +109,7 @@ def _project_layer(layer: T.Layer, kept: np.ndarray,
     gflat = (np.concatenate([f.geometry for f in fs]).astype(np.uint64)
              if nf and goff[-1] else np.zeros(0, np.uint64))
 
-    features_bytes = _vartag_features_bytes(
+    features_bytes, _ = _vartag_features_bytes(
         ids, has_id, gtypes, gflat, goff, new_tags, s_toff)
     header = (
         varint_field(T.LAYER_VERSION, layer.version)

@@ -144,9 +144,17 @@ def decode_varint_array(buf: bytes | np.ndarray) -> np.ndarray:
     lengths = ends - starts + 1
     if int(lengths.max()) > 10:
         raise FormatError("varint too long")
-    values = np.zeros(ends.size, dtype=_U64)
-    maxlen = int(lengths.max())
-    for j in range(maxlen):
+    return varint_runs(raw, starts, lengths)
+
+
+def varint_runs(raw: np.ndarray, starts: np.ndarray,
+                lengths: np.ndarray) -> np.ndarray:
+    """Values of the varints at ``raw[starts[i]:starts[i] + lengths[i]]``
+    (each 1-10 bytes, already delimited) -> uint64 array."""
+    if not starts.size:
+        return np.empty(0, dtype=_U64)
+    values = (raw[starts] & 0x7F).astype(_U64)
+    for j in range(1, int(lengths.max())):
         mask = lengths > j
         b = raw[starts[mask] + j].astype(_U64)
         values[mask] |= (b & _U64(0x7F)) << _U64(7 * j)
@@ -242,20 +250,34 @@ def scan_fields(buf: bytes) -> Iterator[tuple[int, int, object]]:
     """Iterate (field, wire_type, value) over a message.
 
     value is int for varint/fixed (fixed returned as raw bytes),
-    bytes view for length-delimited.
+    bytes view for length-delimited. One-byte keys, varints and
+    lengths (nearly all of them in a tile) decode inline; longer ones
+    go through decode_varint.
     """
     pos = 0
     n = len(buf)
     while pos < n:
-        key, pos = decode_varint(buf, pos)
+        key = buf[pos]
+        if key < 0x80:
+            pos += 1
+        else:
+            key, pos = decode_varint(buf, pos)
         field = key >> 3
         wire = key & 0x7
         if field == 0:
             raise FormatError("invalid field number 0")
         if wire == WT_VARINT:
-            value, pos = decode_varint(buf, pos)
+            if pos < n and buf[pos] < 0x80:
+                value = buf[pos]
+                pos += 1
+            else:
+                value, pos = decode_varint(buf, pos)
         elif wire == WT_LEN:
-            ln, pos = decode_varint(buf, pos)
+            if pos < n and buf[pos] < 0x80:
+                ln = buf[pos]
+                pos += 1
+            else:
+                ln, pos = decode_varint(buf, pos)
             if pos + ln > n:
                 raise FormatError("truncated length-delimited field")
             value = buf[pos:pos + ln]

@@ -23,11 +23,12 @@ first-appearance order (builder_impl.hpp:104-107,180-183).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
 
-from .errors import FormatError, OutOfRangeError, VersionError
+from .errors import FormatError, MVTError, OutOfRangeError, VersionError
 from .pbf import (
     WT_LEN,
     WT_VARINT,
@@ -38,6 +39,7 @@ from .pbf import (
     len_field,
     scan_fields,
     varint_field,
+    varint_runs,
 )
 
 # pbf field numbers (types.hpp:92-110)
@@ -160,242 +162,165 @@ def parse_feature(buf: bytes) -> Feature:
     return Feature(fid, int(geom_type), geometry, geometry_nbytes, tags)
 
 
-def _parse_features_fast(views: list[bytes]) -> list[Feature] | None:
-    """Vectorized feature parse: a feature message contains only
-    varint and LEN-of-varints fields, so the concatenation of all
-    feature views is (normally) one contiguous varint stream — decode
-    it once, then walk each feature over pre-decoded integers. Any
-    alignment anomaly (fixed-wire field, payload ending mid-varint,
-    truncation) falls back to the exact scalar parser for that feature
-    (or the whole batch), so error semantics are identical.
-
-    Returns None when the batch can't be globally decoded."""
-    if not views:
-        return []
-    buf = b"".join(bytes(v) for v in views)
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    if raw.size == 0:
-        return [parse_feature(v) for v in views]
-    is_end = (raw & 0x80) == 0
-    lens = np.fromiter((len(v) for v in views), dtype=np.int64, count=len(views))
-    offs = np.zeros(len(views) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    nonempty = offs[1:][lens > 0]
-    if nonempty.size and not is_end[nonempty - 1].all():
-        return None
-    try:
-        vals = decode_varint_array(raw)
-    except FormatError:
-        return None
-    cnt_before = np.zeros(raw.size + 1, dtype=np.int64)
-    np.cumsum(is_end, out=cnt_before[1:])
-    ends = np.flatnonzero(is_end)
-    starts_g = np.empty(ends.size, dtype=np.int64)
-    if ends.size:
-        starts_g[0] = 0
-        starts_g[1:] = ends[:-1] + 1
-
-    feats: list[Feature] = []
-    for j in range(len(views)):
-        b0, b1 = int(offs[j]), int(offs[j + 1])
-        i, i_end = int(cnt_before[b0]), int(cnt_before[b1])
-        fid: int | None = None
-        gtype = 0
-        geometry: np.ndarray | None = None
-        gnb = 0
-        tags: np.ndarray | None = None
-        ok = True
-        while i < i_end:
-            key = int(vals[i])
-            fld, wt = key >> 3, key & 0x7
-            if fld == 0:
-                raise FormatError("invalid field number 0")
-            if wt == WT_VARINT:
-                if i + 1 >= i_end:
-                    ok = False
-                    break
-                v = int(vals[i + 1])
-                i += 2
-                if fld == FEATURE_ID:
-                    fid = v
-                elif fld == FEATURE_TYPE:
-                    if v > 3:
-                        raise FormatError("Unknown geometry type (spec 4.3.4)")
-                    gtype = v
-            elif wt == WT_LEN:
-                if i + 1 >= i_end:
-                    ok = False
-                    break
-                ln = int(vals[i + 1])
-                if ln == 0:
-                    cnt = 0
-                else:
-                    if i + 2 >= starts_g.size:
-                        ok = False
-                        break
-                    ps = int(starts_g[i + 2])
-                    pe = ps + ln
-                    if pe > b1 or not is_end[pe - 1]:
-                        ok = False
-                        break
-                    cnt = int(cnt_before[pe]) - int(cnt_before[ps])
-                pv = vals[i + 2:i + 2 + cnt]
-                i += 2 + cnt
-                if fld == FEATURE_TAGS:
-                    if tags is not None:
-                        raise FormatError("Feature has more than one tags field")
-                    tags = pv.astype(np.uint64)
-                elif fld == FEATURE_GEOMETRY:
-                    if geometry is not None and geometry.size > 0:
-                        raise FormatError("Feature has more than one geometry field")
-                    geometry = pv.astype(np.uint64)
-                    gnb = ln
-            else:
-                ok = False  # fixed/unknown wire type: exact scalar semantics
-                break
-        if not ok:
-            feats.append(parse_feature(views[j]))
-            continue
-        if geometry is None or geometry.size == 0:
-            raise FormatError("Missing geometry field in feature (spec 4.2)")
-        if tags is None:
-            tags = np.empty(0, dtype=np.uint64)
-        if tags.size % 2 != 0:
-            raise FormatError("unpaired property key/value indexes (spec 4.4)")
-        feats.append(Feature(fid, int(gtype), geometry, gnb, tags))
-    return feats
-
-
-def parse_features_block(views: list[bytes]):
+def parse_features_block(views: list[bytes]) -> dict:
     """COLUMNAR feature parse for the common emission pattern: every
     feature laid out as ``[type][id?][geometry][tags?]`` (the order
     build_feature and every encoder here emits, and what real tiles
-    overwhelmingly carry).  The whole batch pre-decodes as one varint
-    stream (the _parse_features_fast trick), then ids / geometry
-    offsets / tag offsets come out as pure array gathers — ZERO
-    per-feature Python objects.  Returns a dict of arrays
-    (ids, has_id, gtypes, gflat, goff, gnb, tflat, toff) or None when
-    any feature deviates from the pattern (unknown fields, fixed wire
-    types, structural errors) — the caller then falls back to the
-    per-feature parsers, which reproduce exact error semantics."""
+    overwhelmingly carry). All views concatenate into one varint
+    stream, cut at every feature end so no varint spans two features,
+    and decode at once; ids / geometry offsets / tag offsets then come
+    out as pure array gathers, with ZERO per-feature Python objects.
+
+    Returns a dict of arrays (ids uint64, has_id, gtypes, gflat, goff,
+    gnb, tflat, toff) plus ``ok``: False for every feature that
+    deviates from the pattern (unknown fields, fixed wire types,
+    structural errors). A deviant feature's entries are empty; the
+    caller parses it with parse_feature, which reproduces the exact
+    error semantics."""
     nf = len(views)
-    empty = {
-        "ids": np.empty(0, np.int64), "has_id": np.empty(0, bool),
-        "gtypes": np.empty(0, np.int64),
-        "gflat": np.empty(0, np.uint64), "goff": np.zeros(1, np.int64),
-        "gnb": np.empty(0, np.int64),
-        "tflat": np.empty(0, np.uint64), "toff": np.zeros(1, np.int64),
-    }
-    if nf == 0:
-        return empty
-    buf = b"".join(bytes(v) for v in views)
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    if raw.size == 0:
-        return None
-    is_end = (raw & 0x80) == 0
-    lens = np.fromiter((len(v) for v in views), dtype=np.int64, count=nf)
-    offs = np.zeros(nf + 1, dtype=np.int64)
+    lens = np.fromiter(map(len, views), np.int64, nf)
+    offs = np.zeros(nf + 1, np.int64)
     np.cumsum(lens, out=offs[1:])
-    nonempty = offs[1:][lens > 0]
-    if nonempty.size and not is_end[nonempty - 1].all():
-        return None
-    try:
-        vals = decode_varint_array(raw)
-    except FormatError:
-        return None
-    cnt_before = np.zeros(raw.size + 1, dtype=np.int64)
-    np.cumsum(is_end, out=cnt_before[1:])
-    ends = np.flatnonzero(is_end)
-    starts_g = np.empty(ends.size, dtype=np.int64)
-    if ends.size:
-        starts_g[0] = 0
-        starts_g[1:] = ends[:-1] + 1
-    nvals = vals.size
+    fend = offs[1:]
+    raw = np.frombuffer(b"".join(views), np.uint8)
+    ok = lens > 0
+    is_end = np.ones(raw.size + 1, bool)  # + pad: is_end[-1] is in bounds
+    is_end[:-1] = (raw & 0x80) == 0
+    last = fend[ok] - 1
+    ok[ok] = is_end[last]          # a truncated last varint deviates
+    is_end[last] = True            # ... and may not spill over
+    nv = int(np.count_nonzero(is_end[:-1]))
+    starts = np.zeros(nv + 1, np.int64)   # + sentinel: one past the end
+    starts[1:] = np.flatnonzero(is_end[:-1]) + 1
+    vlen = np.diff(starts)
+    overlong = vlen > 10
+    if overlong.any():
+        ok[np.searchsorted(offs, starts[:-1][overlong], "right") - 1] = False
+        vlen = np.minimum(vlen, 10)
+    vals = np.append(varint_runs(raw, starts[:-1], vlen), np.uint64(0))
+    del vlen, overlong
+    cnt_before = np.zeros(raw.size + 1, np.int64)
+    np.cumsum(is_end[:-1], out=cnt_before[1:])
     i0 = cnt_before[offs[:-1]]
-    iN = cnt_before[offs[1:]]
+    iN = cnt_before[fend]
+
+    def at(arr: np.ndarray, i: np.ndarray) -> np.ndarray:
+        # reads past a feature's last varint land on the next
+        # feature's first one (or the sentinel): always in bounds,
+        # and only ever consulted for features already flagged
+        return arr[np.minimum(i, iN)]
+
+    ulens = lens.astype(np.uint64)
     # head: [24, gtype] then optionally [8, id]
-    if (iN - i0 < 4).any():
-        return None
-    if not (vals[i0] == 24).all():
-        return None
-    gtypes = vals[i0 + 1].astype(np.int64)
-    if (gtypes > 3).any():
-        return None
-    has_id = vals[i0 + 2] == 8
-    idpos = i0 + 2 + np.where(has_id, 1, 0)
-    if (idpos >= np.minimum(iN, nvals)).any():
-        return None
-    ids_u = np.where(has_id, vals[np.minimum(idpos, nvals - 1)],
-                     np.uint64(0))
-    if (ids_u >= np.uint64(1) << np.uint64(63)).any():
-        return None
-    ids = ids_u.astype(np.int64)
-    gk = i0 + 2 + 2 * has_id          # geometry key position
-    if (gk + 1 >= iN).any():
-        return None
-    if not (vals[gk] == 34).all():
-        return None
-    gnb = vals[gk + 1].astype(np.int64)
-    if (gnb <= 0).any():
-        return None
+    ok &= (iN - i0 >= 4) & (at(vals, i0) == 24)
+    gtypes = at(vals, i0 + 1)
+    ok &= gtypes <= 3
+    has_id = at(vals, i0 + 2) == 8
+    ids = np.where(has_id, at(vals, i0 + 3), np.uint64(0))
+    gk = i0 + 2 + 2 * has_id           # geometry key position
+    ok &= (gk + 1 < iN) & (at(vals, gk) == 34)
+    gnb_u = at(vals, gk + 1)
+    ok &= (gnb_u > 0) & (gnb_u <= ulens)
+    gnb = np.where(ok, gnb_u, np.uint64(0)).astype(np.int64)
     gp0 = gk + 2                       # first geometry varint index
-    if (gp0 >= starts_g.size).any():
-        return None
-    ps = starts_g[gp0]
-    pe = ps + gnb
-    if (pe > offs[1:]).any() or not is_end[pe - 1].all():
-        return None
-    cnt_g = cnt_before[pe] - cnt_before[ps]
+    ps = at(starts, gp0)
+    ok &= (gp0 < iN) & (ps + gnb <= fend)
+    pe = np.minimum(ps + gnb, fend)
+    ok &= is_end[pe - 1]
+    cnt_g = np.where(ok, cnt_before[pe] - cnt_before[ps], 0)
     j = gp0 + cnt_g                    # position after geometry
     has_tags = j < iN
-    cnt_t = np.zeros(nf, np.int64)
-    tp0 = np.zeros(nf, np.int64)
-    if has_tags.any():
-        jt = j[has_tags]
-        if (jt + 1 >= iN[has_tags]).any():
-            return None
-        if not (vals[jt] == 18).all():
-            return None
-        tnb = vals[jt + 1].astype(np.int64)
-        nonz = tnb > 0
-        ct = np.zeros(jt.size, np.int64)
-        if nonz.any():
-            jtz = jt[nonz] + 2
-            if (jtz >= starts_g.size).any():
-                return None
-            ts = starts_g[jtz]
-            te = ts + tnb[nonz]
-            if (te > offs[1:][has_tags][nonz]).any() \
-                    or not is_end[te - 1].all():
-                return None
-            ct[nonz] = cnt_before[te] - cnt_before[ts]
-        if ((jt + 2 + ct) != iN[has_tags]).any():
-            return None
-        if (ct % 2 != 0).any():
-            return None
-        cnt_t[has_tags] = ct
-        tp0[has_tags] = jt + 2
-    if ((~has_tags) & (j != iN)).any():
-        return None
+    ok &= ~has_tags | ((j + 1 < iN) & (at(vals, j) == 18))
+    tnb_u = np.where(has_tags, at(vals, j + 1), np.uint64(0))
+    ok &= tnb_u <= ulens
+    tnb = np.where(ok, tnb_u, np.uint64(0)).astype(np.int64)
+    ts = at(starts, j + 2)
+    te = np.minimum(ts + tnb, fend)
+    nonz = has_tags & (tnb > 0)
+    ok &= ~nonz | ((ts + tnb <= fend) & is_end[te - 1])
+    cnt_t = np.where(nonz, cnt_before[te] - cnt_before[ts], 0)
+    ok &= np.where(has_tags, j + 2 + cnt_t, j) == iN
+    ok &= cnt_t % 2 == 0
+    cnt_g[~ok] = 0
+    cnt_t[~ok] = 0
 
-    def _gather(p0: np.ndarray, cnt: np.ndarray) -> np.ndarray:
-        total = int(cnt.sum())
-        if total == 0:
-            return np.empty(0, np.uint64)
-        starts = np.cumsum(cnt) - cnt
-        gi = np.arange(total) - np.repeat(starts, cnt) \
-            + np.repeat(p0, cnt)
-        return vals[gi]
+    def _gather(p0: np.ndarray, cnt: np.ndarray) -> tuple:
+        off = np.zeros(nf + 1, np.int64)
+        np.cumsum(cnt, out=off[1:])
+        gi = np.arange(off[-1]) + np.repeat(p0 - off[:-1], cnt)
+        return vals[gi], off
 
-    goff = np.zeros(nf + 1, np.int64)
-    np.cumsum(cnt_g, out=goff[1:])
-    toff = np.zeros(nf + 1, np.int64)
-    np.cumsum(cnt_t, out=toff[1:])
+    gflat, goff = _gather(gp0, cnt_g)
+    tflat, toff = _gather(j + 2, cnt_t)
     return {
-        "ids": ids, "has_id": has_id, "gtypes": gtypes,
-        "gflat": _gather(gp0, cnt_g), "goff": goff, "gnb": gnb,
-        "tflat": _gather(tp0, cnt_t), "toff": toff,
+        "ids": np.where(ok, ids, np.uint64(0)), "has_id": has_id & ok,
+        "gtypes": np.where(ok, gtypes, 0).astype(np.int64),
+        "gflat": gflat, "goff": goff, "gnb": np.where(ok, gnb, 0),
+        "tflat": tflat, "toff": toff, "ok": ok,
     }
+
+
+def features_block(feats: list[Feature]) -> dict:
+    """The parse_features_block arrays of already-parsed features."""
+    nf = len(feats)
+    glens = np.fromiter((f.geometry.size for f in feats), np.int64, nf)
+    tlens = np.fromiter((f.tags.size for f in feats), np.int64, nf)
+    goff = np.zeros(nf + 1, np.int64)
+    np.cumsum(glens, out=goff[1:])
+    toff = np.zeros(nf + 1, np.int64)
+    np.cumsum(tlens, out=toff[1:])
+
+    def flat(arrs) -> np.ndarray:
+        return (np.concatenate(arrs).astype(np.uint64) if arrs
+                else np.empty(0, np.uint64))
+
+    return {
+        "ids": np.fromiter((f.id or 0 for f in feats), np.uint64, nf),
+        "has_id": np.fromiter((f.id is not None for f in feats), bool, nf),
+        "gtypes": np.fromiter((f.geom_type for f in feats), np.int64, nf),
+        "gflat": flat([f.geometry for f in feats]), "goff": goff,
+        "gnb": np.fromiter((f.geometry_nbytes for f in feats), np.int64,
+                           nf),
+        "tflat": flat([f.tags for f in feats]), "toff": toff,
+    }
+
+
+def _slice_block(blk: dict, a: int, b: int) -> dict:
+    """Features a..b of a block, offsets re-based to 0."""
+    ga, gb = blk["goff"][a], blk["goff"][b]
+    ta, tb = blk["toff"][a], blk["toff"][b]
+    return {
+        "ids": blk["ids"][a:b], "has_id": blk["has_id"][a:b],
+        "gtypes": blk["gtypes"][a:b], "gnb": blk["gnb"][a:b],
+        "gflat": blk["gflat"][ga:gb], "goff": blk["goff"][a:b + 1] - ga,
+        "tflat": blk["tflat"][ta:tb], "toff": blk["toff"][a:b + 1] - ta,
+    }
+
+
+def _concat_blocks(parts: list[dict]) -> dict:
+    out = {k: np.concatenate([p[k] for p in parts])
+           for k in ("ids", "has_id", "gtypes", "gnb", "gflat", "tflat")}
+    for k in ("goff", "toff"):
+        lens = np.concatenate([np.diff(p[k]) for p in parts])
+        out[k] = np.zeros(lens.size + 1, np.int64)
+        np.cumsum(lens, out=out[k][1:])
+    return out
+
+
+def block_features(blk: dict) -> list[Feature]:
+    """Feature objects over a parse_features_block (all features ok);
+    geometry and tags are views into the block's flat arrays."""
+    ids = blk["ids"].tolist()
+    has_id = blk["has_id"].tolist()
+    gtypes = blk["gtypes"].tolist()
+    gnb = blk["gnb"].tolist()
+    goff = blk["goff"].tolist()
+    toff = blk["toff"].tolist()
+    gflat, tflat = blk["gflat"], blk["tflat"]
+    return [Feature(ids[i] if has_id[i] else None, gtypes[i],
+                    gflat[goff[i]:goff[i + 1]], gnb[i],
+                    tflat[toff[i]:toff[i + 1]])
+            for i in range(len(ids))]
 
 
 def parse_layer(buf: bytes, *, parse_features: bool = True) -> Layer:
@@ -406,16 +331,16 @@ def parse_layer(buf: bytes, *, parse_features: bool = True) -> Layer:
     values: list[bytes] = []
     feature_views: list[bytes] = []
     for f, w, v in scan_fields(buf):
-        if f == LAYER_VERSION and w == WT_VARINT:
+        if f == LAYER_FEATURES and w == WT_LEN:
+            feature_views.append(v)
+        elif f == LAYER_VALUES and w == WT_LEN:
+            values.append(v)
+        elif f == LAYER_KEYS and w == WT_LEN:
+            keys.append(v)
+        elif f == LAYER_VERSION and w == WT_VARINT:
             version = v
         elif f == LAYER_NAME and w == WT_LEN:
             name = v
-        elif f == LAYER_FEATURES and w == WT_LEN:
-            feature_views.append(v)
-        elif f == LAYER_KEYS and w == WT_LEN:
-            keys.append(v)
-        elif f == LAYER_VALUES and w == WT_LEN:
-            values.append(v)
         elif f == LAYER_EXTENT and w == WT_VARINT:
             extent = v
         else:
@@ -434,8 +359,8 @@ def parse_layer(buf: bytes, *, parse_features: bool = True) -> Layer:
         raw=buf,
     )
     if parse_features:
-        fast = _parse_features_fast(feature_views)
-        layer.features = fast if fast is not None \
+        blk = parse_features_block(feature_views)
+        layer.features = block_features(blk) if blk["ok"].all() \
             else [parse_feature(fv) for fv in feature_views]
     else:
         layer.features = []
@@ -460,6 +385,139 @@ def get_layer(buf: bytes, selector: str) -> Layer | None:
         if layer_name_only(v) == selector:
             return parse_layer(v)
     return None
+
+
+# -------------------------------------------------------------- batch scan
+
+# Input bytes of one scan_tile_batch call. The scan and the kernels
+# on it peak at ~30 bytes of working arrays per input byte, so this
+# bounds a Python worker's transient memory (~8 MB) however large the
+# Arrow batch it was handed; larger chunks gain little throughput.
+SCAN_CHUNK_BYTES = 1 << 18
+
+
+def scan_chunks(sizes) -> Iterator[tuple[int, int]]:
+    """Consecutive [lo, hi) runs of tiles holding at most
+    SCAN_CHUNK_BYTES input bytes each (a larger tile is a run alone)."""
+    lo, acc = 0, 0
+    for i, n in enumerate(sizes):
+        if i > lo and acc + n > SCAN_CHUNK_BYTES:
+            yield lo, i
+            lo, acc = i, 0
+        acc += n
+    if lo < len(sizes):
+        yield lo, len(sizes)
+
+
+@dataclass
+class TileScan:
+    """A batch of tiles scanned as flat columns: one layer table and
+    one feature block, parents linked by generated keys (feature ->
+    layer id -> tile index)."""
+    tile_err: list          # per tile: the MVTError of its field walk
+    tile: np.ndarray        # ---- layer table, tile-major order
+    ordinal: np.ndarray     # layer position within its tile
+    name: list[str]
+    version: np.ndarray
+    extent: np.ndarray
+    err: list               # MVTError or None; a bad layer has no features
+    keys: list[bytes]       # all dictionaries, layer after layer
+    koff: np.ndarray        # layer i's keys: keys[koff[i]:koff[i + 1]]
+    values: list[bytes]
+    voff: np.ndarray
+    foff: np.ndarray        # layer i's features: foff[i]:foff[i + 1]
+    features: dict          # parse_features_block arrays + "layer" ids
+
+
+def scan_tile_batch(bufs: list[bytes],
+                    layer_sel: str | None = None) -> TileScan:
+    """Parse every tile of a batch in one pass: each layer's header and
+    dictionaries through parse_layer's field walk, then ONE
+    parse_features_block over all the batch's feature views. A layer
+    with a deviant feature goes alone through parse_feature and is
+    spliced back as arrays. Errors stay data: a tile whose field walk
+    raises lists no layers; a layer that raises is kept with its error
+    and no features.
+
+    ``layer_sel`` is the CLI layer selector (digits -> ordinal, else
+    name as layer_name_only reads it): only matching layers are
+    parsed and listed, so other layers' errors never surface."""
+    by_ordinal = layer_sel is not None and layer_sel.isdigit()
+    tile_err: list = [None] * len(bufs)
+    rows: list = []                    # (tile, ordinal, Layer | error)
+    for ti, buf in enumerate(bufs):
+        try:
+            views = tile_layer_views(buf)
+        except MVTError as e:
+            tile_err[ti] = e
+            continue
+        if by_ordinal:
+            want = int(layer_sel)
+            pairs = [(want, views[want])] if want < len(views) else []
+        else:
+            pairs = enumerate(views)
+        for li, lv in pairs:
+            try:
+                if (layer_sel is not None and not by_ordinal
+                        and layer_name_only(lv) != layer_sel):
+                    continue
+                rows.append((ti, li, parse_layer(lv, parse_features=False)))
+            except MVTError as e:
+                rows.append((ti, li, e))
+
+    nl = len(rows)
+    layers = [r[2] if isinstance(r[2], Layer) else None for r in rows]
+    err = [None if ly is not None else r[2] for ly, r in zip(layers, rows)]
+    nfeat = np.fromiter((len(ly.feature_views) if ly else 0
+                         for ly in layers), np.int64, nl)
+    blk = parse_features_block(
+        [fv for ly in layers if ly for fv in ly.feature_views])
+    ok = blk.pop("ok")
+    if not ok.all():
+        # deviant layers re-parse alone, feature by feature, exactly as
+        # parse_layer does; the block's other runs are kept as they are
+        foff = np.zeros(nl + 1, np.int64)
+        np.cumsum(nfeat, out=foff[1:])
+        bad = np.unique(np.repeat(np.arange(nl), nfeat)[~ok])
+        parts, prev = [], 0
+        for li in bad.tolist():
+            parts.append(_slice_block(blk, prev, foff[li]))
+            prev = foff[li + 1]
+            try:
+                parts.append(features_block(
+                    [parse_feature(fv) for fv in layers[li].feature_views]))
+            except MVTError as e:
+                err[li] = e
+                nfeat[li] = 0
+        parts.append(_slice_block(blk, prev, foff[-1]))
+        blk = _concat_blocks(parts)
+    foff = np.zeros(nl + 1, np.int64)
+    np.cumsum(nfeat, out=foff[1:])
+    blk["layer"] = np.repeat(np.arange(nl), nfeat)
+
+    def dict_offsets(attr: str) -> np.ndarray:
+        off = np.zeros(nl + 1, np.int64)
+        np.cumsum([len(getattr(ly, attr)) if ly else 0 for ly in layers],
+                  out=off[1:])
+        return off
+
+    return TileScan(
+        tile_err=tile_err,
+        tile=np.fromiter((r[0] for r in rows), np.int64, nl),
+        ordinal=np.fromiter((r[1] for r in rows), np.int64, nl),
+        name=[ly.name if ly else "" for ly in layers],
+        version=np.fromiter((ly.version if ly else 0 for ly in layers),
+                            np.int64, nl),
+        extent=np.fromiter((ly.extent if ly else 0 for ly in layers),
+                           np.int64, nl),
+        err=err,
+        keys=[k for ly in layers if ly for k in ly.keys],
+        koff=dict_offsets("keys"),
+        values=[v for ly in layers if ly for v in ly.values],
+        voff=dict_offsets("values"),
+        foff=foff,
+        features=blk,
+    )
 
 
 # -------------------------------------------------------------------- build

@@ -71,16 +71,25 @@ def encode_value(vtype: int, value) -> bytes:
     raise TypeError_(f"unknown property value type {vtype}")
 
 
-def value_type(data: bytes) -> int:
-    """The type tag of an encoded value; strict per property_value::type()."""
+def _value_key(data: bytes) -> tuple[int, int]:
+    """(type tag, position after the key), strict per
+    property_value::type(); a one-byte key decodes inline."""
     if len(data) == 0:
         raise FormatError("missing tag value")
-    key, pos = decode_varint(data, 0)
+    key = data[0]
+    if key < 0x80:
+        pos = 1
+    else:
+        key, pos = decode_varint(data, 0)
     tag = key >> 3
-    wire = key & 0x7
-    if tag < 1 or tag > 7 or _WIRE_BY_TAG[tag] != wire:
+    if tag < 1 or tag > 7 or _WIRE_BY_TAG[tag] != key & 0x7:
         raise FormatError("illegal property value type")
-    return tag
+    return tag, pos
+
+
+def value_type(data: bytes) -> int:
+    """The type tag of an encoded value; strict per property_value::type()."""
+    return _value_key(data)[0]
 
 
 def decode_value(data: bytes) -> tuple[int, object]:
@@ -90,10 +99,13 @@ def decode_value(data: bytes) -> tuple[int, object]:
     uint as unsigned, sint zigzag-decoded, matching the typed
     accessors in property_value.hpp:160-228.
     """
-    tag = value_type(data)
-    _, pos = decode_varint(data, 0)  # skip key
+    tag, pos = _value_key(data)
     if tag == VT_STRING:
-        ln, pos = decode_varint(data, pos)
+        if pos < len(data) and data[pos] < 0x80:
+            ln = data[pos]
+            pos += 1
+        else:
+            ln, pos = decode_varint(data, pos)
         if pos + ln > len(data):
             raise FormatError("truncated string value")
         return tag, data[pos:pos + ln].decode("utf-8", errors="surrogateescape")
