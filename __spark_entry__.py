@@ -56,11 +56,10 @@ def _encode_image_layers(feats: DataFrame) -> DataFrame:
 
 
 def _encode_image_tiles(feats: DataFrame) -> DataFrame:
-    """Fused single-shuffle layer+tile encode, Arrow-native grouped
-    UDF (byte-identical to encode_tiles(_encode_image_layers(...)) and
-    to the pandas grouped encoder, asserted in tests; the Arrow path
-    keeps layer strings out of Python objects entirely and runs
-    ~5-10%% faster end to end)."""
+    """Fused single-shuffle layer+tile encode: the batch point encoder
+    over sorted Arrow batches (byte-identical to
+    encode_tiles(_encode_image_layers(...)) and to the generic
+    encode_tiles(encode_layers(...)), asserted in tests)."""
     return assemble.encode_point_tiles_arrow(
         feats.select(*POINT_COLS), prop_spec=PROP_SPEC)
 

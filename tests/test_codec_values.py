@@ -3,6 +3,8 @@
 import struct
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from vtzero_spark.mvt.errors import FormatError, TypeError_
 from vtzero_spark.mvt.pbf import (
@@ -10,6 +12,7 @@ from vtzero_spark.mvt.pbf import (
     decode_varint_array,
     encode_varint,
     encode_varint_array,
+    varint_len_array,
     zigzag32_decode,
     zigzag32_encode,
 )
@@ -41,6 +44,53 @@ def test_varint_array_roundtrip():
     # matches the scalar encoder byte for byte
     assert buf == b"".join(encode_varint(int(v)) for v in vals)
     assert np.array_equal(decode_varint_array(buf), vals)
+
+
+def _encode_varint_array_ten_pass(values):
+    """The ten-masked-pass array encoder the early-exit one replaced
+    (the reference: one full-length pass per possible output byte)."""
+    v = np.ascontiguousarray(values, dtype=np.uint64)
+    if v.size == 0:
+        return b""
+    nbytes = _varint_len_ten_pass(v)
+    ends = np.cumsum(nbytes)
+    starts = ends - nbytes
+    out = np.zeros(int(ends[-1]), dtype=np.uint8)
+    for j in range(10):
+        mask = nbytes > j
+        chunk = (v[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)
+        cont = (nbytes[mask] - 1) > j
+        out[starts[mask] + j] = chunk.astype(np.uint8) | (cont.astype(np.uint8) << 7)
+    return out.tobytes()
+
+
+def _varint_len_ten_pass(values):
+    v = np.ascontiguousarray(values, dtype=np.uint64)
+    n = np.ones(v.shape, dtype=np.int64)
+    for k in range(1, 10):
+        n += (v >= np.uint64(1) << np.uint64(7 * k)).astype(np.int64)
+    return n
+
+
+@pytest.mark.parametrize("vals", [[], [0], [127], [128], [2**63], [2**64 - 1],
+                                  [0, 127, 128, 2**63, 2**64 - 1, 300]])
+def test_varint_array_matches_ten_pass_reference(vals):
+    v = np.array(vals, dtype=np.uint64)
+    assert encode_varint_array(v) == _encode_varint_array_ten_pass(v)
+    assert np.array_equal(varint_len_array(v), _varint_len_ten_pass(v))
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.integers(0, 2**64 - 1) | st.integers(0, 300), max_size=60),
+       st.integers(1, 4))
+def test_varint_array_fuzz_matches_ten_pass_reference(vals, width):
+    v = np.array(vals, dtype=np.uint64)
+    assert encode_varint_array(v) == _encode_varint_array_ten_pass(v)
+    assert np.array_equal(varint_len_array(v), _varint_len_ten_pass(v))
+    # a matrix encodes row-major, the same bytes as its flattening
+    m = v[: len(v) - len(v) % width].reshape(-1, width)
+    assert encode_varint_array(m) == encode_varint_array(m.reshape(-1))
+    assert np.array_equal(varint_len_array(m), _varint_len_ten_pass(m))
 
 
 def test_varint_array_truncated():

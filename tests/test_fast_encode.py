@@ -10,14 +10,16 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import assemble
 
+# the generic (per-feature, props-array) encoder's input columns
+_GENERIC_COLS = ["z", "x", "y", "layer_name", "feature_ordinal",
+                 "feature_id", "geom_type", "loc_x", "loc_y", "props"]
+
 
 def test_fast_point_encode_byte_parity(spark, sf_dir):
     feats = entry._features(spark, sf_dir)
 
-    generic = assemble.encode_layers(
-        feats.select("z", "x", "y", "layer_name", "feature_ordinal",
-                     "feature_id", "geom_type", "loc_x", "loc_y", "props")
-    ).select("z", "x", "y", "layer_name", "layer_bytes").toPandas()
+    generic = assemble.encode_layers(feats.select(*_GENERIC_COLS)).select(
+        "z", "x", "y", "layer_name", "layer_bytes").toPandas()
 
     fast = entry._encode_image_layers(feats).select(
         "z", "x", "y", "layer_name", "layer_bytes"
@@ -50,13 +52,17 @@ def test_fused_tile_encode_byte_parity(spark, sf_dir):
 
 
 def test_arrow_tile_encode_byte_parity(spark, sf_dir):
-    feats = entry._features(spark, sf_dir).select(*entry.POINT_COLS)
-    pandas_tiles = assemble.encode_point_tiles(feats, prop_spec=entry.PROP_SPEC) \
+    """encode_point_tiles_arrow (the batch point encoder) == the
+    generic encode_tiles(encode_layers(...)) tile for tile."""
+    feats = entry._features(spark, sf_dir)
+    generic_tiles = assemble.encode_tiles(assemble.encode_layers(
+        feats.select(*_GENERIC_COLS))) \
         .select("z", "x", "y", "num_layers", "tile_bytes").toPandas()
-    arrow_tiles = assemble.encode_point_tiles_arrow(feats, prop_spec=entry.PROP_SPEC) \
+    arrow_tiles = assemble.encode_point_tiles_arrow(
+        feats.select(*entry.POINT_COLS), prop_spec=entry.PROP_SPEC) \
         .select("z", "x", "y", "num_layers", "tile_bytes").toPandas()
     key = ["z", "x", "y"]
-    p = pandas_tiles.set_index(key).sort_index()
+    p = generic_tiles.set_index(key).sort_index()
     a = arrow_tiles.set_index(key).sort_index()
     assert len(p) == len(a) and len(p) > 0
     assert (p["num_layers"] == a["num_layers"]).all()
@@ -154,9 +160,9 @@ def test_geom_tiles_arrow_matches_pandas(spark, sf_dir):
     assert a == b and len(a) > 0
 
 
-def test_point_layers_arrow_matches_pandas(spark, sf_dir):
-    """encode_point_layers (Arrow) must be byte- and stats-identical
-    to the pandas kernel."""
+def test_point_layers_match_generic_encode_layers(spark, sf_dir):
+    """encode_point_layers (the batch point encoder, one row per layer)
+    must be byte- and stats-identical to the generic encode_layers."""
     import __spark_entry__ as em
 
     f = em._features(spark, sf_dir)
@@ -164,8 +170,7 @@ def test_point_layers_arrow_matches_pandas(spark, sf_dir):
     a = {(r["z"], r["x"], r["y"], r["layer_name"]):
          (r["num_features"], r["key_table_size"],
           r["value_table_size"], bytes(r["layer_bytes"]))
-         for r in assemble.encode_point_layers_pandas(
-             sel, prop_spec=em.PROP_SPEC).collect()}
+         for r in assemble.encode_layers(f.select(*_GENERIC_COLS)).collect()}
     b = {(r["z"], r["x"], r["y"], r["layer_name"]):
          (r["num_features"], r["key_table_size"],
           r["value_table_size"], bytes(r["layer_bytes"]))

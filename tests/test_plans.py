@@ -117,10 +117,10 @@ def test_fused_tile_encode_has_single_encode_shuffle(spark, sf_dir):
     base_exchanges = len(re.findall(r"hashpartitioning\(", plan(feats)))
     tiles = assemble.encode_point_tiles(feats, prop_spec=entry.PROP_SPEC)
     p = plan(tiles)
-    # exactly ONE additional Exchange: the groupBy(z,x,y) feeding the
-    # fused grouped-map encode (no second layer->tile shuffle)
+    # exactly ONE additional Exchange: the repartition(z,x,y) feeding
+    # the batch encode (no second layer->tile shuffle)
     assert len(re.findall(r"hashpartitioning\(", p)) == base_exchanges + 1
-    assert "FlatMapGroupsInPandas" in p or "FlatMapGroupsInArrow" in p
+    assert "MapInArrow" in p
 
 
 def test_fused_rewrite_adds_no_shuffle(spark, sf_dir):

@@ -59,14 +59,15 @@ repeatedly; see git history of this file for raw numbers).
 
 ## Scale design notes (100 TB / 10^12 images)
 
-- ONE shuffle for the whole tile pipeline: `groupBy(z,x,y)` with the
-  fused layer+tile encode (`assemble.encode_point_tiles`); group count
-  grows with the tile pyramid, so parallelism scales with data.
-- Encode is vectorized end-to-end: the feature section of a layer is
-  one `(features x K)` uint64 varint matrix per layer, dictionaries
-  are factorize + scatter (`assemble._value_dict_core`), with an
-  Arrow-native variant (`encode_point_tiles_arrow`) that never
-  materializes Python string objects.
+- ONE shuffle for the whole tile pipeline: `repartition(z,x,y)` with
+  the fused layer+tile encode (`assemble.encode_point_tiles`); tile
+  count grows with the tile pyramid, so parallelism scales with data.
+- Encode is vectorized end-to-end and batch-wide: the feature sections
+  of every layer in an Arrow batch chunk are one `(features x K)`
+  uint64 varint matrix, dictionaries are dictionary_encode + one
+  `np.unique` over (layer, value) + scatter
+  (`assemble._value_dict_core`), and strings never become Python
+  objects.
 - PIP joins broadcast the cell->polygon covering index; hot cells use
   the salted variant + AQE skew splitting. kNN is iterative k-ring
   expansion: per-round hash joins, driver traffic bounded by the

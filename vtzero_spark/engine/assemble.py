@@ -1,14 +1,17 @@
 """Tile/layer/feature assembly and disassembly on Spark.
 
-Write path (SURVEY §3.2): features DataFrame -> groupBy(z,x,y,layer)
-applyInPandas(encode_layer) -> groupBy(z,x,y) applyInPandas(encode_tile)
--> tile_bytes. Ordering discipline (SURVEY §2.8): Spark gives no
-intra-group order guarantees, so every group is explicitly sorted by
-``feature_ordinal`` (and tiles assemble layers in ``layer_name``
-order) before encoding — dictionary first-appearance order and feature
-order then match a sequential vtzero builder run exactly.
+Write path (SURVEY §3.2): point features -> repartition(z,x,y) ->
+sortWithinPartitions(z,x,y,layer_name,feature_ordinal) -> mapInArrow
+batch encode -> tile_bytes (encode_point_tiles; encode_point_layers
+emits the same layers one row each). Ordering discipline (SURVEY
+§2.8): Spark gives no intra-partition order guarantees, so the plan
+sorts every tile's rows by layer_name and feature_ordinal before
+encoding — dictionary first-appearance order and feature order then
+match a sequential vtzero builder run exactly. The generic
+encode_layers/encode_tiles pair (per feature, any geometry) is the
+reference the batch encoder is pinned against.
 
-Read path (SURVEY §3.1): tiles -> mapInPandas decode -> one row per
+Read path (SURVEY §3.1): tiles -> mapInArrow decode -> one row per
 feature, geometry kept as raw command ints (decode elision: coordinates
 are only materialized by the geometry codec when a query needs them —
 the analog of vtzero's set_geometry passthrough, builder.hpp:1241-1248).
@@ -159,7 +162,27 @@ def _as_np(vals, dtype=None) -> np.ndarray:
     return out if dtype is None else out.astype(dtype)
 
 
-def _build_value_dict(pdf: pd.DataFrame, prop_spec) -> tuple[np.ndarray, bytes, int]:
+def _canon_keys(vtype: int, uniq):
+    """A property column's unique values -> keys whose equality is
+    equality of the encoded value bytes: floats compare by the bits of
+    their wire width (so +0.0 and -0.0 stay apart, and doubles that
+    round to one float32 merge), integers by their int64 bits. Strings
+    stay as they are (Arrow or object arrays)."""
+    if vtype == V.VT_STRING:
+        return uniq
+    a = _as_np(uniq)
+    if vtype == V.VT_FLOAT:
+        return a.astype("<f4").view("<u4")
+    if vtype == V.VT_DOUBLE:
+        return a.astype("<f8").view("<u8")
+    if vtype == V.VT_BOOL:
+        return a.astype(np.uint8)
+    if vtype in _VARINT_VTYPES:
+        return a.astype(np.int64)
+    raise ValueError(f"unknown vtype {vtype}")
+
+
+def _build_value_dict(pdf: pd.DataFrame, prop_spec):
     """pandas frontend of the vectorized dictionary build: factorize
     each property column, then delegate to _value_dict_core."""
     factorized = []
@@ -169,7 +192,7 @@ def _build_value_dict(pdf: pd.DataFrame, prop_spec) -> tuple[np.ndarray, bytes, 
     return _value_dict_core(factorized)
 
 
-def _build_value_dict_arrow(tbl, prop_spec) -> tuple[np.ndarray, bytes, int]:
+def _build_value_dict_arrow(tbl, prop_spec, seg=None):
     """Arrow frontend: dictionary_encode keeps strings in Arrow buffers
     (no Python-object churn — the hot path at scale)."""
     import pyarrow.compute as pc
@@ -182,21 +205,31 @@ def _build_value_dict_arrow(tbl, prop_spec) -> tuple[np.ndarray, bytes, int]:
             d.indices.to_numpy(zero_copy_only=False).astype(np.int64),
             d.dictionary,
         ))
-    return _value_dict_core(factorized)
+    return _value_dict_core(factorized, seg)
 
 
-def _value_dict_core(factorized) -> tuple[np.ndarray, bytes, int]:
-    """Vectorized layer value-dictionary build.
+def _value_dict_core(factorized, seg=None):
+    """Vectorized value-dictionary build for one or many layers.
 
     Input: per property column (vtype, codes (n,), uniques) in key
-    order. Returns (final_codes (n, nprops), values_section_bytes,
-    table_size) with vtzero's exact semantics: value identity is the
-    encoded bytes (property_value.hpp:232-260) — equal (vtype, value)
-    pairs across columns share one entry — and indexes are assigned in
-    first appearance order of the interleaved feature-major stream
-    (builder_impl.hpp:104-147). No per-unique Python: factorize/
-    dictionary_encode for dedup, cumsum/scatter for the table section.
+    order, and optionally ``seg``, a nondecreasing layer id per row
+    (rows of one layer are contiguous; default: one layer). Each layer
+    gets its own dictionary with vtzero's exact semantics: value
+    identity is the encoded bytes (property_value.hpp:232-260) — equal
+    (vtype, value) pairs across columns share one entry — and indexes
+    are assigned in first appearance order of the layer's interleaved
+    feature-major stream (builder_impl.hpp:104-147).
+
+    Returns (final_codes (n, ncols) per-layer indexes, values_section
+    bytes of every layer back to back, entry_off (nseg+1) and byte_off
+    (nseg+1) cutting that section per layer). No per-unique or
+    per-layer Python: dictionary_encode/factorize for dedup, one
+    np.unique over (layer, value) for the ranks, cumsum/scatter for
+    the table section.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from ..mvt.pbf import (
         copy_segments, encode_varint_array, pack_len_fields,
         strings_to_buffer, varint_len_array,
@@ -204,69 +237,72 @@ def _value_dict_core(factorized) -> tuple[np.ndarray, bytes, int]:
 
     ncols = len(factorized)
     col_codes = [codes for _, codes, _ in factorized]
-    col_uniques = [(vtype, uniq) for vtype, _, uniq in factorized]
+    n = col_codes[0].size
 
-    # per-vtype cross-column dedup (same vtype + same value <=> same bytes)
+    # per-vtype cross-column dedup on the encoded-bytes identity:
+    # value ids [0, total) over the whole input
     groups: dict[int, list[int]] = {}
-    for ci, (vtype, _) in enumerate(col_uniques):
+    for ci, (vtype, _, _) in enumerate(factorized):
         groups.setdefault(vtype, []).append(ci)
     canon_vals: dict[int, object] = {}
     col_maps: list[np.ndarray | None] = [None] * ncols
-    global_offset = 0
-    canon_layout: list[tuple[int, int]] = []  # (vtype, count) in id order
+    vt_parts: list[np.ndarray] = []
+    ix_parts: list[np.ndarray] = []
+    total = 0
     for vtype, cols_idx in groups.items():
-        if len(cols_idx) == 1:
-            ci = cols_idx[0]
-            vals = col_uniques[ci][1]
-            col_maps[ci] = np.arange(len(vals), dtype=np.int64) + global_offset
+        keys = [_canon_keys(vtype, factorized[ci][2]) for ci in cols_idx]
+        if len(cols_idx) == 1 and vtype != V.VT_FLOAT:
+            vals = keys[0]  # already distinct
+            maps = [np.arange(len(vals), dtype=np.int64)]
         else:
-            concat = np.concatenate(
-                [_as_np(col_uniques[ci][1], object) for ci in cols_idx])
-            codes2, vals = pd.factorize(concat, use_na_sentinel=False)
-            pos = 0
-            for ci in cols_idx:
-                ln = len(col_uniques[ci][1])
-                col_maps[ci] = np.asarray(codes2[pos:pos + ln], dtype=np.int64) + global_offset
-                pos += ln
+            d = pc.dictionary_encode(pa.concat_arrays(
+                [k if isinstance(k, pa.Array) else pa.array(k) for k in keys]))
+            vals = d.dictionary if vtype == V.VT_STRING \
+                else d.dictionary.to_numpy(zero_copy_only=False)
+            cuts = np.cumsum([len(k) for k in keys])[:-1]
+            maps = np.split(_as_np(d.indices, np.int64), cuts)
+        for ci, m in zip(cols_idx, maps):
+            col_maps[ci] = m + total
         canon_vals[vtype] = vals
-        canon_layout.append((vtype, len(vals)))
-        global_offset += len(vals)
-    total = global_offset
+        vt_parts.append(np.full(len(vals), vtype, np.int64))
+        ix_parts.append(np.arange(len(vals), dtype=np.int64))
+        total += len(vals)
 
-    # first-appearance rank over the interleaved (feature-major) stream
+    # one np.unique over (layer, value id) in the interleaved stream:
+    # its first indexes order the entries by (layer, first appearance),
+    # its inverse gives every tag its entry
     stream = np.stack(
         [col_maps[ci][col_codes[ci]] for ci in range(ncols)], axis=1)
-    flat = stream.reshape(-1)
-    first_pos = np.full(total, np.iinfo(np.int64).max)
-    np.minimum.at(first_pos, flat, np.arange(flat.size))
-    order = np.argsort(first_pos, kind="stable")
+    seg = np.zeros(n, np.int64) if seg is None else seg
+    nseg = int(seg[-1]) + 1 if n else 1
+    keyed = (seg[:, None] * total + stream).reshape(-1)
+    uniq, first, inverse = np.unique(
+        keyed, return_index=True, return_inverse=True)
+    order = np.argsort(first, kind="stable")
     rank = np.empty_like(order)
     rank[order] = np.arange(order.size)
-    final_codes = rank[stream]
+    entry_key = uniq[order]
+    entry_off = np.searchsorted(entry_key // max(total, 1),
+                                np.arange(nseg + 1))
+    final_codes = (rank[inverse].reshape(n, ncols)
+                   - entry_off[seg][:, None])
 
-    # encode the table in dictionary order, one scatter pass per vtype
-    vt_of = np.empty(total, dtype=np.int64)
-    ix_of = np.empty(total, dtype=np.int64)
-    off = 0
-    for vtype, cnt in canon_layout:
-        vt_of[off:off + cnt] = vtype
-        ix_of[off:off + cnt] = np.arange(cnt)
-        off += cnt
-    vt_ord = vt_of[order]
-    ix_ord = ix_of[order]
-
+    # encode the table in entry order, one scatter pass per vtype
+    vid = entry_key % max(total, 1)
+    vt_ord = np.concatenate(vt_parts)[vid]
+    ix_ord = np.concatenate(ix_parts)[vid]
     str_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     varint_cache: dict[int, np.ndarray] = {}
     for vtype, vals in canon_vals.items():
         if vtype == V.VT_STRING:
             str_cache[vtype] = strings_to_buffer(vals)
         elif vtype in (V.VT_INT, V.VT_UINT):
-            varint_cache[vtype] = _as_np(vals, np.int64).astype(np.uint64)
+            varint_cache[vtype] = vals.astype(np.uint64)
         elif vtype == V.VT_SINT:
-            v = _as_np(vals, np.int64)
-            varint_cache[vtype] = ((v << 1) ^ (v >> 63)).astype(np.uint64)
+            varint_cache[vtype] = ((vals << 1) ^ (vals >> 63)).astype(np.uint64)
 
-    entry_len = np.empty(total, dtype=np.int64)
+    nent = order.size
+    entry_len = np.empty(nent, dtype=np.int64)
     for vtype in groups:
         sel = vt_ord == vtype
         ix = ix_ord[sel]
@@ -276,15 +312,9 @@ def _value_dict_core(factorized) -> tuple[np.ndarray, bytes, int]:
             entry_len[sel] = 1 + varint_len_array(slen.astype(np.uint64)) + slen
         elif vtype in _VARINT_VTYPES:
             entry_len[sel] = 1 + varint_len_array(varint_cache[vtype][ix])
-        elif vtype == V.VT_BOOL:
-            entry_len[sel] = 2
-        elif vtype == V.VT_FLOAT:
-            entry_len[sel] = 5
-        elif vtype == V.VT_DOUBLE:
-            entry_len[sel] = 9
         else:
-            raise ValueError(f"unknown vtype {vtype}")
-    offsets = np.zeros(total + 1, dtype=np.int64)
+            entry_len[sel] = {V.VT_BOOL: 2, V.VT_FLOAT: 5, V.VT_DOUBLE: 9}[vtype]
+    offsets = np.zeros(nent + 1, dtype=np.int64)
     np.cumsum(entry_len, out=offsets[1:])
     out = np.empty(int(offsets[-1]), dtype=np.uint8)
     starts = offsets[:-1]
@@ -307,97 +337,32 @@ def _value_dict_core(factorized) -> tuple[np.ndarray, bytes, int]:
             vlens = varint_len_array(vals)
             vbuf = np.frombuffer(encode_varint_array(vals), dtype=np.uint8)
             copy_segments(vbuf, np.cumsum(vlens) - vlens, vlens, out, sel_off + 1)
-        elif vtype == V.VT_BOOL:
-            out[sel_off + 1] = _as_np(canon_vals[vtype]).astype(bool)[ix].astype(np.uint8)
-        elif vtype == V.VT_FLOAT:
-            fb = np.ascontiguousarray(
-                _as_np(canon_vals[vtype]).astype("<f4")[ix]).view(np.uint8).reshape(-1, 4)
-            out[sel_off[:, None] + 1 + np.arange(4)] = fb
-        elif vtype == V.VT_DOUBLE:
-            fb = np.ascontiguousarray(
-                _as_np(canon_vals[vtype]).astype("<f8")[ix]).view(np.uint8).reshape(-1, 8)
-            out[sel_off[:, None] + 1 + np.arange(8)] = fb
+        else:
+            # bool / float / double: the canonical keys are the payload
+            raw = canon_vals[vtype][ix]
+            width = raw.dtype.itemsize
+            out[sel_off[:, None] + 1 + np.arange(width)] = \
+                np.ascontiguousarray(raw).view(np.uint8).reshape(-1, width)
     values_section = pack_len_fields(T.LAYER_VALUES, out, offsets)
-    return final_codes, values_section, total
-
-
-def _point_layer_bytes(pdf: pd.DataFrame, name: str, prop_spec) -> tuple[bytes, int, int, int]:
-    """Vectorized layer encode core (pandas frontend): ordinal-sorted
-    single-point rows of ONE layer -> (layer_bytes, num_features,
-    key_table_size, value_table_size)."""
-    dict_result = _build_value_dict(pdf, prop_spec) if prop_spec else None
-    return _assemble_point_layer(
-        name,
-        pdf["feature_id"].to_numpy(np.int64),
-        pdf["loc_x"].to_numpy(np.int64),
-        pdf["loc_y"].to_numpy(np.int64),
-        prop_spec, dict_result,
-    )
-
-
-def _point_layer_bytes_arrow(tbl, name: str, prop_spec) -> tuple[bytes, int, int, int]:
-    """Arrow frontend of the layer encode core (zero object churn)."""
-    dict_result = _build_value_dict_arrow(tbl, prop_spec) if prop_spec else None
-    return _assemble_point_layer(
-        name,
-        tbl.column("feature_id").to_numpy(zero_copy_only=False).astype(np.int64),
-        tbl.column("loc_x").to_numpy(zero_copy_only=False).astype(np.int64),
-        tbl.column("loc_y").to_numpy(zero_copy_only=False).astype(np.int64),
-        prop_spec, dict_result,
-    )
+    item_len = 1 + varint_len_array(entry_len.astype(np.uint64)) + entry_len
+    item_off = np.zeros(nent + 1, dtype=np.int64)
+    np.cumsum(item_len, out=item_off[1:])
+    return final_codes, values_section, entry_off, item_off[entry_off]
 
 
 def _point_features_bytes(ids: np.ndarray, lx: np.ndarray, ly: np.ndarray,
-                          final_codes, nprops: int) -> bytes:
+                          final_codes, nprops: int) -> tuple[bytes, np.ndarray]:
     """Features-section bytes (each feature wrapped in its LAYER_FEATURES
-    len-field) for single-point features with pre-resolved tag codes."""
+    len-field) for single-point features with pre-resolved tag codes,
+    plus each feature's byte length in it.
+
+    The section is a concatenation of varints (field keys, lengths,
+    ids, command ints, tag indexes), so one (n_features x K) uint64
+    matrix flattened through encode_varint_array produces it in a
+    single vectorized pass."""
     from ..mvt.pbf import encode_varint_array, varint_len_array
 
     n = len(ids)
-    zzx = ((lx << 1) ^ (lx >> 63)) & 0xFFFFFFFF
-    zzy = ((ly << 1) ^ (ly >> 63)) & 0xFFFFFFFF
-    return _point_matrix_bytes(
-        n, ids, zzx, zzy, final_codes, nprops,
-        encode_varint_array, varint_len_array)
-
-
-def _assemble_point_layer(name: str, ids: np.ndarray, lx: np.ndarray,
-                          ly: np.ndarray, prop_spec, dict_result) -> tuple[bytes, int, int, int]:
-    from ..mvt.pbf import encode_varint_array, len_field, varint_field, varint_len_array
-
-    n = len(ids)
-    zzx = ((lx << 1) ^ (lx >> 63)) & 0xFFFFFFFF
-    zzy = ((ly << 1) ^ (ly >> 63)) & 0xFFFFFFFF
-
-    key_table: list[bytes] = []
-    values_section = b""
-    vsize = 0
-    final_codes = None
-    if prop_spec:
-        key_table = [k.encode("utf-8") for k, _, _ in prop_spec]
-        final_codes, values_section, vsize = dict_result
-
-    nprops = len(prop_spec) if prop_spec else 0
-    features_bytes = _point_matrix_bytes(
-        n, ids, zzx, zzy, final_codes, nprops,
-        encode_varint_array, varint_len_array)
-
-    header = (
-        varint_field(T.LAYER_VERSION, 2)
-        + len_field(T.LAYER_NAME, name.encode("utf-8"))
-        + varint_field(T.LAYER_EXTENT, 4096)
-    )
-    layer_bytes = b"".join([
-        header,
-        features_bytes,
-        b"".join(len_field(T.LAYER_KEYS, k) for k in key_table),
-        values_section,
-    ])
-    return layer_bytes, n, len(key_table), vsize
-
-
-def _point_matrix_bytes(n, ids, zzx, zzy, final_codes, nprops,
-                        encode_varint_array, varint_len_array) -> bytes:
     # varint matrix: [18, feat_len | 24, gtype, 8, id, 34, geom_len,
     #                 MoveTo(1)=9, zzx, zzy | 18, tags_len, k0,v0,...]
     k_body = 9 + (2 + 2 * nprops if nprops else 0)
@@ -408,21 +373,21 @@ def _point_matrix_bytes(n, ids, zzx, zzy, final_codes, nprops,
     M[:, 5] = ids.astype(np.uint64)
     M[:, 6] = 34  # key(FEATURE_GEOMETRY=4, len)
     M[:, 8] = 9  # MoveTo(count=1)
-    M[:, 9] = zzx.astype(np.uint64)
-    M[:, 10] = zzy.astype(np.uint64)
+    M[:, 9] = ((lx << 1) ^ (lx >> 63)) & 0xFFFFFFFF
+    M[:, 10] = ((ly << 1) ^ (ly >> 63)) & 0xFFFFFFFF
     geom_len = varint_len_array(M[:, 8:11]).sum(axis=1)
     M[:, 7] = geom_len.astype(np.uint64)
     if nprops:
         M[:, 11] = 18  # key(FEATURE_TAGS=2, len)
-        for c in range(nprops):
-            M[:, 13 + 2 * c] = c  # key index
-            M[:, 14 + 2 * c] = final_codes[:, c].astype(np.uint64)
+        M[:, 13::2] = np.arange(nprops, dtype=np.uint64)  # key indexes
+        M[:, 14::2] = final_codes.astype(np.uint64)
         tags_len = varint_len_array(M[:, 13:]).sum(axis=1)
         M[:, 12] = tags_len.astype(np.uint64)
     feat_len = varint_len_array(M[:, 2:]).sum(axis=1)
     M[:, 0] = 18  # key(LAYER_FEATURES=2, len)
     M[:, 1] = feat_len.astype(np.uint64)
-    return encode_varint_array(M.reshape(-1))
+    row_len = 1 + varint_len_array(M[:, 1]) + feat_len
+    return encode_varint_array(M), row_len
 
 
 def _geomstream_features_bytes(ids: np.ndarray, gtypes: np.ndarray,
@@ -505,7 +470,8 @@ def _geomstream_layer_bytes(name: str, ids: np.ndarray, gtypes: np.ndarray,
     nprops = len(prop_spec) if prop_spec else 0
     if prop_spec:
         key_table = [k.encode("utf-8") for k, _, _ in prop_spec]
-        final_codes, values_section, vsize = dict_result
+        final_codes, values_section, entry_off, _ = dict_result
+        vsize = int(entry_off[-1])
 
     features_bytes = _geomstream_features_bytes(
         ids, gtypes, gflat, goffsets, final_codes, nprops)
@@ -632,155 +598,185 @@ def encode_geom_tiles_arrow(features: DataFrame, prop_spec=None) -> DataFrame:
         fn, schema=TILE_SCHEMA)
 
 
-def encode_point_tiles_arrow(features: DataFrame, prop_spec=None) -> DataFrame:
-    """Arrow-native fused layer+tile encode (applyInArrow): strings
-    never become Python objects — factorize via Arrow dictionary_encode
-    on the original utf-8 buffers, table section assembled by numpy
-    scatter. Byte-identical to encode_point_tiles; ~lower memory
-    traffic per feature, which is what scales on wide executors."""
+# Rows one kernel call encodes at most: complete tiles are packed into
+# chunks of this many rows, cut at tile starts (a larger tile goes
+# alone). Bounds a Python worker's transient arrays at a few MB.
+ENCODE_CHUNK_ROWS = 8192
+
+_NON_NULL_COLS = ("feature_id", "loc_x", "loc_y", "layer_name")
+
+
+def _tile_starts(tbl) -> np.ndarray:
+    """Row indexes where a new (z, x, y) begins in a (z, x, y)-sorted
+    table (0 included for a nonempty table)."""
+    z, x, y = (tbl.column(c).to_numpy().astype(np.int64)
+               for c in ("z", "x", "y"))
+    new = np.ones(len(z), bool)
+    new[1:] = (z[1:] != z[:-1]) | (x[1:] != x[:-1]) | (y[1:] != y[:-1])
+    return np.flatnonzero(new)
+
+
+def _encode_point_chunk(tbl, prop_spec, per_layer: bool):
+    """The batch point encoder: a table of whole tiles, rows sorted by
+    (z, x, y, layer_name, feature_ordinal) -> one RecordBatch with a
+    row per tile (TILE_SCHEMA) or, with ``per_layer``, per layer
+    (LAYER_SCHEMA).
+
+    Every array pass covers the whole chunk: one dictionary build with
+    a dictionary per (tile, layer) segment (_value_dict_core), one
+    varint pass for every feature (_point_features_bytes), one for
+    every value entry; only the final join of header, features, keys
+    and values slices into layer messages loops over segments."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..mvt.pbf import len_field
+    from ..mvt.pbf import len_field, varint_field
 
-    def fn(tbl: "pa.Table") -> "pa.Table":
-        tbl = tbl.sort_by([("layer_name", "ascending"),
-                           ("feature_ordinal", "ascending")])
-        z = tbl.column("z")[0].as_py()
-        x = tbl.column("x")[0].as_py()
-        y = tbl.column("y")[0].as_py()
-        lcodes = pc.dictionary_encode(tbl.column("layer_name").combine_chunks()) \
-            .indices.to_numpy(zero_copy_only=False)
-        bounds = np.flatnonzero(np.diff(lcodes)) + 1
-        starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [len(tbl)]])
-        parts: list[bytes] = []
-        num_layers = 0
-        for s, e in zip(starts, ends):
-            sub = tbl.slice(int(s), int(e - s))
-            name = sub.column("layer_name")[0].as_py()
-            lb, nf, _, _ = _point_layer_bytes_arrow(sub, name, prop_spec)
-            if nf > 0:
-                parts.append(len_field(T.TILE_LAYERS, lb))
-                num_layers += 1
-        return pa.table({
-            "z": pa.array([z], pa.int64()),
-            "x": pa.array([x], pa.int64()),
-            "y": pa.array([y], pa.int64()),
-            "num_layers": pa.array([num_layers], pa.int32()),
-            "tile_bytes": pa.array([b"".join(parts)], pa.binary()),
-        })
+    prop_spec = prop_spec or []
+    for col in _NON_NULL_COLS + tuple(c for _, _, c in prop_spec):
+        if tbl.column(col).null_count:
+            raise ValueError(
+                f"point encode: column {col!r} must be non-null (a NULL "
+                "has no MVT wire form here; filter or fill before "
+                "encoding, or use encode_layers)")
+    n = tbl.num_rows
+    tile_start = np.zeros(n, bool)
+    tile_start[_tile_starts(tbl)] = True
+    names = pc.dictionary_encode(tbl.column("layer_name").combine_chunks())
+    lcode = names.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    new_seg = tile_start.copy()
+    new_seg[1:] |= lcode[1:] != lcode[:-1]
+    seg = np.cumsum(new_seg) - 1
+    seg_row = np.append(np.flatnonzero(new_seg), n)
+    nseg = seg_row.size - 1
 
-    return features.groupBy("z", "x", "y").applyInArrow(fn, schema=TILE_SCHEMA)
+    nprops = len(prop_spec)
+    codes = None
+    vsection = b""
+    entry_off = byte_off = np.zeros(nseg + 1, np.int64)
+    if nprops:
+        codes, vsection, entry_off, byte_off = _build_value_dict_arrow(
+            tbl, prop_spec, seg)
+    fsection, row_len = _point_features_bytes(
+        *(tbl.column(c).to_numpy().astype(np.int64)
+          for c in ("feature_id", "loc_x", "loc_y")),
+        codes, nprops)
+    feat_off = np.zeros(n + 1, np.int64)
+    np.cumsum(row_len, out=feat_off[1:])
+    feat_off = feat_off[seg_row].tolist()
+    byte_off = byte_off.tolist()
+
+    headers = [varint_field(T.LAYER_VERSION, 2)
+               + len_field(T.LAYER_NAME, s.encode("utf-8"))
+               + varint_field(T.LAYER_EXTENT, 4096)
+               for s in names.dictionary.to_pylist()]
+    keys = b"".join(len_field(T.LAYER_KEYS, k.encode("utf-8"))
+                    for k, _, _ in prop_spec)
+    seg_name = lcode[seg_row[:-1]]
+    layers = [b"".join((headers[seg_name[s]],
+                        fsection[feat_off[s]:feat_off[s + 1]], keys,
+                        vsection[byte_off[s]:byte_off[s + 1]]))
+              for s in range(nseg)]
+
+    first = seg_row[:-1] if per_layer else np.flatnonzero(tile_start)
+    cols = {c: pa.array(tbl.column(c).to_numpy()[first], pa.int64())
+            for c in ("z", "x", "y")}
+    if per_layer:
+        cols["layer_name"] = names.dictionary.take(pa.array(seg_name))
+        cols["num_features"] = pa.array(np.diff(seg_row), pa.int64())
+        cols["key_table_size"] = pa.array(np.full(nseg, nprops), pa.int32())
+        cols["value_table_size"] = pa.array(np.diff(entry_off), pa.int32())
+        cols["layer_bytes"] = pa.array(layers, pa.binary())
+    else:
+        # a tile is its layers, each wrapped in a TILE_LAYERS field
+        tile_seg = np.append(np.flatnonzero(tile_start[seg_row[:-1]]), nseg)
+        cols["num_layers"] = pa.array(np.diff(tile_seg), pa.int32())
+        cols["tile_bytes"] = pa.array(
+            [b"".join(len_field(T.TILE_LAYERS, lb) for lb in layers[a:b])
+             for a, b in zip(tile_seg[:-1].tolist(), tile_seg[1:].tolist())],
+            pa.binary())
+    return pa.RecordBatch.from_pydict(cols)
 
 
-def _encode_point_layer_group(pdf: pd.DataFrame, prop_spec) -> pd.DataFrame:
-    """Fully vectorized single-point layer encode.
-
-    The entire features section of a layer message is a concatenation
-    of varints (field keys, lengths, ids, command ints, tag indexes), so
-    one (n_features x K) uint64 matrix flattened through
-    encode_varint_array produces the whole section in a single
-    vectorized pass — no per-feature Python. Dictionary semantics are
-    byte-identical to vtzero's add_value first-appearance order
-    (builder_impl.hpp:104-147): per-column factorize, cross-column
-    byte-dedup, then rank by first appearance in the interleaved
-    (feature-major) value stream — exactly the order sequential
-    add_property calls would produce.
-
-    prop_spec: list of (key_name, vtype, column) with non-null columns;
-    feature ids must be non-null (the generic path handles the rest).
-    """
-    pdf = pdf.sort_values("feature_ordinal", kind="stable")
-    z, x, y = int(pdf["z"].iloc[0]), int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0])
-    name = pdf["layer_name"].iloc[0]
-    layer_bytes, n, ksize, vsize = _point_layer_bytes(pdf, name, prop_spec)
-    return pd.DataFrame(
-        [{
-            "z": z, "x": x, "y": y, "layer_name": name,
-            "num_features": n,
-            "key_table_size": ksize,
-            "value_table_size": vsize,
-            "layer_bytes": layer_bytes,
-        }]
-    )
-
-
-def encode_point_layers(features: DataFrame, prop_spec=None) -> DataFrame:
-    """Vectorized encode for single-point features with a fixed property
-    schema (the 10^12-image hot path). Byte-identical to encode_layers
-    on the same input (asserted in tests); use encode_layers for
-    multi-part geometries, null ids, or per-row property shapes.
-
-    Routes through the Arrow kernel (applyInArrow over the same
-    per-layer groups; strings stay in their utf-8 buffers — the
-    encode_point_tiles_arrow path per group); byte parity with the
-    pandas kernel pinned in tests/test_fast_encode.py."""
+def _encode_point_batches(batches, prop_spec, per_layer: bool):
+    """mapInArrow body over a (z, x, y)-partitioned, sorted partition:
+    a tile may straddle Arrow batches, so each batch's trailing tile is
+    carried into the next; complete tiles are encoded in chunks of at
+    most ENCODE_CHUNK_ROWS rows, cut at tile starts."""
     import pyarrow as pa
 
-    def fn(tbl: "pa.Table") -> "pa.Table":
-        tbl = tbl.sort_by([("feature_ordinal", "ascending")])
-        z = tbl.column("z")[0].as_py()
-        x = tbl.column("x")[0].as_py()
-        y = tbl.column("y")[0].as_py()
-        name = tbl.column("layer_name")[0].as_py()
-        lb, n, ksize, vsize = _point_layer_bytes_arrow(tbl, name,
-                                                       prop_spec)
-        return pa.table({
-            "z": pa.array([z], pa.int64()),
-            "x": pa.array([x], pa.int64()),
-            "y": pa.array([y], pa.int64()),
-            "layer_name": pa.array([name], pa.string()),
-            "num_features": pa.array([n], pa.int64()),
-            "key_table_size": pa.array([ksize], pa.int32()),
-            "value_table_size": pa.array([vsize], pa.int32()),
-            "layer_bytes": pa.array([lb], pa.binary()),
-        })
-
-    return features.groupBy("z", "x", "y", "layer_name").applyInArrow(
-        fn, schema=LAYER_SCHEMA
-    )
+    carry = None
+    for batch in batches:
+        tbl = pa.Table.from_batches([batch])
+        if carry is not None:
+            tbl = pa.concat_tables([carry, tbl])
+        if tbl.num_rows == 0:
+            continue
+        starts = _tile_starts(tbl)
+        yield from _encode_point_chunks(tbl, starts[:-1], starts[-1],
+                                        prop_spec, per_layer)
+        carry = tbl.slice(starts[-1])
+    if carry is not None:
+        yield from _encode_point_chunks(carry, np.zeros(1, np.int64),
+                                        carry.num_rows, prop_spec, per_layer)
 
 
-def encode_point_layers_pandas(features: DataFrame,
-                               prop_spec=None) -> DataFrame:
-    """The pandas applyInPandas form (parity reference for the Arrow
-    kernel above)."""
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _encode_point_layer_group(pdf, prop_spec)
+def _encode_point_chunks(tbl, starts, end, prop_spec, per_layer: bool):
+    """Encode tbl[:end] — whole tiles beginning at ``starts`` — in
+    chunks of at most ENCODE_CHUNK_ROWS rows cut at tile starts."""
+    bounds = np.append(starts, end)
+    i = 0
+    while i < starts.size:
+        j = int(np.searchsorted(bounds, bounds[i] + ENCODE_CHUNK_ROWS,
+                                side="right")) - 1
+        j = max(j, i + 1)
+        a, b = int(bounds[i]), int(bounds[j])
+        yield _encode_point_chunk(tbl.slice(a, b - a), prop_spec, per_layer)
+        i = j
 
-    return features.groupBy("z", "x", "y", "layer_name").applyInPandas(
-        fn, schema=LAYER_SCHEMA
-    )
+
+def _sorted_for_encode(features: DataFrame) -> DataFrame:
+    """One (z, x, y) hash exchange, then a within-partition sort that
+    puts every tile's rows together in layer_name, feature_ordinal
+    order (SURVEY §2.8) — the order a sequential vtzero builder run
+    would add them."""
+    return features.repartition("z", "x", "y").sortWithinPartitions(
+        "z", "x", "y", "layer_name", "feature_ordinal")
 
 
 def encode_point_tiles(features: DataFrame, prop_spec=None) -> DataFrame:
-    """Fused layer+tile encode: ONE shuffle on (z,x,y), one grouped UDF
-    per tile that encodes its layers (layer_name order, SURVEY §2.8)
-    and concatenates them into the tile blob. Byte-identical to
-    encode_tiles(encode_point_layers(...)) but with half the shuffles
-    and no tiny intermediate layer groups — the per-tile grouping is
-    also what a 1000-executor run wants: tile count grows with data,
-    so parallelism scales while each group stays bounded by the tile's
-    feature budget."""
-    from ..mvt.pbf import len_field
+    """Fused layer+tile encode for single-point features with a fixed
+    property schema (the 10^12-image hot path): ONE shuffle on (z,x,y),
+    then a mapInArrow pass that encodes whole Arrow batches with the
+    batch point encoder (_encode_point_chunk; layers in layer_name
+    order, zero-feature layers cannot occur). Byte-identical to
+    encode_tiles(encode_layers(...)) on the same input (asserted in
+    tests). Strings never become Python objects: Arrow
+    dictionary_encode on the utf-8 buffers, tables by numpy scatter.
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y = int(pdf["z"].iloc[0]), int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0])
-        pdf = pdf.sort_values(["layer_name", "feature_ordinal"], kind="stable")
-        parts = []
-        num_layers = 0
-        for name, sub in pdf.groupby("layer_name", sort=True):
-            layer_bytes, n, _, _ = _point_layer_bytes(sub, name, prop_spec)
-            if n > 0:
-                parts.append(len_field(T.TILE_LAYERS, layer_bytes))
-                num_layers += 1
-        return pd.DataFrame(
-            [{"z": z, "x": x, "y": y, "num_layers": num_layers,
-              "tile_bytes": b"".join(parts)}]
-        )
+    features: z, x, y, layer_name, feature_ordinal, feature_id, loc_x,
+    loc_y and the prop_spec columns; prop_spec: list of (key_name,
+    vtype, column). feature_id, loc_x, loc_y, layer_name and the
+    prop_spec columns must be non-null (ValueError otherwise); use
+    encode_layers for null ids, multi-part geometries or per-row
+    property shapes."""
+    return _sorted_for_encode(features).mapInArrow(
+        lambda it: _encode_point_batches(it, prop_spec, per_layer=False),
+        schema=TILE_SCHEMA)
 
-    return features.groupBy("z", "x", "y").applyInPandas(fn, schema=TILE_SCHEMA)
+
+# the name the Arrow-native callers (perfbench, tools) use
+encode_point_tiles_arrow = encode_point_tiles
+
+
+def encode_point_layers(features: DataFrame, prop_spec=None) -> DataFrame:
+    """encode_point_tiles, one row per encoded layer (LAYER_SCHEMA)
+    instead of per tile: the same shuffle, sort and batch encoder.
+    Byte- and stats-identical to encode_layers on the same input
+    (asserted in tests)."""
+    return _sorted_for_encode(features).mapInArrow(
+        lambda it: _encode_point_batches(it, prop_spec, per_layer=True),
+        schema=LAYER_SCHEMA)
 
 
 def _encode_tile_group(pdf: pd.DataFrame) -> pd.DataFrame:

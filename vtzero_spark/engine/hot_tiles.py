@@ -1,7 +1,7 @@
 """Skew-safe MVT encode for HOT tiles (chunked, byte-identical).
 
-The fused single-group encode (assemble.encode_point_tiles) gives one
-task per tile — perfect until one tile holds a disproportionate share
+The fused encode (assemble.encode_point_tiles) encodes each tile whole
+inside one task — perfect until one tile holds a disproportionate share
 of the data (a z0/z1 pyramid node, a mega-city tile). The MVT format
 forces the final layer blob to be assembled in one place, but nothing
 forces the EXPENSIVE parts — dictionary construction and per-feature
@@ -309,7 +309,7 @@ def encode_point_tiles_chunked(
         pdf = pdf.sort_values("feature_ordinal", kind="stable")
         codes = np.stack(
             [pdf[f"tag{c}"].to_numpy(np.int64) for c in range(nprops)], axis=1)
-        section = assemble._point_features_bytes(
+        section, _ = assemble._point_features_bytes(
             pdf["feature_id"].to_numpy(np.int64),
             pdf["loc_x"].to_numpy(np.int64),
             pdf["loc_y"].to_numpy(np.int64),

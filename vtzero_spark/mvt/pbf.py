@@ -92,37 +92,37 @@ def decode_varint(buf: bytes, pos: int) -> tuple[int, int]:
 # ---------------------------------------------------------------- varint (vectorized)
 
 def encode_varint_array(values: np.ndarray) -> bytes:
-    """Vectorized LEB128 of a uint64 array -> concatenated bytes.
+    """Vectorized LEB128 of a uint64 array (flattened in C order) ->
+    concatenated bytes.
 
-    No per-value Python loop: ten vectorized passes, one per possible
-    output byte slot.
+    No per-value Python loop: one pass per output byte slot, each over
+    only the values that still continue, so an array of small values
+    costs about one full-length pass.
     """
-    v = np.ascontiguousarray(values, dtype=_U64)
+    v = np.ascontiguousarray(values, dtype=_U64).reshape(-1)
     if v.size == 0:
         return b""
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    for k in range(1, 10):
-        nbytes += (v >= _U64(1) << _U64(7 * k)).astype(np.int64)
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    for j in range(10):
-        mask = nbytes > j
-        if not mask.any():
-            break
-        idx = starts[mask] + j
-        chunk = (v[mask] >> _U64(7 * j)) & _U64(0x7F)
-        cont = (nbytes[mask] - 1) > j
-        out[idx] = chunk.astype(np.uint8) | (cont.astype(np.uint8) << 7)
-    return out.tobytes()
+    nbytes = varint_len_array(v)
+    pos = np.cumsum(nbytes) - nbytes
+    out = np.empty(int(pos[-1] + nbytes[-1]), dtype=np.uint8)
+    while True:
+        more = v > _U64(0x7F)
+        out[pos] = (v & _U64(0x7F)).astype(np.uint8) | (more.astype(np.uint8) << 7)
+        if not more.any():
+            return out.tobytes()
+        keep = np.flatnonzero(more)
+        v = v[keep] >> _U64(7)
+        pos = pos[keep] + 1
 
 
 def varint_len_array(values: np.ndarray) -> np.ndarray:
-    """Vectorized LEB128 encoded-length of each uint64 value."""
+    """Vectorized LEB128 encoded-length of each uint64 value (one pass
+    per byte of the largest value's encoding)."""
     v = np.ascontiguousarray(values, dtype=_U64)
     n = np.ones(v.shape, dtype=np.int64)
-    for k in range(1, 10):
-        n += (v >= _U64(1) << _U64(7 * k)).astype(np.int64)
+    if v.size:
+        for k in range(1, -(-int(v.max()).bit_length() // 7)):
+            n += v >= _U64(1) << _U64(7 * k)
     return n
 
 
