@@ -131,7 +131,7 @@ def test_join_attributes_validation_and_malformed_tiles(spark, sf_dir):
 def test_join_attributes_plan_broadcasts_one_exchange(spark, sf_dir):
     """The enrichment plan at 100 TB: the dimension side broadcasts
     (never a SortMergeJoin) and the ONLY Exchanges are those of the
-    base corpus derivation + the re-encode's own groupBy(z,x,y) —
+    base corpus derivation + the re-encode's own repartition(z,x,y) —
     the join itself adds none."""
     _, tiles = _region_tiles(spark, sf_dir)
     base_ex = len(re.findall(r"\(\d+\) Exchange", plan(tiles)))

@@ -133,9 +133,39 @@ def test_arrow_props_decode_matches_pandas_props_decode(spark, sf_dir):
                 assert ca[fld] == cb[fld], (k, fld)
 
 
+def _geom_tiles_reference(feats, prop_spec=None):
+    """(z, x, y) -> (num_layers, tile bytes) built feature by feature
+    from the collected rows by the sequential builder
+    (tile.assemble_layer: layers by name, features by ordinal)."""
+    import itertools
+
+    import numpy as np
+
+    from vtzero_spark.mvt import tile as T
+    from vtzero_spark.mvt import values as V
+
+    rows = sorted(feats.collect(), key=lambda r: (
+        r["z"], r["x"], r["y"], r["layer_name"].encode("utf-8"),
+        r["feature_ordinal"]))
+    out = {}
+    for zxy, trows in itertools.groupby(
+            rows, key=lambda r: (r["z"], r["x"], r["y"])):
+        blobs = [T.assemble_layer(name, [
+            (r["feature_id"], r["geom_type"],
+             np.array(r["geometry"] or [], np.int64),
+             [(k.encode("utf-8"), V.encode_value(vt, r[c]))
+              for k, vt, c in prop_spec or []])
+            for r in lrows])
+            for name, lrows in itertools.groupby(
+                trows, key=lambda r: r["layer_name"])]
+        out[zxy] = (len(blobs), T.build_tile(blobs))
+    return out
+
+
 def test_geom_tiles_arrow_matches_pandas(spark, sf_dir):
-    """encode_geom_tiles_arrow must be byte-identical to the pandas
-    kernel — with and without a prop_spec, across rect and donut
+    """encode_geom_tiles (the batch Arrow encoder over command
+    streams) must be byte-identical to the sequential builder fed the
+    same rows — with and without a prop_spec, across rect and donut
     streams (mixed ring windings)."""
     from pyspark.sql import functions as F
     from vtzero_spark.engine import geomops, synth, tiling
@@ -144,19 +174,17 @@ def test_geom_tiles_arrow_matches_pandas(spark, sf_dir):
     assigned = tiling.assign_tiles(img, zoom=4, extent=4096, buffer=0)
     for feats in (geomops.rect_stream_features(assigned),
                   geomops.donut_stream_features(assigned)):
-        a = {(r["z"], r["x"], r["y"]): (r["num_layers"], bytes(r["tile_bytes"]))
-             for r in assemble.encode_geom_tiles_pandas(feats).collect()}
+        a = _geom_tiles_reference(feats)
         b = {(r["z"], r["x"], r["y"]): (r["num_layers"], bytes(r["tile_bytes"]))
-             for r in assemble.encode_geom_tiles_arrow(feats).collect()}
+             for r in assemble.encode_geom_tiles(feats).collect()}
         assert a == b and len(a) > 0
     # prop_spec path (the join_attrs shape): region property rides
     f = geomops.rect_stream_features(assigned).withColumn(
         "region", F.concat(F.lit("R"), (F.col("feature_id") % 7).cast("string")))
     spec = [("region", 1, "region")]
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in assemble.encode_geom_tiles_pandas(f, prop_spec=spec).collect()}
+    a = {k: v[1] for k, v in _geom_tiles_reference(f, spec).items()}
     b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in assemble.encode_geom_tiles_arrow(f, prop_spec=spec).collect()}
+         for r in assemble.encode_geom_tiles(f, prop_spec=spec).collect()}
     assert a == b and len(a) > 0
 
 

@@ -383,10 +383,10 @@ def test_tippecanoe_job_text_files_to_archives(spark, sf_dir, tmp_path):
 
 
 def test_geojson_to_tiles_single_exchange(spark):
-    """The whole text->tile pipeline is ONE shuffle: the explicit
-    tile-keyed repartition directly under the encode groupBy (Python
-    map nodes report UnknownPartitioning, so it must sit AFTER the
-    kernels to be reused; AQE cannot coalesce a user repartition)."""
+    """The whole text->tile pipeline is ONE shuffle: the encode's own
+    tile-keyed repartition(z, x, y) (Python map nodes report
+    UnknownPartitioning, so no exchange before the kernels could be
+    reused by it)."""
     import re
 
     lines = spark.createDataFrame(

@@ -139,3 +139,29 @@ def test_chunked_null_prop_value_errors_loudly(spark):
     spec = [("fmt", V.VT_STRING, "fmt")]
     with pytest.raises(Exception, match="non-null"):
         encode_point_tiles_chunked(feats, spec, chunk_rows=10).collect()
+
+
+@pytest.mark.parametrize("chunk_rows", [1, 100_000])
+def test_chunked_null_feature_id_is_omitted(spark, chunk_rows):
+    """A NULL feature_id is written without an id on both the chunked
+    and the single-group path (not as id 2^63), and decodes as NULL."""
+    from vtzero_spark.mvt import values as V
+
+    rows = [(2, 1, 1, "L", i, None if i == 1 else 10 + i, 3,
+             [9, 2 * i, 2 * i, 18, 4, 6, 3, 15], f"r{i % 2}")
+            for i in range(3)]
+    feats = spark.createDataFrame(
+        rows, "z long, x long, y long, layer_name string, "
+              "feature_ordinal long, feature_id long, geom_type int, "
+              "geometry array<long>, region string")
+    spec = [("region", V.VT_STRING, "region")]
+    single = assemble.encode_geom_tiles(feats, prop_spec=spec).collect()
+    chunked = encode_geom_tiles_chunked(feats, spec,
+                                        chunk_rows=chunk_rows).collect()
+    assert len(single) == len(chunked) == 1
+    assert (chunked[0]["num_layers"], bytes(chunked[0]["tile_bytes"])) == \
+        (single[0]["num_layers"], bytes(single[0]["tile_bytes"]))
+    ids = [r["feature_id"] for r in assemble.decode_tiles(
+        spark.createDataFrame(chunked).select("z", "x", "y", "tile_bytes"))
+        .orderBy("feature_ordinal").collect()]
+    assert ids == [10, None, 12]

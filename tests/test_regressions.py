@@ -5,8 +5,9 @@
    vectorized fast path used to astype(int64) and TypeError on NaN.
 2. sessionize_stream must sort a user's events ACROSS Arrow chunks,
    not per-chunk, or sessions split wrongly when a user spans batches.
-3. _geomstream_layer_bytes must not IndexError when the trailing
-   feature(s) of a group carry empty geometry (reduceat offset == len).
+3. The batch tile encoder (assemble._encode_chunk) must not
+   IndexError when the trailing feature(s) of a layer carry empty
+   geometry (an old reduceat offset == len).
 """
 
 from __future__ import annotations
@@ -127,15 +128,24 @@ def test_sessionize_native_gap_boundary(spark):
 
 def test_geomstream_trailing_empty_geometry():
     # feature 0: real point; features 1+2: empty command streams at the
-    # END of the group -> reduceat offsets == len(gvals); previously
+    # END of the layer -> offsets == len(geometry values); previously
     # IndexError, now encodes with a zero-length geometry field
+    import pyarrow as pa
+
     g0 = G.encode_point(np.array([[5, 7]])).astype(np.int64)
-    ids = np.array([1, 2, 3], dtype=np.int64)
-    gtypes = np.array([G.GEOM_POINT] * 3, dtype=np.int64)
-    gflat = g0
-    goffsets = np.array([0, len(g0), len(g0), len(g0)], dtype=np.int64)
-    lb, nf, nkeys, vsize = assemble._geomstream_layer_bytes(
-        "t", ids, gtypes, gflat, goffsets, None, None)
+
+    def layer(geoms):
+        n = len(geoms)
+        tbl = pa.table({
+            "z": [0] * n, "x": [0] * n, "y": [0] * n, "layer_name": ["t"] * n,
+            "feature_ordinal": list(range(n)), "feature_id": [1, 2, 3][:n],
+            "geom_type": pa.array([G.GEOM_POINT] * n, pa.int32()),
+            "geometry": pa.array(geoms, pa.list_(pa.int64())),
+        })
+        [row] = assemble._encode_chunk(tbl, None, per_layer=True).to_pylist()
+        return row["layer_bytes"], row["num_features"]
+
+    lb, nf = layer([g0.tolist(), [], []])
     assert nf == 3 and isinstance(lb, (bytes, bytearray))
     # the non-empty feature's bytes are intact; the empty ones carry a
     # zero-length geometry field, which a strict reader rejects exactly
@@ -151,8 +161,6 @@ def test_geomstream_trailing_empty_geometry():
     assert f0.id == 1 and list(f0.geometry) == list(g0)
     with pytest.raises(FormatError):
         T.parse_feature(views[1])
-    # all-empty group also survives (gvals fully empty)
-    lb2, nf2, _, _ = assemble._geomstream_layer_bytes(
-        "t", ids[:1], gtypes[:1], np.empty(0, np.int64),
-        np.array([0, 0], dtype=np.int64), None, None)
+    # all-empty layer also survives (geometry values fully empty)
+    lb2, nf2 = layer([[]])
     assert nf2 == 1

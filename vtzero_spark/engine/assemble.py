@@ -1,13 +1,16 @@
 """Tile/layer/feature assembly and disassembly on Spark.
 
-Write path (SURVEY §3.2): point features -> repartition(z,x,y) ->
-sortWithinPartitions(z,x,y,layer_name,feature_ordinal) -> mapInArrow
-batch encode -> tile_bytes (encode_point_tiles; encode_point_layers
-emits the same layers one row each). Ordering discipline (SURVEY
-§2.8): Spark gives no intra-partition order guarantees, so the plan
-sorts every tile's rows by layer_name and feature_ordinal before
-encoding — dictionary first-appearance order and feature order then
-match a sequential vtzero builder run exactly. The generic
+Write path (SURVEY §3.2): features -> repartition(z,x,y) ->
+sortWithinPartitions(z,x,y,layer_name,feature_ordinal nulls last) ->
+mapInArrow batch encode -> tile_bytes. One encoder serves single points
+(encode_point_tiles, from loc_x/loc_y) and pre-built command streams
+(encode_geom_tiles, from a geometry column); encode_point_layers emits
+the same layers one row each. Ordering discipline (SURVEY §2.8): Spark
+gives no intra-partition order guarantees, so the plan sorts every
+tile's rows by layer_name and feature_ordinal before encoding —
+dictionary first-appearance order and feature order then match a
+sequential vtzero builder run exactly. A NULL feature_id writes the
+feature without an id (vtzero's has_id() == false). The generic
 encode_layers/encode_tiles pair (per feature, any geometry) is the
 reference the batch encoder is pinned against.
 
@@ -139,7 +142,7 @@ def encode_layers(features: DataFrame) -> DataFrame:
     )
 
 
-# ------------------------------------------------- vectorized point path
+# ------------------------------------------------- vectorized tile encode
 
 _VT_PREFIX = np.zeros(8, dtype=np.uint8)
 _VT_PREFIX[V.VT_STRING] = 0x0A
@@ -182,19 +185,10 @@ def _canon_keys(vtype: int, uniq):
     raise ValueError(f"unknown vtype {vtype}")
 
 
-def _build_value_dict(pdf: pd.DataFrame, prop_spec):
-    """pandas frontend of the vectorized dictionary build: factorize
-    each property column, then delegate to _value_dict_core."""
-    factorized = []
-    for _, vtype, col in prop_spec:
-        codes, uniq = pd.factorize(pdf[col], use_na_sentinel=False)
-        factorized.append((vtype, np.asarray(codes, dtype=np.int64), uniq))
-    return _value_dict_core(factorized)
-
-
 def _build_value_dict_arrow(tbl, prop_spec, seg=None):
-    """Arrow frontend: dictionary_encode keeps strings in Arrow buffers
-    (no Python-object churn — the hot path at scale)."""
+    """Arrow frontend of _value_dict_core: dictionary_encode keeps
+    strings in Arrow buffers (no Python-object churn — the hot path at
+    scale)."""
     import pyarrow.compute as pc
 
     factorized = []
@@ -223,17 +217,11 @@ def _value_dict_core(factorized, seg=None):
     Returns (final_codes (n, ncols) per-layer indexes, values_section
     bytes of every layer back to back, entry_off (nseg+1) and byte_off
     (nseg+1) cutting that section per layer). No per-unique or
-    per-layer Python: dictionary_encode/factorize for dedup, one
-    np.unique over (layer, value) for the ranks, cumsum/scatter for
-    the table section.
+    per-layer Python: dictionary_encode for dedup, one np.unique over
+    (layer, value) for the ranks, _values_section for the table.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from ..mvt.pbf import (
-        copy_segments, encode_varint_array, pack_len_fields,
-        strings_to_buffer, varint_len_array,
-    )
 
     ncols = len(factorized)
     col_codes = [codes for _, codes, _ in factorized]
@@ -287,323 +275,181 @@ def _value_dict_core(factorized, seg=None):
     final_codes = (rank[inverse].reshape(n, ncols)
                    - entry_off[seg][:, None])
 
-    # encode the table in entry order, one scatter pass per vtype
     vid = entry_key % max(total, 1)
-    vt_ord = np.concatenate(vt_parts)[vid]
-    ix_ord = np.concatenate(ix_parts)[vid]
-    str_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    varint_cache: dict[int, np.ndarray] = {}
-    for vtype, vals in canon_vals.items():
-        if vtype == V.VT_STRING:
-            str_cache[vtype] = strings_to_buffer(vals)
-        elif vtype in (V.VT_INT, V.VT_UINT):
-            varint_cache[vtype] = vals.astype(np.uint64)
-        elif vtype == V.VT_SINT:
-            varint_cache[vtype] = ((vals << 1) ^ (vals >> 63)).astype(np.uint64)
+    values_section, item_off = _values_section(
+        np.concatenate(vt_parts)[vid], np.concatenate(ix_parts)[vid],
+        canon_vals)
+    return final_codes, values_section, entry_off, item_off[entry_off]
 
-    nent = order.size
+
+def _values_section(vt_ord: np.ndarray, ix_ord: np.ndarray, canon_vals):
+    """Value-table bytes: entry i is ``canon_vals[vt_ord[i]][ix_ord[i]]``
+    (per vtype, the keys _canon_keys gives: strings, int64 or the
+    bool/float/double wire bits), each wrapped in its LAYER_VALUES
+    len-field, back to back; plus the (n + 1) byte offsets of those
+    fields. One scatter pass per vtype (types.hpp:141-186)."""
+    from ..mvt.pbf import (
+        copy_segments, encode_varint_array, pack_len_fields,
+        strings_to_buffer, varint_len_array,
+    )
+
+    nent = vt_ord.size
     entry_len = np.empty(nent, dtype=np.int64)
-    for vtype in groups:
+    payloads = []
+    for vtype, vals in canon_vals.items():
         sel = vt_ord == vtype
         ix = ix_ord[sel]
         if vtype == V.VT_STRING:
-            _, offs = str_cache[vtype]
+            buf, offs = strings_to_buffer(vals)
             slen = (offs[1:] - offs[:-1])[ix]
-            entry_len[sel] = 1 + varint_len_array(slen.astype(np.uint64)) + slen
+            lenlens = varint_len_array(slen)
+            entry_len[sel] = 1 + lenlens + slen
+            payload = (buf, offs[:-1][ix], slen, lenlens)
         elif vtype in _VARINT_VTYPES:
-            entry_len[sel] = 1 + varint_len_array(varint_cache[vtype][ix])
+            payload = vals[ix]
+            if vtype == V.VT_SINT:
+                payload = (payload << 1) ^ (payload >> 63)
+            payload = payload.astype(np.uint64)
+            entry_len[sel] = 1 + varint_len_array(payload)
         else:
-            entry_len[sel] = {V.VT_BOOL: 2, V.VT_FLOAT: 5, V.VT_DOUBLE: 9}[vtype]
+            # bool / float / double: the canonical keys are the payload
+            payload = np.ascontiguousarray(vals[ix])
+            entry_len[sel] = 1 + payload.dtype.itemsize
+        payloads.append((vtype, sel, payload))
+
     offsets = np.zeros(nent + 1, dtype=np.int64)
     np.cumsum(entry_len, out=offsets[1:])
     out = np.empty(int(offsets[-1]), dtype=np.uint8)
     starts = offsets[:-1]
     out[starts] = _VT_PREFIX[vt_ord]
-    for vtype in groups:
-        sel = vt_ord == vtype
-        sel_off = starts[sel]
-        ix = ix_ord[sel]
+    for vtype, sel, payload in payloads:
+        dst = starts[sel] + 1
         if vtype == V.VT_STRING:
-            buf, offs = str_cache[vtype]
-            slen = (offs[1:] - offs[:-1])[ix]
-            lenlens = varint_len_array(slen.astype(np.uint64))
-            lenbuf = np.frombuffer(
-                encode_varint_array(slen.astype(np.uint64)), dtype=np.uint8)
+            buf, src, slen, lenlens = payload
+            lenbuf = np.frombuffer(encode_varint_array(slen), dtype=np.uint8)
             copy_segments(lenbuf, np.cumsum(lenlens) - lenlens, lenlens,
-                          out, sel_off + 1)
-            copy_segments(buf, offs[:-1][ix], slen, out, sel_off + 1 + lenlens)
+                          out, dst)
+            copy_segments(buf, src, slen, out, dst + lenlens)
         elif vtype in _VARINT_VTYPES:
-            vals = varint_cache[vtype][ix]
-            vlens = varint_len_array(vals)
-            vbuf = np.frombuffer(encode_varint_array(vals), dtype=np.uint8)
-            copy_segments(vbuf, np.cumsum(vlens) - vlens, vlens, out, sel_off + 1)
+            vlens = entry_len[sel] - 1
+            vbuf = np.frombuffer(encode_varint_array(payload), dtype=np.uint8)
+            copy_segments(vbuf, np.cumsum(vlens) - vlens, vlens, out, dst)
         else:
-            # bool / float / double: the canonical keys are the payload
-            raw = canon_vals[vtype][ix]
-            width = raw.dtype.itemsize
-            out[sel_off[:, None] + 1 + np.arange(width)] = \
-                np.ascontiguousarray(raw).view(np.uint8).reshape(-1, width)
-    values_section = pack_len_fields(T.LAYER_VALUES, out, offsets)
-    item_len = 1 + varint_len_array(entry_len.astype(np.uint64)) + entry_len
+            width = payload.dtype.itemsize
+            out[dst[:, None] + np.arange(width)] = \
+                payload.view(np.uint8).reshape(-1, width)
+    item_len = 1 + varint_len_array(entry_len) + entry_len
     item_off = np.zeros(nent + 1, dtype=np.int64)
     np.cumsum(item_len, out=item_off[1:])
-    return final_codes, values_section, entry_off, item_off[entry_off]
+    return pack_len_fields(T.LAYER_VALUES, out, offsets), item_off
 
 
-def _point_features_bytes(ids: np.ndarray, lx: np.ndarray, ly: np.ndarray,
-                          final_codes, nprops: int) -> tuple[bytes, np.ndarray]:
-    """Features-section bytes (each feature wrapped in its LAYER_FEATURES
-    len-field) for single-point features with pre-resolved tag codes,
-    plus each feature's byte length in it.
+def _geomstream_features_bytes(ids: np.ndarray, has_id: np.ndarray,
+                               gtypes: np.ndarray, gflat: np.ndarray,
+                               goffsets: np.ndarray, final_codes,
+                               nprops: int) -> tuple[bytes, np.ndarray]:
+    """Features-section bytes — every feature message in vtzero's field
+    order (type, id, geometry, tags; builder.hpp:596-599,429-436), each
+    wrapped in its LAYER_FEATURES len-field — plus each feature's byte
+    length in it.
 
-    The section is a concatenation of varints (field keys, lengths,
-    ids, command ints, tag indexes), so one (n_features x K) uint64
-    matrix flattened through encode_varint_array produces it in a
-    single vectorized pass."""
-    from ..mvt.pbf import encode_varint_array, varint_len_array
-
-    n = len(ids)
-    # varint matrix: [18, feat_len | 24, gtype, 8, id, 34, geom_len,
-    #                 MoveTo(1)=9, zzx, zzy | 18, tags_len, k0,v0,...]
-    k_body = 9 + (2 + 2 * nprops if nprops else 0)
-    M = np.empty((n, 2 + k_body), dtype=np.uint64)
-    M[:, 2] = 24  # key(FEATURE_TYPE=3, varint)
-    M[:, 3] = G.GEOM_POINT
-    M[:, 4] = 8  # key(FEATURE_ID=1, varint)
-    M[:, 5] = ids.astype(np.uint64)
-    M[:, 6] = 34  # key(FEATURE_GEOMETRY=4, len)
-    M[:, 8] = 9  # MoveTo(count=1)
-    M[:, 9] = ((lx << 1) ^ (lx >> 63)) & 0xFFFFFFFF
-    M[:, 10] = ((ly << 1) ^ (ly >> 63)) & 0xFFFFFFFF
-    geom_len = varint_len_array(M[:, 8:11]).sum(axis=1)
-    M[:, 7] = geom_len.astype(np.uint64)
-    if nprops:
-        M[:, 11] = 18  # key(FEATURE_TAGS=2, len)
-        M[:, 13::2] = np.arange(nprops, dtype=np.uint64)  # key indexes
-        M[:, 14::2] = final_codes.astype(np.uint64)
-        tags_len = varint_len_array(M[:, 13:]).sum(axis=1)
-        M[:, 12] = tags_len.astype(np.uint64)
-    feat_len = varint_len_array(M[:, 2:]).sum(axis=1)
-    M[:, 0] = 18  # key(LAYER_FEATURES=2, len)
-    M[:, 1] = feat_len.astype(np.uint64)
-    row_len = 1 + varint_len_array(M[:, 1]) + feat_len
-    return encode_varint_array(M), row_len
-
-
-def _geomstream_features_bytes(ids: np.ndarray, gtypes: np.ndarray,
-                               gflat: np.ndarray, goffsets: np.ndarray,
-                               final_codes, nprops: int) -> bytes:
-    """Features-section bytes for arbitrary pre-built geometry command
-    streams: geometry arrives as a flattened uint32 array + per-feature
-    offsets; the whole section is one variable-width varint scatter —
-    no per-feature Python. Shared by the single-group layer encoder
-    and the chunked hot-tile encoder (a layer's section is the plain
-    concatenation of its chunks' sections)."""
+    Geometry arrives as one flat command-int array cut per feature by
+    ``goffsets`` (n + 1). Where ``has_id`` is False the id field is
+    left out (vtzero's has_id() == false).
+    ``final_codes`` (n, nprops) are the features' value indexes, key i
+    being property i. The section is a concatenation of varints, so the
+    fields are scattered into one flat uint64 stream and encoded by one
+    encode_varint_array — no per-feature Python. A layer's section is
+    the plain concatenation of its chunks' sections (hot_tiles)."""
     from ..mvt.pbf import copy_segments, encode_varint_array, varint_len_array
 
     n = len(ids)
-    glens = np.diff(goffsets)  # varint count per feature's geometry
+    ids = ids.astype(np.uint64)  # a negative id wraps like vtzero's uint64
     gvals = np.ascontiguousarray(gflat, dtype=np.int64).astype(np.uint64)
-    gv_bytes = varint_len_array(gvals)
-    # reduceat raises IndexError when an offset == len(gvals) (trailing
-    # empty geometries); a zero sentinel makes those offsets valid
-    # without disturbing earlier segments, and the glens==0 mask below
-    # zeroes the value reduceat assigns to any empty segment
-    if n:
-        geom_len = np.add.reduceat(np.append(gv_bytes, 0), goffsets[:-1])
-    else:
-        geom_len = np.zeros(0, np.int64)
-    geom_len = np.where(glens == 0, 0, geom_len)
+    glens = np.diff(goffsets)
+    gcum = np.zeros(gvals.size + 1, np.int64)
+    np.cumsum(varint_len_array(gvals), out=gcum[1:])
+    geom_len = gcum[goffsets[1:]] - gcum[goffsets[:-1]]
+    id_n = 2 * has_id.astype(np.int64)
 
-    # head varints per feature: 18, feat_len, 24, gtype, 8, id, 34, geom_len
-    HEAD = 8
-    tags_block = 2 + 2 * nprops if nprops else 0
-    body = np.empty((n, HEAD - 2 + tags_block), dtype=np.uint64)
-    body[:, 0] = 24
-    body[:, 1] = gtypes.astype(np.uint64)
-    body[:, 2] = 8
-    body[:, 3] = ids.astype(np.uint64)
-    body[:, 4] = 34
-    body[:, 5] = geom_len.astype(np.uint64)
+    # per feature: 18, feat_len | 24, gtype | [8, id] | 34, geom_len |
+    # geometry | [18, tags_len, k0, v0, ...]
+    feat_len = (1 + varint_len_array(gtypes)
+                + has_id * (1 + varint_len_array(ids))
+                + 1 + varint_len_array(geom_len) + geom_len)
+    ntags = 2 + 2 * nprops if nprops else 0
     if nprops:
-        body[:, 6] = 18
-        for c in range(nprops):
-            body[:, 8 + 2 * c] = c
-            body[:, 9 + 2 * c] = final_codes[:, c].astype(np.uint64)
-        body[:, 7] = varint_len_array(body[:, 8:]).sum(axis=1).astype(np.uint64)
-    feat_len = varint_len_array(body).sum(axis=1) + geom_len
-    head = np.empty((n, 2), dtype=np.uint64)
-    head[:, 0] = 18
-    head[:, 1] = feat_len.astype(np.uint64)
+        tags = np.empty((n, ntags), dtype=np.uint64)
+        tags[:, 0] = 18  # key(FEATURE_TAGS=2, len)
+        tags[:, 2::2] = np.arange(nprops, dtype=np.uint64)  # key indexes
+        tags[:, 3::2] = final_codes.astype(np.uint64)
+        tags[:, 1] = varint_len_array(tags[:, 2:]).sum(axis=1)
+        feat_len += varint_len_array(tags).sum(axis=1)
 
-    # assemble the flat varint stream: head(2) + body[:,:6] + geometry
-    # + tags-block, per feature
-    per_feat = 2 + 6 + glens + tags_block
+    per_feat = 6 + id_n + glens + ntags
     ends = np.cumsum(per_feat)
     starts = ends - per_feat
     flat = np.empty(int(ends[-1]) if n else 0, dtype=np.uint64)
-    for j in range(2):
-        flat[starts + j] = head[:, j]
-    for j in range(6):
-        flat[starts + 2 + j] = body[:, j]
-    copy_segments(gvals, goffsets[:-1], glens, flat, starts + 8)
-    if nprops:
-        tag_dst = starts + 8 + glens
-        for j in range(tags_block):
-            flat[tag_dst + j] = body[:, 6 + j]
-    return encode_varint_array(flat)
+    flat[starts] = 18  # key(LAYER_FEATURES=2, len)
+    flat[starts + 1] = feat_len
+    flat[starts + 2] = 24  # key(FEATURE_TYPE=3, varint)
+    flat[starts + 3] = gtypes
+    id_pos = (starts + 4)[has_id]
+    flat[id_pos] = 8  # key(FEATURE_ID=1, varint)
+    flat[id_pos + 1] = ids[has_id]
+    geom_pos = starts + 4 + id_n
+    flat[geom_pos] = 34  # key(FEATURE_GEOMETRY=4, len)
+    flat[geom_pos + 1] = geom_len
+    copy_segments(gvals, goffsets[:-1], glens, flat, geom_pos + 2)
+    tag_pos = geom_pos + 2 + glens
+    for j in range(ntags):
+        flat[tag_pos + j] = tags[:, j]
+    row_len = 1 + varint_len_array(feat_len) + feat_len
+    return encode_varint_array(flat), row_len
 
 
-def _geomstream_layer_bytes(name: str, ids: np.ndarray, gtypes: np.ndarray,
-                            gflat: np.ndarray, goffsets: np.ndarray,
-                            prop_spec, dict_result) -> tuple[bytes, int, int, int]:
-    """Vectorized layer encode for arbitrary pre-built geometry command
-    streams (the distributed set_geometry passthrough,
-    builder.hpp:1241-1248)."""
-    from ..mvt.pbf import len_field, varint_field
-
-    n = len(ids)
-    key_table: list[bytes] = []
-    values_section = b""
-    vsize = 0
-    final_codes = None
-    nprops = len(prop_spec) if prop_spec else 0
-    if prop_spec:
-        key_table = [k.encode("utf-8") for k, _, _ in prop_spec]
-        final_codes, values_section, entry_off, _ = dict_result
-        vsize = int(entry_off[-1])
-
-    features_bytes = _geomstream_features_bytes(
-        ids, gtypes, gflat, goffsets, final_codes, nprops)
-
-    header = (
-        varint_field(T.LAYER_VERSION, 2)
-        + len_field(T.LAYER_NAME, name.encode("utf-8"))
-        + varint_field(T.LAYER_EXTENT, 4096)
-    )
-    layer_bytes = b"".join([
-        header,
-        features_bytes,
-        b"".join(len_field(T.LAYER_KEYS, k) for k in key_table),
-        values_section,
-    ])
-    return layer_bytes, n, len(key_table), vsize
-
-
-def encode_geom_tiles(features: DataFrame, prop_spec=None) -> DataFrame:
-    """Fused tile encode for features carrying a pre-built ``geometry``
-    command-stream column (array<long>) — single shuffle on (z,x,y),
-    vectorized variable-width varint assembly. Pair with plan-side
-    geometry expression builders (geomops.rect_cmds/path_cmds) so the
-    whole footprint construction stays in whole-stage codegen.
-
-    Routes through the Arrow kernel (encode_geom_tiles_arrow) — the
-    ListArray buffers feed the assembler directly; byte parity with
-    the pandas kernel is pinned in tests/test_fast_encode.py."""
-    return encode_geom_tiles_arrow(features, prop_spec)
-
-
-def encode_geom_tiles_pandas(features: DataFrame, prop_spec=None) -> DataFrame:
-    """The pandas applyInPandas form of encode_geom_tiles (kept as the
-    parity reference for the Arrow kernel)."""
-    from ..mvt.pbf import len_field
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y = int(pdf["z"].iloc[0]), int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0])
-        pdf = pdf.sort_values(["layer_name", "feature_ordinal"], kind="stable")
-        parts: list[bytes] = []
-        num_layers = 0
-        for name, sub in pdf.groupby("layer_name", sort=True):
-            geoms = sub["geometry"]
-            glens = np.fromiter((len(g) for g in geoms), dtype=np.int64,
-                                count=len(sub))
-            goffsets = np.zeros(len(sub) + 1, dtype=np.int64)
-            np.cumsum(glens, out=goffsets[1:])
-            gflat = (np.concatenate([np.asarray(g, dtype=np.int64) for g in geoms])
-                     if len(sub) else np.empty(0, np.int64))
-            dict_result = _build_value_dict(sub, prop_spec) if prop_spec else None
-            lb, nf, _, _ = _geomstream_layer_bytes(
-                name,
-                sub["feature_id"].to_numpy(np.int64),
-                sub["geom_type"].to_numpy(np.int64),
-                gflat, goffsets, prop_spec, dict_result,
-            )
-            if nf > 0:
-                parts.append(len_field(T.TILE_LAYERS, lb))
-                num_layers += 1
-        return pd.DataFrame(
-            [{"z": z, "x": x, "y": y, "num_layers": num_layers,
-              "tile_bytes": b"".join(parts)}]
-        )
-
-    return features.groupBy("z", "x", "y").applyInPandas(fn, schema=TILE_SCHEMA)
-
-
-def encode_geom_tiles_arrow(features: DataFrame, prop_spec=None) -> DataFrame:
-    """Arrow-native geom-stream tile encode (applyInArrow): the
-    geometry ListArray's values/offsets buffers feed the varint
-    assembler DIRECTLY — no per-row ndarray materialization, no
-    pandas cells (the encode-side twin of the columnar decode).
-    Byte-identical to the pandas encode_geom_tiles kernel (pinned in
-    tests/test_fast_encode.py)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from ..mvt.pbf import len_field
-
-    def fn(tbl: "pa.Table") -> "pa.Table":
-        tbl = tbl.sort_by([("layer_name", "ascending"),
-                           ("feature_ordinal", "ascending")])
-        z = tbl.column("z")[0].as_py()
-        x = tbl.column("x")[0].as_py()
-        y = tbl.column("y")[0].as_py()
-        lcodes = pc.dictionary_encode(
-            tbl.column("layer_name").combine_chunks()) \
-            .indices.to_numpy(zero_copy_only=False)
-        bounds = np.flatnonzero(np.diff(lcodes)) + 1
-        starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [len(tbl)]])
+def _command_streams(tbl) -> tuple[np.ndarray, np.ndarray]:
+    """A chunk's command streams as (flat command ints, offsets (n + 1)):
+    the ``geometry`` list column's values cut by its offsets (a NULL
+    stream is empty), or without that column one MoveTo(1)
+    [9, zz(loc_x), zz(loc_y)] per row."""
+    n = tbl.num_rows
+    if "geometry" in tbl.column_names:
         ga = tbl.column("geometry").combine_chunks()
-        goffs = ga.offsets.to_numpy(zero_copy_only=False) \
-            .astype(np.int64)
-        gvals = ga.values.to_numpy(zero_copy_only=False) \
-            .astype(np.int64)
-        ids_all = tbl.column("feature_id").to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        gt_all = tbl.column("geom_type").to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        parts: list[bytes] = []
-        num_layers = 0
-        for s, e in zip(starts, ends):
-            s, e = int(s), int(e)
-            name = tbl.column("layer_name")[s].as_py()
-            dict_result = _build_value_dict_arrow(
-                tbl.slice(s, e - s), prop_spec) if prop_spec else None
-            lb, nf, _, _ = _geomstream_layer_bytes(
-                name, ids_all[s:e], gt_all[s:e],
-                gvals[goffs[s]:goffs[e]], goffs[s:e + 1] - goffs[s],
-                prop_spec, dict_result)
-            if nf > 0:
-                parts.append(len_field(T.TILE_LAYERS, lb))
-                num_layers += 1
-        return pa.table({
-            "z": pa.array([z], pa.int64()),
-            "x": pa.array([x], pa.int64()),
-            "y": pa.array([y], pa.int64()),
-            "num_layers": pa.array([num_layers], pa.int32()),
-            "tile_bytes": pa.array([b"".join(parts)], pa.binary()),
-        })
+        glens = np.diff(ga.offsets.to_numpy().astype(np.int64))
+        if ga.null_count:
+            glens[ga.is_null().to_numpy(zero_copy_only=False)] = 0
+        goffsets = np.zeros(n + 1, np.int64)
+        np.cumsum(glens, out=goffsets[1:])
+        # flatten() honours the slice offset and skips NULL slots
+        return ga.flatten().to_numpy(zero_copy_only=False), goffsets
+    lx, ly = (tbl.column(c).to_numpy().astype(np.int64)
+              for c in ("loc_x", "loc_y"))
+    cmds = np.empty((n, 3), np.int64)
+    cmds[:, 0] = 9  # MoveTo(count=1)
+    cmds[:, 1] = ((lx << 1) ^ (lx >> 63)) & 0xFFFFFFFF
+    cmds[:, 2] = ((ly << 1) ^ (ly >> 63)) & 0xFFFFFFFF
+    return cmds.reshape(-1), np.arange(n + 1, dtype=np.int64) * 3
 
-    return features.groupBy("z", "x", "y").applyInArrow(
-        fn, schema=TILE_SCHEMA)
+
+def _features_section(tbl, codes, nprops: int) -> tuple[bytes, np.ndarray]:
+    """_geomstream_features_bytes over a chunk's feature_id, geom_type
+    (POINT without that column) and command-stream columns; a NULL
+    feature_id leaves that feature's id out."""
+    fid = tbl.column("feature_id")
+    gtypes = (tbl.column("geom_type").to_numpy().astype(np.int64)
+              if "geom_type" in tbl.column_names
+              else np.full(tbl.num_rows, G.GEOM_POINT, np.int64))
+    return _geomstream_features_bytes(
+        fid.fill_null(0).to_numpy().astype(np.int64),
+        fid.is_valid().to_numpy(), gtypes, *_command_streams(tbl), codes,
+        nprops)
 
 
 # Rows one kernel call encodes at most: complete tiles are packed into
 # chunks of this many rows, cut at tile starts (a larger tile goes
 # alone). Bounds a Python worker's transient arrays at a few MB.
 ENCODE_CHUNK_ROWS = 8192
-
-_NON_NULL_COLS = ("feature_id", "loc_x", "loc_y", "layer_name")
 
 
 def _tile_starts(tbl) -> np.ndarray:
@@ -616,27 +462,31 @@ def _tile_starts(tbl) -> np.ndarray:
     return np.flatnonzero(new)
 
 
-def _encode_point_chunk(tbl, prop_spec, per_layer: bool):
-    """The batch point encoder: a table of whole tiles, rows sorted by
+def _encode_chunk(tbl, prop_spec, per_layer: bool):
+    """The batch tile encoder: a table of whole tiles, rows sorted by
     (z, x, y, layer_name, feature_ordinal) -> one RecordBatch with a
     row per tile (TILE_SCHEMA) or, with ``per_layer``, per layer
     (LAYER_SCHEMA).
 
     Every array pass covers the whole chunk: one dictionary build with
     a dictionary per (tile, layer) segment (_value_dict_core), one
-    varint pass for every feature (_point_features_bytes), one for
-    every value entry; only the final join of header, features, keys
-    and values slices into layer messages loops over segments."""
+    varint pass for every feature (_features_section), one for every
+    value entry; only the final join of header, features, keys and
+    values slices into layer messages loops over segments."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from ..mvt.pbf import len_field, varint_field
 
     prop_spec = prop_spec or []
-    for col in _NON_NULL_COLS + tuple(c for _, _, c in prop_spec):
+    present = tbl.column_names
+    non_null = ["layer_name"] + [c for _, _, c in prop_spec]
+    non_null += ["geom_type"] if "geom_type" in present else []
+    non_null += [] if "geometry" in present else ["loc_x", "loc_y"]
+    for col in non_null:
         if tbl.column(col).null_count:
             raise ValueError(
-                f"point encode: column {col!r} must be non-null (a NULL "
+                f"tile encode: column {col!r} must be non-null (a NULL "
                 "has no MVT wire form here; filter or fill before "
                 "encoding, or use encode_layers)")
     n = tbl.num_rows
@@ -657,10 +507,7 @@ def _encode_point_chunk(tbl, prop_spec, per_layer: bool):
     if nprops:
         codes, vsection, entry_off, byte_off = _build_value_dict_arrow(
             tbl, prop_spec, seg)
-    fsection, row_len = _point_features_bytes(
-        *(tbl.column(c).to_numpy().astype(np.int64)
-          for c in ("feature_id", "loc_x", "loc_y")),
-        codes, nprops)
+    fsection, row_len = _features_section(tbl, codes, nprops)
     feat_off = np.zeros(n + 1, np.int64)
     np.cumsum(row_len, out=feat_off[1:])
     feat_off = feat_off[seg_row].tolist()
@@ -713,15 +560,15 @@ def _encode_point_batches(batches, prop_spec, per_layer: bool):
         if tbl.num_rows == 0:
             continue
         starts = _tile_starts(tbl)
-        yield from _encode_point_chunks(tbl, starts[:-1], starts[-1],
-                                        prop_spec, per_layer)
+        yield from _encode_chunks(tbl, starts[:-1], starts[-1],
+                                  prop_spec, per_layer)
         carry = tbl.slice(starts[-1])
     if carry is not None:
-        yield from _encode_point_chunks(carry, np.zeros(1, np.int64),
-                                        carry.num_rows, prop_spec, per_layer)
+        yield from _encode_chunks(carry, np.zeros(1, np.int64),
+                                  carry.num_rows, prop_spec, per_layer)
 
 
-def _encode_point_chunks(tbl, starts, end, prop_spec, per_layer: bool):
+def _encode_chunks(tbl, starts, end, prop_spec, per_layer: bool):
     """Encode tbl[:end] — whole tiles beginning at ``starts`` — in
     chunks of at most ENCODE_CHUNK_ROWS rows cut at tile starts."""
     bounds = np.append(starts, end)
@@ -731,34 +578,38 @@ def _encode_point_chunks(tbl, starts, end, prop_spec, per_layer: bool):
                                 side="right")) - 1
         j = max(j, i + 1)
         a, b = int(bounds[i]), int(bounds[j])
-        yield _encode_point_chunk(tbl.slice(a, b - a), prop_spec, per_layer)
+        yield _encode_chunk(tbl.slice(a, b - a), prop_spec, per_layer)
         i = j
 
 
 def _sorted_for_encode(features: DataFrame) -> DataFrame:
     """One (z, x, y) hash exchange, then a within-partition sort that
     puts every tile's rows together in layer_name, feature_ordinal
-    order (SURVEY §2.8) — the order a sequential vtzero builder run
-    would add them."""
+    order, a NULL ordinal last (SURVEY §2.8) — the order a sequential
+    vtzero builder run would add them, and encode_layers' order."""
     return features.repartition("z", "x", "y").sortWithinPartitions(
-        "z", "x", "y", "layer_name", "feature_ordinal")
+        "z", "x", "y", "layer_name", F.asc_nulls_last("feature_ordinal"))
 
 
 def encode_point_tiles(features: DataFrame, prop_spec=None) -> DataFrame:
-    """Fused layer+tile encode for single-point features with a fixed
-    property schema (the 10^12-image hot path): ONE shuffle on (z,x,y),
-    then a mapInArrow pass that encodes whole Arrow batches with the
-    batch point encoder (_encode_point_chunk; layers in layer_name
-    order, zero-feature layers cannot occur). Byte-identical to
+    """Fused layer+tile encode for features with a fixed property
+    schema (the 10^12-image hot path): ONE shuffle on (z,x,y), then a
+    mapInArrow pass that encodes whole Arrow batches with the batch
+    tile encoder (_encode_chunk; layers in layer_name order,
+    zero-feature layers cannot occur). Byte-identical to
     encode_tiles(encode_layers(...)) on the same input (asserted in
     tests). Strings never become Python objects: Arrow
     dictionary_encode on the utf-8 buffers, tables by numpy scatter.
 
     features: z, x, y, layer_name, feature_ordinal, feature_id, loc_x,
     loc_y and the prop_spec columns; prop_spec: list of (key_name,
-    vtype, column). feature_id, loc_x, loc_y, layer_name and the
+    vtype, column). A ``geometry`` command-stream column replaces
+    loc_x/loc_y and a ``geom_type`` column the POINT type
+    (encode_geom_tiles). A NULL feature_id writes the feature without
+    an id (vtzero's has_id() == false); a NULL feature_ordinal sorts
+    last in its layer. layer_name, loc_x, loc_y, geom_type and the
     prop_spec columns must be non-null (ValueError otherwise); use
-    encode_layers for null ids, multi-part geometries or per-row
+    encode_layers for multi-part ``parts`` geometries or per-row
     property shapes."""
     return _sorted_for_encode(features).mapInArrow(
         lambda it: _encode_point_batches(it, prop_spec, per_layer=False),
@@ -767,6 +618,19 @@ def encode_point_tiles(features: DataFrame, prop_spec=None) -> DataFrame:
 
 # the name the Arrow-native callers (perfbench, tools) use
 encode_point_tiles_arrow = encode_point_tiles
+
+
+def encode_geom_tiles(features: DataFrame, prop_spec=None) -> DataFrame:
+    """encode_point_tiles for features carrying a pre-built
+    ``geometry`` command-stream column (array<long>) and a
+    ``geom_type`` column — the distributed set_geometry passthrough
+    (builder.hpp:1241-1248): the same shuffle, sort and batch encoder,
+    the ListArray's buffers feeding the varint scatter directly. A
+    NULL geometry encodes as an empty command stream. Pair with
+    plan-side geometry expression builders (geomops.rect_cmds /
+    path_cmds) so the whole footprint construction stays in
+    whole-stage codegen."""
+    return encode_point_tiles(features, prop_spec)
 
 
 def encode_point_layers(features: DataFrame, prop_spec=None) -> DataFrame:

@@ -21,9 +21,9 @@ Scale shapes:
 - ``join_attributes``: tile decode is a 1-to-N flatMap (no shuffle),
   the attribute table rides in BROADCAST (a dimension table keyed on
   an attribute value — thousands of rows, never corpus-sized), and
-  the only hash shuffle is the re-encode's own groupBy(z,x,y) — the
-  same shuffle count as a plain re-encode, so enrichment is free at
-  the plan level. Unmatched features either drop (``how='inner'``,
+  the only hash shuffle is the re-encode's own repartition(z,x,y) —
+  the same shuffle count as a plain re-encode, so enrichment is free
+  at the plan level. Unmatched features either drop (``how='inner'``,
   tile-join's ``-i``) or keep their base properties with caller
   fills (``how='left'``); both stay on the vectorized fixed-schema
   dictionary path (``assemble.encode_geom_tiles``). Callers that
@@ -104,12 +104,11 @@ def join_attributes(tiles: DataFrame, attrs: DataFrame,
                attr_spec column to a default so the fixed-schema
                vectorized dictionary path applies.
 
-    Feature ids must be non-null (the corpus discipline shared with
-    ``encode_point_layers``). Returns (z, x, y, num_layers,
-    tile_bytes): geometry byte streams pass through verbatim, layer
-    dictionaries are rebuilt first-appearance on the surviving rows —
-    byte-identical to encoding the joined corpus directly (law pinned
-    in tests/test_enrich.py).
+    Returns (z, x, y, num_layers, tile_bytes): geometry byte streams
+    and feature ids pass through verbatim (an id-less feature stays
+    id-less), layer dictionaries are rebuilt first-appearance on the
+    surviving rows — byte-identical to encoding the joined corpus
+    directly (law pinned in tests/test_enrich.py).
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")

@@ -402,9 +402,9 @@ def geojson_to_tiles(lines: DataFrame, zoom: int, extent: int,
        Arrow batch kernels; vanished features drop);
     5. geomops.cmds_from_parts (batch parts->command-stream, byte
        parity with the scalar encoders) -> assemble.encode_geom_tiles
-       (the fast vectorized geom-stream path; its groupBy(z, x, y) is
-       the plan's one hash shuffle). Measured 1.7x end to end vs
-       routing through encode_layers' per-feature encode (BENCH.md).
+       (the batch tile encoder; its repartition(z, x, y) is the plan's
+       one hash shuffle). Measured 1.7x end to end vs routing through
+       encode_layers' per-feature encode (BENCH.md).
 
     Feature order inside a layer follows fid (the corpus discipline).
     Rows whose JSON failed to parse are dropped (upstream keeps them
@@ -503,13 +503,11 @@ def world_features_to_tiles(p: DataFrame, zoom: int, extent: int,
     # BENCH.md): the parse/fan-out/clip/cmds stages inherit the
     # SOURCE's width — a real .geojsonl scan arrives in file splits,
     # so that is the caller's lever (the synth twins repartition).
-    # The ENCODE's own exchange is the one AQE would coalesce to 1-2
-    # byte-small partitions, so pin it explicitly: the tile-keyed
-    # user repartition sits directly under the groupBy (Python map
-    # nodes report UnknownPartitioning, so it must come AFTER the
-    # kernels to be reused), satisfies its ClusteredDistribution, and
-    # keeps the pipeline at exactly ONE shuffle (plan-audited).
-    sc = feats.sparkSession.sparkContext
+    # The encode brings its own repartition(z, x, y): that is the
+    # pipeline's ONE shuffle (plan-audited), at the session's shuffle
+    # width under AQE. A width-pinning repartition(n, x, y) just above
+    # it would be collapsed away by Catalyst (CollapseRepartition keeps
+    # only the top one), so none is placed there.
     if coalesce_lines:
         # tippecanoe --coalesce: merge chained linestrings per tile
         # BEFORE the encode. The merge's groupBy(z,x,y,layer_name) is
@@ -521,6 +519,7 @@ def world_features_to_tiles(p: DataFrame, zoom: int, extent: int,
         from .linemerge import merge_lines_cmds
 
         feats = clip_features(feats, extent=extent, buffer=buffer)
+        sc = feats.sparkSession.sparkContext
         feats = feats.repartition(sc.defaultParallelism * 2, "x", "y")
         # merge + parts->cmds FUSED in one kernel (the merged parts
         # would otherwise re-cross the Arrow boundary through a
@@ -542,7 +541,6 @@ def world_features_to_tiles(p: DataFrame, zoom: int, extent: int,
     cmds_fn = cmds_batches(out_fields)
     feats = feats.mapInArrow(
         lambda it: cmds_fn(clip_fn(it)), schema=schema_str)
-    feats = feats.repartition(sc.defaultParallelism * 2, "x", "y")
     return assemble.encode_geom_tiles(feats)
 
 

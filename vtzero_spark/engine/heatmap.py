@@ -14,11 +14,16 @@ point near a tile edge contributes to its neighbor tiles and the
 rendered mosaic is SEAMLESS by construction (no per-tile halo logic;
 the ownership derives from the SCATTERED pixel, not the point).
 
-Spark shape (all JVM, whole-stage codegen, no Python in the plan):
+Spark shape of heatmap_pixels (all JVM, whole-stage codegen, no
+Python in the plan) and of heatmap_png_tiles, which renders its tiles:
 
     explode(literal kernel array)     ->  scatter rows, JOIN-FREE
       groupBy (px, py) sum            ->  one shuffle, map-side combine
       groupBy (tile) agg / render     ->  second (tiny) shuffle
+
+heatmap_tiles ships the points, not the scatter: one point-sized
+shuffle to tile blocks with a kernel-radius halo, each block summed in
+numpy (its docstring).
 
 The kernel is known at PLAN time (~piR^2 in-disk offsets, R default
 8 -> 197 entries), so the scatter is a Generate over a literal
@@ -119,43 +124,22 @@ def heatmap_pixels(points: DataFrame, zoom: int = ZOOM,
 def heatmap_tiles(points: DataFrame, zoom: int = ZOOM,
                   size: int = TILE_PX, radius: int = RADIUS,
                   weight_col: str | None = None,
-                  world: int = WORLD, impl: str = "direct") -> DataFrame:
+                  world: int = WORLD) -> DataFrame:
     """Per-tile density summary over the seamless global grid: tile
     ownership derives from each SCATTERED pixel, so edge points count
     toward every tile they touch. Columns aliased for the DuckDB
     twin; peak ties break on (py, px) — deterministic cross-engine.
 
-    impl='direct' (default, the contour _segments_direct shape): ONE
-    point-sized shuffle to tile-aligned pixel blocks with a
-    kernel-radius halo; each block accumulates its own dense density
-    window (integer sort+reduceat — order-independent) and reduces to
-    its one stats row in numpy. Neither the ~piR^2-fold kernel
-    scatter nor the pixel grid ever crosses the wire (the all-JVM
-    tier shuffles min(points*piR^2, touched pixels) rows; at sf0.1
-    that is the whole 16M-pixel grid). impl='pixels' keeps the
-    all-JVM scatter-then-group tier the DuckDB twin mirrors —
-    row-identical by construction and by pytest pin."""
-    pshift, sbits = _shifts(zoom, size, world)
-    if impl == "pixels":
-        pix = heatmap_pixels(points, zoom, size, radius, weight_col,
-                             world)
-        return (
-            pix.groupBy(
-                F.shiftright("px", sbits).cast("int").alias("x"),
-                F.shiftright("py", sbits).cast("int").alias("y"))
-            .agg(F.count("*").alias("n_pixels"),
-                 F.sum("density").alias("total_mass"),
-                 F.max("density").alias("peak_density"),
-                 F.max(F.struct("density", "py", "px")).alias("_pk"))
-            .select(F.lit(zoom).cast("int").alias("z"),
-                    "x", "y", "n_pixels", "total_mass", "peak_density",
-                    F.col("_pk.px").alias("peak_px"),
-                    F.col("_pk.py").alias("peak_py"))
-        )
-    if impl != "direct":
-        raise ValueError(f"unknown impl {impl!r} (direct|pixels)")
+    The contour _segments_direct shape: ONE point-sized shuffle to
+    tile-aligned pixel blocks with a kernel-radius halo; each block
+    accumulates its own dense density window (integer sort+reduceat —
+    order-independent) and reduces to its one stats row in numpy.
+    Neither the ~piR^2-fold kernel scatter nor the pixel grid ever
+    crosses the wire (an all-JVM scatter-then-group plan shuffles
+    min(points*piR^2, touched pixels) rows; at sf0.1 that is the whole
+    16M-pixel grid)."""
+    pshift, bbits = _shifts(zoom, size, world)
     B = size
-    bbits = sbits
     npx = world >> pshift
     R = radius
     if 2 * (R - 1) > B:

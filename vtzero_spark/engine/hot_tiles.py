@@ -15,16 +15,20 @@ varint encoding — to be serial. This module splits them:
    executors, not with the hottest tile.
 2. **Chunked feature sections**: features get their tag indexes by
    join, are split into ordinal-contiguous chunks, and each chunk's
-   features-section bytes are encoded vectorized in parallel tasks.
+   features-section bytes are encoded in parallel tasks by the batch
+   encoder's own feature writer (assemble._features_section: points or
+   command streams; a NULL feature_id is written without an id).
 3. **Ordered concat**: per layer, chunk byte sections concatenate in
-   chunk order; header/keys/values wrap them. Byte-identical to the
-   single-group encoder (asserted in tests).
+   chunk order; header/keys/values wrap them, the values section
+   written by the batch encoder's value-table writer
+   (assemble._values_section). Byte-identical to assemble's batch
+   encoder (asserted in tests).
 
 All 7 value types are supported (types.hpp:141-186): value identity is
 (vtype, canonical string) — injective per type (Spark's float/double
 cast-to-string is the shortest round-trippable decimal), so it equals
 vtzero's encoded-bytes identity. prop_spec columns must be non-null
-(same contract as the single-group encoders; enforced with a loud
+(same contract as the batch encoder; enforced with a loud
 error in the values encode, since the tag equi-join would otherwise
 silently drop NULL-valued features).
 
@@ -69,12 +73,7 @@ _VALUES_SCHEMA = ("z long, x long, y long, layer_name string, "
 
 def _encode_values_pdf(pdf: pd.DataFrame) -> tuple[bytes, int]:
     """Dict rows (vtype, value_str) sorted by idx -> values-section
-    bytes, vectorized via the pbf scatter primitives."""
-    from ..mvt.pbf import (
-        copy_segments, encode_varint_array, pack_len_fields,
-        strings_to_buffer, varint_len_array,
-    )
-
+    bytes (assemble._values_section) and the entry count."""
     if pdf["value_str"].isna().any():
         # the tag equi-join would silently DROP features whose value is
         # NULL (NULL != NULL); the dictionary groupBy keeps the NULL
@@ -83,79 +82,32 @@ def _encode_values_pdf(pdf: pd.DataFrame) -> tuple[bytes, int]:
             "prop_spec columns must be non-null: a NULL property value "
             "has no MVT wire form (filter or fill before encoding)")
     vts = pdf["vtype"].to_numpy(np.int64)
-    total = len(pdf)
-    entry_len = np.empty(total, dtype=np.int64)
-    caches: dict[int, tuple] = {}
+    ix = np.empty(len(pdf), np.int64)
+    canon: dict[int, object] = {}
     for vt in np.unique(vts):
         sel = vts == vt
+        ix[sel] = np.arange(int(sel.sum()))
         vals = pdf["value_str"][sel]
+        # Spark's cast-to-string is the shortest round-trippable
+        # decimal (Ryu), so parsing it back yields the exact float —
+        # string identity == wire-bytes identity (types.hpp:141-186)
         if vt == V.VT_STRING:
-            buf, offs = strings_to_buffer(vals.tolist())
-            slen = offs[1:] - offs[:-1]
-            caches[vt] = (buf, offs, slen)
-            entry_len[sel] = 1 + varint_len_array(slen.astype(np.uint64)) + slen
-        elif vt in (V.VT_INT, V.VT_UINT, V.VT_SINT, V.VT_BOOL):
-            if vt == V.VT_BOOL:
-                iv = (vals == "true").to_numpy().astype(np.int64)
-            else:
-                iv = vals.astype(np.int64).to_numpy()
-            if vt == V.VT_SINT:
-                uv = ((iv << 1) ^ (iv >> 63)).astype(np.uint64)
-            else:
-                uv = iv.astype(np.uint64)
-            caches[vt] = (uv,)
-            entry_len[sel] = 1 + varint_len_array(uv)
-        elif vt == V.VT_FLOAT:
-            # Spark's cast-to-string is the shortest round-trippable
-            # decimal (Ryu), so parsing it back yields the exact float
-            # — string identity == wire-bytes identity
-            # (types.hpp:141-186 fixed32)
-            caches[vt] = (vals.astype(np.float32).to_numpy(),)
-            entry_len[sel] = 5
-        elif vt == V.VT_DOUBLE:
-            caches[vt] = (vals.astype(np.float64).to_numpy(),)
-            entry_len[sel] = 9
+            vals = vals.tolist()
+        elif vt == V.VT_BOOL:
+            vals = (vals == "true").to_numpy()
         else:
-            raise ValueError(f"unsupported vtype {vt} in chunked encode")
-    offsets = np.zeros(total + 1, dtype=np.int64)
-    np.cumsum(entry_len, out=offsets[1:])
-    out = np.empty(int(offsets[-1]), dtype=np.uint8)
-    starts = offsets[:-1]
-    out[starts] = assemble._VT_PREFIX[vts]
-    for vt in np.unique(vts):
-        sel = vts == vt
-        sel_off = starts[sel]
-        if vt == V.VT_STRING:
-            buf, offs, slen = caches[vt]
-            lenlens = varint_len_array(slen.astype(np.uint64))
-            lenbuf = np.frombuffer(
-                encode_varint_array(slen.astype(np.uint64)), dtype=np.uint8)
-            copy_segments(lenbuf, np.cumsum(lenlens) - lenlens, lenlens,
-                          out, sel_off + 1)
-            copy_segments(buf, offs[:-1], slen, out, sel_off + 1 + lenlens)
-        elif vt == V.VT_FLOAT:
-            (fv,) = caches[vt]
-            fb = np.ascontiguousarray(
-                fv.astype("<f4")).view(np.uint8).reshape(-1, 4)
-            out[sel_off[:, None] + 1 + np.arange(4)] = fb
-        elif vt == V.VT_DOUBLE:
-            (dv,) = caches[vt]
-            db = np.ascontiguousarray(
-                dv.astype("<f8")).view(np.uint8).reshape(-1, 8)
-            out[sel_off[:, None] + 1 + np.arange(8)] = db
-        else:
-            (uv,) = caches[vt]
-            vlens = varint_len_array(uv)
-            vbuf = np.frombuffer(encode_varint_array(uv), dtype=np.uint8)
-            copy_segments(vbuf, np.cumsum(vlens) - vlens, vlens, out, sel_off + 1)
-    return pack_len_fields(T.LAYER_VALUES, out, offsets), total
+            vals = vals.astype({V.VT_FLOAT: np.float32,
+                                V.VT_DOUBLE: np.float64}.get(vt, np.int64))
+        canon[int(vt)] = assemble._canon_keys(int(vt), vals)
+    section, _ = assemble._values_section(vts, ix, canon)
+    return section, len(pdf)
 
 
-def _assemble_chunked(features: DataFrame, prop_spec, chunk_rows: int,
-                      enc_chunk) -> DataFrame:
-    """Shared chunked-encode skeleton: distributed dictionary (when a
-    prop_spec is given), ordinal-contiguous chunking, per-chunk section
-    encode via ``enc_chunk``, and the ordered final concat."""
+def _assemble_chunked(features: DataFrame, prop_spec,
+                      chunk_rows: int) -> DataFrame:
+    """The chunked encode: distributed dictionary (when a prop_spec is
+    given), ordinal-contiguous chunking, per-chunk section encode
+    (_chunk_section), and the ordered final concat."""
     from ..mvt.pbf import len_field, varint_field
 
     nprops = len(prop_spec) if prop_spec else 0
@@ -229,8 +181,8 @@ def _assemble_chunked(features: DataFrame, prop_spec, chunk_rows: int,
     ).drop("_omin", "_omax", "_n", "_span")
 
     # 3. chunk encode (vectorized features-section bytes per chunk)
-    chunks = feats.groupBy(*LAYER_KEY, "chunk").applyInPandas(
-        enc_chunk, schema=_CHUNK_SCHEMA)
+    chunks = feats.groupBy(*LAYER_KEY, "chunk").applyInArrow(
+        lambda tbl: _chunk_section(tbl, nprops), schema=_CHUNK_SCHEMA)
 
     # 4. values-section bytes per layer (vectorized from the dict rows)
     if dict_df is not None:
@@ -294,6 +246,26 @@ def _assemble_chunked(features: DataFrame, prop_spec, chunk_rows: int,
         build_tile, schema=assemble.TILE_SCHEMA)
 
 
+def _chunk_section(tbl: "pa.Table", nprops: int) -> "pa.Table":
+    """One ordinal-contiguous chunk of one layer -> its features-section
+    bytes (assemble._features_section: points or command streams, a
+    NULL feature_id left out)."""
+    import pyarrow as pa
+
+    tbl = tbl.sort_by("feature_ordinal")
+    codes = (np.stack([tbl.column(f"tag{c}").to_numpy().astype(np.int64)
+                       for c in range(nprops)], axis=1)
+             if nprops else None)
+    section, _ = assemble._features_section(tbl, codes, nprops)
+    row = {c: [tbl.column(c)[0].as_py()] for c in LAYER_KEY + ["chunk"]}
+    return pa.table({**row, "n": [tbl.num_rows], "section": [section]},
+                    schema=pa.schema([(c, pa.int64()) for c in TILE_KEY]
+                                     + [("layer_name", pa.string()),
+                                        ("chunk", pa.int64()),
+                                        ("n", pa.int64()),
+                                        ("section", pa.binary())]))
+
+
 def encode_point_tiles_chunked(
     features: DataFrame,
     prop_spec,
@@ -303,26 +275,7 @@ def encode_point_tiles_chunked(
     task ever holds more than ``chunk_rows`` features — hot tiles
     parallelize across chunks; only the cheap final byte concat is
     per-tile."""
-    nprops = len(prop_spec)
-
-    def enc_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("feature_ordinal", kind="stable")
-        codes = np.stack(
-            [pdf[f"tag{c}"].to_numpy(np.int64) for c in range(nprops)], axis=1)
-        section, _ = assemble._point_features_bytes(
-            pdf["feature_id"].to_numpy(np.int64),
-            pdf["loc_x"].to_numpy(np.int64),
-            pdf["loc_y"].to_numpy(np.int64),
-            codes, nprops)
-        return pd.DataFrame([{
-            "z": int(pdf["z"].iloc[0]), "x": int(pdf["x"].iloc[0]),
-            "y": int(pdf["y"].iloc[0]),
-            "layer_name": pdf["layer_name"].iloc[0],
-            "chunk": int(pdf["chunk"].iloc[0]),
-            "n": len(pdf), "section": section,
-        }])
-
-    return _assemble_chunked(features, prop_spec, chunk_rows, enc_chunk)
+    return _assemble_chunked(features, prop_spec, chunk_rows)
 
 
 def encode_geom_tiles_chunked(
@@ -336,31 +289,4 @@ def encode_geom_tiles_chunked(
     ``chunk_rows`` features. Extends the hot-tile discipline beyond
     point layers: a z0 tile full of polygons encodes its feature
     sections in parallel ordinal-contiguous chunks."""
-    nprops = len(prop_spec) if prop_spec else 0
-
-    def enc_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("feature_ordinal", kind="stable")
-        geoms = pdf["geometry"]
-        glens = np.fromiter((len(g) for g in geoms), dtype=np.int64,
-                            count=len(pdf))
-        goffsets = np.zeros(len(pdf) + 1, dtype=np.int64)
-        np.cumsum(glens, out=goffsets[1:])
-        gflat = (np.concatenate([np.asarray(g, dtype=np.int64)
-                                 for g in geoms])
-                 if len(pdf) else np.empty(0, np.int64))
-        codes = (np.stack([pdf[f"tag{c}"].to_numpy(np.int64)
-                           for c in range(nprops)], axis=1)
-                 if nprops else None)
-        section = assemble._geomstream_features_bytes(
-            pdf["feature_id"].to_numpy(np.int64),
-            pdf["geom_type"].to_numpy(np.int64),
-            gflat, goffsets, codes, nprops)
-        return pd.DataFrame([{
-            "z": int(pdf["z"].iloc[0]), "x": int(pdf["x"].iloc[0]),
-            "y": int(pdf["y"].iloc[0]),
-            "layer_name": pdf["layer_name"].iloc[0],
-            "chunk": int(pdf["chunk"].iloc[0]),
-            "n": len(pdf), "section": section,
-        }])
-
-    return _assemble_chunked(features, prop_spec, chunk_rows, enc_chunk)
+    return _assemble_chunked(features, prop_spec, chunk_rows)
