@@ -96,7 +96,9 @@ def test_chunked_parity_float_double_props(spark):
     encode byte-identically through the chunked path (fixed32/fixed64
     entries, types.hpp:141-186) — Spark's shortest-round-trip
     cast-to-string is the dictionary identity, so parsing it back must
-    reproduce the exact wire bytes."""
+    reproduce the exact wire bytes. A double column declared VT_FLOAT
+    is keyed on its float32: 0.1 and 0.1 + 1e-12 are one entry, +0.0
+    and -0.0 are two, as in the batch encoder."""
     import numpy as np
 
     from vtzero_spark.mvt import values as V
@@ -109,13 +111,15 @@ def test_chunked_parity_float_double_props(spark):
             f64 = float(rng.randn() * (10.0 ** rng.randint(-12, 13)))
             rows.append((3, 2, 1, lname, i, i + li * 1000,
                          int(rng.randint(0, 4096)), int(rng.randint(0, 4096)),
-                         float(f32), f64, f"s{i % 7}"))
+                         float(f32), f64, f"s{i % 7}",
+                         [0.1, 0.1 + 1e-12, 0.0, -0.0][i % 4]))
     feats = spark.createDataFrame(
         rows, "z long, x long, y long, layer_name string, "
               "feature_ordinal long, feature_id long, loc_x long, "
-              "loc_y long, fval float, dval double, sval string")
+              "loc_y long, fval float, dval double, sval string, "
+              "dfval double")
     spec = [("f", V.VT_FLOAT, "fval"), ("d", V.VT_DOUBLE, "dval"),
-            ("s", V.VT_STRING, "sval")]
+            ("s", V.VT_STRING, "sval"), ("df", V.VT_FLOAT, "dfval")]
     single = assemble.encode_point_tiles(feats, prop_spec=spec) \
         .select("tile_bytes").toPandas()
     chunked = encode_point_tiles_chunked(feats, spec, chunk_rows=13) \

@@ -453,16 +453,7 @@ def build_exif_batch(orient: np.ndarray, dt: list[str], px_w: np.ndarray,
 
 # ----------------------------------------------------- Spark operators
 
-# planted metadata as pure iid functions (DuckDB twins below)
-def _orient_expr(iid):
-    return (iid % 8 + 1).cast("int")
-
-
-def _dt_expr(iid):
-    return F.format_string("2024:01:%02d %02d:00:00",
-                           (iid % 28 + 1).cast("int"), (iid % 24).cast("int"))
-
-
+# the planted datetime as a pure iid function, for the DuckDB twin below
 EXIF_PLANT_SQL = (
     "printf('2024:01:%02d %02d:00:00', CAST(iid % 28 + 1 AS INT), "
     "CAST(iid % 24 AS INT))"

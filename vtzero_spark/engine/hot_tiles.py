@@ -26,8 +26,10 @@ varint encoding — to be serial. This module splits them:
 
 All 7 value types are supported (types.hpp:141-186): value identity is
 (vtype, canonical string) — injective per type (Spark's float/double
-cast-to-string is the shortest round-trippable decimal), so it equals
-vtzero's encoded-bytes identity. prop_spec columns must be non-null
+cast-to-string is the shortest round-trippable decimal; a VT_FLOAT
+column is narrowed to float before the cast, so doubles that round to
+one float32 share an entry), so it equals vtzero's encoded-bytes
+identity. prop_spec columns must be non-null
 (same contract as the batch encoder; enforced with a loud
 error in the values encode, since the tag equi-join would otherwise
 silently drop NULL-valued features).
@@ -103,6 +105,13 @@ def _encode_values_pdf(pdf: pd.DataFrame) -> tuple[bytes, int]:
     return section, len(pdf)
 
 
+def _value_str(col: str, vtype: int):
+    """A property value's dictionary key: its string cast, taken on
+    the float32 a VT_FLOAT column is written as."""
+    c = F.col(col)
+    return (c.cast("float") if vtype == V.VT_FLOAT else c).cast("string")
+
+
 def _assemble_chunked(features: DataFrame, prop_spec,
                       chunk_rows: int) -> DataFrame:
     """The chunked encode: distributed dictionary (when a prop_spec is
@@ -127,7 +136,7 @@ def _assemble_chunked(features: DataFrame, prop_spec,
             parts.append(
                 features.groupBy(
                     *LAYER_KEY,
-                    F.col(col).cast("string").alias("value_str"))
+                    _value_str(col, vtype).alias("value_str"))
                 .agg(F.min("feature_ordinal").alias("_o"))
                 .select(*LAYER_KEY, F.lit(vtype).alias("vtype"),
                         "value_str",
@@ -148,7 +157,7 @@ def _assemble_chunked(features: DataFrame, prop_spec,
             dc = dict_df.where(F.col("vtype") == F.lit(vtype)).select(
                 *LAYER_KEY, F.col("value_str").alias(f"_v{c}"),
                 F.col("idx").alias(f"tag{c}"))
-            feats = feats.withColumn(f"_v{c}", F.col(col).cast("string")) \
+            feats = feats.withColumn(f"_v{c}", _value_str(col, vtype)) \
                 .join(dc, LAYER_KEY + [f"_v{c}"]).drop(f"_v{c}")
     # chunk id from the ordinal with a PER-LAYER span — no per-layer
     # window (a row_number window would stream the entire hot layer

@@ -60,16 +60,6 @@ def _chunk(tag: bytes, payload: bytes) -> bytes:
             + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF))
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
     """Undo per-row filtering. raw is the (h, 1+stride) filter-byte +
     scanline matrix; returns (h, stride) reconstructed bytes."""

@@ -242,10 +242,6 @@ def fixed32_field(field: int, payload4: bytes) -> bytes:
     return tag_key(field, WT_FIXED32) + payload4
 
 
-def fixed64_field(field: int, payload8: bytes) -> bytes:
-    return tag_key(field, WT_FIXED64) + payload8
-
-
 def scan_fields(buf: bytes) -> Iterator[tuple[int, int, object]]:
     """Iterate (field, wire_type, value) over a message.
 
