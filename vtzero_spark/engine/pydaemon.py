@@ -25,9 +25,7 @@ def invalidate_caches(self):
 
 
 if __name__ == "__main__":
-    # install the importable copy's function, which a worker can name
     from pyspark import daemon
-    from vtzero_spark.engine import pydaemon
 
-    zipimport.zipimporter.invalidate_caches = pydaemon.invalidate_caches
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
     daemon.manager()

@@ -8,13 +8,14 @@ real cluster via SPARK_GRAFT_CPUS.
 Python workers run from the engine's daemon module (`pydaemon`).
 PySpark's worker calls `importlib.invalidate_caches()` on every task,
 and on CPython 3.11 each cached zipimporter then re-reads its archive's
-central directory: 12-14 importers on `pyspark.zip`, 110-390 ms per task
-(4-core VM; 0.08 ms with the daemon's check). The daemon re-reads an archive only when its
-`(st_mtime_ns, st_size)` changed since that importer's last read, so a
-zip rewritten in place or added by `addPyFile` is still seen. Where zip
-invalidation is cheap it costs one `stat` per importer per task.
-Workers get the directory holding `vtzero_spark` on their path, so
-they find the engine from any working directory.
+central directory: 12-14 importers on `pyspark.zip`, 110-390 ms per
+task (4-core VM; 0.08 ms with the daemon's check). The daemon re-reads
+an archive only when its `(st_mtime_ns, st_size)` changed since that
+importer's last read, so a zip rewritten in place or added by
+`addPyFile` is still seen. Where zip invalidation is cheap it costs one
+`stat` per importer per task. Workers get the directory holding
+`vtzero_spark` on their path, so they find the engine from any working
+directory.
 """
 
 from __future__ import annotations
