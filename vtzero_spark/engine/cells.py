@@ -98,20 +98,11 @@ def pip_join_cells(points: DataFrame, polys: DataFrame, level: int,
     column instead of (cell_x, cell_y)); identical result rows to
     joins.pip_join. The covering index is broadcast; the exact refine
     is the integer cross-product test from joins.py."""
-    from .joins import _convex_inside_edges_expr, with_ring_edges
+    from .joins import pip_refine, with_ring_edges
 
     index = with_ring_edges(bbox_covering(polys, level, world))
     pts = point_cells(points, level, world)
-    # same scalar L-inf bbox prefilter as joins.pip_join: cull before
-    # the ring-array refine (row-identical; bbox contains the ring)
-    bbox = (F.abs(F.col("wx") - F.col("cx")) <= F.col("r")) & \
-           (F.abs(F.col("wy") - F.col("cy")) <= F.col("r"))
-    return (
-        pts.join(F.broadcast(index), "cell")
-        .where(bbox)
-        .where(_convex_inside_edges_expr("wx", "wy"))
-        .drop("cell", "_edges")
-    )
+    return pip_refine(pts.join(F.broadcast(index), "cell"), "cell")
 
 
 def subtree_range(z: int, x: int, y: int, level: int) -> tuple[int, int]:

@@ -192,18 +192,11 @@ def pip_join_hex(points: DataFrame, polys: DataFrame, w: int, h: int,
     result rows to joins.pip_join / cells.pip_join_cells (asserted in
     tests). Covering index broadcast, exact integer cross-product
     refine — the quadkey join's plan shape with hex bucketing."""
-    from .joins import _convex_inside_edges_expr, with_ring_edges
+    from .joins import pip_refine, with_ring_edges
 
     index = with_ring_edges(hex_covering(polys, w, h))
     pts = point_hex_cells(points, w, h)
-    bbox = (F.abs(F.col("wx") - F.col("cx")) <= F.col("r")) & \
-           (F.abs(F.col("wy") - F.col("cy")) <= F.col("r"))
-    return (
-        pts.join(F.broadcast(index), "hex")
-        .where(bbox)
-        .where(_convex_inside_edges_expr("wx", "wy"))
-        .drop("hex", "_edges")
-    )
+    return pip_refine(pts.join(F.broadcast(index), "hex"), "hex")
 
 
 # ----------------------------------------------------------- SQL mirror

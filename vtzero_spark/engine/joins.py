@@ -52,42 +52,34 @@ def polygon_cell_index(polys: DataFrame, cell: int = EXTENT) -> DataFrame:
     )
 
 
-def _convex_inside_expr(px: str, py: str, ring: str = "ring"):
-    """Integer cross-product test: point on-or-inside a convex closed
-    ring (uniform cross sign over all edges, zeros allowed)."""
-    crosses = (
-        f"zip_with(slice({ring}, 1, size({ring}) - 1),"
-        f"         slice({ring}, 2, size({ring}) - 1),"
-        f"         (a, b) -> (b.x - a.x) * ({py} - a.y) - ({px} - a.x) * (b.y - a.y))"
-    )
-    return F.expr(
-        f"forall({crosses}, c -> c >= 0) or forall({crosses}, c -> c <= 0)"
-    )
-
-
 def with_ring_edges(index: DataFrame, ring: str = "ring") -> DataFrame:
     """Precompute each ring's edge structs (ax, ay, dx, dy) ON THE
     INDEX SIDE (dimension-sized, computed once before the broadcast):
     the per-candidate refine then evaluates one cross product per
     edge over a ready array instead of materializing two slices and
-    a zip_with per probe row — row-identical to _convex_inside_expr
-    (same edges, same sign test; measured ~2x off the refine wall at
+    a zip_with per probe row (measured ~2x off the refine wall at
     sf0.1)."""
-    edges = F.zip_with(
-        F.slice(ring, 1, F.size(ring) - 1),
-        F.slice(ring, 2, F.size(ring) - 1),
-        lambda a, b: F.struct(
-            a["x"].alias("ax"), a["y"].alias("ay"),
-            (b["x"] - a["x"]).alias("dx"),
-            (b["y"] - a["y"]).alias("dy")))
-    return index.withColumn("_edges", edges)
+    return index.withColumn("_edges", F.expr(
+        f"zip_with(slice({ring}, 1, size({ring}) - 1), slice({ring}, 2, size({ring}) - 1),"
+        " (a, b) -> named_struct('ax', a.x, 'ay', a.y, 'dx', b.x - a.x, 'dy', b.y - a.y))"))
 
 
-def _convex_inside_edges_expr(px: str, py: str, edges: str = "_edges"):
-    """The same uniform-sign test over precomputed edge structs."""
-    c = (f"(({py} - e.ay) * e.dx - ({px} - e.ax) * e.dy)")
-    return F.expr(
-        f"forall({edges}, e -> {c} >= 0) or forall({edges}, e -> {c} <= 0)"
+def pip_refine(joined: DataFrame, *keys: str) -> DataFrame:
+    """The exact refine of a covering-cell join of points (wx, wy) to
+    a with_ring_edges index (cx, cy, r, _edges); drops ``keys`` and the
+    edges.
+
+    A scalar L-inf bbox prefilter runs first: cells are coarse (one
+    covering cell can dwarf the polygon), so it culls most candidates
+    before the ring-array refine ever allocates — row-identical (bbox
+    contains the ring), ~17% off the join wall at sf0.1. The refine is
+    the integer cross-product convex point-in-ring test: on or inside
+    when every edge's cross has one sign (zeros allowed)."""
+    c = "((wy - e.ay) * e.dx - (wx - e.ax) * e.dy)"
+    return (
+        joined.where("abs(wx - cx) <= r AND abs(wy - cy) <= r")
+        .where(f"forall(_edges, e -> {c} >= 0) OR forall(_edges, e -> {c} <= 0)")
+        .drop(*keys, "_edges")
     )
 
 
@@ -197,17 +189,7 @@ def pip_join(
                     .otherwise(F.array(F.lit(0))))).drop("_hot")
             joined = pts_j.join(
                 idx_j, ["cell_x", "cell_y", "_salt"]).drop("_salt")
-    # bbox prefilter: cells are coarse (one covering cell can dwarf the
-    # polygon), so a scalar L-inf check culls most candidates before the
-    # ring-array refine ever allocates — row-identical (bbox contains
-    # the ring), ~17% off the join wall at sf0.1
-    bbox = (F.abs(F.col("wx") - F.col("cx")) <= F.col("r")) & \
-           (F.abs(F.col("wy") - F.col("cy")) <= F.col("r"))
-    return (
-        joined.where(bbox)
-        .where(_convex_inside_edges_expr("wx", "wy"))
-        .drop("cell_x", "cell_y", "_edges")
-    )
+    return pip_refine(joined, "cell_x", "cell_y")
 
 
 def pip_join_sql(points_cte: str, polys_cte: str = "polys") -> str:

@@ -48,26 +48,25 @@ def assign_tiles(
             .withColumn("loc_x", (F.col(wx) % extent).cast("int"))
             .withColumn("loc_y", (F.col(wy) % extent).cast("int"))
         )
-    offsets = F.expr("explode(array(-1, 0, 1))")
-    out = (
-        df.withColumn("_dx", F.expr("explode(array(-1, 0, 1))"))
-        .withColumn("_dy", offsets)
-        .withColumn("x", F.expr(f"{wx} div {extent}") + F.col("_dx"))
-        .withColumn("y", F.expr(f"{wy} div {extent}") + F.col("_dy"))
-        .where(
-            (F.col("x") >= 0) & (F.col("x") < ntiles)
-            & (F.col("y") >= 0) & (F.col("y") < ntiles)
-        )
-        .withColumn("loc_x", (F.col(wx) - F.col("x") * extent).cast("int"))
-        .withColumn("loc_y", (F.col(wy) - F.col("y") * extent).cast("int"))
-        .where(
-            (F.col("loc_x") >= -buffer) & (F.col("loc_x") < extent + buffer)
-            & (F.col("loc_y") >= -buffer) & (F.col("loc_y") < extent + buffer)
-        )
-        .withColumn("z", F.lit(zoom))
-        .drop("_dx", "_dy")
+    # one DataFrame op per step (each is a py4j round trip and a full
+    # re-analysis): the 9 neighbour offsets, the projection, the filter
+    shifts = ", ".join(f"named_struct('_dx', {dx}, '_dy', {dy})"
+                       for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+    tx, ty = f"({wx} div {extent} + _dx)", f"({wy} div {extent} + _dy)"
+    new = {"x": tx, "y": ty,
+           "loc_x": f"CAST({wx} - {tx} * {extent} AS INT)",
+           "loc_y": f"CAST({wy} - {ty} * {extent} AS INT)",
+           "z": str(zoom)}
+    cols = [F.expr(new[c]).alias(c) if c in new else F.col(f"`{c}`")
+            for c in df.columns]
+    cols += [F.expr(e).alias(c) for c, e in new.items() if c not in df.columns]
+    return (
+        df.selectExpr("*", f"inline(array({shifts}))")
+        .select(*cols)
+        .where(f"x >= 0 AND x < {ntiles} AND y >= 0 AND y < {ntiles}"
+               f" AND loc_x >= -{buffer} AND loc_x < {extent + buffer}"
+               f" AND loc_y >= -{buffer} AND loc_y < {extent + buffer}")
     )
-    return out
 
 
 def assign_tiles_sql(
