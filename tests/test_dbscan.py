@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vtzero_spark.engine import dbscan as D
+from vtzero_spark.engine import drivertier
 from vtzero_spark.engine import synth
 
 
@@ -189,14 +190,15 @@ def test_pair_stage_is_jvm_only_no_cartesian(spark, sf_dir):
     assert "cx" in p and "cy" in p
 
 
-def test_merge_tiers_row_identical(spark, sf_dir):
+def test_merge_tiers_row_identical(spark, sf_dir, monkeypatch):
     """The bounded-collect driver union-find and the distributed
-    pointer-jumping fallback label identically (contract_cap=0 forces
-    the fallback on the same input)."""
+    pointer-jumping fallback label identically (SERIAL_ROWS = 0
+    forces the fallback on the same input)."""
     pts = synth.cluster_points(spark, sf_dir)
     a = (D.dbscan(pts, eps=400, min_pts=4)
          .toPandas().sort_values("pid").reset_index(drop=True))
-    b = (D.dbscan(pts, eps=400, min_pts=4, contract_cap=0)
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", 0)
+    b = (D.dbscan(pts, eps=400, min_pts=4)
          .toPandas().sort_values("pid").reset_index(drop=True))
     assert (a.component >= 0).any()
     pd.testing.assert_frame_equal(a, b)

@@ -210,6 +210,20 @@ def test_pip_hot_threshold_without_salt_raises(spark, sf_dir):
         joins.pip_join(pts, polys, hot_threshold=100)
 
 
+def test_pip_hot_cell_census_cap_fails_loudly(spark, sf_dir,
+                                              monkeypatch):
+    """The hot-cell census is a bounded driver collect: a census past
+    _HOT_CELL_CAP means hot_threshold is mis-set, and pip_join raises
+    instead of collecting it.  At threshold 0 every occupied cell is
+    hot, far more than 2."""
+    pts = synth.images(spark, sf_dir)
+    polys = synth.polygons(spark, sf_dir)
+    monkeypatch.setattr(joins, "_HOT_CELL_CAP", 2)
+    with pytest.raises(ValueError,
+                       match="hot-cell census exceeds 2 cells"):
+        joins.pip_join(pts, polys, salt=4, hot_threshold=0)
+
+
 def test_pip_cells_equals_pip_join(spark, sf_dir):
     pts = synth.images(spark, sf_dir)
     polys = synth.polygons(spark, sf_dir)

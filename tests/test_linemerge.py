@@ -323,3 +323,54 @@ def test_merge_lines_cmds_matches_unfused(spark):
                        for a, b in zip(want[c], got[c]))
         else:
             assert want[c].tolist() == got[c].tolist()
+
+
+_COORD = st.one_of(st.integers(0, 6), st.integers(0, 6), st.none())
+_POINT = st.one_of(
+    st.fixed_dictionaries({"x": _COORD, "y": _COORD}),
+    st.fixed_dictionaries({"x": st.integers(0, 6),
+                           "y": st.integers(0, 6)}),
+    st.none())
+_PART = st.one_of(st.lists(_POINT, max_size=4), st.none())
+_FEATURE = st.tuples(st.integers(0, 1),                  # tile x
+                     st.sampled_from(["a", "b"]),        # layer
+                     st.one_of(st.integers(1, 9), st.none()),  # id
+                     st.integers(0, 5),                  # geom_type
+                     st.one_of(st.lists(_PART, max_size=3), st.none()))
+
+
+def _outcome(df):
+    """Sorted result rows, or the Python exception class the worker
+    raised (Spark wraps it; its traceback text names the class)."""
+    import re
+
+    try:
+        rows = df.collect()
+    except Exception as e:  # noqa: BLE001 — classified below
+        names = re.findall(r"^(?:[\w.]+\.)?(\w+(?:Error|Exception)): ",
+                           str(e), re.M)
+        return ("raised", names[-1] if names else type(e).__name__)
+    return ("rows", sorted(
+        (r.z, r.x, r.y, r.layer_name, r.feature_ordinal, r.feature_id,
+         r.geom_type, tuple(r.geometry or ())) for r in rows))
+
+
+@settings(max_examples=20, deadline=None)
+@given(feats=st.lists(_FEATURE, min_size=1, max_size=5))
+def test_fused_and_unfused_agree_on_any_input(spark, feats):
+    """merge_lines_cmds and cmds_from_parts(merge_lines(...)) give the
+    same rows or raise the same exception class on ANY input: an
+    out-of-domain geom_type (0, 4, 5) encodes as an empty geometry on
+    both, and a null part, point or coordinate is a GeometryError on
+    both."""
+    from vtzero_spark.engine.geomops import cmds_from_parts
+
+    rows = [(1, tx, 0, layer, i, fid, gt, parts)
+            for i, (tx, layer, fid, gt, parts) in enumerate(feats)]
+    schema = ("z long, x long, y long, layer_name string, "
+              "feature_ordinal long, feature_id long, geom_type int, "
+              "parts array<array<struct<x: long, y: long>>>")
+    df = spark.createDataFrame(rows, schema)
+    fused = _outcome(LM.merge_lines_cmds(df))
+    unfused = _outcome(cmds_from_parts(LM.merge_lines(df)))
+    assert fused == unfused

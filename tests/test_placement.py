@@ -19,6 +19,7 @@ import duckdb
 import pandas as pd
 import pytest
 
+from vtzero_spark.engine import drivertier
 from vtzero_spark.engine import placement as pl
 
 
@@ -59,12 +60,13 @@ def _lcg_labels(n, span=3000, wmax=220, seed=9):
     return rows
 
 
-def test_matches_serial_sweep_mixed_sizes(spark):
+def test_matches_serial_sweep_mixed_sizes(spark, monkeypatch):
     rows = _lcg_labels(350)
     df = spark.createDataFrame(rows, "pid long, px long, py long, w long, h long")
     ref = serial_place(rows)
     got = _lab(pl.place_labels(df))
-    got0 = _lab(pl.place_labels(df, serial_cap=0))  # pure distributed
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", 0)
+    got0 = _lab(pl.place_labels(df))  # pure distributed
     assert got0 == got
     assert len(got) == len(rows)
     assert {p: pl_ for p, (pl_, _) in got.items()} \
@@ -84,10 +86,11 @@ def test_edge_contact_collides_one_unit_gap_does_not(spark):
     assert got == {1: (True, 1), 2: (False, 1), 3: (True, 3)}
 
 
-def test_stack_places_min_id_only(spark):
+def test_stack_places_min_id_only(spark, monkeypatch):
     df = spark.createDataFrame([(i, 50, 50, 10, 10) for i in range(1, 33)],
                                "pid long, px long, py long, w long, h long")
-    got = _lab(pl.place_labels(df, max_rounds=2, serial_cap=0))
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", 0)
+    got = _lab(pl.place_labels(df, max_rounds=2))
     assert got[1] == (True, 1)
     assert all(v == (False, 1) for p, v in got.items() if p > 1)
 
@@ -158,7 +161,7 @@ def test_no_cartesian_plan(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_full_range_priority_ids(spark):
+def test_full_range_priority_ids(spark, monkeypatch):
     """Ids near int64 max (the marker-job priority packing
     (capacity - mass) << 32 | id) must sweep correctly — a sentinel-
     based masked-min would misclassify them as absent."""
@@ -173,6 +176,7 @@ def test_full_range_priority_ids(spark):
     assert got[base + 1] == (False, base)
     assert got[base + 2] == (True, base + 2)
     # the distributed tier agrees
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", 0)
     got0 = {r["pid"]: (r["placed"], r["blocker"])
-            for r in pl.place_labels(df, serial_cap=0).collect()}
+            for r in pl.place_labels(df).collect()}
     assert got == got0

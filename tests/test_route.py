@@ -16,6 +16,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from vtzero_spark.engine import drivertier
 from vtzero_spark.engine import route as R
 from vtzero_spark.engine import snap as S
 
@@ -91,28 +92,56 @@ def test_matches_dijkstra_on_road_network(spark, sf_dir, eps):
     assert sum(1 for d in got.values() if d >= 0) > 4  # non-vacuous
 
 
-def test_merge_tiers_label_identical(spark, sf_dir):
+def _spy_tiers(monkeypatch) -> list[bool]:
+    """Record, per drivertier.collect_within call, whether it kept
+    the rows on the driver (True) or went distributed (False)."""
+    tiers: list[bool] = []
+    real = drivertier.collect_within
+
+    def spy(df, cap):
+        out = real(df, cap)
+        tiers.append(out is not None)
+        return out
+
+    monkeypatch.setattr(drivertier, "collect_within", spy)
+    return tiers
+
+
+def test_merge_tiers_label_identical(spark, sf_dir, monkeypatch):
     segs = S.roads(spark, sf_dir)
     src = R.route_sources(spark, sf_dir, 2)
     a = {(r.vx, r.vy): r.dist
          for r in R.sssp(spark, segs, src, transfer_eps=160).collect()}
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", 0)
+    tiers = _spy_tiers(monkeypatch)
     b = {(r.vx, r.vy): r.dist
-         for r in R.sssp(spark, segs, src, transfer_eps=160,
-                         merge_cap=0).collect()}
+         for r in R.sssp(spark, segs, src, transfer_eps=160).collect()}
+    assert tiers == [True, False]  # junction census; distributed merge
     assert a == b
 
 
-def test_interp_tiers_label_identical(spark, sf_dir):
+def test_interp_tiers_label_identical(spark, sf_dir, monkeypatch):
     """The r6 driver-interpolation tier (numpy gather + segmented min
     when the Dijkstra labels are already driver-side) must equal the
-    broadcast-join interpolation row for row."""
+    broadcast-join interpolation row for row.  SERIAL_ROWS sits
+    between the contracted-edge count and the chain row count, so the
+    Dijkstra merge stays on the driver and the interpolation goes
+    distributed."""
     segs = S.roads(spark, sf_dir)
     src = R.route_sources(spark, sf_dir, 2)
     a = {(r.vx, r.vy): r.dist
          for r in R.sssp(spark, segs, src, transfer_eps=160).collect()}
+    src_nids = [(r.vx << R._SHIFT) + r.vy for r in src.collect()]
+    edges, _skips, chain = R.contracted_graph(
+        segs, 160, extra_junctions=src_nids)
+    n_edges, n_chain = edges.count(), chain.count()
+    assert n_edges < n_chain  # the strict gap the tier split needs
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", n_edges)
+    tiers = _spy_tiers(monkeypatch)
     b = {(r.vx, r.vy): r.dist
-         for r in R.sssp(spark, segs, src, transfer_eps=160,
-                         interp_cap=0).collect()}
+         for r in R.sssp(spark, segs, src, transfer_eps=160).collect()}
+    # junction census; driver Dijkstra; distributed interpolation
+    assert tiers == [True, True, False]
     assert a == b
 
 
@@ -173,6 +202,24 @@ def test_two_roads_share_a_junction(spark):
            for r in R.sssp(spark, segs, src, transfer_eps=0).collect()}
     assert got == {(0, 0): 0, (5, 0): 5, (10, 0): 10,
                    (8, 4): 10, (11, 8): 15}
+
+
+def test_junction_census_cap_fails_loudly(spark, monkeypatch):
+    """The junction census is a bounded driver collect: past
+    _JUNCTION_CAP it raises instead of collecting.  The two roads
+    share exactly one repeated coordinate, so a cap of 1 passes and
+    a cap of 0 must raise."""
+    rows = [
+        (0, 0, 0, 0, 5, 0), (0, 1, 5, 0, 10, 0),
+        (1, 0, 5, 0, 8, 4), (1, 1, 8, 4, 11, 8),
+    ]
+    segs = _segs_df(spark, rows)
+    monkeypatch.setattr(R, "_JUNCTION_CAP", 1)
+    R.contracted_graph(segs, transfer_eps=0)
+    monkeypatch.setattr(R, "_JUNCTION_CAP", 0)
+    with pytest.raises(ValueError,
+                       match="junction census exceeds 0 nodes"):
+        R.contracted_graph(segs, transfer_eps=0)
 
 
 def test_mid_chain_source_seeds_both_directions(spark):

@@ -24,6 +24,7 @@ import duckdb
 import pandas as pd
 import pytest
 
+from vtzero_spark.engine import drivertier
 from vtzero_spark.engine import supercluster as sc
 from vtzero_spark.engine.lint import lint_tile_bytes
 from vtzero_spark.mvt import tile as T
@@ -63,15 +64,17 @@ def _lcg_pts(n, span=4000, seed=5):
     return pts
 
 
-def test_greedy_matches_serial_reference(spark):
+def test_greedy_matches_serial_reference(spark, monkeypatch):
     pts = _lcg_pts(400)
     df = spark.createDataFrame(pts, "pid long, px long, py long")
+    default = drivertier.SERIAL_ROWS
     for radius in (90, 300):
         ref = serial_greedy(pts, radius)
-        # BOTH tiers: the pure distributed wavefront (serial_cap=0)
+        # BOTH tiers: the pure distributed wavefront (SERIAL_ROWS = 0)
         # and the bounded-collect finish must equal the sweep exactly
-        for cap in (0, 500_000):
-            lab = _lab(sc.greedy_cluster(df, radius, serial_cap=cap))
+        for cap in (0, default):
+            monkeypatch.setattr(drivertier, "SERIAL_ROWS", cap)
+            lab = _lab(sc.greedy_cluster(df, radius))
             assert len(lab) == len(pts)
             assert {p: a for p, (_, a) in lab.items()} == ref
             # seed flag is consistent with the assignment
@@ -89,17 +92,18 @@ def test_boundary_tie_is_inclusive(spark):
     assert lab4 == {1: (True, 1), 2: (True, 2)}
 
 
-def test_colocated_blob_single_cluster(spark):
+def test_colocated_blob_single_cluster(spark, monkeypatch):
     # 64 points at ONE position: min id seeds, everyone else absorbs,
     # and the wavefront needs only two rounds (max_rounds=2 passes)
     df = spark.createDataFrame([(i, 7, 9) for i in range(1, 65)],
                                "pid long, px long, py long")
-    lab = _lab(sc.greedy_cluster(df, 10, max_rounds=2, serial_cap=0))
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", 0)
+    lab = _lab(sc.greedy_cluster(df, 10, max_rounds=2))
     assert all(a == 1 for _, a in lab.values())
     assert sum(s for s, _ in lab.values()) == 1
 
 
-def test_descending_chain_is_the_worst_case(spark):
+def test_descending_chain_is_the_worst_case(spark, monkeypatch):
     # ids DESCEND along a spatial path with only-adjacent neighbors:
     # point k sits at x=(n-k)*60 with radius 60, so deciding pid k
     # requires pid k-1 first — rounds == n, the true dependency depth
@@ -107,12 +111,14 @@ def test_descending_chain_is_the_worst_case(spark):
     pts = [(k, (n - k) * 60, 0) for k in range(1, n + 1)]
     df = spark.createDataFrame(pts, "pid long, px long, py long")
     ref = serial_greedy(pts, 60)
-    lab = _lab(sc.greedy_cluster(df, 60, max_rounds=n + 1, serial_cap=0))
-    assert {p: a for p, (_, a) in lab.items()} == ref
-    # alternating seeds up the chain: 1 seeds, absorbs 2; 3 seeds, ...
-    assert [a for _, (_, a) in sorted(lab.items())][:4] == [1, 1, 3, 3]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        sc.greedy_cluster(df, 60, max_rounds=3, serial_cap=0)
+    with monkeypatch.context() as m:
+        m.setattr(drivertier, "SERIAL_ROWS", 0)
+        lab = _lab(sc.greedy_cluster(df, 60, max_rounds=n + 1))
+        assert {p: a for p, (_, a) in lab.items()} == ref
+        # alternating seeds up the chain: 1 seeds, absorbs 2; 3 seeds
+        assert [a for _, (_, a) in sorted(lab.items())][:4] == [1, 1, 3, 3]
+        with pytest.raises(RuntimeError, match="did not converge"):
+            sc.greedy_cluster(df, 60, max_rounds=3)
     # the bounded-collect tier finishes the same chain in ONE pass
     assert _lab(sc.greedy_cluster(df, 60, max_rounds=1)) == lab
 
@@ -139,7 +145,7 @@ def test_pyramid_conservation_nesting_monotone(spark):
     assert by_zoom[4] == {p[0] for p in pts}
 
 
-def test_pyramid_serial_tier_equals_distributed(spark):
+def test_pyramid_serial_tier_equals_distributed(spark, monkeypatch):
     """The r6 driver-serial PYRAMID tier (one collect, numpy rollups)
     must reproduce the distributed per-level loop exactly — every
     levels row and every edge row, including the div-quantized
@@ -155,9 +161,9 @@ def test_pyramid_serial_tier_equals_distributed(spark):
 
     fast = _norm(sc.supercluster_hierarchy(
         df, radius=512, min_zoom=0, max_zoom=4, value_col="v"))
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", 0)
     slow = _norm(sc.supercluster_hierarchy(
-        df, radius=512, min_zoom=0, max_zoom=4, value_col="v",
-        serial_cap=0))
+        df, radius=512, min_zoom=0, max_zoom=4, value_col="v"))
     assert fast == slow
 
 

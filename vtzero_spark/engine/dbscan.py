@@ -40,8 +40,9 @@ Scale shape (the 100 TB story):
    CONTRACTED graph that is smaller than the core graph by the average
    in-cell component size. The contracted merge then takes one of two
    tiers — the same bounded-collect discipline as ``joins.pip_join``'s
-   hot-cell census: under ``contract_cap`` edges it is union-found on
-   the driver (the contracted graph of a density-clustered corpus is
+   hot-cell census: under ``drivertier.SERIAL_ROWS`` edges it is
+   union-found on the driver (the contracted graph of a
+   density-clustered corpus is
    cell-count-sized, not point-count-sized) and the root->component
    map rides back as a broadcast join; past the cap it falls back to
    ``textops.neardup_components`` — fully distributed min-label
@@ -49,8 +50,8 @@ Scale shape (the 100 TB story):
    identical min-core-id labeling.
 4. Border assignment is one join + min-agg on the checkpointed pairs.
 
-Nothing is ever collected to the driver and no stage is quadratic in
-anything but true neighbor density.  Reference analog: none — vtzero
+The only driver collect is the bounded merge tier, and no stage is
+quadratic in anything but true neighbor density.  Reference analog: none — vtzero
 is a tile codec (SURVEY §2 scope); this operator extends the engine's
 spatial-join family (pip/knn/dwithin, BASELINE.json north rule) with
 the clustering primitive a geo feature-store runs for POI
@@ -62,6 +63,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from . import drivertier
 from .textops import neardup_components
 
 
@@ -195,8 +197,7 @@ def _contract_cell(pdf):
 
 def dbscan(points: DataFrame, eps: int, min_pts: int,
            point_id: str = "pid", x_col: str = "px",
-           y_col: str = "py", max_rounds: int = 20,
-           contract_cap: int = 500_000) -> DataFrame:
+           y_col: str = "py", max_rounds: int = 20) -> DataFrame:
     """Exact DBSCAN labels: one row per input point with columns
     (pid, component, is_core); noise carries component = -1.  See the
     module docstring for semantics and the distributed shape."""
@@ -222,20 +223,20 @@ def dbscan(points: DataFrame, eps: int, min_pts: int,
     # star edges knit the local roots a point received from different
     # cell groups; the contracted graph is cell-sized, not point-sized
     rmin = lr.groupBy("pid").agg(F.min("lroot").alias("rmin"))
-    # LAZY checkpoint + ONE capped collect: len(sp) both decides the
-    # tier and, in the common small tier, already holds the rows —
-    # the separate count and re-collect jobs are gone (the route/
-    # sssp edge-collect discipline); the rare >cap tier re-reads the
-    # checkpoint
+    # LAZY checkpoint + ONE capped collect: it both decides the tier
+    # and, in the common small tier, already holds the rows — the rare
+    # distributed tier re-reads the checkpoint
     star = (lr.join(rmin, "pid")
             .where(F.col("lroot") != F.col("rmin"))
             .select("rmin", "lroot").distinct()
             .localCheckpoint(eager=False))
-    sp = star.limit(contract_cap + 1).toPandas()  # Arrow, not Row
-    n_star = len(sp)
-    if n_star == 0:
-        root_comp = None
-    elif n_star <= contract_cap:
+    sp = drivertier.collect_within(star, drivertier.SERIAL_ROWS)
+    crt = rmin.select("pid", F.col("rmin").alias("lroot"))
+    if sp is None:
+        root_comp = neardup_components(
+            star, a_col="rmin", b_col="lroot", max_rounds=max_rounds) \
+            .select(F.col("doc_id").alias("lroot"), "component")
+    else:
         # bounded-collect tier (the pip_join hot-census discipline):
         # driver union-find with the same root-is-min invariant
         parent: dict[int, int] = {}
@@ -257,26 +258,14 @@ def dbscan(points: DataFrame, eps: int, min_pts: int,
         import pandas as pd
 
         keys = list(parent)
-        root_comp = spark.createDataFrame(
+        root_comp = F.broadcast(spark.createDataFrame(
             pd.DataFrame({
                 "lroot": pd.Series(keys, dtype="int64"),
                 "component": pd.Series([dfind(k) for k in keys],
                                        dtype="int64")}),
-            "lroot long, component long")
-    else:
-        root_comp = neardup_components(
-            star, a_col="rmin", b_col="lroot", max_rounds=max_rounds) \
-            .select(F.col("doc_id").alias("lroot"), "component")
-
-    crt = rmin.select("pid", F.col("rmin").alias("lroot"))
-    if root_comp is None:
-        comp = crt.select("pid", F.col("lroot").alias("component"))
-    else:
-        comp = crt.join(F.broadcast(root_comp) if n_star <= contract_cap
-                        else root_comp, "lroot", "left") \
-            .select("pid",
-                    F.coalesce("component", F.col("lroot"))
-                    .alias("component"))
+            "lroot long, component long"))
+    comp = crt.join(root_comp, "lroot", "left").select(
+        "pid", F.coalesce("component", F.col("lroot")).alias("component"))
     # a core with min_pts satisfied purely by border neighbors has no
     # core-core edge: it is its own singleton cluster
     core_lbl = core.join(comp, "pid", "left").select(

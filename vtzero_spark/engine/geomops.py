@@ -583,7 +583,8 @@ def cmds_batches(out_fields):
     upstream Arrow kernel inside ONE mapInArrow)."""
     import pyarrow as pa
 
-    from ..mvt.geometry import GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON
+    from ..mvt.geometry import (
+        GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON, GeometryError)
     from .clip import _flat_parts
 
     def fn(batches):
@@ -594,6 +595,10 @@ def cmds_batches(out_fields):
                 continue
             gt = tbl.column("geom_type").to_numpy(zero_copy_only=False)
             col = tbl.column("parts").combine_chunks()
+            rings = col.flatten()
+            if rings.null_count or any(
+                    f.null_count for f in rings.flatten().flatten()):
+                raise GeometryError("null part or coordinate in parts")
             o1, o2, x, y = _flat_parts(col)
             row_len = np.zeros(n, dtype=np.int64)
             flats = {}

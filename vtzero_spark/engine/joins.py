@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
+from . import drivertier
 from .synth import EXTENT
+
+# hot-cell census bound: hot cells are few by definition, so a larger
+# census means hot_threshold is mis-set for the grid — pip_join fails
+# loudly instead of OOMing the driver with an unbounded collect
+_HOT_CELL_CAP = 100_000
 
 
 def polygon_cell_index(polys: DataFrame, cell: int = EXTENT) -> DataFrame:
@@ -127,40 +133,29 @@ def pip_join(
         )
         joined = pts_salted.join(index_salted, ["cell_x", "cell_y", "_salt"]).drop("_salt")
     else:
-        # hot-cell census, MATERIALIZED once: the census subtree would
+        # hot-cell census, COLLECTED once: the census subtree would
         # otherwise be re-planned into every tier branch (4-6 extra
-        # full scans of the probe side — verified in the static plan,
-        # which shows no exchange reuse across the branches). Hot
-        # cells are few BY DEFINITION (that is what the threshold
-        # means), so the collect is bounded and the downstream joins
-        # consume a literal broadcast relation.
-        # cap the census materialization: hot cells are few by
-        # definition, so a census larger than this means the threshold
-        # is mis-set for the grid — fail loudly instead of OOMing the
-        # driver with an unbounded collect
-        _HOT_CELL_CAP = 100_000
-        hot_rows = (
+        # full scans of the probe side, no exchange reuse across the
+        # branches). Hot cells are few by definition, so the collect
+        # is bounded and the joins consume a literal broadcast.
+        hot_pd = drivertier.collect_within(
             pts.groupBy("cell_x", "cell_y")
             .agg(F.count("*").alias("_n"))
             .where(F.col("_n") > hot_threshold)
-            .select("cell_x", "cell_y")
-            .limit(_HOT_CELL_CAP + 1).collect()
-        )
-        if len(hot_rows) > _HOT_CELL_CAP:
+            .select("cell_x", "cell_y"), _HOT_CELL_CAP)
+        if hot_pd is None:
             raise ValueError(
                 f"hot-cell census exceeds {_HOT_CELL_CAP} cells — "
                 f"hot_threshold={hot_threshold} is too low for this "
                 "cell grid (raise it, or use always-on salting)")
-        if not hot_rows:
+        if not len(hot_pd):
             # no hot cells: a two-tier join degenerates to one plain
             # shuffle join with zero replication
             joined = pts.join(index, ["cell_x", "cell_y"])
         else:
-            spark = points.sparkSession
             hot = F.broadcast(
-                spark.createDataFrame(
-                    [(r["cell_x"], r["cell_y"]) for r in hot_rows],
-                    "cell_x long, cell_y long")
+                points.sparkSession.createDataFrame(
+                    hot_pd, "cell_x long, cell_y long")
                 .withColumn("_hot", F.lit(True)))
             # ONE join carries both tiers (was: cold join UNION hot
             # join — which scanned the probe source twice and planned

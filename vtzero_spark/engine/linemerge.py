@@ -45,9 +45,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["merge_group_parts", "merge_lines", "merge_lines_cmds"]
+from ..mvt.geometry import (
+    GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON, GeometryError)
 
-_LINESTRING = 2
+__all__ = ["merge_group_parts", "merge_lines", "merge_lines_cmds"]
 
 
 def _pack(pts: np.ndarray) -> int:
@@ -176,11 +177,14 @@ def _merge_group_rows(pdf: "pd.DataFrame", keys: Sequence[str],
     -> output row dicts carrying _cx/_cy (lists of int64 coordinate
     arrays; None mirrors a null input parts cell).  Linestring parts
     merge into one MultiLineString row; other geometries pass through
-    per feature."""
+    per feature.  A null part or coordinate raises the GeometryError
+    the cmds pass raises for it."""
+    if pdf["_bad"].any():
+        raise GeometryError("null part or coordinate in parts")
     pdf = pdf.sort_values(["feature_ordinal", "_pos"], kind="stable")
     gt = pdf["geom_type"].to_numpy()
     out_rows: list[dict] = []
-    lp = pdf[(gt == _LINESTRING) & pdf["_pos"].notna().to_numpy()]
+    lp = pdf[(gt == GEOM_LINESTRING) & pdf["_pos"].notna().to_numpy()]
     if len(lp):
         parts: list[np.ndarray] = [
             np.stack((np.asarray(xs_, np.int64),
@@ -194,7 +198,7 @@ def _merge_group_rows(pdf: "pd.DataFrame", keys: Sequence[str],
         row = {k: lp.iloc[0][k] for k in keys}
         row["feature_ordinal"] = lp["feature_ordinal"].min()
         row["feature_id"] = fid
-        row["geom_type"] = _LINESTRING
+        row["geom_type"] = GEOM_LINESTRING
         row["_cx"] = [ch[:, 0] for ch in merged_arr]
         row["_cy"] = [ch[:, 1] for ch in merged_arr]
         row.update(_accumulated(per_feat, acc))
@@ -202,7 +206,7 @@ def _merge_group_rows(pdf: "pd.DataFrame", keys: Sequence[str],
             if c not in row:
                 row[c] = lp.iloc[0][c]
         out_rows.append(row)
-    others = pdf[gt != _LINESTRING]
+    others = pdf[gt != GEOM_LINESTRING]
     for _ordn, gg in others.groupby("feature_ordinal", sort=True):
         row = {c: gg.iloc[0][c] for c in passthrough}
         if bool(gg["_pnull"].iloc[0]):
@@ -221,7 +225,8 @@ def _merge_group_rows(pdf: "pd.DataFrame", keys: Sequence[str],
 def _explode_parts(features: DataFrame, passthrough: Sequence[str]
                    ) -> DataFrame:
     """Shared pre-kernel shape: one part per row as two flat long
-    arrays (_xs, _ys) + _pos/_pnull (see merge_lines)."""
+    arrays (_xs, _ys) + _pos/_pnull (see merge_lines), and _bad
+    flagging a null part or a null point/coordinate inside one."""
     return (features
             .where(F.col("geom_type").isNotNull())
             .select(*passthrough,
@@ -229,6 +234,9 @@ def _explode_parts(features: DataFrame, passthrough: Sequence[str]
                     F.posexplode_outer("parts").alias("_pos", "_part"))
             .withColumn("_xs", F.transform("_part", lambda p: p["x"]))
             .withColumn("_ys", F.transform("_part", lambda p: p["y"]))
+            .withColumn("_bad", F.col("_pos").isNotNull() & F.coalesce(
+                F.exists("_part", lambda p: p.isNull() | p["x"].isNull()
+                         | p["y"].isNull()), F.col("_part").isNull()))
             .drop("_part"))
 
 
@@ -244,8 +252,9 @@ def merge_lines_cmds(features: DataFrame,
     the cmds_from_parts contract; byte-identity with the unfused
     composition is pinned in tests/test_linemerge.py.  Error
     semantics match: a no-parts feature raises the same
-    GeometryError the downstream cmds pass would have raised."""
-    from ..mvt.geometry import GeometryError
+    GeometryError the downstream cmds pass would have raised, and a
+    geom_type outside POINT/LINESTRING/POLYGON gets the same empty
+    geometry."""
     from .geomops import _cmds_group
 
     keys = list(keys)
@@ -264,6 +273,10 @@ def merge_lines_cmds(features: DataFrame,
         for row in out_rows:
             cx = row.pop("_cx")
             cy = row.pop("_cy")
+            gtype = int(row["geom_type"])
+            if gtype not in (GEOM_POINT, GEOM_LINESTRING, GEOM_POLYGON):
+                row["geometry"] = np.zeros(0, np.int64)
+                continue
             if not cx:  # None or empty: cmds_from_parts raises too
                 raise GeometryError("feature with no parts")
             xf = np.concatenate(cx)
@@ -272,8 +285,7 @@ def merge_lines_cmds(features: DataFrame,
             np.cumsum([len(a) for a in cx], out=o2[1:])
             o1 = np.array([0, len(cx)], np.int64)
             flat, _ = _cmds_group(xf, yf, o1, o2,
-                                  np.zeros(1, np.int64),
-                                  int(row["geom_type"]))
+                                  np.zeros(1, np.int64), gtype)
             row["geometry"] = flat
         return pd.DataFrame(out_rows, columns=out_cols)
 

@@ -44,30 +44,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import drivertier
 from .supercluster import wavefront_mis
 
 
-def collision_pairs(labels: DataFrame, point_id: str = "pid",
-                    x_col: str = "px", y_col: str = "py",
-                    w_col: str = "w", h_col: str = "h") -> DataFrame:
+def collision_pairs(lab: DataFrame) -> DataFrame:
     """Ordered conflict pairs (p, q), q < p, whose collision boxes
     (center +- half extents; w/h are FULL widths in world units)
-    overlap closed-interval.  Cell-bucketed: home cell of the box
-    center, side 2^s >= max(w, h) over the corpus, half-plane probe
-    (5 of the 9 neighbor offsets; the other 4 are these negated) —
-    complete, because two overlapping boxes' centers differ by at
-    most (w1+w2)/2 <= max extent <= cell side per axis, and each
-    unordered pair is built exactly once."""
-    # materialize the 5-long-column projection ONCE: the box frame is
-    # read three times below (extent census, home side, probe side) —
-    # without this, an expensive upstream (decode, synth) re-runs per
-    # read; with it, each read is a narrow columnar scan
-    lab = labels.select(
-        F.col(point_id).cast("long").alias("pid"),
-        F.col(x_col).cast("long").alias("px"),
-        F.col(y_col).cast("long").alias("py"),
-        F.col(w_col).cast("long").alias("w"),
-        F.col(h_col).cast("long").alias("h")).localCheckpoint(eager=True)
+    overlap closed-interval, over a (pid, px, py, w, h) long frame.
+    Cell-bucketed: home cell of the box center, side 2^s >= max(w, h)
+    over the corpus, half-plane probe (5 of the 9 neighbor offsets;
+    the other 4 are these negated) — complete, because two
+    overlapping boxes' centers differ by at most (w1+w2)/2 <= max
+    extent <= cell side per axis, and each unordered pair is built
+    exactly once.  ``lab`` is read three times (extent census, home
+    side, probe side), so pass a checkpointed frame."""
     bounds = lab.agg(
         F.max(F.greatest("w", "h")).alias("ext"),
         F.min(F.least("w", "h")).alias("mn")).collect()[0]
@@ -126,40 +117,35 @@ def collision_pairs(labels: DataFrame, point_id: str = "pid",
 def place_labels(labels: DataFrame, point_id: str = "pid",
                  x_col: str = "px", y_col: str = "py",
                  w_col: str = "w", h_col: str = "h",
-                 max_rounds: int = 64,
-                 serial_cap: int = 500_000,
-                 n_labels: int | None = None) -> DataFrame:
+                 max_rounds: int = 64) -> DataFrame:
     """Collision-free placement: one row per label with columns
     (pid, placed boolean, blocker long) — exact priority-greedy
     semantics (see the module docstring), resolved through the shared
     supercluster wavefront.
 
     Serial tier (the greedy_cluster bounded-collect discipline): the
-    5-column label frame collects ONCE when it fits ``serial_cap``
-    and both the overlap pairs and the greedy sweep run vectorized on
-    the driver — label-identical by construction (same pair set, same
-    closed form; sequential-parity pinned in tests).  Past the cap
-    the cell join + distributed wavefront run unchanged."""
+    5-column label frame collects ONCE when it fits
+    ``drivertier.SERIAL_ROWS`` and both the overlap pairs and the
+    greedy sweep run vectorized on the driver — label-identical by
+    construction (same pair set, same closed form; sequential-parity
+    pinned in tests).  Past it the cell join + distributed wavefront
+    run unchanged."""
     import numpy as np
     import pandas as pd
 
     from .supercluster import _serial_cell_pairs, _serial_sweep
 
-    lab5 = labels.select(
+    # LAZY checkpoint: the capped collect materializes it, so sizing
+    # the tier and materializing the 5-column frame are ONE job, not
+    # two (every later read still hits the checkpoint)
+    lab = labels.select(
         F.col(point_id).cast("long").alias("pid"),
         F.col(x_col).cast("long").alias("px"),
         F.col(y_col).cast("long").alias("py"),
         F.col(w_col).cast("long").alias("w"),
-        F.col(h_col).cast("long").alias("h"))
-    lab_ck = None
-    if n_labels is None:
-        # LAZY checkpoint: the count materializes it, so sizing the
-        # tier and materializing the 5-column frame are ONE job, not
-        # two (every later read still hits the checkpoint)
-        lab_ck = lab5.localCheckpoint(eager=False)
-        n_labels = lab_ck.count()
-    if 0 < n_labels <= serial_cap:
-        pp = (lab_ck if lab_ck is not None else lab5).toPandas()
+        F.col(h_col).cast("long").alias("h")).localCheckpoint(eager=False)
+    pp = drivertier.collect_within(lab, drivertier.SERIAL_ROWS)
+    if pp is not None and len(pp):
         pid = pp["pid"].to_numpy(np.int64)
         px = pp["px"].to_numpy(np.int64)
         py = pp["py"].to_numpy(np.int64)
@@ -201,16 +187,9 @@ def place_labels(labels: DataFrame, point_id: str = "pid",
                               "blocker": pd.Series(assign)}),
                 "pid long, placed boolean, blocker long")
         # candidate volume past the driver cap: distributed fallback
-    pts = (lab_ck if lab_ck is not None else lab5).select("pid")
     # lazy pair plan: the wavefront checkpoints it itself
-    pairs = collision_pairs(lab_ck if lab_ck is not None else labels,
-                            "pid" if lab_ck is not None else point_id,
-                            *(("px", "py", "w", "h")
-                              if lab_ck is not None
-                              else (x_col, y_col, w_col, h_col)))
-    out = wavefront_mis(pts, pairs, max_rounds=max_rounds,
-                        serial_cap=serial_cap, n_points=n_labels,
-                        pairs_materialized=False)
+    out = wavefront_mis(lab.select("pid"), collision_pairs(lab),
+                        max_rounds=max_rounds)
     return out.select("pid", F.col("seed").alias("placed"),
                       F.col("assign").alias("blocker"))
 

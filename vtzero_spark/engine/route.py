@@ -49,9 +49,13 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from . import drivertier
 from . import snap as S
 
 _SHIFT = 20  # coord pack: (x << 20) | y, coords < 2^20
+# junction-census bound: a larger census means the network is not
+# chain-contractible at this scale, so contracted_graph fails loudly
+_JUNCTION_CAP = 4_000_000
 
 
 def _nid(x, y):
@@ -216,7 +220,7 @@ def transfer_edges(verts: DataFrame, eps: int) -> DataFrame:
 
 
 def contracted_graph(segs: DataFrame, transfer_eps: int = 64,
-                     extra_junctions: DataFrame | list[int] | None = None
+                     extra_junctions: list[int] | None = None
                      ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (edges, skips, chain).
 
@@ -243,53 +247,28 @@ def contracted_graph(segs: DataFrame, transfer_eps: int = 64,
     # there connect through it for free). Junction counts are the
     # contraction premise (junction graph << vertex graph), so the
     # set is a bounded driver collect — capped loudly. The transfer
-    # edges themselves are junction-PAIR-sized (they already rode to
-    # the driver for this set), so they collect ONCE here and ride
-    # back as an Arrow frame — no checkpoint + re-collect pair — and
-    # the dup census overlaps the transfer-kernel job from a second
-    # driver thread (guide §2.6: both read the checkpointed verts).
-    _JUNCTION_CAP = 4_000_000
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _dup_census():
-        return (verts.select(
-            _nid(F.col("vx"), F.col("vy")).alias("nid"))
+    # edges are junction-PAIR-sized, so they collect ONCE here and
+    # ride back as an Arrow frame, while the dup census overlaps the
+    # transfer-kernel job (both read the checkpointed verts).
+    dups = (verts.select(_nid(F.col("vx"), F.col("vy")).alias("nid"))
             .groupBy("nid").agg(F.count("*").alias("_n"))
-            .where("_n > 1").select("nid")
-            .limit(_JUNCTION_CAP + 1).toPandas())
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        dup_fut = _pool.submit(_dup_census)
-        tr_pd = transfer_edges(verts, transfer_eps).toPandas()
-        dup_rows = dup_fut.result()
-    if len(dup_rows) > _JUNCTION_CAP:
+            .where("_n > 1").select("nid"))
+    tr_pd, dup_rows = drivertier.beside(
+        transfer_edges(verts, transfer_eps).toPandas,
+        lambda: drivertier.collect_within(dups, _JUNCTION_CAP))
+    if dup_rows is None:
         raise ValueError(
             f"junction census exceeds {_JUNCTION_CAP} nodes — the "
             "network is not chain-contractible at this scale")
     jset = set(dup_rows["nid"].tolist())
     jset.update(int(v_) for v_ in tr_pd["src"].tolist())
     jset.update(int(v_) for v_ in tr_pd["dst"].tolist())
-    if extra_junctions is not None:
-        # e.g. SSSP sources: a mid-chain source must split its chain
-        # so its own label (0) anchors the interpolation exactly.
-        # Accepts a plain int list (the caller already collected its
-        # bounded source set) or a (nid) DataFrame.
-        if isinstance(extra_junctions, DataFrame):
-            extra_junctions = [
-                int(v_) for v_ in
-                extra_junctions.select("nid").toPandas()["nid"]]
-        for v_ in extra_junctions:
-            jset.add(int(v_))
+    # e.g. SSSP sources: a mid-chain source must split its chain so
+    # its own label (0) anchors the interpolation exactly
+    jset.update(int(v_) for v_ in extra_junctions or ())
     jset_b = segs.sparkSession.sparkContext.broadcast(jset)
-    # the collected transfer edges ride back as one Arrow frame for
-    # the edge union (same rows the old checkpoint held)
-    _spark = segs.sparkSession
-    _TR_SCHEMA = "src long, dst long, w long"
-    if len(tr_pd):
-        tr = _spark.createDataFrame(tr_pd[["src", "dst", "w"]],
-                                    _TR_SCHEMA)
-    else:
-        tr = _spark.createDataFrame([], _TR_SCHEMA)
+    tr = segs.sparkSession.createDataFrame(tr_pd,
+                                           "src long, dst long, w long")
 
     # ONE applyInPandas pass per road replaces the old 3-join +
     # double-window chain annotation (the fill columns are plain
@@ -411,9 +390,7 @@ def _dijkstra(edge_rows, seed_rows) -> dict[int, int]:
 
 
 def sssp(spark: SparkSession, segs: DataFrame, sources: DataFrame,
-         transfer_eps: int = 64, max_rounds: int = 64,
-         merge_cap: int = 500_000,
-         interp_cap: int = 500_000) -> DataFrame:
+         transfer_eps: int = 64, max_rounds: int = 64) -> DataFrame:
     """Shortest network distance from the source set to EVERY road
     vertex. ``sources``: rows (vx, vy) that must be road vertices
     (snap first for arbitrary points). Returns one row per distinct
@@ -421,9 +398,9 @@ def sssp(spark: SparkSession, segs: DataFrame, sources: DataFrame,
 
     Two merge tiers on the contracted junction graph — the bounded-
     collect discipline joins.pip_join and dbscan established: under
-    ``merge_cap`` edges the graph is Dijkstra'd on the driver (the
-    junction graph is contraction-sized, not vertex-sized) and the
-    labels ride back as a DataFrame; past the cap the frontier
+    ``drivertier.SERIAL_ROWS`` edges the graph is Dijkstra'd on the
+    driver (the junction graph is contraction-sized, not vertex-sized)
+    and the labels ride back as a DataFrame; past it the frontier
     Bellman-Ford loop runs fully distributed. Tiers are label-
     identical (pytest-pinned)."""
     import pandas as pd
@@ -446,20 +423,13 @@ def sssp(spark: SparkSession, segs: DataFrame, sources: DataFrame,
     # contracted_graph already checkpointed — both its consumers
     # (validation, interpolation) replay that checkpoint for free.
     # The contracted edge list is junction-sized, so the tier choice
-    # and the Dijkstra input come from ONE capped collect (count +
-    # toPandas fused: limit(cap+1) decides the tier AND hands the
-    # small tier its rows), with the source-validation count riding a
-    # second driver thread over the same checkpoint (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _matched():
-        return chain.where(F.col("nid").isin(src_nids)) \
-            .select("nid").distinct().count()
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        matched_fut = _pool.submit(_matched)
-        edges_pd = edges.limit(merge_cap + 1).toPandas()
-        matched = matched_fut.result()
+    # and the Dijkstra input come from ONE capped collect, with the
+    # source-validation count riding a second driver thread over the
+    # same checkpoint (guide §2.6).
+    edges_pd, matched = drivertier.beside(
+        lambda: drivertier.collect_within(edges, drivertier.SERIAL_ROWS),
+        chain.where(F.col("nid").isin(src_nids)).select("nid")
+        .distinct().count)
     if matched < n_src:
         raise ValueError(
             f"{n_src - matched} source(s) are not road vertices — "
@@ -468,7 +438,7 @@ def sssp(spark: SparkSession, segs: DataFrame, sources: DataFrame,
                             "dist": np.zeros(n_src, np.int64)})
     n_dist = None
     labels = None
-    if len(edges_pd) <= merge_cap:
+    if edges_pd is not None:
         # Arrow transfer + namedtuples, not Row collect: at the 500k
         # cap Row materialization alone costs seconds
         labels = _dijkstra(
@@ -523,10 +493,11 @@ def sssp(spark: SparkSession, segs: DataFrame, sources: DataFrame,
     # the per-vertex min dedups junction-shared coordinates (nid
     # bijects (vx, vy) — the packed coordinate), and >= 2^62 -> -1.
     # Tier equality is pinned in tests/test_route.py.
-    if labels is not None and interp_cap > 0:
-        ch_pd = chain.select("nid", "pos", "lpos", "rpos", "lj", "rj") \
-            .limit(interp_cap + 1).toPandas()
-        if len(ch_pd) <= interp_cap:
+    if labels is not None:
+        ch_pd = drivertier.collect_within(
+            chain.select("nid", "pos", "lpos", "rpos", "lj", "rj"),
+            drivertier.SERIAL_ROWS)
+        if ch_pd is not None:
             nid = ch_pd["nid"].to_numpy(np.int64)
             keys = np.fromiter(labels.keys(), np.int64, len(labels))
             vals = np.fromiter(labels.values(), np.int64, len(labels))
@@ -603,13 +574,11 @@ def route_sources(spark: SparkSession, sf_dir: str,
 
 def segment_bands(spark: SparkSession, segs: DataFrame,
                   sources: DataFrame, band_width: int = 1000,
-                  n_bands: int = 8, transfer_eps: int = 64,
-                  merge_cap: int = 500_000) -> DataFrame:
+                  n_bands: int = 8, transfer_eps: int = 64) -> DataFrame:
     """Per-segment isochrone band: segment rows plus ``band`` =
     min endpoint network distance div ``band_width``; unreachable and
     past-horizon segments drop. The tested core of isochrone_tiles."""
-    dist = sssp(spark, segs, sources, transfer_eps=transfer_eps,
-                merge_cap=merge_cap)
+    dist = sssp(spark, segs, sources, transfer_eps=transfer_eps)
     da = dist.select(F.col("vx").alias("ax"), F.col("vy").alias("ay"),
                      F.col("dist").alias("_da"))
     db = dist.select(F.col("vx").alias("bx"), F.col("vy").alias("by"),
@@ -626,8 +595,8 @@ def segment_bands(spark: SparkSession, segs: DataFrame,
 def isochrone_tiles(spark: SparkSession, segs: DataFrame,
                     sources: DataFrame, band_width: int = 1000,
                     n_bands: int = 8, transfer_eps: int = 64,
-                    zoom: int | None = None, extent: int = 4096,
-                    merge_cap: int = 500_000) -> DataFrame:
+                    zoom: int | None = None, extent: int = 4096
+                    ) -> DataFrame:
     """Isochrone map: road segments bucketed by network distance from
     the source set, served as per-band MVT line layers ("iso_0" is the
     closest band). Band of a segment = min endpoint distance div
@@ -646,8 +615,7 @@ def isochrone_tiles(spark: SparkSession, segs: DataFrame,
     if zoom is None:
         zoom = synth.ZOOM
     j = segment_bands(spark, segs, sources, band_width=band_width,
-                      n_bands=n_bands, transfer_eps=transfer_eps,
-                      merge_cap=merge_cap)
+                      n_bands=n_bands, transfer_eps=transfer_eps)
     feats = j.select(
         (F.col("road_id") * 512 + F.col("seg")).alias("fid"),
         F.lit("LineString").alias("gj_type"),

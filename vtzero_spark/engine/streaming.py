@@ -240,7 +240,7 @@ def stream_tile_pipeline(
     partition; .mvt rewrites are same-bytes-same-path).
 
     Returns the StreamingQuery (caller stops it)."""
-    from . import assemble, lint, mvt_files
+    from . import assemble, drivertier, lint, mvt_files
 
     if source not in ("points", "tiles"):
         raise ValueError(f"source must be 'points' or 'tiles', got {source!r}")
@@ -262,8 +262,6 @@ def stream_tile_pipeline(
         else:
             tiles = batch_df.select("z", "x", "y", "tile_bytes")
             tiles_dir = f"{out_dir}/tiles"
-        from concurrent.futures import ThreadPoolExecutor
-
         tiles = tiles.select("z", "x", "y", "tile_bytes").persist()
         try:
             findings = lint.tile_lint(tiles).persist()
@@ -277,11 +275,9 @@ def stream_tile_pipeline(
                        .select("z", "x", "y").distinct())
                 good = tiles.join(bad, ["z", "x", "y"], "left_anti")
 
-                # actions 2+3 run CONCURRENTLY (independent reads of
-                # the persisted tiles/findings; Spark job submission
-                # is thread-safe) — overlapping the sink write with
-                # the quarantine write trims the per-trigger serial
-                # chain the BENCH.md Amdahl fit identified
+                # actions 2+3 overlap (independent reads of the
+                # persisted tiles/findings), trimming the per-trigger
+                # serial chain the BENCH.md Amdahl fit identified
                 def write_sink() -> None:
                     manifest = mvt_files.write_mvt_files(
                         good, tiles_dir)
@@ -294,11 +290,7 @@ def stream_tile_pipeline(
                      .parquet(f"{out_dir}/quarantine/"
                               f"batch_id={batch_id}"))
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    futs = [pool.submit(write_sink),
-                            pool.submit(write_quarantine)]
-                    for f in futs:
-                        f.result()   # re-raise either failure
+                drivertier.beside(write_sink, write_quarantine)
             finally:
                 findings.unpersist()
         finally:

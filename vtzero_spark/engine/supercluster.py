@@ -52,13 +52,14 @@ Scale shape (the 100 TB story):
    discipline as ``knn`` ring expansion and ``dbscan``'s merge.
    Progress is guaranteed (the globally-minimum undecided point is
    always decidable), so ``max_rounds`` only bounds adversarial
-   id-orderings, loudly.  Once the FRONTIER fits under ``serial_cap``
-   (both the undecided set and the surviving pairs), the residual
-   subproblem collects once and the sequential sweep finishes it on
-   the driver — the dbscan-merge bounded-collect discipline; the
-   dependency-chain tail is latency-bound distributed and trivial
-   serially, and both tiers compute the identical closed form
-   (pytest-pinned with serial_cap=0).
+   id-orderings, loudly.  Once the FRONTIER fits under
+   ``drivertier.SERIAL_ROWS`` (both the undecided set and the
+   surviving pairs), the residual subproblem collects once and the
+   sequential sweep finishes it on the driver — the dbscan-merge
+   bounded-collect discipline; the dependency-chain tail is
+   latency-bound distributed and trivial serially, and both tiers
+   compute the identical closed form (pytest-pinned with
+   ``drivertier.SERIAL_ROWS`` set to 0).
 3. The pyramid (``supercluster_levels``) re-clusters each level's
    cluster points with a doubling radius — level z's input is level
    z+1's OUTPUT (cluster-count-sized, not point-sized), so the total
@@ -68,10 +69,9 @@ Scale shape (the 100 TB story):
    pure column math and the encode is the shared Arrow point-tile
    encoder (one shuffle, no Python strings).
 
-The only driver materialization is the capped residual frontier
-(the same bounded-collect contract as ``dbscan``'s merge and
-``joins.pip_join``'s hot census); no stage is quadratic in anything
-but true neighbor density.  Reference analog: none —
+Driver materializations are ``drivertier.collect_within`` collects
+bounded by ``drivertier.SERIAL_ROWS``; no stage is quadratic in
+anything but true neighbor density.  Reference analog: none —
 vtzero is the tile codec this engine serves through (SURVEY §2 scope);
 supercluster is the canonical map-side companion (mapbox/supercluster,
 public algorithm) a tile server runs to render point layers at low
@@ -83,6 +83,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import drivertier
 from .dbscan import neighbor_pairs
 from .synth import EXTENT, WORLD
 
@@ -177,35 +178,28 @@ def _serial_sweep(und_ids, p_arr, q_arr, flags):
 
 
 def wavefront_mis(pts: DataFrame, pairs: DataFrame,
-                  max_rounds: int = 64,
-                  serial_cap: int = 500_000,
-                  n_points: int | None = None,
-                  pairs_materialized: bool = True) -> DataFrame:
+                  max_rounds: int = 64) -> DataFrame:
     """The shared lex-first-MIS wavefront: given points (pid) and
     ordered CONFLICT pairs (p, q) with q < p — any symmetric conflict
     relation: radius balls (supercluster), collision boxes (label
     placement) — returns (pid, seed, assign) where the seed set is
     the lexicographically-first maximal independent set and every
     non-seed's ``assign`` is its min-id conflicting seed.  ``pairs``
-    must already be localCheckpoint'ed when ``pairs_materialized``
-    (the default; the loop re-reads and shrinks it every round) —
-    callers that hand a LAZY pair plan pass False, and the wavefront
-    first probes the serial tier optimistically (one limit-guarded
-    collect, no checkpoint, no count jobs) before materializing
-    anything.  ``n_points`` skips the point-count job when the caller
-    already knows it.  See the module docstring for the round rule
-    and the progress guarantee.
+    may be a lazy plan: the wavefront checkpoints it, and the first
+    pair count materializes it.  See the module docstring for the
+    round rule and the progress guarantee.
 
     TWO TIERS, the dbscan-merge / pip-hot-census bounded-collect
     discipline: distributed rounds while the frontier is large; once
-    BOTH the undecided set and the surviving pair set fit under
-    ``serial_cap`` rows, the residual subproblem (which the pruning
-    invariant keeps self-contained: every surviving pair's target is
-    undecided or a decided seed) collects once and finishes with the
-    sequential sweep on the driver — the dependency-chain TAIL is
-    latency-bound distributed and trivial serially.  serial_cap=0
-    forces the pure distributed loop (tier equality is pytest-pinned;
-    both tiers compute the identical closed form)."""
+    the undecided set fits under ``drivertier.SERIAL_ROWS`` rows and
+    the surviving pair set under four times that, the residual
+    subproblem (which the pruning invariant keeps self-contained:
+    every surviving pair's target is undecided or a decided seed)
+    collects once and finishes with the sequential sweep on the
+    driver — the dependency-chain TAIL is latency-bound distributed
+    and trivial serially.  ``drivertier.SERIAL_ROWS = 0`` forces the
+    pure distributed loop (tier equality is pytest-pinned; both tiers
+    compute the identical closed form)."""
     import numpy as np
     import pandas as pd
 
@@ -213,10 +207,8 @@ def wavefront_mis(pts: DataFrame, pairs: DataFrame,
     schema = "pid long, seed boolean, assign long"
     decided_parts: list[DataFrame] = []
 
-    if not pairs_materialized:
-        # lazy: the n_pairs count below materializes it in one job
-        pairs = pairs.localCheckpoint(eager=False)
-
+    # lazy: the n_pairs count below materializes it in one job
+    pairs = pairs.localCheckpoint(eager=False)
     und = pts.select("pid").localCheckpoint(eager=False)
     n_und = und.count()  # materializes the checkpoint
     # q's decided-seed status RIDES THE PAIR ROW (set by the prune
@@ -237,18 +229,19 @@ def wavefront_mis(pts: DataFrame, pairs: DataFrame,
     rounds = 0
     while n_und > 0:
         # pair rows are three fixed-width longs (~24 B) — a quarter
-        # of the widest row the 500k-point cap was sized for — so the
-        # pair side of the bounded collect admits 4x the rows at the
-        # SAME byte bound; tier equality is unchanged (pytest-pinned
-        # serial==distributed with serial_cap=0)
-        if n_und <= serial_cap and n_pairs <= 4 * serial_cap:
+        # of the widest row the 500k-point bound was sized for — so
+        # the pair side of the bounded collect admits 4x the rows at
+        # the SAME byte bound; tier equality is unchanged
+        # (pytest-pinned serial==distributed)
+        cap = drivertier.SERIAL_ROWS
+        if n_und <= cap and n_pairs <= 4 * cap:
             # bounded-collect tier: the residual subproblem is
-            # exactly (und, pairs-with-q_seed) — each bounded by
-            # serial_cap by the check above.  Arrow/pandas transfer,
-            # not Row collect; the q_seed flag makes this a pure
-            # numpy computation (zero further Spark jobs); the sweep
-            # itself is the shared _serial_sweep (measured 2-3x off
-            # the old dict/set sweep at the 500k cap).
+            # exactly (und, pairs-with-q_seed) — each bounded by the
+            # check above.  Arrow/pandas transfer, not Row collect;
+            # the q_seed flag makes this a pure numpy computation
+            # (zero further Spark jobs); the sweep itself is the
+            # shared _serial_sweep (measured 2-3x off the old
+            # dict/set sweep at the 500k cap).
             pp = pairs.toPandas()
             und_ids = np.sort(und.toPandas()["pid"].to_numpy(np.int64))
             seed, assign = _serial_sweep(
@@ -371,8 +364,6 @@ def _serial_radius_pairs(pid, px, py, radius):
     fully vectorized on collected arrays: sort by home cell, probe
     the 5 half-plane neighbor offsets via searchsorted run expansion,
     refine with exact int64 d2.  No per-cell Python loop."""
-    import numpy as np
-
     import numpy as np
 
     s = 0
@@ -549,7 +540,6 @@ def _serial_pyramid(pp, radius: int, min_zoom: int, max_zoom: int,
 def greedy_cluster(points: DataFrame, radius: int,
                    point_id: str = "pid", x_col: str = "px",
                    y_col: str = "py", max_rounds: int = 64,
-                   serial_cap: int = 500_000,
                    n_points: int | None = None) -> DataFrame:
     """One level of greedy clustering: one row per input point with
     columns (pid, seed boolean, assign long) — ``assign`` is the
@@ -558,34 +548,36 @@ def greedy_cluster(points: DataFrame, radius: int,
     the module docstring.
 
     Serial tier (the dbscan-merge / route-Dijkstra bounded-collect
-    discipline): when the point count fits ``serial_cap``, the point
-    triples collect ONCE (<= cap rows of three longs) and both the
+    discipline): when the point count fits ``drivertier.SERIAL_ROWS``,
+    the point triples collect ONCE (three longs a row) and both the
     radius pairs and the greedy sweep run vectorized on the driver —
     label-identical to the distributed path by construction (the pair
     set is the same set, the sweep is the same closed form; pinned in
-    tests).  Past the cap the cell-join + wavefront path runs
-    unchanged."""
+    tests).  Past it the cell-join + wavefront path runs unchanged.
+    ``n_points``, when the caller already counted the points, decides
+    the tier without a collect."""
     if radius <= 0:
         raise ValueError(f"radius must be positive, got {radius}")
     import numpy as np
     import pandas as pd
 
     spark = points.sparkSession
-    pts_sel = points.select(
+    pts3 = points.select(
         F.col(point_id).cast("long").alias("pid"),
         F.col(x_col).cast("long").alias("px"),
         F.col(y_col).cast("long").alias("py"))
-    pts3 = None
     if n_points is None:
         # materialize the 3-long-column projection ONCE: every later
-        # read (serial collect, or cell-join home/probe + id spine)
-        # is then a narrow columnar scan — without this an expensive
-        # upstream re-runs per read.  LAZY: the count below is the
-        # materializing job, so sizing and checkpointing fuse into one
-        pts3 = pts_sel.localCheckpoint(eager=False)
-        n_points = pts3.count()
-    if 0 < n_points <= serial_cap:
-        pp = (pts3 if pts3 is not None else pts_sel).toPandas()
+        # read (cell-join home/probe + id spine) is then a narrow
+        # columnar scan — without this an expensive upstream re-runs
+        # per read.  LAZY: the capped collect is the materializing
+        # job, so sizing and checkpointing fuse into one
+        pts3 = pts3.localCheckpoint(eager=False)
+        pp = drivertier.collect_within(pts3, drivertier.SERIAL_ROWS)
+    else:
+        pp = pts3.toPandas() \
+            if 0 < n_points <= drivertier.SERIAL_ROWS else None
+    if pp is not None and len(pp):
         pid = pp["pid"].to_numpy(np.int64)
         px = pp["px"].to_numpy(np.int64)
         py = pp["py"].to_numpy(np.int64)
@@ -601,19 +593,16 @@ def greedy_cluster(points: DataFrame, radius: int,
                 "pid long, seed boolean, assign long")
         # candidate volume past _SERIAL_CAND_CAP (dense blob): run
         # the distributed path instead of materializing it driver-side
-    if pts3 is None:
-        pts3 = pts_sel.localCheckpoint(eager=True)
+    if n_points is not None:
+        pts3 = pts3.localCheckpoint(eager=True)
     # ordered conflict pairs (p, q) with q < p and d2 <= radius^2 —
     # the half-plane probe builds each unordered conflict exactly
     # once (5/9 the join volume of the symmetric set). The pair plan
-    # stays LAZY: the wavefront's optimistic serial probe collects it
-    # in one pass when it fits, and checkpoints it itself otherwise.
+    # stays LAZY: the wavefront checkpoints it itself.
     pairs = (neighbor_pairs(pts3, radius, join_hint="shuffle_hash",
                             ordered=True)
              .select(F.col("u").alias("p"), F.col("v").alias("q")))
-    return wavefront_mis(pts3.select("pid"), pairs, max_rounds=max_rounds,
-                         serial_cap=serial_cap, n_points=n_points,
-                         pairs_materialized=False)
+    return wavefront_mis(pts3.select("pid"), pairs, max_rounds=max_rounds)
 
 
 def cluster_rollup(points: DataFrame, labels: DataFrame,
@@ -643,8 +632,7 @@ def supercluster_hierarchy(points: DataFrame, radius: int,
                            point_id: str = "pid", x_col: str = "px",
                            y_col: str = "py",
                            value_col: str | None = None,
-                           max_rounds: int = 64,
-                           serial_cap: int = 500_000
+                           max_rounds: int = 64
                            ) -> tuple[DataFrame, DataFrame]:
     """The zoom pyramid: level ``max_zoom`` is the raw points
     (singleton clusters); each level z below clusters level z+1's
@@ -698,10 +686,10 @@ def supercluster_hierarchy(points: DataFrame, radius: int,
         # shrink), so the whole ladder runs from ONE bounded collect —
         # same pair sets, same sweep, exact int64 rollups, zero
         # per-level Spark jobs (see _serial_pyramid)
-        n_top = items.count()
-        if 0 < n_top <= serial_cap:
-            res = _serial_pyramid(items.toPandas(), radius, min_zoom,
-                                  max_zoom, value_col is not None)
+        pp = drivertier.collect_within(items, drivertier.SERIAL_ROWS)
+        if pp is not None and len(pp):
+            res = _serial_pyramid(pp, radius, min_zoom, max_zoom,
+                                  value_col is not None)
             if res is not None:
                 lv_pd, ed_pd = res
                 lv_schema = (
@@ -718,7 +706,7 @@ def supercluster_hierarchy(points: DataFrame, radius: int,
         r_z = radius << (max_zoom - 1 - z)
         n_items = items.count()  # cheap: items is checkpointed
         lab = greedy_cluster(items, r_z, max_rounds=max_rounds,
-                             serial_cap=serial_cap, n_points=n_items)
+                             n_points=n_items)
         edge_parts.append(lab.select(
             F.lit(z).cast("int").alias("zoom"),
             F.col("pid").alias("child_id"),
@@ -756,12 +744,11 @@ def supercluster_levels(points: DataFrame, radius: int,
                         min_zoom: int, max_zoom: int,
                         point_id: str = "pid", x_col: str = "px",
                         y_col: str = "py", value_col: str | None = None,
-                        max_rounds: int = 64,
-                        serial_cap: int = 500_000) -> DataFrame:
+                        max_rounds: int = 64) -> DataFrame:
     """The levels table alone — see ``supercluster_hierarchy``."""
     return supercluster_hierarchy(
         points, radius, min_zoom, max_zoom, point_id, x_col, y_col,
-        value_col, max_rounds, serial_cap)[0]
+        value_col, max_rounds)[0]
 
 
 def cluster_leaves(points: DataFrame, edges: DataFrame,
