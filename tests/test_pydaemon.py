@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import ast
 import importlib
 import os
 import sys
@@ -101,3 +102,45 @@ def test_add_py_file_mid_session_is_importable(spark, tmp_path):
 
     rows = spark.range(4, numPartitions=2).mapInArrow(use, "v long").collect()
     assert [r.v for r in rows] == [85] * 4
+
+
+_DECOY_PROBE = """
+import sys
+sys.path.insert(0, sys.argv[1])
+import pyarrow as pa
+from vtzero_spark.engine import session
+
+def probe(batches):
+    import vtzero_spark
+    for _ in batches:
+        yield pa.RecordBatch.from_pydict({"f": [vtzero_spark.__file__]})
+
+spark = session.get_spark("decoy_probe", cores=1, shuffle_partitions=1)
+df = spark.range(2, numPartitions=1).mapInArrow(probe, "f string")
+print("WORKER_FILES", sorted({r.f for r in df.collect()}))
+spark.stop()
+"""
+
+
+def test_workers_import_the_drivers_tree_not_their_cwd(tmp_path):
+    """A driver started from a directory that holds another
+    ``vtzero_spark`` (a decoy here; in an A/B run, the other tree) runs
+    the tree it imported on its workers too: ``python -m`` would put the
+    workers' working directory first on their path."""
+    import subprocess
+
+    from vtzero_spark.engine import session
+
+    decoy = tmp_path / "vtzero_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text("DECOY = True\n")
+    out = subprocess.run(
+        [sys.executable, "-c", _DECOY_PROBE, session._ROOT], cwd=tmp_path,
+        capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = [ln for ln in out.stdout.splitlines()
+            if ln.startswith("WORKER_FILES")][-1]
+    files = ast.literal_eval(line.split(" ", 1)[1])
+    assert files and all(
+        f.startswith(os.path.join(session._ROOT, "vtzero_spark", ""))
+        for f in files), files

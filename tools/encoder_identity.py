@@ -14,10 +14,23 @@ child process per tree, and compares the outputs by key:
 - ``join_attrs``: ``enrich.join_attributes`` as in the ``join_attrs``
   query
 
+and the read path on two tile sets, the perfbench ``tile_read`` tileset
+(seed 3; cases ``tileset_*``) and a corpus of mvt-fixture style tiles,
+valid and malformed, plus seeded byte mutations of them (``fixtures_*``):
+
+- ``*_eq`` / ``*_in`` / ``*_has`` / ``*_layer``: ``rewrite_tiles`` with
+  an equality predicate, an IN-set, a has-key predicate and a layer
+  selector, by ``(z,x,y)``
+- ``*_decode`` / ``*_decode_props``: ``decode_tiles`` with
+  ``properties=False`` and ``True``, every column of every row
+  (``decode_status`` included), by ``(z,x,y,layer_ordinal,
+  feature_ordinal)``
+
 Usage (from the repo root):
 
     git archive <rev> | tar -x -C /tmp/parent
     python tools/encoder_identity.py /tmp/parent --sf <synth sf0.1 dir>
+    python tools/encoder_identity.py /tmp/parent --sf <dir> --cases read
 
 Prints one line per case (keys on each side, equal keys, the first
 differing keys) and exits 1 if any case differs.
@@ -38,10 +51,161 @@ def _tiles(df):
             for r in df.collect()}
 
 
-def _dump(sf_dir: str, out: str) -> None:
-    """Encode every case with the tree on sys.path[0]; pickle the
-    outputs to ``out``."""
-    sys.path[:0] = [os.getcwd(), os.path.join(os.getcwd(), "perfbench")]
+def _rows(df):
+    """Decoded feature rows by (z, x, y, layer_ordinal, feature_ordinal);
+    each row is compared as the repr of all its columns (NaN equals
+    NaN)."""
+    return {(r["z"], r["x"], r["y"], r["layer_ordinal"],
+             r["feature_ordinal"]): repr(r.asDict(recursive=True))
+            for r in df.collect()}
+
+
+# ------------------------------------------------ fixture corpus (read)
+
+def _varint(v: int) -> bytes:
+    out = bytearray()
+    while True:
+        b, v = v & 0x7F, v >> 7
+        out.append(b | (0x80 if v else 0))
+        if not v:
+            return bytes(out)
+
+
+def _fld(field: int, wire: int, payload) -> bytes:
+    """One protobuf field: a varint value (wire 0) or bytes (wire 2,
+    length-prefixed; wire 1/5 raw)."""
+    key = _varint(field << 3 | wire)
+    if wire == 0:
+        return key + _varint(payload)
+    if wire == 2:
+        return key + _varint(len(payload)) + payload
+    return key + payload
+
+
+def _feature(fid=None, gtype=1, geom=(9, 50, 34), tags=None) -> bytes:
+    out = _fld(3, 0, gtype) if gtype is not None else b""
+    if fid is not None:
+        out += _fld(1, 0, fid)
+    if geom is not None:
+        out += _fld(4, 2, b"".join(map(_varint, geom)))
+    if tags is not None:
+        out += _fld(2, 2, b"".join(map(_varint, tags)))
+    return out
+
+
+def _layer(name=b"hello", feats=(), keys=(), values=(), version=2,
+           extent=4096, extra=b"") -> bytes:
+    out = _fld(15, 0, version) if version is not None else b""
+    if name is not None:
+        out += _fld(1, 2, name)
+    if extent is not None:
+        out += _fld(5, 0, extent)
+    out += b"".join(_fld(2, 2, f) for f in feats)
+    out += b"".join(_fld(3, 2, k) for k in keys)
+    out += b"".join(_fld(4, 2, v) for v in values)
+    return out + extra
+
+
+def _tile(*layers: bytes) -> bytes:
+    return b"".join(_fld(3, 2, ly) for ly in layers)
+
+
+def _fixture_corpus(n_mutants: int = 400) -> list[bytes]:
+    """mvt-fixture style tiles (the reference's fixture cases: every
+    value type, dangling key and value indexes, unknown value types,
+    bad versions, missing names, bad geometry types, duplicate keys,
+    invalid UTF-8, multi-byte keys) and seeded byte mutations of them."""
+    import struct
+    import random
+
+    s = lambda v: _fld(1, 2, v.encode() if isinstance(v, str) else v)  # noqa: E731
+    vals = [s("ello"), _fld(7, 0, 1), _fld(4, 0, 6),
+            _fld(3, 1, struct.pack("<d", 1.23)),
+            _fld(2, 5, struct.pack("<f", 3.1)), _fld(6, 0, 175895),
+            _fld(5, 0, 87948), _fld(5, 0, 2**64 - 1), _fld(4, 0, 2**64 - 5),
+            _fld(9, 0, 1), s(b"\xff\xfeok"), b"\x8a\x00\x02hi", b"",
+            b"\x0a\x09short"]
+    base = [
+        _tile(),
+        _tile(_layer(feats=[_feature()])),
+        _tile(_layer(feats=[_feature(i, 1, tags=[0, i])
+                            for i in range(len(vals))],
+                     keys=[b"k"], values=vals)),
+        _tile(_layer(feats=[_feature(1, tags=[1, 0])], keys=[b"key1"],
+                     values=[s("v")])),                         # 040
+        _tile(_layer(feats=[_feature(1, tags=[0, 1])], keys=[b"key1"],
+                     values=[s("v")])),                         # 042
+        _tile(_layer(feats=[_feature(1, tags=[0, 0, 1, 1, 2, 2])],
+                     keys=[b"a", b"a", b"\xff"],
+                     values=[s("x"), s("y"), _fld(7, 0, 0)])),  # dup keys
+        _tile(_layer(version=3, feats=[_feature()])),           # 012
+        _tile(_layer(name=None, feats=[_feature()])),           # 014
+        _tile(_layer(feats=[_feature()]),
+              _layer(feats=[_feature(2)])),                     # 015
+        _tile(_layer(feats=[_feature(geom=None)])),             # 004
+        _tile(_layer(feats=[_feature(gtype=9)])),               # 006
+        _tile(_layer(feats=[_feature()], extent=None,
+                     extra=_fld(5, 2, b"4096"))),               # 008
+        _tile(_layer(feats=[_feature(tags=[0, 0])], keys=[_fld(3, 0, 1)],
+                     values=[s("v")])),                         # 013
+        _tile(_layer(name=b"L\xffx", version=1, extent=512,
+                     feats=[_feature(None, 2, (9, 0, 0, 18, 2, 2, 4, 4),
+                                     [0, 0])],
+                     keys=[b"k"], values=[s("w")])),
+        _tile(_layer(feats=[_feature(tags=[0, 0, 1])], keys=[b"k"],
+                     values=[s("v")])),                         # 005
+        b"\x1a\x05garb",
+    ]
+    rng = random.Random(20261019)
+    mutants = []
+    for _ in range(n_mutants):
+        b = bytearray(rng.choice(base[1:-1]))
+        for _ in range(rng.randint(1, 4)):
+            b[rng.randrange(len(b))] = rng.randrange(256)
+        if rng.random() < 0.2:
+            b = b[:rng.randrange(1, len(b) + 1)]
+        mutants.append(bytes(b))
+    return base + mutants
+
+
+def _read_cases(res: dict, inputs: dict) -> None:
+    """``inputs``: set name -> (tiles, (eq key, value), (in key,
+    values), has key, layer) for its rewrite predicates."""
+    from vtzero_spark.engine import assemble, rewrite
+
+    for name, (tiles, eq, in_, has, layer) in inputs.items():
+        res[f"{name}_eq"] = _tiles(
+            rewrite.rewrite_tiles(tiles, key=eq[0], value=eq[1]))
+        res[f"{name}_in"] = _tiles(
+            rewrite.rewrite_tiles(tiles, key=in_[0], value=in_[1]))
+        res[f"{name}_has"] = _tiles(rewrite.rewrite_tiles(tiles, key=has))
+        res[f"{name}_layer"] = _tiles(
+            rewrite.rewrite_tiles(tiles, layer=layer))
+        res[f"{name}_decode"] = _rows(assemble.decode_tiles(tiles))
+        res[f"{name}_decode_props"] = _rows(
+            assemble.decode_tiles(tiles, properties=True))
+
+
+def _read_inputs(spark, corpus: str) -> dict:
+    import gen
+    import workloads
+
+    tileset = workloads._encode(spark.createDataFrame(
+        gen.images(3, workloads.N_READ, clustered=False).to_pandas())
+    ).localCheckpoint()
+    with open(corpus, "rb") as fh:
+        bufs = pickle.load(fh)
+    fixtures = spark.createDataFrame(
+        [(14, i, 0, bytearray(b)) for i, b in enumerate(bufs)],
+        "z long, x long, y long, tile_bytes binary")
+    caps = [f"cap {i}" for i in range(0, 2000, 7)]
+    return {"tileset": (tileset, ("fmt", "png"), ("caption", caps),
+                        "caption", "L1"),
+            "fixtures": (fixtures, ("k", "ello"), ("k", ["ello", "v", "x"]),
+                         "k", "hello")}
+
+
+def _encode_cases(res: dict, spark, sf_dir: str) -> None:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry
@@ -49,11 +213,8 @@ def _dump(sf_dir: str, out: str) -> None:
     import workloads
     from vtzero_spark.engine import (
         assemble, enrich, geojson, geomops, synth, tiling)
-    from vtzero_spark.engine.session import get_spark
     from vtzero_spark.engine.synth import EXTENT, ZOOM
 
-    spark = get_spark("encoder_identity", cores=4, shuffle_partitions=8)
-    res = {}
     img = spark.createDataFrame(
         gen.images(7, workloads.N_BUILD, clustered=True).to_pandas())
     feats = workloads._features(img)
@@ -102,6 +263,20 @@ def _dump(sf_dir: str, out: str) -> None:
         tiles, attrs, key_prop=("region", 1),
         base_spec=[("phash", 5), ("fmt", 1), ("caption", 1), ("region", 1)],
         attr_spec=[("weight", 5, "weight"), ("cls", 1, "cls")], how="inner"))
+
+
+def _dump(sf_dir: str, out: str, cases: str, corpus: str) -> None:
+    """Run the selected cases with the tree on sys.path[0]; pickle the
+    outputs to ``out``."""
+    sys.path[:0] = [os.getcwd(), os.path.join(os.getcwd(), "perfbench")]
+    from vtzero_spark.engine.session import get_spark
+
+    spark = get_spark("encoder_identity", cores=4, shuffle_partitions=8)
+    res = {}
+    if cases in ("all", "read"):
+        _read_cases(res, _read_inputs(spark, corpus))
+    if cases in ("all", "encode"):
+        _encode_cases(res, spark, sf_dir)
     spark.stop()
     with open(out, "wb") as fh:
         pickle.dump(res, fh)
@@ -112,21 +287,28 @@ def main() -> int:
     ap.add_argument("other", help="the other source tree")
     ap.add_argument("--sf", required=True,
                     help="synth data dir (sf0.1) for the geometry cases")
+    ap.add_argument("--cases", choices=("all", "encode", "read"),
+                    default="all")
     ap.add_argument("--dump", help=argparse.SUPPRESS)
+    ap.add_argument("--corpus", help=argparse.SUPPRESS)
     args = ap.parse_args()
     if args.dump:
-        _dump(args.sf, args.dump)
+        _dump(args.sf, args.dump, args.cases, args.corpus)
         return 0
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = os.path.abspath(__file__)
     outs = {}
     with tempfile.TemporaryDirectory() as tmp:
+        corpus = os.path.join(tmp, "corpus.pkl")
+        with open(corpus, "wb") as fh:
+            pickle.dump(_fixture_corpus(), fh)
         for tag, tree in (("other", os.path.abspath(args.other)),
                           ("this", here)):
             outs[tag] = os.path.join(tmp, f"{tag}.pkl")
             subprocess.run(
                 [sys.executable, script, tree, "--sf", args.sf,
+                 "--cases", args.cases, "--corpus", corpus,
                  "--dump", outs[tag]],
                 cwd=tree, check=True,
                 env={**os.environ, "PYTHONPATH": tree})

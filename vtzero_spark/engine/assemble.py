@@ -772,293 +772,88 @@ def select_layer(layers: DataFrame, selector: str,
     )
 
 
-_FEATURE_COLS = ["z", "x", "y", "layer_ordinal", "layer_name", "version",
-                 "extent", "feature_ordinal", "feature_id", "geom_type",
-                 "geometry", "geometry_nbytes", "num_properties",
-                 "decode_status"]
-
-
-def _decode_layer_values(layer) -> tuple[list[str], list]:
-    """Resolve a layer's key/value dictionaries ONCE (dictionary-sized
-    work, not feature-sized — the analog of vtzero's lazy key_table()/
-    value_table() build, layer.hpp:299-330). Each value decodes to the
-    typed struct the `properties` map column carries; an invalid value
-    entry stays an MVTError marker and only poisons features that
-    actually reference it (fixture 038 semantics)."""
-    keys_dec = [k.decode("utf-8", errors="surrogateescape")
-                for k in layer.keys]
-    vals_dec: list = []
-    for vb in layer.values:
-        try:
-            tag, pv = V.decode_value(bytes(vb))
-        except MVTError as e:
-            vals_dec.append(e)
-            continue
-        vals_dec.append({
-            "vtype": tag,
-            "sval": pv if tag == V.VT_STRING else None,
-            "dval": float(pv) if tag in (V.VT_FLOAT, V.VT_DOUBLE) else None,
-            "ival": (int(pv) if tag in (V.VT_INT, V.VT_UINT, V.VT_SINT)
-                     else (int(bool(pv)) if tag == V.VT_BOOL else None)),
-        })
-    return keys_dec, vals_dec
-
-
-def _feature_props(f, keys_dec, vals_dec) -> tuple[dict | None, str]:
-    """One feature's tag pairs -> properties map cell + status.
-    Out-of-range indexes mirror layer.hpp:434-460 (OutOfRangeError) as
-    DATA; duplicate keys keep the FIRST pair like vtzero's
-    create_properties_map (property_map.hpp map.emplace semantics)."""
-    t = f.tags
-    if t.size == 0:
-        return {}, "ok"
-    ki = t[0::2]
-    vi = t[1::2]
-    if int(ki.max()) >= len(keys_dec):
-        return None, f"OutOfRangeError: key index {int(ki.max())} out of range"
-    if int(vi.max()) >= len(vals_dec):
-        return None, f"OutOfRangeError: value index {int(vi.max())} out of range"
-    out = {}
-    for a, b in zip(ki, vi):
-        v = vals_dec[int(b)]
-        if isinstance(v, MVTError):
-            return None, f"{type(v).__name__}: {v}"
-        out.setdefault(keys_dec[int(a)], v)
-    return out, "ok"
-
-
-def _utf8_safe(s: str) -> str:
-    """Spark strings are UTF-8; surrogateescape'd bytes from invalid
-    tile content (tile.py keeps raw name/key/value bytes losslessly,
-    like vtzero's data_view) cannot cross the Arrow boundary. At the
-    DataFrame edge, lone surrogates degrade to U+FFFD; the local parse
-    path stays lossless."""
-    try:
-        s.encode("utf-8")
-        return s
-    except UnicodeEncodeError:
-        return s.encode("utf-8", "surrogateescape").decode("utf-8", "replace")
-
-
-def _pa_str_array(vals, pa):
-    """pa.array over possibly-surrogate strings: fast path straight
-    through, sanitize only when encoding fails (malformed tiles)."""
-    try:
-        return pa.array(vals, pa.string())
-    except UnicodeEncodeError:
-        return pa.array([None if v is None else _utf8_safe(v)
-                         for v in vals], pa.string())
-
-
-class _LayerValueTables:
-    """Columnar form of a layer's decoded key/value dictionaries —
-    dictionary-sized work done once per layer (layer.hpp:299-330), laid
-    out as arrays so per-feature tag resolution is a pure numpy gather.
-
-    ``canon`` maps each key index to the FIRST index carrying an equal
-    decoded string, so first-wins duplicate-key collapse
-    (property_map.hpp map.emplace) is an integer comparison."""
-
-    __slots__ = ("keys_dec", "canon", "vtype", "sval", "dval", "dmask",
-                 "ival", "imask", "err_msgs", "err_flag", "err_any")
-
-    def __init__(self, keys: list[bytes], values: list[bytes]) -> None:
-        self.keys_dec = [k.decode("utf-8", errors="surrogateescape")
-                         for k in keys]
-        first: dict[str, int] = {}
-        self.canon = np.fromiter(
-            (first.setdefault(k, i) for i, k in enumerate(self.keys_dec)),
-            np.int64, len(self.keys_dec))
-        nv = len(values)
-        self.vtype = np.zeros(nv, np.int32)
-        self.sval: list[str | None] = [None] * nv
-        self.dval = np.zeros(nv, np.float64)
-        self.dmask = np.zeros(nv, bool)
-        self.ival = np.zeros(nv, np.int64)
-        self.imask = np.zeros(nv, bool)
-        self.err_msgs: list[str | None] = [None] * nv
-        self.err_flag = np.zeros(nv, bool)
-        for i, vb in enumerate(values):
-            try:
-                tag, pv = V.decode_value(bytes(vb))
-            except MVTError as e:
-                self.err_msgs[i] = f"{type(e).__name__}: {e}"
-                self.err_flag[i] = True
-                continue
-            self.vtype[i] = tag
-            if tag == V.VT_STRING:
-                self.sval[i] = pv
-            elif tag in (V.VT_FLOAT, V.VT_DOUBLE):
-                self.dval[i] = float(pv)
-                self.dmask[i] = True
-            else:
-                v = int(bool(pv)) if tag == V.VT_BOOL else int(pv)
-                # uint values above int64 range wrap two's-complement
-                # (the map column carries int64; raw-bytes identity is
-                # preserved by the wire, not this view)
-                if v >= 1 << 63:
-                    v -= 1 << 64
-                self.ival[i] = v
-                self.imask[i] = True
-        self.err_any = bool(self.err_flag.any())
-
-
-def _bad_feature_status(tags, nk: int, nv: int,
-                        err_msgs: list[str | None]) -> str:
-    """Exact per-feature error message for a feature flagged bad by the
-    vectorized pass — same check order as _feature_props (key range,
-    value range, first invalid value entry; layer.hpp:434-460)."""
-    t = np.asarray(tags)
-    ki = t[0::2]
-    vi = t[1::2]
+def _bad_feature_status(tags: np.ndarray, nk: int, nv: int, v0: int,
+                        errors: dict) -> str:
+    """Exact message of a feature whose tags the vectorized check
+    flagged, checks in vtzero's order (layer.hpp:434-460): key range,
+    value range, then the first invalid value entry it references
+    (``errors`` by chunk-wide value index; the layer's start at
+    ``v0``)."""
+    ki = tags[0::2]
+    vi = tags[1::2]
     if int(ki.max()) >= nk:
         return f"OutOfRangeError: key index {int(ki.max())} out of range"
     if int(vi.max()) >= nv:
         return f"OutOfRangeError: value index {int(vi.max())} out of range"
-    for b in vi:
-        m = err_msgs[int(b)]
-        if m is not None:
-            return m
-    return "ok"
+    e = next(errors[v0 + b] for b in vi.tolist() if v0 + b in errors)
+    return f"{type(e).__name__}: {e}"
 
 
-def _resolve_layer_tags(tflat, toff, tabs: _LayerValueTables):
-    """Vectorized tag resolution for one layer's features (flat tag
-    values + offsets, as tile.parse_features_block lays them out),
-    validated with array ops (the columnar analog of
-    feature.hpp:298-311 create_properties_map). Returns (kept_key_idx,
-    kept_val_idx, per-feature kept-pair counts, per-feature status
-    list, per-feature bad mask); rare bad features get their exact
-    message from the scalar check."""
-    flat = np.asarray(tflat, np.uint64)
-    npairs = np.diff(toff) >> 1
-    nf = len(npairs)
-    nk = len(tabs.keys_dec)
-    nv = tabs.vtype.size
-    total = int(npairs.sum())
-    if total == 0:
-        return (np.empty(0, np.int64), np.empty(0, np.int64),
-                np.zeros(nf, np.int64), ["ok"] * nf, np.zeros(nf, bool))
-    ki = flat[0::2]
-    vi = flat[1::2]
-    pair_feat = np.repeat(np.arange(nf), npairs)
-    bad = (ki >= np.uint64(nk)) | (vi >= np.uint64(nv))
-    if tabs.err_any:
-        inr = ~bad
-        vidx = np.where(inr, vi, 0).astype(np.int64)
-        bad |= inr & tabs.err_flag[vidx]
-    featbad = np.bincount(pair_feat, weights=bad, minlength=nf) > 0
-    statuses = ["ok"] * nf
-    if featbad.any():
-        for j in np.flatnonzero(featbad):
-            statuses[j] = _bad_feature_status(
-                flat[toff[j]:toff[j + 1]], nk, nv, tabs.err_msgs)
-    goodp = ~featbad[pair_feat]
-    gki = ki[goodp].astype(np.int64)
-    gvi = vi[goodp].astype(np.int64)
-    gfeat = pair_feat[goodp]
-    # first-wins duplicate-key collapse on canonical (string-equal) ids:
-    # stable lexsort keeps original pair order within (feature, key)
-    ck = tabs.canon[gki]
-    order = np.lexsort((ck, gfeat))
-    sk = ck[order]
-    sf = gfeat[order]
-    dup = np.zeros(order.size, bool)
-    dup[1:] = (sk[1:] == sk[:-1]) & (sf[1:] == sf[:-1])
-    keep = np.sort(order[~dup])
-    counts = np.bincount(gfeat[keep], minlength=nf).astype(np.int64)
-    return gki[keep], gvi[keep], counts, statuses, featbad
+def _properties_columns(s, pa):
+    """The properties map column and the decode_status column of a
+    tile scan's features, for the whole chunk at once (the columnar
+    analog of layer.hpp:424-508 + feature.hpp:298-311
+    create_properties_map).
 
+    Every value entry of the chunk decodes in ONE values.decode_values
+    call and every key in one binary -> string cast; each tag pair's
+    indices re-base into those chunk-wide tables by its feature's layer
+    (``koff``/``voff``), so range and invalid-value checks are array
+    compares. Duplicate keys keep the first pair (map.emplace): pairs
+    are keyed on (feature, id of the key's bytes) and one stable sort
+    finds the repeats. The map column is ONE MapArray; a bad feature
+    gets a null map and its exact message from _bad_feature_status."""
+    import pyarrow.compute as pc
 
-def _decode_tile_batch(batches: Iterator[pd.DataFrame],
-                       want_props: bool = False) -> Iterator[pd.DataFrame]:
-    cols = _FEATURE_COLS + (["properties"] if want_props else [])
-    for pdf in batches:
-        # columnar accumulation: one chunk of arrays per parsed layer —
-        # no per-feature dict rows (the decode analog of the vectorized
-        # encode path); rare error rows keep the dict slow path
-        acc: dict[str, list] = {c: [] for c in cols}
-        err_rows: list[dict] = []
+    F = s.features
+    toff = F["toff"]
+    nf = F["layer"].size
+    flat = F["tflat"]
+    ki, vi = flat[0::2], flat[1::2]
+    pair_feat = np.repeat(np.arange(nf), np.diff(toff) >> 1)
+    pl = F["layer"][pair_feat]
+    nk = np.diff(s.koff)
+    nv = np.diff(s.voff)
+    bad = (ki >= nk[pl].astype(np.uint64)) | (vi >= nv[pl].astype(np.uint64))
+    gk = np.where(bad, 0, s.koff[pl] + ki.astype(np.int64))
+    gv = np.where(bad, 0, s.voff[pl] + vi.astype(np.int64))
+    vals = V.decode_values(s.values)
+    if vals.errors:
+        bad |= vals.vtype[gv] == 0
+    featbad = np.zeros(nf, bool)
+    featbad[pair_feat[bad]] = True
+    msgs = ["ok"]
+    status = np.zeros(nf, np.int32)
+    for j in np.flatnonzero(featbad).tolist():
+        li = int(F["layer"][j])
+        msgs.append(_bad_feature_status(
+            flat[toff[j]:toff[j + 1]], int(nk[li]), int(nv[li]),
+            int(s.voff[li]), vals.errors))
+        status[j] = len(msgs) - 1
 
-        def err(z, x, y, li, e):
-            err_rows.append({
-                "z": z, "x": x, "y": y, "layer_ordinal": li,
-                "layer_name": None, "version": None, "extent": None,
-                "feature_ordinal": -1, "feature_id": None,
-                "geom_type": None, "geometry": None,
-                "geometry_nbytes": None, "num_properties": None,
-                "decode_status": f"{type(e).__name__}: {e}",
-                **({"properties": None} if want_props else {}),
-            })
-
-        zs = pdf["z"].to_numpy(np.int64)
-        xs = pdf["x"].to_numpy(np.int64)
-        ys = pdf["y"].to_numpy(np.int64)
-        for ri in range(len(pdf)):
-            z, x, y = int(zs[ri]), int(xs[ri]), int(ys[ri])
-            try:
-                views = T.tile_layer_views(bytes(pdf["tile_bytes"].iloc[ri]))
-            except MVTError as e:
-                err(z, x, y, -1, e)
-                continue
-            for li, lv in enumerate(views):
-                try:
-                    layer = T.parse_layer(lv)
-                except MVTError as e:
-                    err(z, x, y, li, e)
-                    continue
-                feats = layer.features
-                nf = len(feats)
-                if nf == 0:
-                    continue
-                acc["z"].append(np.full(nf, z, np.int64))
-                acc["x"].append(np.full(nf, x, np.int64))
-                acc["y"].append(np.full(nf, y, np.int64))
-                acc["layer_ordinal"].append(np.full(nf, li, np.int64))
-                acc["layer_name"].append([layer.name] * nf)
-                acc["version"].append(np.full(nf, layer.version, np.int64))
-                acc["extent"].append(np.full(nf, layer.extent, np.int64))
-                acc["feature_ordinal"].append(np.arange(nf, dtype=np.int64))
-                acc["feature_id"].append([f.id for f in feats])
-                acc["geom_type"].append(
-                    np.fromiter((f.geom_type for f in feats), np.int64, nf))
-                acc["geometry"].append(
-                    [f.geometry.astype(np.int64) for f in feats])
-                acc["geometry_nbytes"].append(
-                    np.fromiter((f.geometry_nbytes for f in feats),
-                                np.int64, nf))
-                acc["num_properties"].append(
-                    np.fromiter((f.tags.size // 2 for f in feats),
-                                np.int64, nf))
-                if want_props:
-                    keys_dec, vals_dec = _decode_layer_values(layer)
-                    props_col: list = []
-                    status_col: list = []
-                    for f in feats:
-                        p, st = _feature_props(f, keys_dec, vals_dec)
-                        props_col.append(p)
-                        status_col.append(st)
-                    acc["properties"].append(props_col)
-                    acc["decode_status"].append(status_col)
-                else:
-                    acc["decode_status"].append(["ok"] * nf)
-
-        if acc["z"]:
-            data = {}
-            for c in cols:
-                chunks = acc[c]
-                data[c] = (np.concatenate(chunks)
-                           if isinstance(chunks[0], np.ndarray)
-                           else [v for ch in chunks for v in ch])
-            ok_frame = pd.DataFrame(data, columns=cols)
-        else:
-            ok_frame = pd.DataFrame(columns=cols)
-        if err_rows:
-            yield pd.concat(
-                [ok_frame, pd.DataFrame(err_rows, columns=cols)],
-                ignore_index=True)[cols]
-        else:
-            yield ok_frame
+    keys_bin = pa.array(s.keys, pa.binary())
+    good = ~featbad[pair_feat]
+    gfeat, gk, gv = pair_feat[good], gk[good], gv[good]
+    kid = pc.dictionary_encode(keys_bin).indices.to_numpy()
+    fk = gfeat * (int(kid.max(initial=0)) + 1) + kid[gk]
+    order = np.argsort(fk, kind="stable")
+    dup = fk[order[1:]] == fk[order[:-1]]
+    if dup.any():
+        keep = np.ones(fk.size, bool)
+        keep[order[1:][dup]] = False     # stable: the later pair of a tie
+        gfeat, gk, gv = gfeat[keep], gk[keep], gv[keep]
+    offs = np.zeros(nf + 1, np.int32)
+    np.cumsum(np.bincount(gfeat, minlength=nf), out=offs[1:])
+    dmask = (vals.vtype != V.VT_FLOAT) & (vals.vtype != V.VT_DOUBLE)
+    items = pa.StructArray.from_arrays([
+        pa.array(vals.vtype, pa.int32()), vals.sval,
+        pa.array(vals.dval, pa.float64(), mask=dmask),
+        pa.array(vals.ival, pa.int64(), mask=vals.vtype < V.VT_INT),
+    ], names=["vtype", "sval", "dval", "ival"])
+    props = pa.MapArray.from_arrays(
+        pa.array(offs, pa.int32(), mask=np.append(featbad, False)),
+        V.utf8_array(keys_bin).take(gk), items.take(gv))
+    return props, pa.array(msgs, pa.string()).take(status)
 
 
 _PROPS_ITEM_TYPE = None  # built lazily (pyarrow import stays local)
@@ -1086,10 +881,11 @@ def _decode_tile_batches_arrow(batches, want_props: bool = False):
     as one small batch per Arrow batch.
 
     With ``want_props`` the decoded key/value map column is assembled
-    columnar too: per-layer dictionaries resolve once into value
-    tables (_LayerValueTables), tag pairs gather by index, and the map
-    column is ONE pa.MapArray built from offsets — no per-feature
-    Python dicts (the distributed, vectorized form of
+    columnar too (_properties_columns): the chunk's value entries
+    decode in one values.decode_values call, every tag pair resolves
+    against those chunk-wide tables in one pass, and the map column is
+    ONE pa.MapArray built from offsets — no per-entry decode and no
+    per-feature Python dicts (the distributed, vectorized form of
     layer.hpp:424-508 + feature.hpp:298-311)."""
     import pyarrow as pa
 
@@ -1158,8 +954,11 @@ def _decode_scan_batch(s, zxy, want_props: bool, schema, pa):
     cols = {
         "z": zxy[0][ft], "x": zxy[1][ft], "y": zxy[2][ft],
         "layer_ordinal": s.ordinal[fl],
-        "layer_name": _pa_str_array(s.name, pa).take(pa.array(fl)),
-        "version": s.version[fl], "extent": s.extent[fl],
+        "layer_name": V.utf8_array(pa.array(
+            [n.encode("utf-8", "surrogateescape") for n in s.name],
+            pa.binary())).take(fl),
+        # an extent wraps to the int32 column, read as vtzero's uint32
+        "version": s.version[fl], "extent": s.extent[fl].astype(np.int32),
         "feature_ordinal": np.arange(nf) - s.foff[fl],
         "feature_id": pa.array(F["ids"].astype(np.int64), pa.int64(),
                                mask=~F["has_id"]),
@@ -1173,62 +972,8 @@ def _decode_scan_batch(s, zxy, want_props: bool, schema, pa):
     if not want_props:
         cols["decode_status"] = pa.array(["ok"] * nf, pa.string())
     else:
-        # props accumulators: indices are re-based into the batch-wide
-        # concatenated key/value tables so one gather serves all layers
-        pair_k_parts: list[np.ndarray] = []
-        pair_v_parts: list[np.ndarray] = []
-        counts_parts: list[np.ndarray] = []
-        bad_parts: list[np.ndarray] = []
-        status: list[str] = []
-        keys_strs: list[str | None] = []
-        val_tabs: list[_LayerValueTables] = []
-        key_base = 0
-        val_base = 0
-        for li in np.flatnonzero(np.diff(s.foff)).tolist():
-            tabs = _LayerValueTables(
-                s.keys[s.koff[li]:s.koff[li + 1]],
-                s.values[s.voff[li]:s.voff[li + 1]])
-            a, b = s.foff[li], s.foff[li + 1]
-            kki, kvi, counts, statuses, featbad = \
-                _resolve_layer_tags(
-                    F["tflat"][toff[a]:toff[b]], toff[a:b + 1] - toff[a],
-                    tabs)
-            pair_k_parts.append(kki + key_base)
-            pair_v_parts.append(kvi + val_base)
-            counts_parts.append(counts)
-            bad_parts.append(featbad)
-            status += statuses
-            keys_strs.extend(tabs.keys_dec)
-            val_tabs.append(tabs)
-            key_base += len(tabs.keys_dec)
-            val_base += tabs.vtype.size
-        keys_tab = _pa_str_array(keys_strs, pa)
-        items_tab = pa.StructArray.from_arrays([
-            pa.array(np.concatenate([t.vtype for t in val_tabs]),
-                     pa.int32()),
-            _pa_str_array([v for t in val_tabs for v in t.sval], pa),
-            pa.array(np.concatenate([t.dval for t in val_tabs]),
-                     pa.float64(),
-                     mask=~np.concatenate([t.dmask for t in val_tabs])),
-            pa.array(np.concatenate([t.ival for t in val_tabs]),
-                     pa.int64(),
-                     mask=~np.concatenate([t.imask for t in val_tabs])),
-        ], names=["vtype", "sval", "dval", "ival"])
-        pair_keys = keys_tab.take(
-            pa.array(np.concatenate(pair_k_parts), pa.int64()))
-        pair_items = items_tab.take(
-            pa.array(np.concatenate(pair_v_parts), pa.int64()))
-        bad_all = np.concatenate(bad_parts)
-        good_counts = np.concatenate(counts_parts)[~bad_all]
-        offs = np.zeros(good_counts.size + 1, np.int32)
-        np.cumsum(good_counts, out=offs[1:])
-        good_map = pa.MapArray.from_arrays(
-            pa.array(offs, pa.int32()), pair_keys, pair_items)
-        # bad features -> null map via take with null index
-        idx = (np.cumsum(~bad_all) - 1).astype(np.int32)
-        cols["properties"] = good_map.take(
-            pa.array(idx, pa.int32(), mask=bad_all))
-        cols["decode_status"] = pa.array(status, pa.string())
+        cols["properties"], cols["decode_status"] = \
+            _properties_columns(s, pa)
     return pa.RecordBatch.from_arrays(
         [cols[f.name] if isinstance(cols[f.name], (pa.Array, pa.ChunkedArray))
          else pa.array(cols[f.name], f.type) for f in schema],
@@ -1241,7 +986,7 @@ def decode_tiles_arrow(tiles: DataFrame, properties: bool = False) -> DataFrame:
     flat command values + offsets — the scale path when downstream
     consumers are themselves vectorized. ``properties=True`` adds the
     decoded key/value map column, also assembled columnar (one
-    MapArray per batch from gathered dictionary tables)."""
+    MapArray per scan chunk from gathered dictionary tables)."""
     if properties:
         return tiles.mapInArrow(
             lambda it: _decode_tile_batches_arrow(it, want_props=True),
@@ -1258,15 +1003,18 @@ def decode_tiles(tiles: DataFrame, properties: bool = False) -> DataFrame:
     key/value pairs as ``properties map<string, struct<vtype, sval,
     dval, ival>>`` — the distributed form of the reference's core read
     path (layer.hpp:424-508 key/value resolution + feature.hpp:298-311
-    create_properties_map). Dictionary resolution is per-layer work;
-    out-of-range tag indexes and invalid value entries become
-    OutOfRangeError / FormatError decode_status rows (fixtures
-    040/042/038), never task failures.
+    create_properties_map). Dictionary resolution is one columnar pass
+    per scan chunk; out-of-range tag indexes and invalid value entries
+    become OutOfRangeError / FormatError decode_status rows (fixtures
+    040/042/038), never task failures. At this DataFrame edge a uint
+    value >= 2**63 wraps to int64, bool is 0/1, float widens to double
+    and invalid UTF-8 in names, keys and strings becomes U+FFFD.
 
     Both modes are Arrow-native (mapInArrow; the geometry column is
     assembled zero-copy from flat command values + offsets, properties
-    as one MapArray per batch) — the pandas twin `_decode_tile_batch`
-    is kept as the scalar reference for fuzz/parity tests."""
+    as one MapArray per scan chunk). tests/scalar_reference.py holds
+    the tile-by-tile pandas decoder the parity and fuzz tests check it
+    against."""
     return decode_tiles_arrow(tiles, properties=properties)
 
 

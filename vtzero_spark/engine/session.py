@@ -14,8 +14,10 @@ an archive only when its `(st_mtime_ns, st_size)` changed since that
 importer's last read, so a zip rewritten in place or added by
 `addPyFile` is still seen. Where zip invalidation is cheap it costs one
 `stat` per importer per task. Workers get the directory holding
-`vtzero_spark` on their path, so they find the engine from any working
-directory.
+`vtzero_spark` on their path, and not their working directory
+(`PYTHONSAFEPATH`: `python -m` would put it first), so they run the
+engine the driver imported from whatever directory the driver started
+in, even one that holds another checkout.
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "vtzero_spark.engine.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _ROOT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         # Catalyst constraint propagation spends O(plan size) driver
         # time inferring IsNotNull/equivalence predicates per action.
         # This engine's join keys are non-null BY CONSTRUCTION

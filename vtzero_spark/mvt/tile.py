@@ -324,26 +324,62 @@ def block_features(blk: dict) -> list[Feature]:
 
 
 def parse_layer(buf: bytes, *, parse_features: bool = True) -> Layer:
+    """One layer message (strictness: module docstring). The field walk
+    is inline, with no per-field tuple: a one-byte key or length is read
+    in place and dispatch is on the whole key, which is what nearly
+    every layer holds; longer ones go through decode_varint. Errors,
+    their messages and their order are scan_fields'."""
     version: int | None = None
     name: bytes | None = None
     extent: int | None = None
     keys: list[bytes] = []
     values: list[bytes] = []
     feature_views: list[bytes] = []
-    for f, w, v in scan_fields(buf):
-        if f == LAYER_FEATURES and w == WT_LEN:
-            feature_views.append(v)
-        elif f == LAYER_VALUES and w == WT_LEN:
-            values.append(v)
-        elif f == LAYER_KEYS and w == WT_LEN:
-            keys.append(v)
-        elif f == LAYER_VERSION and w == WT_VARINT:
-            version = v
-        elif f == LAYER_NAME and w == WT_LEN:
-            name = v
-        elif f == LAYER_EXTENT and w == WT_VARINT:
-            extent = v
+    add_feature = feature_views.append
+    add_value = values.append
+    add_key = keys.append
+    pos = 0
+    n = len(buf)
+    while pos < n:
+        key = buf[pos]
+        if key < 0x80:
+            pos += 1
         else:
+            key, pos = decode_varint(buf, pos)
+        # keys: 0x12 features, 0x22 values, 0x1a keys, 0x0a name
+        # (length-delimited); 0x78 version, 0x28 extent (varint)
+        if key == 0x12 or key == 0x22 or key == 0x1a or key == 0x0a:
+            ln = buf[pos] if pos < n else 0x80
+            if ln < 0x80:
+                pos += 1
+            else:
+                ln, pos = decode_varint(buf, pos)
+            end = pos + ln
+            if end > n:
+                raise FormatError("truncated length-delimited field")
+            if key == 0x12:
+                add_feature(buf[pos:end])
+            elif key == 0x22:
+                add_value(buf[pos:end])
+            elif key == 0x1a:
+                add_key(buf[pos:end])
+            else:
+                name = buf[pos:end]
+            pos = end
+        elif key == 0x78 or key == 0x28:
+            v = buf[pos] if pos < n else 0x80
+            if v < 0x80:
+                pos += 1
+            else:
+                v, pos = decode_varint(buf, pos)
+            if key == 0x78:
+                version = v
+            else:
+                extent = v
+        else:
+            # any other field is an error, once it is read as scan_fields
+            # reads it: a malformed field reports the malformation
+            f, w, _ = next(scan_fields(encode_varint(key) + buf[pos:]))
             raise FormatError(f"unknown field in layer (tag={f}, type={w})")
     version = 1 if version is None else version
     if version < 1 or version > 2:
@@ -419,7 +455,7 @@ class TileScan:
     ordinal: np.ndarray     # layer position within its tile
     name: list[str]
     version: np.ndarray
-    extent: np.ndarray
+    extent: np.ndarray      # uint64: any varint the layer holds
     err: list               # MVTError or None; a bad layer has no features
     keys: list[bytes]       # all dictionaries, layer after layer
     koff: np.ndarray        # layer i's keys: keys[koff[i]:koff[i + 1]]
@@ -509,7 +545,7 @@ def scan_tile_batch(bufs: list[bytes],
         version=np.fromiter((ly.version if ly else 0 for ly in layers),
                             np.int64, nl),
         extent=np.fromiter((ly.extent if ly else 0 for ly in layers),
-                           np.int64, nl),
+                           np.uint64, nl),
         err=err,
         keys=[k for ly in layers if ly for k in ly.keys],
         koff=dict_offsets("keys"),
