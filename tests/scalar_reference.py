@@ -180,7 +180,9 @@ def decode_tile_batch(batches: Iterator[pd.DataFrame],
                 acc["layer_ordinal"].append(np.full(nf, li, np.int64))
                 acc["layer_name"].append([layer.name] * nf)
                 acc["version"].append(np.full(nf, layer.version, np.int64))
-                acc["extent"].append(np.full(nf, layer.extent, np.int64))
+                # the int32 column: vtzero's uint32 (low 32 bits) as int32
+                acc["extent"].append(np.full(
+                    nf, np.uint64(layer.extent).astype(np.int32), np.int64))
                 acc["feature_ordinal"].append(np.arange(nf, dtype=np.int64))
                 acc["feature_id"].append([f.id for f in feats])
                 acc["geom_type"].append(

@@ -490,8 +490,6 @@ def _local_rows(bufs) -> tuple[list, list]:
         plain = {k: (list(map(int, v)) if k == "geometry" and v is not None
                      else _cell(v))
                  for k, v in r.items() if k != "properties"}
-        if plain["extent"] is not None:     # the int32 column wraps
-            plain["extent"] = int(np.uint64(plain["extent"]).astype(np.int32))
         return plain, props
 
     got = [form(r, None if r["properties"] is None else [
@@ -563,3 +561,28 @@ def test_decode_tiles_props_match_scalar_reference(spark):
     assert any(s.startswith("OutOfRangeError: value") for s in st_)
     assert any(s.startswith("FormatError") for s in st_)
     assert any(s.startswith("VersionError") for s in st_)
+
+
+def test_large_extents_read_the_same_on_both_surfaces(spark):
+    """decode_tiles (both modes) and decode_layers give a layer extent
+    the same int32 reading: vtzero's uint32 (the low 32 bits), so an
+    extent >= 2**31 is negative and 2**40 is 0, with status ok."""
+    extents = [4096, 2**31 - 1, 3 * 10**9, 2**32 + 7, 2**40, 2**64 - 1]
+    want = [int(np.uint64(e).astype(np.int32)) for e in extents]
+    assert want == [4096, 2**31 - 1, 3 * 10**9 - 2**32, 7, 0, -1]
+    buf = tile(*[layer(name=b"l%d" % i, extent=e,
+                       feats=[feat(fid=1, gtype=1, geom=POINT_25_17)])
+                 for i, e in enumerate(extents)])
+    tiles = spark.createDataFrame([(7, 1, 3, bytearray(buf))],
+                                  "z long, x long, y long, tile_bytes binary")
+    for props in (False, True):
+        rows = sorted(assemble.decode_tiles(tiles, properties=props)
+                      .select("layer_ordinal", "extent", "decode_status")
+                      .collect())
+        assert [r.extent for r in rows] == want
+        assert {r.decode_status for r in rows} == {"ok"}
+    rows = sorted(assemble.decode_layers(tiles)
+                  .select("layer_ordinal", "extent", "decode_status")
+                  .collect())
+    assert [r.extent for r in rows] == want
+    assert {r.decode_status for r in rows} == {"ok"}

@@ -111,13 +111,17 @@ import pyarrow as pa
 from vtzero_spark.engine import session
 
 def probe(batches):
+    import cwd_helper
     import vtzero_spark
     for _ in batches:
-        yield pa.RecordBatch.from_pydict({"f": [vtzero_spark.__file__]})
+        yield pa.RecordBatch.from_pydict(
+            {"f": [vtzero_spark.__file__], "h": [cwd_helper.__file__]})
 
 spark = session.get_spark("decoy_probe", cores=1, shuffle_partitions=1)
-df = spark.range(2, numPartitions=1).mapInArrow(probe, "f string")
-print("WORKER_FILES", sorted({r.f for r in df.collect()}))
+df = spark.range(2, numPartitions=1).mapInArrow(probe, "f string, h string")
+rows = df.collect()
+print("WORKER_FILES", sorted({r.f for r in rows}))
+print("HELPER_FILES", sorted({r.h for r in rows}))
 spark.stop()
 """
 
@@ -126,7 +130,8 @@ def test_workers_import_the_drivers_tree_not_their_cwd(tmp_path):
     """A driver started from a directory that holds another
     ``vtzero_spark`` (a decoy here; in an A/B run, the other tree) runs
     the tree it imported on its workers too: ``python -m`` would put the
-    workers' working directory first on their path."""
+    workers' working directory first on their path. A plain module that
+    only that directory holds still imports on the workers."""
     import subprocess
 
     from vtzero_spark.engine import session
@@ -134,6 +139,7 @@ def test_workers_import_the_drivers_tree_not_their_cwd(tmp_path):
     decoy = tmp_path / "vtzero_spark"
     decoy.mkdir()
     (decoy / "__init__.py").write_text("DECOY = True\n")
+    (tmp_path / "cwd_helper.py").write_text("HELPER = True\n")
     out = subprocess.run(
         [sys.executable, "-c", _DECOY_PROBE, session._ROOT], cwd=tmp_path,
         capture_output=True, text=True, timeout=300)
@@ -144,3 +150,7 @@ def test_workers_import_the_drivers_tree_not_their_cwd(tmp_path):
     assert files and all(
         f.startswith(os.path.join(session._ROOT, "vtzero_spark", ""))
         for f in files), files
+    line = [ln for ln in out.stdout.splitlines()
+            if ln.startswith("HELPER_FILES")][-1]
+    helpers = ast.literal_eval(line.split(" ", 1)[1])
+    assert helpers == [str(tmp_path / "cwd_helper.py")], helpers

@@ -30,7 +30,6 @@ Usage (from the repo root):
 
     git archive <rev> | tar -x -C /tmp/parent
     python tools/encoder_identity.py /tmp/parent --sf <synth sf0.1 dir>
-    python tools/encoder_identity.py /tmp/parent --sf <dir> --cases read
 
 Prints one line per case (keys on each side, equal keys, the first
 differing keys) and exits 1 if any case differs.
@@ -62,98 +61,59 @@ def _rows(df):
 
 # ------------------------------------------------ fixture corpus (read)
 
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b, v = v & 0x7F, v >> 7
-        out.append(b | (0x80 if v else 0))
-        if not v:
-            return bytes(out)
-
-
-def _fld(field: int, wire: int, payload) -> bytes:
-    """One protobuf field: a varint value (wire 0) or bytes (wire 2,
-    length-prefixed; wire 1/5 raw)."""
-    key = _varint(field << 3 | wire)
-    if wire == 0:
-        return key + _varint(payload)
-    if wire == 2:
-        return key + _varint(len(payload)) + payload
-    return key + payload
-
-
-def _feature(fid=None, gtype=1, geom=(9, 50, 34), tags=None) -> bytes:
-    out = _fld(3, 0, gtype) if gtype is not None else b""
-    if fid is not None:
-        out += _fld(1, 0, fid)
-    if geom is not None:
-        out += _fld(4, 2, b"".join(map(_varint, geom)))
-    if tags is not None:
-        out += _fld(2, 2, b"".join(map(_varint, tags)))
-    return out
-
-
-def _layer(name=b"hello", feats=(), keys=(), values=(), version=2,
-           extent=4096, extra=b"") -> bytes:
-    out = _fld(15, 0, version) if version is not None else b""
-    if name is not None:
-        out += _fld(1, 2, name)
-    if extent is not None:
-        out += _fld(5, 0, extent)
-    out += b"".join(_fld(2, 2, f) for f in feats)
-    out += b"".join(_fld(3, 2, k) for k in keys)
-    out += b"".join(_fld(4, 2, v) for v in values)
-    return out + extra
-
-
-def _tile(*layers: bytes) -> bytes:
-    return b"".join(_fld(3, 2, ly) for ly in layers)
-
-
 def _fixture_corpus(n_mutants: int = 400) -> list[bytes]:
     """mvt-fixture style tiles (the reference's fixture cases: every
     value type, dangling key and value indexes, unknown value types,
     bad versions, missing names, bad geometry types, duplicate keys,
-    invalid UTF-8, multi-byte keys) and seeded byte mutations of them."""
-    import struct
+    invalid UTF-8, multi-byte keys) and seeded byte mutations of them,
+    built with this tree's protobuf and fixture builders."""
     import random
 
-    s = lambda v: _fld(1, 2, v.encode() if isinstance(v, str) else v)  # noqa: E731
-    vals = [s("ello"), _fld(7, 0, 1), _fld(4, 0, 6),
-            _fld(3, 1, struct.pack("<d", 1.23)),
-            _fld(2, 5, struct.pack("<f", 3.1)), _fld(6, 0, 175895),
-            _fld(5, 0, 87948), _fld(5, 0, 2**64 - 1), _fld(4, 0, 2**64 - 5),
-            _fld(9, 0, 1), s(b"\xff\xfeok"), b"\x8a\x00\x02hi", b"",
-            b"\x0a\x09short"]
+    from test_mvt_fixtures import POINT_25_17, feat, layer, tile
+    from vtzero_spark.mvt import pbf
+    from vtzero_spark.mvt import tile as T
+    from vtzero_spark.mvt import values as V
+
+    def pt(fid=None, gtype=1, geom=POINT_25_17, tags=None):
+        if geom is None:
+            return feat(fid, gtype, geom, tags)
+        return T.build_feature(fid, gtype, geom, tags)
+
+    s = lambda v: V.encode_value(V.VT_STRING, v)  # noqa: E731
+    vals = [s("ello"), V.encode_value(V.VT_BOOL, True),
+            V.encode_value(V.VT_INT, 6), V.encode_value(V.VT_DOUBLE, 1.23),
+            V.encode_value(V.VT_FLOAT, 3.1), V.encode_value(V.VT_SINT, -87948),
+            V.encode_value(V.VT_UINT, 87948),
+            V.encode_value(V.VT_UINT, 2**64 - 1), V.encode_value(V.VT_INT, -5),
+            pbf.varint_field(9, 1), s(b"\xff\xfeok"),
+            b"\x8a\x00\x02hi", b"", b"\x0a\x09short"]  # 2-byte key, empty, truncated
     base = [
-        _tile(),
-        _tile(_layer(feats=[_feature()])),
-        _tile(_layer(feats=[_feature(i, 1, tags=[0, i])
-                            for i in range(len(vals))],
-                     keys=[b"k"], values=vals)),
-        _tile(_layer(feats=[_feature(1, tags=[1, 0])], keys=[b"key1"],
-                     values=[s("v")])),                         # 040
-        _tile(_layer(feats=[_feature(1, tags=[0, 1])], keys=[b"key1"],
-                     values=[s("v")])),                         # 042
-        _tile(_layer(feats=[_feature(1, tags=[0, 0, 1, 1, 2, 2])],
-                     keys=[b"a", b"a", b"\xff"],
-                     values=[s("x"), s("y"), _fld(7, 0, 0)])),  # dup keys
-        _tile(_layer(version=3, feats=[_feature()])),           # 012
-        _tile(_layer(name=None, feats=[_feature()])),           # 014
-        _tile(_layer(feats=[_feature()]),
-              _layer(feats=[_feature(2)])),                     # 015
-        _tile(_layer(feats=[_feature(geom=None)])),             # 004
-        _tile(_layer(feats=[_feature(gtype=9)])),               # 006
-        _tile(_layer(feats=[_feature()], extent=None,
-                     extra=_fld(5, 2, b"4096"))),               # 008
-        _tile(_layer(feats=[_feature(tags=[0, 0])], keys=[_fld(3, 0, 1)],
-                     values=[s("v")])),                         # 013
-        _tile(_layer(name=b"L\xffx", version=1, extent=512,
-                     feats=[_feature(None, 2, (9, 0, 0, 18, 2, 2, 4, 4),
-                                     [0, 0])],
-                     keys=[b"k"], values=[s("w")])),
-        _tile(_layer(feats=[_feature(tags=[0, 0, 1])], keys=[b"k"],
-                     values=[s("v")])),                         # 005
+        tile(),
+        tile(layer(feats=[pt()])),
+        tile(layer(feats=[pt(i, 1, tags=[0, i]) for i in range(len(vals))],
+                   keys=[b"k"], values=vals)),
+        tile(layer(feats=[pt(1, tags=[1, 0])], keys=[b"key1"],
+                   values=[s("v")])),                           # 040
+        tile(layer(feats=[pt(1, tags=[0, 1])], keys=[b"key1"],
+                   values=[s("v")])),                           # 042
+        tile(layer(feats=[pt(1, tags=[0, 0, 1, 1, 2, 2])],
+                   keys=[b"a", b"a", b"\xff"],
+                   values=[s("x"), s("y"),
+                           V.encode_value(V.VT_BOOL, False)])),  # dup keys
+        tile(layer(version=3, feats=[pt()])),                   # 012
+        tile(layer(name=None, feats=[pt()])),                   # 014
+        tile(layer(feats=[pt()]), layer(feats=[pt(2)])),        # 015
+        tile(layer(feats=[pt(geom=None)])),                     # 004
+        tile(layer(feats=[pt(gtype=9)])),                       # 006
+        tile(layer(feats=[pt()], extent=None,
+                   extra=pbf.len_field(5, b"4096"))),           # 008
+        tile(layer(feats=[pt(tags=[0, 0])], keys=[pbf.varint_field(3, 1)],
+                   values=[s("v")])),                           # 013
+        tile(layer(name=b"L\xffx", version=1, extent=512,
+                   feats=[pt(None, 2, [9, 0, 0, 18, 2, 2, 4, 4], [0, 0])],
+                   keys=[b"k"], values=[s("w")])),
+        tile(layer(feats=[pt(tags=[0, 0, 1])], keys=[b"k"],
+                   values=[s("v")])),                           # 005
         b"\x1a\x05garb",
     ]
     rng = random.Random(20261019)
@@ -265,18 +225,16 @@ def _encode_cases(res: dict, spark, sf_dir: str) -> None:
         attr_spec=[("weight", 5, "weight"), ("cls", 1, "cls")], how="inner"))
 
 
-def _dump(sf_dir: str, out: str, cases: str, corpus: str) -> None:
-    """Run the selected cases with the tree on sys.path[0]; pickle the
-    outputs to ``out``."""
+def _dump(sf_dir: str, out: str, corpus: str) -> None:
+    """Run every case with the tree on sys.path[0]; pickle the outputs
+    to ``out``."""
     sys.path[:0] = [os.getcwd(), os.path.join(os.getcwd(), "perfbench")]
     from vtzero_spark.engine.session import get_spark
 
     spark = get_spark("encoder_identity", cores=4, shuffle_partitions=8)
     res = {}
-    if cases in ("all", "read"):
-        _read_cases(res, _read_inputs(spark, corpus))
-    if cases in ("all", "encode"):
-        _encode_cases(res, spark, sf_dir)
+    _read_cases(res, _read_inputs(spark, corpus))
+    _encode_cases(res, spark, sf_dir)
     spark.stop()
     with open(out, "wb") as fh:
         pickle.dump(res, fh)
@@ -287,16 +245,16 @@ def main() -> int:
     ap.add_argument("other", help="the other source tree")
     ap.add_argument("--sf", required=True,
                     help="synth data dir (sf0.1) for the geometry cases")
-    ap.add_argument("--cases", choices=("all", "encode", "read"),
-                    default="all")
     ap.add_argument("--dump", help=argparse.SUPPRESS)
     ap.add_argument("--corpus", help=argparse.SUPPRESS)
     args = ap.parse_args()
     if args.dump:
-        _dump(args.sf, args.dump, args.cases, args.corpus)
+        _dump(args.sf, args.dump, args.corpus)
         return 0
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # this tree builds the corpus that both trees read
+    sys.path[:0] = [here, os.path.join(here, "tests")]
     script = os.path.abspath(__file__)
     outs = {}
     with tempfile.TemporaryDirectory() as tmp:
@@ -308,7 +266,7 @@ def main() -> int:
             outs[tag] = os.path.join(tmp, f"{tag}.pkl")
             subprocess.run(
                 [sys.executable, script, tree, "--sf", args.sf,
-                 "--cases", args.cases, "--corpus", corpus,
+                 "--corpus", corpus,
                  "--dump", outs[tag]],
                 cwd=tree, check=True,
                 env={**os.environ, "PYTHONPATH": tree})

@@ -693,6 +693,13 @@ LAYER_VIEW_SCHEMA = (
 )
 
 
+def _extent_i32(v: int) -> int:
+    """A layer extent at the int32 ``extent`` column: vtzero's uint32
+    reading (the low 32 bits of the varint), so values >= 2**31 come out
+    negative. decode_tiles casts its uint64 scan column the same way."""
+    return (v & 0xFFFFFFFF) - ((v & 0x80000000) << 1)
+
+
 def decode_layers(tiles: DataFrame) -> DataFrame:
     """tiles(z,x,y,tile_bytes) -> one row per LAYER carrying its RAW
     message bytes plus header/dictionary stats — the distributed
@@ -700,7 +707,8 @@ def decode_layers(tiles: DataFrame) -> DataFrame:
     can be filtered/unioned and re-assembled byte-identically by
     encode_tiles without ever parsing features (feature bodies stay
     untouched views, the copy path of examples/vtzero-filter.cpp:
-    66-100)."""
+    66-100). ``extent`` is the low 32 bits of the layer's extent read
+    as int32 (_extent_i32), as in decode_tiles."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -727,7 +735,8 @@ def decode_layers(tiles: DataFrame) -> DataFrame:
                         rows.append({
                             "z": z, "x": x, "y": y, "layer_ordinal": li,
                             "layer_name": layer.name,
-                            "version": layer.version, "extent": layer.extent,
+                            "version": layer.version,
+                            "extent": _extent_i32(layer.extent),
                             "num_features": nfv,
                             "key_table_size": len(layer.keys),
                             "value_table_size": len(layer.values),
@@ -957,7 +966,7 @@ def _decode_scan_batch(s, zxy, want_props: bool, schema, pa):
         "layer_name": V.utf8_array(pa.array(
             [n.encode("utf-8", "surrogateescape") for n in s.name],
             pa.binary())).take(fl),
-        # an extent wraps to the int32 column, read as vtzero's uint32
+        # the low 32 bits as int32, as _extent_i32
         "version": s.version[fl], "extent": s.extent[fl].astype(np.int32),
         "feature_ordinal": np.arange(nf) - s.foff[fl],
         "feature_id": pa.array(F["ids"].astype(np.int64), pa.int64(),
@@ -1008,7 +1017,10 @@ def decode_tiles(tiles: DataFrame, properties: bool = False) -> DataFrame:
     become OutOfRangeError / FormatError decode_status rows (fixtures
     040/042/038), never task failures. At this DataFrame edge a uint
     value >= 2**63 wraps to int64, bool is 0/1, float widens to double
-    and invalid UTF-8 in names, keys and strings becomes U+FFFD.
+    and invalid UTF-8 in names, keys and strings becomes U+FFFD. The
+    ``extent`` column (both modes) is the low 32 bits of the layer's
+    extent, vtzero's uint32 reading, as int32: an extent >= 2**31 comes
+    out negative (decode_layers reads it the same way).
 
     Both modes are Arrow-native (mapInArrow; the geometry column is
     assembled zero-copy from flat command values + offsets, properties

@@ -2,10 +2,14 @@
 
 Per-task zipimport invalidation re-reads an archive only when its
 ``(st_mtime_ns, st_size)`` changed since that importer's last read
-(why: ``session.py``); then ``pyspark.daemon.manager()`` runs.
+(why: ``session.py``); then ``pyspark.daemon.manager()`` runs. The
+working directory goes last on the workers' path (``PYTHONSAFEPATH``
+keeps ``python -m`` from putting it first), so the engine tree on
+``PYTHONPATH`` wins and modules that live only in the cwd still import.
 """
 
 import os
+import sys
 import weakref
 import zipimport
 
@@ -27,5 +31,6 @@ def invalidate_caches(self):
 if __name__ == "__main__":
     from pyspark import daemon
 
+    sys.path.append(os.getcwd())
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     daemon.manager()

@@ -14,10 +14,11 @@ an archive only when its `(st_mtime_ns, st_size)` changed since that
 importer's last read, so a zip rewritten in place or added by
 `addPyFile` is still seen. Where zip invalidation is cheap it costs one
 `stat` per importer per task. Workers get the directory holding
-`vtzero_spark` on their path, and not their working directory
+`vtzero_spark` first on their path, and their working directory last
 (`PYTHONSAFEPATH`: `python -m` would put it first), so they run the
 engine the driver imported from whatever directory the driver started
-in, even one that holds another checkout.
+in, even one that holds another checkout, and still import a module
+that only that directory holds.
 """
 
 from __future__ import annotations
