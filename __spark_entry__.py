@@ -1060,8 +1060,7 @@ def q_neardup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy (paraphrase-tier) benchmark decontamination on the md5
     MinHash basis (textops.decontaminate_fuzzy_md5) — oracle-verified;
-    the xxhash64/16-band production form (decontaminate_fuzzy) keeps
-    its broadcast-plan assert + planted-paraphrase recall floor in
+    its broadcast-plan assert + planted-paraphrase recall floor live in
     tests/test_scale_sketches.py."""
     docs = synth.load(spark, sf_dir, "documents").select("doc_id", "text")
     return textops.decontaminate_fuzzy_md5(docs)
@@ -1318,10 +1317,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     MinHash on the cross-engine md5 basis (Spark md5 == DuckDB md5;
     lexicographic min over fixed-width hex == numeric min):
     neardup_md5 and decontaminate_fuzzy replace the rows-only
-    minhash_lsh / simhash_neardup slots — the xxhash64 production
-    tiers those slots ran remain golden-pinned + recall-floored in
-    tests/test_scale_sketches.py (minhash_lsh_pairs byte-identical
-    golden, simhash band semantics, planted-paraphrase recall).
+    minhash_lsh / simhash_neardup slots — the xxhash64 tiers those
+    slots ran remain golden-pinned in tests/test_scale_sketches.py
+    (minhash_lsh_pairs byte-identical golden, simhash band
+    semantics).
     Round-5 session 3 swapped sessionize_native (oracle TWIN of the
     still-present sessionize — same rows, same SQL, Catalyst's
     F.session_window instead of the pandas-UDF state machine; the

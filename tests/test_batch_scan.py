@@ -25,6 +25,7 @@ from vtzero_spark.mvt.errors import FormatError, MVTError
 
 from scalar_reference import decode_tile_batch, parse_layer as parse_layer_ref
 from test_mvt_fixtures import POINT_25_17, feat, layer, tile
+import scalar_reference as SR
 
 
 # ------------------------------------------------- plain reference walks
@@ -269,7 +270,7 @@ _LAYER_BUF = st.one_of(
 
 @pytest.mark.parametrize("buf", [_LAYER_BASE] + _WALK_CASES + [
     b"\x0a\x01a\x78\x03",                       # version 3
-    b"\x0a\x01a" + pbf.fixed32_field(9, b"abcd"),  # unknown fixed32
+    b"\x0a\x01a" + SR.fixed32_field(9, b"abcd"),  # unknown fixed32
     b"\x0a\x01a\x79" + b"\x00" * 7,               # version as fixed64
     b"\x0a\x01a\x3a\x05ab",                       # truncated unknown field
     b"\xf8\x00\x01\x8a\x80\x00\x01a",             # multi-byte known keys
@@ -302,7 +303,7 @@ _FEATURE = st.builds(
     st.one_of(st.none(), st.integers(0, 5)),
     st.one_of(st.none(), st.lists(st.integers(0, 2**40), max_size=6)),
     st.one_of(st.none(), st.lists(st.integers(0, 300), max_size=6)),
-    st.sampled_from([b"", pbf.fixed32_field(9, b"abcd"),
+    st.sampled_from([b"", SR.fixed32_field(9, b"abcd"),
                      pbf.varint_field(8, 3), b"\x80"]),
 )
 
@@ -384,7 +385,7 @@ def _mixed_tiles() -> list[bytes]:
             T.build_feature(None, 2, [9, 0, 0, 10, 2, 2, 4, 4])]))
     deviant = tile(layer(name=b"d", feats=[
         T.build_feature(1, 1, POINT_25_17, [0, 0])
-        + pbf.fixed32_field(9, b"abcd"),
+        + SR.fixed32_field(9, b"abcd"),
         T.build_feature(2, 1, POINT_25_17)],
         keys=[b"k"], values=[V_STR]))
     bad_layer = tile(

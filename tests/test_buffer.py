@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import buffer as B
 from vtzero_spark.engine import dissolve
-from vtzero_spark.engine.raster import rasterize_tile, rasterize_scalar
+from vtzero_spark.engine.raster import rasterize_tile
+from scalar_reference import rasterize_scalar
 from vtzero_spark.mvt import geometry as G
 
 

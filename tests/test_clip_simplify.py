@@ -18,6 +18,7 @@ from vtzero_spark.engine import clip as C
 from vtzero_spark.engine import simplify as S
 from vtzero_spark.engine import assemble, geomops, lint, synth, tiling
 from vtzero_spark.mvt import geometry as G
+import scalar_reference as SR
 
 
 def _rand_ring(rng, span=600, lo=-200):
@@ -64,7 +65,7 @@ def test_ring_kernel_matches_scalar_oracle():
                              for _ in range(rng.integers(1, 4))) if r]
         if not rings:
             continue
-        oracle = C.clip_parts_scalar(rings, G.GEOM_POLYGON, *bounds)
+        oracle = SR.clip_parts_scalar(rings, G.GEOM_POLYGON, *bounds)
         px, py, off = _rings_flat(rings)
         qx, qy, qoff = C.clip_rings(px, py, off, *bounds)
         ix = C._round_half_up(qx).astype(np.float64)
@@ -98,7 +99,7 @@ def test_line_kernel_matches_scalar_oracle():
                 lines.append(pts)
         if not lines:
             continue
-        oracle = C.clip_parts_scalar(lines, G.GEOM_LINESTRING, *bounds)
+        oracle = SR.clip_parts_scalar(lines, G.GEOM_LINESTRING, *bounds)
         px, py, off = _lines_flat(lines)
         qx, qy, poff, _ = C.clip_lines(px, py, off, *bounds)
         ix = C._round_half_up(qx).astype(np.float64)
@@ -176,10 +177,10 @@ def test_clip_partition_conserves_length():
 def test_clip_fully_outside_and_inside():
     ring = [(10, 10), (20, 10), (20, 20), (10, 20), (10, 10)]
     # fully inside: unchanged
-    assert C.clip_parts_scalar([ring], G.GEOM_POLYGON, 0, 0, 100, 100) \
+    assert SR.clip_parts_scalar([ring], G.GEOM_POLYGON, 0, 0, 100, 100) \
         == [ring]
     # fully outside: gone
-    assert C.clip_parts_scalar([ring], G.GEOM_POLYGON, 50, 50, 100, 100) \
+    assert SR.clip_parts_scalar([ring], G.GEOM_POLYGON, 50, 50, 100, 100) \
         == []
     px, py, off = _rings_flat([ring])
     qx, qy, qoff = C.clip_rings(px, py, off, 50, 50, 100, 100)
@@ -189,7 +190,7 @@ def test_clip_fully_outside_and_inside():
 def test_clip_donut_keeps_hole():
     outer = [(0, 0), (100, 0), (100, 100), (0, 100), (0, 0)]
     inner = [(25, 25), (25, 75), (75, 75), (75, 25), (25, 25)]  # CCW hole
-    out = C.clip_parts_scalar([outer, inner], G.GEOM_POLYGON,
+    out = SR.clip_parts_scalar([outer, inner], G.GEOM_POLYGON,
                               -10, -10, 50, 110)
     assert len(out) == 2
     # winding preserved: outer positive, hole negative
@@ -222,7 +223,7 @@ def test_dp_mask_matches_scalar_oracle():
         if not lines:
             continue
         tol = float(rng.integers(0, 60))
-        oracle = S.simplify_parts_scalar(lines, G.GEOM_LINESTRING, tol)
+        oracle = SR.simplify_parts_scalar(lines, G.GEOM_LINESTRING, tol)
         px, py, off = _lines_flat(lines)
         keep = S.dp_mask(px, py, off[:-1], off[1:] - 1, tol)
         got = []
@@ -237,11 +238,11 @@ def test_dp_mask_matches_scalar_oracle():
 def test_dp_keeps_endpoints_and_is_conservative():
     # collinear interior points vanish at tol 0+, corners survive
     line = [(0, 0), (10, 0), (20, 0), (30, 0), (30, 10)]
-    out = S.simplify_parts_scalar([line], G.GEOM_LINESTRING, 0.5)
+    out = SR.simplify_parts_scalar([line], G.GEOM_LINESTRING, 0.5)
     assert out == [[(0, 0), (30, 0), (30, 10)]]
     # tol 0 keeps every non-collinear vertex
     zig = [(0, 0), (10, 5), (20, 0), (30, 5)]
-    assert S.simplify_parts_scalar([zig], G.GEOM_LINESTRING, 0.0) == [zig]
+    assert SR.simplify_parts_scalar([zig], G.GEOM_LINESTRING, 0.0) == [zig]
 
 
 def test_dp_idempotent():
@@ -253,10 +254,10 @@ def test_dp_idempotent():
         pts = [p for i, p in enumerate(pts) if i == 0 or p != pts[i - 1]]
         if len(pts) < 2:
             continue
-        once = S.simplify_parts_scalar([pts], G.GEOM_LINESTRING, 10.0)
+        once = SR.simplify_parts_scalar([pts], G.GEOM_LINESTRING, 10.0)
         if not once:
             continue
-        twice = S.simplify_parts_scalar(once, G.GEOM_LINESTRING, 10.0)
+        twice = SR.simplify_parts_scalar(once, G.GEOM_LINESTRING, 10.0)
         assert twice == once
 
 
@@ -292,7 +293,7 @@ def test_clip_features_matches_scalar_on_spark(spark, assigned):
     got = _parts_py(clipped.collect())
     n_checked = 0
     for fid, parts in inp.items():
-        want = C.clip_parts_scalar(parts, G.GEOM_POLYGON,
+        want = SR.clip_parts_scalar(parts, G.GEOM_POLYGON,
                                    -256, -256, 4096 + 256, 4096 + 256)
         want = [[tuple(p) for p in r] for r in want]
         assert got.get(fid, []) == want
@@ -307,13 +308,13 @@ def test_clip_features_matches_scalar_on_spark(spark, assigned):
 
 
 def test_clip_features_lines_split_on_spark(spark, assigned):
-    feats = geomops.path_features(assigned).where(
+    feats = SR.path_features(assigned).where(
         (F.col("x") == 1) & (F.col("y") == 1))
     clipped = C.clip_features(feats, extent=4096, buffer=0)
     inp = _parts_py(feats.collect())
     got = _parts_py(clipped.collect())
     for fid, parts in inp.items():
-        want = C.clip_parts_scalar(parts, G.GEOM_LINESTRING,
+        want = SR.clip_parts_scalar(parts, G.GEOM_LINESTRING,
                                    0, 0, 4096, 4096)
         want = [[tuple(p) for p in l] for l in want]
         assert got.get(fid, []) == want
@@ -338,13 +339,13 @@ def test_clip_then_encode_roundtrips(spark, assigned):
 
 
 def test_simplify_features_matches_scalar_on_spark(spark, assigned):
-    feats = geomops.path_features(assigned).where(
+    feats = SR.path_features(assigned).where(
         (F.col("x") == 2) & (F.col("y") == 1))
     simp = S.simplify_features(feats, 2.0)
     inp = _parts_py(feats.collect())
     got = _parts_py(simp.collect())
     for fid, parts in inp.items():
-        want = S.simplify_parts_scalar(parts, G.GEOM_LINESTRING, 2.0)
+        want = SR.simplify_parts_scalar(parts, G.GEOM_LINESTRING, 2.0)
         want = [[tuple(p) for p in l] for l in want]
         assert got.get(fid, []) == want
 
@@ -356,7 +357,7 @@ def test_simplify_rings_on_spark(spark, assigned):
     inp = _parts_py(feats.collect())
     got = _parts_py(simp.collect())
     for fid, parts in inp.items():
-        want = S.simplify_parts_scalar(parts, G.GEOM_POLYGON, 1.0)
+        want = SR.simplify_parts_scalar(parts, G.GEOM_POLYGON, 1.0)
         want = [[tuple(p) for p in r] for r in want]
         assert got.get(fid, []) == want
     # axis-aligned rectangles have no redundant vertices: survive intact

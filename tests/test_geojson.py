@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import assemble, geojson, geomops, synth, tiling
 from vtzero_spark.mvt import geometry as G
+import scalar_reference as SR
 
 REF_TILE = "/root/reference/test/data/mapbox-streets-v6-14-8714-8017.mvt"
 
@@ -229,10 +230,9 @@ def test_geojson_to_tiles_matches_scalar_clip_oracle(spark, sf_dir):
     """The composed tippecanoe front door: world-coordinate GeoJSON
     lines -> bbox fan-out -> localize -> clip -> encode. Every decoded
     output feature must equal the scalar clip oracle
-    (clip.clip_parts_scalar) run per (feature, candidate tile) —
+    (SR.clip_parts_scalar) run per (feature, candidate tile) —
     including features spanning multiple tiles, which anchor-point
     replication would miss."""
-    from vtzero_spark.engine import clip as clipmod
     from vtzero_spark.engine.synth import EXTENT, ZOOM
 
     BUF = 64
@@ -272,7 +272,7 @@ def test_geojson_to_tiles_matches_scalar_clip_oracle(spark, sf_dir):
                             min(n_tiles - 1,
                                 (t.wy + t.h + BUF) // EXTENT) + 1):
                 local = ring - np.array([tx * EXTENT, ty * EXTENT])
-                parts = clipmod.clip_parts_scalar(
+                parts = SR.clip_parts_scalar(
                     [local], 3, -BUF, -BUF, EXTENT + BUF, EXTENT + BUF)
                 if parts:
                     want[(tx, ty, t.iid)] = [np.asarray(p).tolist()

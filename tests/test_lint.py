@@ -149,38 +149,3 @@ def test_lint_files_addressless_paths_distinct(spark, tmp_path):
         id_cols=("z", "x", "y", "path")).toPandas()
     assert len(rc) == 2
     assert (rc["return_code"] == 3).all()
-
-
-def test_lint_stream_matches_batch(spark, tmp_path):
-    """Streaming lint over a file-fed tile stream emits exactly the
-    batch tile_lint rows for the same tiles."""
-    from vtzero_spark.engine import streaming
-
-    clean = tile(layer(feats=[feat(fid=1, gtype=1, geom=POINT)]))
-    warn = tile(layer(feats=[feat(fid=1, gtype=1, geom=POINT)]),
-                layer(feats=[], name=b"empty"))
-    data = open(REF_TILE, "rb").read()
-    rows = [(0, 0, 0, bytearray(clean)), (0, 0, 1, bytearray(warn)),
-            (14, 8714, 8017, bytearray(data))]
-    tiles = spark.createDataFrame(
-        rows, "z long, x long, y long, tile_bytes binary")
-    src = str(tmp_path / "tiles_in")
-    tiles.write.parquet(src)
-
-    want = lint.tile_lint(spark.read.parquet(src)).toPandas() \
-        .sort_values(["z", "x", "y", "check"]).reset_index(drop=True)
-
-    sdf = spark.readStream.schema(spark.read.parquet(src).schema) \
-        .parquet(src)
-    q = (streaming.lint_stream(sdf)
-         .writeStream.format("memory").queryName("lint_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        got = spark.table("lint_out").toPandas() \
-            .sort_values(["z", "x", "y", "check"]).reset_index(drop=True)
-    finally:
-        q.stop()
-
-    import pandas as pd
-    pd.testing.assert_frame_equal(got, want)

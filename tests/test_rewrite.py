@@ -10,10 +10,10 @@ from pyspark.sql import functions as F
 
 from vtzero_spark.engine import assemble, rewrite, synth, tiling
 from vtzero_spark.mvt import tile as T
-from vtzero_spark.mvt import pbf
 from vtzero_spark.mvt import values as V
 from vtzero_spark.mvt.errors import MVTError
 
+import scalar_reference as SR
 from test_mvt_fixtures import feat, layer, tile
 
 POINT = [9, 50, 34]
@@ -285,7 +285,7 @@ def _tiles(draw):
 @settings(max_examples=200, deadline=None)
 @given(_tiles())
 def test_fuzz_rewrite_matches_scalar_reference(buf):
-    got = rewrite.filter_tile_bytes(buf, _KEY, _VAL)
+    got = SR.filter_tile_bytes(buf, _KEY, _VAL)
     want = _scalar_filter(buf, _KEY, _VAL)
     assert got == want
 
@@ -310,7 +310,7 @@ def test_fuzz_in_set_matches_scalar_union(buf):
     """IN-set filtering equals the per-value scalar reference run with
     an OR of the survivor sets (same rebuild order)."""
     vals = [_VAL, V.encode_value(V.VT_INT, 7)]
-    got = rewrite.filter_tile_bytes(buf, _KEY, vals)
+    got = SR.filter_tile_bytes(buf, _KEY, vals)
 
     # independent reference: per-feature loop with membership test
     blobs = []
@@ -383,7 +383,7 @@ def _rich_tile(draw):
                 draw(st.one_of(st.none(), st.integers(0, 2**64 - 1))), 1,
                 [9, draw(st.integers(0, 100)) * 2, 4], tags)
             if draw(st.integers(0, 7)) == 0:
-                fb += pbf.fixed32_field(9, b"abcd")
+                fb += SR.fixed32_field(9, b"abcd")
             feats.append(fb)
         layer_blobs.append(layer(
             name=f"L{li}".encode(), version=draw(st.sampled_from([1, 2])),
@@ -423,7 +423,7 @@ def test_malformed_tile_empties_only_itself():
     good = _mini_tile()
     bufs = [good, b"\x1a\x05garb", good]
     got, nlay = _run_batches(bufs, None, b"fmt", [_VAL])
-    one = rewrite.filter_tile_bytes(good, _KEY, _VAL)
+    one = SR.filter_tile_bytes(good, _KEY, _VAL)
     assert one and got == [one, b"", one] and nlay == [1, 0, 1]
 
 
@@ -431,7 +431,7 @@ def test_deviant_layer_alone_goes_to_feature_parser(monkeypatch):
     """Only the layer holding a pattern-deviant feature is parsed
     feature by feature; the other layers stay columnar."""
     deviant = layer(name=b"d", keys=[b"fmt"], values=[_VAL], feats=[
-        T.build_feature(1, 1, POINT, [0, 0]) + pbf.fixed32_field(9, b"abcd"),
+        T.build_feature(1, 1, POINT, [0, 0]) + SR.fixed32_field(9, b"abcd"),
         T.build_feature(2, 1, POINT2, [0, 0]),
         T.build_feature(3, 1, POINT, [0, 0])])
     plain = layer(name=b"p", keys=[b"fmt"], values=[_VAL], feats=[

@@ -4,8 +4,6 @@ covering-cell invariances, plan shape, and the streaming twin."""
 
 from __future__ import annotations
 
-import re
-
 import duckdb
 import numpy as np
 import pandas as pd
@@ -82,20 +80,6 @@ def test_snap_matches_brute_force(spark, pts, segs):
         .astype("int64").sort_values("event_id").reset_index(drop=True)
     assert len(want) > 0
     pd.testing.assert_frame_equal(got, want)
-
-
-def test_snap_engines_and_shuffle_tier_identical(spark, pts, segs):
-    """pandas (vectorized, default), sql-broadcast, and sql-shuffle
-    tiers are three executions of ONE contract — row-identical."""
-    a = snap.snap_points(pts, segs).toPandas() \
-        .sort_values("event_id").reset_index(drop=True)
-    b = snap.snap_points(pts, segs, engine="sql").toPandas() \
-        .sort_values("event_id").reset_index(drop=True)
-    c = snap.snap_points(pts, segs, engine="sql", broadcast=False) \
-        .toPandas().sort_values("event_id").reset_index(drop=True)
-    cols = list(a.columns)
-    pd.testing.assert_frame_equal(a, b[cols], check_dtype=False)
-    pd.testing.assert_frame_equal(a, c[cols], check_dtype=False)
 
 
 def test_snap_cell_size_invariant(spark, pts, segs):
@@ -195,28 +179,6 @@ def test_snap_pandas_plan_zero_shuffle_zero_join(spark, pts, segs):
     assert "MapInPandas" in p
     assert "Exchange" not in p
     assert "Join" not in p
-
-
-def test_snap_sql_point_side_never_shuffles(spark, pts, segs):
-    """The all-JVM twin: one broadcast hash join probe, zero
-    Exchanges downstream of the point scan. The only Exchanges in the
-    plan belong to the bounded dimension-side cell grouping."""
-    p = plan(snap.snap_points(pts, segs, engine="sql"))
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-    # dimension prep: explode+groupBy -> at most its own exchanges;
-    # the point side contributes none, so the broadcast subtree holds
-    # every Exchange in the plan
-    n_ex = len(re.findall(r"\(\d+\) Exchange", p))
-    seg_prep = plan(snap._seg_cells(segs, snap.RADIUS, snap.RADIUS))
-    assert n_ex == len(re.findall(r"\(\d+\) Exchange", seg_prep))
-
-
-def test_snap_shuffle_tier_plan(spark, pts, segs):
-    p = plan(snap.snap_points(pts, segs, engine="sql", broadcast=False))
-    assert "BroadcastHashJoin" not in p
-    with pytest.raises(ValueError, match="broadcast tier"):
-        snap.snap_points(pts, segs, broadcast=False)
 
 
 # --------------------- retired window slots stay oracle-pinned here

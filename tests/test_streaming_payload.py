@@ -230,13 +230,14 @@ def test_ivf_codebook_cache_trains_once(spark, sf_dir, monkeypatch):
 
 
 def test_codebook_cache_bypass_clear_and_bound(spark, sf_dir, monkeypatch):
-    """The staleness escape hatches: use_cache=False retrains (and does
-    not populate the cache), clear_codebook_cache drops every entry,
-    and the cache never grows past its bound."""
+    """An explicit codebook bypasses the cache (no training, no entry),
+    clearing the cache dicts makes the next call retrain once, and the
+    cache never grows past its bound."""
     import numpy as np
 
     emb = synth.load(spark, sf_dir, "embeddings")
-    simsearch.clear_codebook_cache()
+    simsearch._CODEBOOK_CACHE.clear()
+    simsearch._PQ_CACHE.clear()
     calls: list[int] = []
     orig = simsearch.ivf_train
 
@@ -247,14 +248,15 @@ def test_codebook_cache_bypass_clear_and_bound(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(simsearch, "ivf_train", counting_train)
 
     kw = dict(n_queries=2, k=3, ncentroids=8, nprobe=4)
+    cb = simsearch.ivf_build(emb, n_queries=2, ncentroids=8)
+    assert len(calls) == 1
+    # bypass: an explicit codebook neither trains nor fills the cache
+    simsearch.ivf_topk(emb, codebook=cb, **kw).collect()
+    assert len(calls) == 1 and not simsearch._CODEBOOK_CACHE
     simsearch.ivf_topk(emb, **kw).collect()
-    assert len(calls) == 1 and len(simsearch._CODEBOOK_CACHE) == 1
-    # bypass: retrains, leaves the cache untouched
-    simsearch.ivf_topk(emb, use_cache=False, **kw).collect()
     assert len(calls) == 2 and len(simsearch._CODEBOOK_CACHE) == 1
     # clear: next cached call retrains once
-    simsearch.clear_codebook_cache()
-    assert not simsearch._CODEBOOK_CACHE and not simsearch._PQ_CACHE
+    simsearch._CODEBOOK_CACHE.clear()
     simsearch.ivf_topk(emb, **kw).collect()
     assert len(calls) == 3
 
@@ -266,7 +268,52 @@ def test_codebook_cache_bypass_clear_and_bound(spark, sf_dir, monkeypatch):
     assert ("k", 2) not in simsearch._CODEBOOK_CACHE
     assert ("k", simsearch._CACHE_MAX_ENTRIES + 2) \
         in simsearch._CODEBOOK_CACHE
-    simsearch.clear_codebook_cache()
+    simsearch._CODEBOOK_CACHE.clear()
+
+
+def test_codebook_cache_keys_on_data_identity(spark, sf_dir, tmp_path,
+                                              monkeypatch):
+    """Rewriting the parquet behind the same path must not serve the
+    old table's codebook: the plan (and its semantic hash) is the same,
+    the input files are not. The next ivf_topk retrains once and
+    returns exactly what a cold run on the new data returns."""
+    import pandas as pd
+
+    path = str(tmp_path / "emb.parquet")
+    src = synth.load(spark, sf_dir, "embeddings")
+    src.write.parquet(path)
+    simsearch._CODEBOOK_CACHE.clear()
+    calls: list[int] = []
+    orig = simsearch.ivf_train
+
+    def counting_train(*a, **k):
+        calls.append(1)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(simsearch, "ivf_train", counting_train)
+
+    def run():
+        return (
+            simsearch.ivf_topk(spark.read.parquet(path), n_queries=2, k=3,
+                               ncentroids=8, nprobe=4)
+            .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
+        )
+
+    run()
+    run()
+    assert len(calls) == 1
+    # same path, new data: the ids run backwards, so other vectors
+    # seed the centroids and other vectors are the queries
+    top = src.agg(F.max("vec_id")).first()[0]
+    src.withColumn("vec_id", F.lit(top) - F.col("vec_id")) \
+        .write.mode("overwrite").parquet(path)
+    warm = run()
+    assert len(calls) == 2, "a rewrite of the files must retrain"
+    simsearch._CODEBOOK_CACHE.clear()
+    cold = run()
+    assert len(calls) == 3
+    pd.testing.assert_frame_equal(warm, cold)
+    simsearch._CODEBOOK_CACHE.clear()
 
 
 def test_verify_payload_stream_matches_batch(spark, sf_dir, tmp_path):

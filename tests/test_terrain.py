@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vtzero_spark.engine import terrain as T
+import scalar_reference as SR
 
 
 def test_flat_collapses_to_two_triangles():
@@ -20,7 +21,7 @@ def test_flat_collapses_to_two_triangles():
         flat = np.full((size, size), 7, np.int64)
         v, t = T.rtin_mesh(flat, 0)
         assert t.shape[0] == 2 and v.shape[0] == 4
-        n, d = T.max_deviation_x2(v, t, flat * 2)
+        n, d = SR.max_deviation_x2(v, t, flat * 2)
         assert n == 0
 
 
@@ -29,7 +30,7 @@ def test_threshold_zero_is_exact_and_full():
     h = rng.integers(0, 1000, (17, 17)).astype(np.int64)
     v, t = T.rtin_mesh(h, 0)
     assert t.shape[0] == 2 * 16 * 16          # every leaf emitted
-    n, d = T.max_deviation_x2(v, t, h * 2)
+    n, d = SR.max_deviation_x2(v, t, h * 2)
     assert n == 0
     # vertex indices valid, heights doubled
     assert v[:, 2].max() == 2 * h.max()
@@ -50,7 +51,7 @@ def test_deviation_bound_and_monotone_fuzz(seed):
     prev = None
     for me in (0, 100, 500, 2000, 10**7):
         v, t = T.extract_mesh(h2, err, me)
-        n, d = T.max_deviation_x2(v, t, h2)   # raises if not covering
+        n, d = SR.max_deviation_x2(v, t, h2)   # raises if not covering
         assert n <= me * d, (me, n, d)
         if prev is not None:
             assert t.shape[0] <= prev
@@ -68,7 +69,7 @@ def test_smooth_surface_coarsens_gradually():
     fine = T.rtin_mesh(h, 64)[1].shape[0]
     assert 2 < fine < mid < full / 2     # 158 < 891 < 1024 measured
     v, t = T.rtin_mesh(h, 32)
-    n, d = T.max_deviation_x2(v, t, h * 2)
+    n, d = SR.max_deviation_x2(v, t, h * 2)
     assert n <= 32 * d
 
 

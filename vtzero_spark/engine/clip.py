@@ -42,8 +42,7 @@ from pyspark.sql import DataFrame
 from ..mvt import geometry as G
 
 __all__ = [
-    "clip_rings", "clip_lines", "clip_parts_scalar",
-    "clip_features", "clip_assigned",
+    "clip_rings", "clip_lines", "clip_features",
 ]
 
 
@@ -227,100 +226,6 @@ def _dedupe_parts(
     csum = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(keep.astype(np.int64), out=csum[1:])
     return kx, ky, csum[off]
-
-
-# ------------------------------------------------------- scalar oracle
-
-
-def clip_parts_scalar(parts, geom_type, xmin, ymin, xmax, ymax):
-    """Straightforward per-feature reference implementation (closed
-    rings in/out for polygons). Used by tests as the oracle for the
-    batch kernels; also handy for debugging single features."""
-    if geom_type == G.GEOM_POINT:
-        out = [[(x, y) for x, y in part
-                if xmin <= x <= xmax and ymin <= y <= ymax]
-               for part in parts]
-        return [p for p in out if p]
-    if geom_type == G.GEOM_POLYGON:
-        res = []
-        for ring in parts:
-            pts = [(float(x), float(y)) for x, y in ring[:-1]]
-            for axis, bound, keep_ge in (
-                (0, xmin, True), (0, xmax, False),
-                (1, ymin, True), (1, ymax, False),
-            ):
-                nxt = []
-                m = len(pts)
-                for i in range(m):
-                    p, q = pts[i], pts[(i + 1) % m]
-                    pin = p[axis] >= bound if keep_ge else p[axis] <= bound
-                    qin = q[axis] >= bound if keep_ge else q[axis] <= bound
-                    if pin:
-                        nxt.append(p)
-                    if pin != qin:
-                        t = (bound - p[axis]) / (q[axis] - p[axis])
-                        ix = (bound if axis == 0
-                              else p[0] + t * (q[0] - p[0]))
-                        iy = (bound if axis == 1
-                              else p[1] + t * (q[1] - p[1]))
-                        nxt.append((ix, iy))
-                pts = nxt
-                if not pts:
-                    break
-            ip = [(int(np.floor(x + 0.5)), int(np.floor(y + 0.5)))
-                  for x, y in pts]
-            dd = [p for i, p in enumerate(ip) if p != ip[i - 1]]
-            if len(dd) >= 3:
-                res.append(dd + [dd[0]])
-        return res
-    # linestring
-    res = []
-    for line in parts:
-        cur = []
-        for i in range(len(line) - 1):
-            p = (float(line[i][0]), float(line[i][1]))
-            q = (float(line[i + 1][0]), float(line[i + 1][1]))
-            dx, dy = q[0] - p[0], q[1] - p[1]
-            t0, t1, ok = 0.0, 1.0, True
-            for pp, qq in ((-dx, p[0] - xmin), (dx, xmax - p[0]),
-                           (-dy, p[1] - ymin), (dy, ymax - p[1])):
-                if pp == 0:
-                    if qq < 0:
-                        ok = False
-                        break
-                    continue
-                r = qq / pp
-                if pp < 0:
-                    t0 = max(t0, r)
-                else:
-                    t1 = min(t1, r)
-            ok = ok and t0 <= t1
-            if not ok:
-                if len(cur) >= 2:
-                    res.append(cur)
-                cur = []
-                continue
-            a = (p[0] + t0 * dx, p[1] + t0 * dy)
-            b = (p[0] + t1 * dx, p[1] + t1 * dy)
-            if not cur or t0 > 0.0:
-                if len(cur) >= 2:
-                    res.append(cur)
-                cur = [a]
-            cur.append(b)
-            if t1 < 1.0:
-                if len(cur) >= 2:
-                    res.append(cur)
-                cur = []
-        if len(cur) >= 2:
-            res.append(cur)
-    out = []
-    for part in res:
-        ip = [(int(np.floor(x + 0.5)), int(np.floor(y + 0.5)))
-              for x, y in part]
-        dd = [p for i, p in enumerate(ip) if i == 0 or p != ip[i - 1]]
-        if len(dd) >= 2:
-            out.append(dd)
-    return out
 
 
 def _seg_take(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -568,16 +473,3 @@ def clip_features(
     b = bounds if bounds is not None else (
         -buffer, -buffer, extent + buffer, extent + buffer)
     return features.mapInArrow(clip_batches(b), schema=features.schema)
-
-
-def clip_assigned(
-    assigned_features: DataFrame,
-    extent: int = 4096,
-    buffer: int = 0,
-) -> DataFrame:
-    """Convenience: the assign→clip composition every tile build runs —
-    ``tiling.assign_tiles(buffer=b)`` duplicates edge features into
-    neighbor tiles with out-of-range local coords; this clips each
-    copy to its own buffered rect so the encoded tile carries only the
-    geometry it can draw."""
-    return clip_features(assigned_features, extent=extent, buffer=buffer)

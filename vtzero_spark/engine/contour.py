@@ -32,26 +32,18 @@ can verify every vertex:
   GeoJSON/GL winding discipline — every level set chains into closed
   cycles, pinned by tests/test_contour.py.
 
-Three row-identical tiers (pytest-pinned equal; BENCH.md A/B):
-
-- impl='direct' (default, the 100 TB shape): points scatter ONCE to
-  2^bits-square pixel blocks with a kernel-radius halo (factor
-  ~(1+2R/B)^2, 1.13 at B=256/R=8); each block accumulates its own
-  dense density window (one integer np.add.at — order-independent,
-  bit-identical across schedules) and runs vectorized marching
-  squares. ONE point-sized shuffle; neither the ~piR^2-fold kernel
-  scatter nor the pixel grid ever crosses the wire, and stage width
-  is the block grid regardless of source width (the session-8
-  AQE-coalesce lesson: the pixel-tier aggregations inherited a
-  2-3-task upstream and serialized — measured 22-37 s vs 3.7 s for
-  this tier at sf0.1/32 cores, identical output).
-- impl='blocks': heatmap_pixels -> halo-block scatter -> the same
-  per-block numpy marching squares (for contouring an ALREADY
-  materialized sparse grid).
-- impl='cells': all-JVM — corner scatter (explode of a literal
-  offset array, join-free), groupBy(cx, cy) pivot-sum, literal
-  case-table element_at + integer interpolation projection. The tier
-  the DuckDB twin (contour_segments_sql) mirrors CTE by CTE.
+The plan: points scatter ONCE to 2^bits-square pixel blocks with a
+kernel-radius halo (factor ~(1+2R/B)^2, 1.13 at B=256/R=8); each
+block accumulates its own dense density window (one integer
+np.add.at — order-independent, bit-identical across schedules) and
+runs vectorized marching squares. ONE point-sized shuffle; neither the
+~piR^2-fold kernel scatter nor the pixel grid ever crosses the wire,
+and stage width is the block grid regardless of source width (the
+session-8 AQE-coalesce lesson: pixel-grid aggregations inherited a
+2-3-task upstream and serialized — measured 22-37 s vs 3.7 s for this
+plan at sf0.1/32 cores, identical output). The DuckDB twin
+(contour_segments_sql) computes the same rows as a cell-corner pivot
+over the pixel grid.
 
 Output is O(contour length), not O(grid): cells entirely inside or
 outside a level emit nothing.
@@ -60,8 +52,8 @@ Reference analog: vtzero consumes what this produces — encoded
 linestring layers (include/vtzero/builder.hpp linestring_feature_
 builder); the tile step rides the shared world-features tail
 (geojson.world_features_to_tiles) with per-level layers merged by
-linemerge.merge_lines, so the output archive serves like any other
-layer set in this engine.
+its per-tile linemerge (coalesce_lines), so the output archive serves
+like any other layer set in this engine.
 """
 
 from __future__ import annotations
@@ -70,14 +62,14 @@ from typing import Sequence
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .heatmap import RADIUS, TILE_PX, _shifts, heatmap_pixels
+from .heatmap import RADIUS, TILE_PX, _shifts
 from .synth import WORLD, ZOOM
 
-__all__ = ["contour_cells", "contour_segments", "contour_polylines",
-           "contour_tiles", "contour_segments_sql", "SEG_TABLE"]
+__all__ = ["contour_segments", "contour_polylines", "contour_tiles",
+           "contour_segments_sql", "SEG_TABLE"]
 
 # Marching-squares segment table, inside-on-left (y-down).
 # Key: case (+16 for saddle with center >= 4T); value: list of
@@ -114,103 +106,6 @@ def _check_levels(levels: Sequence[int]) -> list[int]:
     return lv
 
 
-def contour_cells(pixels: DataFrame) -> DataFrame:
-    """Sparse (px, py, density) grid -> the 2x2 cell-corner table
-    (cx, cy, d00, d10, d01, d11), absent corners 0. Each pixel
-    scatters to the <= 4 cells it corners (explode of a literal
-    offset array — join-free, same shape as the heatmap kernel
-    scatter); one groupBy(cx, cy) with map-side combine. Cells whose
-    four corners are all absent never materialize — they are all-0,
-    below every level, and emit nothing."""
-    offs = F.array(*[
-        F.struct(F.lit(i).alias("i"), F.lit(j).alias("j"))
-        for i in (0, 1) for j in (0, 1)])
-    corner = (F.col("o.i") + 2 * F.col("o.j"))
-    sc = pixels.select(
-        "px", "py", "density", F.explode(offs).alias("o")
-    ).select(
-        (F.col("px") - F.col("o.i")).alias("cx"),
-        (F.col("py") - F.col("o.j")).alias("cy"),
-        corner.alias("corner"),
-        "density")
-
-    def _d(code: int) -> Column:
-        return F.coalesce(
-            F.sum(F.when(F.col("corner") == code, F.col("density"))),
-            F.lit(0).cast("long"))
-
-    return sc.groupBy("cx", "cy").agg(
-        _d(0).alias("d00"), _d(1).alias("d10"),
-        _d(2).alias("d01"), _d(3).alias("d11"))
-
-
-def _segments_from_cells(cells: DataFrame, levels: Sequence[int],
-                         pshift: int) -> DataFrame:
-    """Cell-corner table x literal levels -> oriented contour
-    segments (level, cx, cy, seg, x0, y0, x1, y1) in world integer
-    coordinates. Pure projection + two explodes, no shuffle."""
-    lv = _check_levels(levels)
-    s = 1 << pshift
-    h = s // 2
-    c = cells.select(
-        "*", F.explode(F.array(*[F.lit(t).cast("long") for t in lv])
-                       ).alias("level"))
-    # cheap band prune BEFORE the per-cell case machinery: a cell
-    # emits only if the level separates its corners — at real field
-    # roughness this drops the vast majority (interior + deep-outside
-    # cells) ahead of the expression-heavy stage
-    lo = F.least("d00", "d10", "d01", "d11")
-    hi = F.greatest("d00", "d10", "d01", "d11")
-    c = c.where((lo < F.col("level")) & (hi >= F.col("level")))
-    T = F.col("level")
-    case = ((F.col("d00") >= T).cast("int")
-            + 2 * (F.col("d10") >= T).cast("int")
-            + 4 * (F.col("d11") >= T).cast("int")
-            + 8 * (F.col("d01") >= T).cast("int"))
-    center_hi = (F.col("d00") + F.col("d10") + F.col("d01")
-                 + F.col("d11")) >= 4 * T
-    # constant lookup table indexed by extended case (0..26) — a
-    # single element_at, not a 16-branch CASE chain (branch chains
-    # over struct-array construction blew whole-stage codegen into
-    # the interpreted path; measured 8x slower at sf0.1)
-    empty = F.array().cast("array<struct<a:int,b:int>>")
-    table = F.array(*[
-        F.array(*[F.struct(F.lit(a).alias("a"), F.lit(bb).alias("b"))
-                  for a, bb in SEG_TABLE[k]]) if k in SEG_TABLE
-        else empty
-        for k in range(27)])
-    ext = F.when(case.isin(5, 10) & center_hi, case + 16).otherwise(case)
-    c = (c.select("level", "cx", "cy", "d00", "d10", "d01", "d11",
-                  F.posexplode(F.element_at(table, ext + 1))
-                  .alias("seg", "sg")))
-
-    def pos(col: str, plus: int = 0) -> Column:
-        return (F.col(col) + plus) * s + h
-
-    def interp(da: str, db: str) -> Column:
-        # canonical: from the lower-(x,y) corner a toward b; the when
-        # guard keeps the div off non-crossing edges (db == da there)
-        cross = (F.col(da) >= T) != (F.col(db) >= T)
-        return F.when(
-            cross, F.expr(f"((level - {da}) * {s}) div ({db} - {da})"))
-
-    # all four edge points as arrays; the referenced edge always
-    # crosses (marching-squares invariant), so element_at lands on a
-    # non-null entry
-    exs = F.array(pos("cx") + interp("d00", "d10"), pos("cx", 1),
-                  pos("cx") + interp("d01", "d11"), pos("cx"))
-    eys = F.array(pos("cy"), pos("cy") + interp("d10", "d11"),
-                  pos("cy", 1), pos("cy") + interp("d00", "d01"))
-    return (c.select(
-        "level", "cx", "cy", "seg",
-        F.element_at(exs, F.col("sg.a") + 1).cast("long").alias("x0"),
-        F.element_at(eys, F.col("sg.a") + 1).cast("long").alias("y0"),
-        F.element_at(exs, F.col("sg.b") + 1).cast("long").alias("x1"),
-        F.element_at(eys, F.col("sg.b") + 1).cast("long").alias("y1"))
-        .where((F.col("x0") != F.col("x1"))
-               | (F.col("y0") != F.col("y1"))))
-
-
 _SEG_SCHEMA = ("level long, cx long, cy long, seg int, "
                "x0 long, y0 long, x1 long, y1 long")
 _SEG_COLS = ["level", "cx", "cy", "seg", "x0", "y0", "x1", "y1"]
@@ -219,10 +114,10 @@ _SEG_COLS = ["level", "cx", "cy", "seg", "x0", "y0", "x1", "y1"]
 def _ms_dense(D: "np.ndarray", bx: int, by: int, lv: Sequence[int],
               s: int, h: int):
     """Vectorized marching squares over one dense (B+1)x(B+1) local
-    pixel grid whose [0,0] pixel is global (bx, by). Emits the exact
-    rows of the JVM cell tier: same case table, same integer
-    interpolation (// floor on the >= 0 quotient), same saddle rule,
-    same zero-length drop."""
+    pixel grid whose [0,0] pixel is global (bx, by). Emits the rows
+    of the DuckDB twin: same case table, same integer interpolation
+    (// floor on the >= 0 quotient), same saddle rule, same
+    zero-length drop."""
     import pandas as pd
 
     csum = D[:-1, :-1] + D[:-1, 1:] + D[1:, 1:] + D[1:, :-1]
@@ -274,7 +169,7 @@ def _segments_direct(points: DataFrame, levels: Sequence[int],
                      block_bits: int = 8,
                      post=None, out_schema: str | None = None
                      ) -> DataFrame:
-    """The 100 TB tier: fuse kernel accumulation INTO the block task.
+    """The 100 TB shape: fuse kernel accumulation INTO the block task.
     The exchange carries the POINTS (one row each, duplicated only
     into blocks whose pixel window the point's kernel disk touches —
     factor ~(1 + 2R/B)^2, 1.13 at B=256/R=8), never the ~piR^2-fold
@@ -282,14 +177,14 @@ def _segments_direct(points: DataFrame, levels: Sequence[int],
     accumulates its own dense (B+1)^2 density window (one np.add.at
     over n_pts x |kernel| values — integer, order-independent, so
     bit-identical across schedules) and runs the shared marching
-    squares. ONE shuffle total, and — unlike the pixel tiers — its
+    squares. ONE shuffle total, and — unlike a pixel-grid aggregation — its
     width is the block grid regardless of how narrow AQE leaves the
     upstream source (the session-8 flat-scaling lesson: the pixel
     aggregation inherited a 2-3-task source width and serialized).
 
     ``post`` (with ``out_schema``) lets a caller transform each
     block's segment frame inside the SAME task — the chained-polyline
-    tier (contour_tiles) rides this hook, so chaining adds zero
+    form (contour_tiles) rides this hook, so chaining adds zero
     shuffles and zero extra passes over the points."""
     import pandas as pd
 
@@ -354,59 +249,10 @@ def _segments_direct(points: DataFrame, levels: Sequence[int],
     # cores (measured 3.2 s -> ~1 s for the kernel stage at sf0.1);
     # HashPartitioning(n, keys) satisfies the ClusteredDistribution,
     # so no second exchange appears
-    par = sc_df_parallelism(points) * 2
+    par = points.sparkSession.sparkContext.defaultParallelism * 2
     sc = sc.repartition(par, "bx", "by")
     return sc.groupBy("bx", "by").applyInPandas(
         fn, schema=out_schema or _SEG_SCHEMA)
-
-
-def sc_df_parallelism(df: DataFrame) -> int:
-    return df.sparkSession.sparkContext.defaultParallelism
-
-
-def _segments_from_blocks(pixels: DataFrame, levels: Sequence[int],
-                          pshift: int, block_bits: int = 8) -> DataFrame:
-    """The SCALE tier: pixels scatter to 2^bits-square pixel BLOCKS
-    with a 1-pixel halo (a pixel is a corner of cells cx in
-    {px-1, px}, so it belongs to at most 4 blocks and duplicates only
-    on block edges — scatter factor 1 + ~2/block), then marching
-    squares runs per block as vectorized numpy over a dense local
-    grid (<= (B+1)^2 int64, ~0.5 MB at B=256). Replaces the JVM cell
-    tier's second aggregation — whose (cx, cy) regroup gets ZERO
-    map-side combine after the (px, py)-hashed density exchange, so
-    all 4x scatter rows cross the wire — with a near-1x block
-    exchange + Arrow batches. Row-identical to the cells tier
-    (pinned in tests/test_contour.py); BENCH.md has the A/B."""
-    import pandas as pd
-
-    lv = _check_levels(levels)
-    B = 1 << block_bits
-    s = 1 << pshift
-    h = s // 2
-
-    blk = lambda e: F.shiftright(e, block_bits)
-    cand = F.array_distinct(F.array(*[
-        F.struct(blk(F.col("px") - i).alias("bx"),
-                 blk(F.col("py") - j).alias("by"))
-        for i in (0, 1) for j in (0, 1)]))
-    sc = (pixels.select("px", "py", "density",
-                        F.explode(cand).alias("b"))
-          .select(F.col("b.bx").alias("bx"), F.col("b.by").alias("by"),
-                  "px", "py", "density"))
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        bx = int(pdf["bx"].iloc[0]) << block_bits
-        by = int(pdf["by"].iloc[0]) << block_bits
-        D = np.zeros((B + 1, B + 1), np.int64)
-        lx = pdf["px"].to_numpy() - bx
-        ly = pdf["py"].to_numpy() - by
-        m = (lx >= 0) & (lx <= B) & (ly >= 0) & (ly <= B)
-        D[ly[m], lx[m]] = pdf["density"].to_numpy()[m]
-        return _ms_dense(D, bx, by, lv, s, h)
-
-    # same AQE width pin as _segments_direct
-    sc = sc.repartition(sc_df_parallelism(pixels) * 2, "bx", "by")
-    return sc.groupBy("bx", "by").applyInPandas(fn, schema=_SEG_SCHEMA)
 
 
 _CHAIN_SCHEMA = "level long, fid long, xs array<long>, ys array<long>"
@@ -500,9 +346,9 @@ def contour_polylines(points: DataFrame, levels: Sequence[int],
                       weight_col: str | None = None,
                       world: int = WORLD,
                       block_bits: int = 8) -> DataFrame:
-    """Direct tier + in-task chaining: (level, fid, xs, ys) maximal
+    """contour_segments + in-task chaining: (level, fid, xs, ys) maximal
     block-local polylines. Same ONE point-sized shuffle as
-    contour_segments(impl='direct') — chaining happens inside the
+    contour_segments — chaining happens inside the
     block task, so the downstream tile fan-out / merge / encode sees
     ~len(chain) fewer rows (measured 10-60x on the sf0.1 field). The
     directed unit-segment multiset is EXACTLY contour_segments' rows
@@ -523,31 +369,15 @@ def contour_segments(points: DataFrame, levels: Sequence[int],
                      zoom: int = ZOOM, size: int = TILE_PX,
                      radius: int = RADIUS,
                      weight_col: str | None = None,
-                     world: int = WORLD,
-                     impl: str = "direct") -> DataFrame:
+                     world: int = WORLD) -> DataFrame:
     """(wx, wy[, weight]) points -> oriented contour segments of the
     density field at each level: (level, cx, cy, seg, x0, y0, x1, y1)
-    in world integer coordinates. Join-free in every tier.
-
-    impl='direct' (default, the 100 TB tier): ONE point-sized shuffle;
-    kernel accumulation AND marching squares fused per block
-    (see _segments_direct).
-    impl='blocks': heatmap_pixels -> halo-block scatter -> per-block
-    vectorized numpy marching squares.
-    impl='cells': the all-JVM literal-table form — the tier the
-    DuckDB twin mirrors CTE by CTE.
-    All three are row-identical by construction and by pytest pin.
-    DuckDB twin: contour_segments_sql."""
+    in world integer coordinates. Join-free: ONE point-sized shuffle,
+    kernel accumulation AND marching squares fused per block (see
+    _segments_direct). DuckDB twin: contour_segments_sql."""
     pshift, _ = _shifts(zoom, size, world)
-    if impl == "direct":
-        return _segments_direct(points, levels, pshift, radius,
-                                world >> pshift, weight_col)
-    pix = heatmap_pixels(points, zoom, size, radius, weight_col, world)
-    if impl == "blocks":
-        return _segments_from_blocks(pix, levels, pshift)
-    if impl == "cells":
-        return _segments_from_cells(contour_cells(pix), levels, pshift)
-    raise ValueError(f"unknown impl {impl!r} (direct|blocks|cells)")
+    return _segments_direct(points, levels, pshift, radius,
+                            world >> pshift, weight_col)
 
 
 def contour_tiles(points: DataFrame, levels: Sequence[int],
@@ -555,7 +385,7 @@ def contour_tiles(points: DataFrame, levels: Sequence[int],
                   radius: int = RADIUS,
                   weight_col: str | None = None,
                   world: int = WORLD, extent: int = 4096,
-                  buffer: int = 0, chain: bool = True) -> DataFrame:
+                  buffer: int = 0) -> DataFrame:
     """The servable product: contour segments -> per-level MVT
     linestring layers (``contour_<T>``), chained into maximal
     polylines/rings by the per-tile linemerge (levels can't merge
@@ -563,52 +393,31 @@ def contour_tiles(points: DataFrame, levels: Sequence[int],
     bbox fan-out -> clip -> vectorized encode every other ingest in
     this engine runs.
 
-    chain=True (default): segments chain into maximal block-local
-    polylines INSIDE the marching-squares block task
-    (contour_polylines), so the fan-out / per-tile merge see one row
-    per chain instead of one per 2-point segment (10-60x fewer; the
-    per-tile linemerge then only stitches cross-block chains). The
-    256-px block grid coincides with the tile grid at the default
-    zoom/size, so chains rarely fan to more than one tile. chain=False
-    keeps the one-row-per-segment path (the A/B and equivalence-law
-    twin). Both paths merge to one feature per (tile, level) and both
-    are deterministic (feature ids are min over member (level, cell,
-    seg) fids, fixed functions of the field), so re-running either
-    reproduces identical bytes; the decoded unit-segment multisets of
-    the two paths are pytest-pinned EQUAL per tile. The one visible
-    difference: a chain straddling a tile's buffer window carries its
-    whole-chain min fid into that tile, where the unchained path mins
-    over only the in-window segments — ids can differ at buffer
-    edges (geometry never does)."""
+    Segments chain into maximal block-local polylines INSIDE the
+    marching-squares block task (contour_polylines), so the fan-out /
+    per-tile merge see one row per chain instead of one per 2-point
+    segment (10-60x fewer; the per-tile linemerge then only stitches
+    cross-block chains). The 256-px block grid coincides with the tile
+    grid at the default zoom/size, so chains rarely fan to more than
+    one tile. Feature ids are the min over member (level, cell, seg)
+    fids, fixed functions of the field, so re-running reproduces
+    identical bytes. Per tile, the decoded unit-segment multiset
+    equals that of tiling contour_segments' rows one per segment
+    (pytest-pinned); a chain straddling a tile's buffer window carries
+    its whole-chain min fid into that tile, so ids (never geometry)
+    can differ from that per-segment form at buffer edges."""
     from .geojson import world_features_to_tiles
 
     lv = _check_levels(levels)
-    pshift, _ = _shifts(zoom, size, world)
-    span = (world >> pshift) + 2  # cx in [-1, npx-1] -> cx+1 in [0, npx]
-    if chain:
-        pl = contour_polylines(points, lv, zoom, size, radius,
-                               weight_col, world)
-        feats = pl.select(
-            F.col("fid"),
-            F.lit("LineString").alias("gj_type"),
-            F.array(F.transform(
-                F.arrays_zip("xs", "ys"),
-                lambda q: F.array(q["xs"], q["ys"]))).alias("parts"),
-            F.concat(F.lit("contour_"), F.col("level")).alias("_layer"))
-    else:
-        seg = contour_segments(points, lv, zoom, size, radius,
-                               weight_col, world)
-        li: Column = F.lit(0)
-        for i, t in enumerate(lv[1:], start=1):
-            li = F.when(F.col("level") == t, F.lit(i)).otherwise(li)
-        fid = (((li.cast("long") * span + F.col("cy") + 1) * span
-                + F.col("cx") + 1) * 2 + F.col("seg"))
-        feats = seg.select(
-            fid.alias("fid"),
-            F.lit("LineString").alias("gj_type"),
-            F.array(F.array(F.array("x0", "y0"),
-                            F.array("x1", "y1"))).alias("parts"),
-            F.concat(F.lit("contour_"), F.col("level")).alias("_layer"))
+    pl = contour_polylines(points, lv, zoom, size, radius, weight_col,
+                           world)
+    feats = pl.select(
+        F.col("fid"),
+        F.lit("LineString").alias("gj_type"),
+        F.array(F.transform(
+            F.arrays_zip("xs", "ys"),
+            lambda q: F.array(q["xs"], q["ys"]))).alias("parts"),
+        F.concat(F.lit("contour_"), F.col("level")).alias("_layer"))
     return world_features_to_tiles(feats, zoom, extent, buffer=buffer,
                                    layer_col="_layer",
                                    coalesce_lines=True)

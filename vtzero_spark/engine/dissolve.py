@@ -15,8 +15,9 @@ repo already proves exact:
 For validly-wound MVT polygons (CW outers, CCW holes — what lint.py
 gates upstream) each feature's winding contribution is 0/1 everywhere,
 so the GLOBAL nonzero fill equals the per-feature painter's union
-(rasterize_scalar docstring, pinned in tests/test_raster.py) — one
-crossing pass over all rings, no pairwise geometry.
+(the scalar reference rasterizer in tests/scalar_reference.py, pinned
+in tests/test_raster.py) — one crossing pass over all rings, no
+pairwise geometry.
 
 Laws (all inherited from the vectorize round-trip theorem
 ``rasterize(vectorize(M)) == M`` and pinned in tests/test_dissolve.py):

@@ -390,24 +390,6 @@ def _ring_has_dup(xa: np.ndarray, ya: np.ndarray) -> bool:
     return np.unique(v).size != xa.size
 
 
-def earcut_rings(rings) -> tuple[np.ndarray, str]:
-    """Triangulate one feature's ring list (open or closed rings of
-    (x, y) int pairs). Returns (indices int64 array, status). Indices
-    reference the concatenation of the OPEN rings in input order —
-    exactly mapbox/earcut's flat-input contract."""
-    ropen = []
-    off = 0
-    for r in rings:
-        r = list(r)
-        if len(r) >= 2 and tuple(r[0]) == tuple(r[-1]):
-            r = r[:-1]
-        xa = np.fromiter((p[0] for p in r), np.int64, len(r))
-        ya = np.fromiter((p[1] for p in r), np.int64, len(r))
-        ropen.append((xa, ya, off))
-        off += len(r)
-    return _earcut_core(ropen)
-
-
 def _earcut_core(ropen) -> tuple[np.ndarray, str]:
     """Shared core over array rings: ``ropen`` is a list of
     (xs int64 array, ys int64 array, first-global-index) per OPEN

@@ -47,7 +47,6 @@ from __future__ import annotations
 
 import struct
 import zlib
-from fractions import Fraction
 from typing import Iterator
 
 import numpy as np
@@ -329,14 +328,6 @@ def parse_exif(payload: bytes) -> dict | None:
 
 # --------------------------------------------------- GPS <-> world grid
 
-def dms_to_degrees(dms) -> Fraction:
-    """Exact rational degrees from the spec's 3x RATIONAL DMS."""
-    (dn, dd), (mn, md), (sn, sd) = dms
-    if dd == 0 or md == 0 or sd == 0:
-        raise ValueError("corrupt EXIF: zero denominator in GPS rational")
-    return Fraction(dn, dd) + Fraction(mn, 60 * md) + Fraction(sn, 3600 * sd)
-
-
 def _dms_num_den(dms) -> tuple[int, int]:
     """DMS rationals -> one exact (num, den) in degrees, pure int
     arithmetic (Fraction measured 15x slower on this path — this runs
@@ -367,23 +358,6 @@ def gps_to_world(lat_ref: str, lat_dms, lon_ref: str, lon_dms,
     if rx or ry:
         raise ValueError("corrupt EXIF: GPS coordinate off the integer grid")
     return int(wx), int(wy)
-
-
-def world_to_dms(wx: int, wy: int, world: int = WORLD):
-    """Forward planting: world grid -> (lat_ref, lat_dms, lon_ref,
-    lon_dms), exact rationals with denominator `world`. The DMS split
-    is the euclidean base-60 cascade, so every planted value is a
-    legal deg/min/sec triple and the sum reconstructs exactly."""
-    def split(abs_num: int):
-        d, rem = divmod(abs_num, world)
-        m, rem2 = divmod(rem * 60, world)
-        return ((d, 1), (m, 1), (rem2 * 60, world))
-
-    lon_num = 360 * wx - 180 * world
-    lat_num = 90 * world - 180 * wy
-    lon_ref = "E" if lon_num >= 0 else "W"
-    lat_ref = "N" if lat_num >= 0 else "S"
-    return lat_ref, split(abs(lat_num)), lon_ref, split(abs(lon_num))
 
 
 # ------------------------------------------------------ vectorized encode
@@ -753,16 +727,6 @@ def apply_orientation(arr: np.ndarray, o: int) -> np.ndarray:
     if o == 8:
         return arr.swapaxes(0, 1)[::-1, :]
     raise ValueError(f"corrupt EXIF: orientation {o} out of range 1..8")
-
-
-_INVERSE_ORIENT = {1: 1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 8, 7: 7, 8: 6}
-
-
-def store_orientation(arr: np.ndarray, o: int) -> np.ndarray:
-    """Upright pixels -> the stored form a camera writing Orientation
-    tag `o` would produce: apply_orientation(store_orientation(P, o),
-    o) == P for every tag (group-law-pinned in tests)."""
-    return apply_orientation(arr, _INVERSE_ORIENT[o])
 
 
 def upright_pixels(payload: bytes, fmt: str) -> np.ndarray:

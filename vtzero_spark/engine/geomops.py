@@ -69,23 +69,6 @@ def rect_footprint_features(assigned: DataFrame) -> DataFrame:
     )
 
 
-def path_features(assigned: DataFrame) -> DataFrame:
-    """Tile-assigned images -> 3-point polyline features:
-    (x0,y0) -> (x0+w, y0+h) -> (x0+2w, y0). w,h >= 16 in the synthetic
-    table, so no zero-length segments (builder.hpp:850-852 would
-    reject them)."""
-    x0, y0 = F.col("loc_x").cast("long"), F.col("loc_y").cast("long")
-    w, h = F.col("w").cast("long"), F.col("h").cast("long")
-    line = F.array(_pt(x0, y0), _pt(x0 + w, y0 + h), _pt(x0 + 2 * w, y0))
-    return assigned.select(
-        "z", "x", "y", "layer_name",
-        F.col("iid").alias("feature_ordinal"),
-        F.col("iid").alias("feature_id"),
-        F.lit(G.GEOM_LINESTRING).alias("geom_type"),
-        F.array(line).alias("parts"),
-    )
-
-
 def _zz(c):
     """Plan-side zigzag32 of a long column (stays in codegen)."""
     c = c.cast("long")

@@ -60,37 +60,6 @@ def distance_m(lon1: Column, lat1: Column, lon2: Column, lat2: Column,
     return F.sqrt(dx * dx + dy * dy)
 
 
-def meters_per_deg_py(lat: float) -> tuple[float, float]:
-    """Scalar twin (the tests' reference)."""
-    r = math.radians(lat)
-    ky = (_KY[0] + _KY[1] * math.cos(2 * r) + _KY[2] * math.cos(4 * r)
-          + _KY[3] * math.cos(6 * r))
-    kx = (_KX[0] * math.cos(r) + _KX[1] * math.cos(3 * r)
-          + _KX[2] * math.cos(5 * r))
-    return kx, ky
-
-
-def distance_m_py(lon1, lat1, lon2, lat2, ref_lat=None) -> float:
-    if ref_lat is None:
-        ref_lat = (lat1 + lat2) / 2
-    kx, ky = meters_per_deg_py(ref_lat)
-    dlon = abs(lon1 - lon2)
-    if dlon > 180.0:
-        dlon = 360.0 - dlon
-    return math.hypot(dlon * kx, (lat1 - lat2) * ky)
-
-
-def haversine_m_py(lon1, lat1, lon2, lat2,
-                   radius: float = 6371008.8) -> float:
-    """Spherical great-circle reference (mean-Earth radius)."""
-    p1, p2 = math.radians(lat1), math.radians(lat2)
-    dp = p2 - p1
-    dl = math.radians(lon2 - lon1)
-    a = math.sin(dp / 2) ** 2 + math.cos(p1) * math.cos(p2) \
-        * math.sin(dl / 2) ** 2
-    return 2 * radius * math.asin(math.sqrt(a))
-
-
 def dwithin_lonlat(points: DataFrame, queries: DataFrame,
                    radius_m: float, max_lat: float = 66.0,
                    world: int | None = None) -> DataFrame:

@@ -17,11 +17,11 @@ partition's points to fragment hulls before anything moves:
 At 10^12 points a hot group's raw points never congregate: each
 partition forwards at most its fragment's hull (O(N^(1/3)) expected
 vertices for integer point clouds), and the final task sees
-(#partitions x hull size) rows per group, not the corpus. The
-partial==direct law is pinned in tests/test_hull.py across
-partitionings. n_points rides the partial rows (the fragment's point
-count on its first vertex row, 0 elsewhere — partitions are disjoint
-after the dedupe, so a plain sum is exact).
+(#partitions x hull size) rows per group, not the corpus. The monoid
+law (one fragment per group == many fragments) is pinned in
+tests/test_hull.py across partitionings. n_points rides the partial
+rows (the fragment's point count on its first vertex row, 0 elsewhere
+— partitions are disjoint after the dedupe, so a plain sum is exact).
 
 An earlier form grouped (g, salt-of-point) with applyInPandas; at
 sf0.1 that meant ~24k per-group UDF invocations and a 37 s wall —
@@ -215,21 +215,16 @@ _OUT_SCHEMAS = {
 
 
 def hull_vertices(points: DataFrame, group_col: str = "user_id",
-                  x_col: str = "wx", y_col: str = "wy",
-                  partial: bool = True) -> DataFrame:
+                  x_col: str = "wx", y_col: str = "wy") -> DataFrame:
     """(group, x, y) -> one row per hull vertex with its CCW ring
-    position: (group, ord, hx, hy). ``partial=False`` skips the
-    map-side combine (the direct form the monoid law tests against)."""
+    position: (group, ord, hx, hy)."""
     pts = _dedup(points, group_col, x_col, y_col)
-    reduced = _partial_hulls(pts) if partial \
-        else pts.withColumn("_fn", F.lit(1).cast("long"))
-    return _final_pass(reduced, _vertex_rows) \
+    return _final_pass(_partial_hulls(pts), _vertex_rows) \
         .withColumnRenamed("g", group_col)
 
 
 def hull_stats(points: DataFrame, group_col: str = "user_id",
-               x_col: str = "wx", y_col: str = "wy",
-               partial: bool = True) -> DataFrame:
+               x_col: str = "wx", y_col: str = "wy") -> DataFrame:
     """Per-group hull summary, every column exact int64: distinct
     point count, hull vertex count, hull-vertex coordinate sums, and
     hull area2 (shoelace; 0 for degenerate point/segment hulls).
@@ -237,16 +232,14 @@ def hull_stats(points: DataFrame, group_col: str = "user_id",
     repartition(group) — the partial pass is shuffle-free and
     n_points rides its rows as per-fragment counts."""
     pts = _dedup(points, group_col, x_col, y_col)
-    reduced = _partial_hulls(pts) if partial \
-        else pts.withColumn("_fn", F.lit(1).cast("long"))
-    return _final_pass(reduced, _stats_rows) \
+    return _final_pass(_partial_hulls(pts), _stats_rows) \
         .withColumnRenamed("g", group_col)
 
 
 def hull_tiles(points: DataFrame, zoom: int, extent: int = 4096,
                buffer: int = 0, layer: str = "hulls",
                group_col: str = "user_id", x_col: str = "wx",
-               y_col: str = "wy", partial: bool = True) -> DataFrame:
+               y_col: str = "wy") -> DataFrame:
     """The servable form: each group's hull as an MVT polygon, through
     the SAME world-features ingest tail every other ingest runs
     (geojson.world_features_to_tiles: bbox fan-out -> localize ->
@@ -256,7 +249,7 @@ def hull_tiles(points: DataFrame, zoom: int, extent: int = 4096,
     hulls (< 3 vertices) drop: a point or segment has no polygon."""
     from . import geojson as _geojson
 
-    verts = hull_vertices(points, group_col, x_col, y_col, partial)
+    verts = hull_vertices(points, group_col, x_col, y_col)
     t = verts.groupBy(group_col).agg(
         F.array_sort(F.collect_list(
             F.struct("ord", "hx", "hy"))).alias("_vs"))

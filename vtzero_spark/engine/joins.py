@@ -1,5 +1,5 @@
-"""Cell-indexed spatial joins: point-in-polygon (broadcast + salted)
-and raster<->vector tile-alignment joins.
+"""Cell-indexed spatial joins: point-in-polygon (broadcast + salted),
+distance-within, nearest-fence and zonal statistics.
 
 Scale design (north_rule):
 - small polygon sets: the cell->polygon covering index is exploded and
@@ -240,29 +240,6 @@ def point_in_ring_udf(px: pd.Series, py: pd.Series, ring_x: pd.Series, ring_y: p
     crossings = np.add.reduceat(np.append(hit, 0), offs)
     inside = on_any | (((crossings % 2) == 1) & (elens > 0))
     return pd.Series(inside)
-
-
-# ------------------------------------------------- raster <-> vector
-
-def raster_vector_join(
-    raster_df: DataFrame,
-    vector_df: DataFrame,
-    zoom_r: int,
-    zoom_v: int,
-    raster_key: tuple[str, str] = ("rx", "ry"),
-    vector_key: tuple[str, str] = ("x", "y"),
-) -> DataFrame:
-    """Align raster tiles (finer zoom_r) with vector tiles (zoom_v)
-    by ancestor arithmetic and join — a pure shuffle-on-tile-key hash
-    join, broadcastable when the vector side is small."""
-    assert zoom_r >= zoom_v
-    shift = zoom_r - zoom_v
-    rx, ry = raster_key
-    r = (
-        raster_df.withColumn("x", F.expr(f"{rx} div {1 << shift}"))
-        .withColumn("y", F.expr(f"{ry} div {1 << shift}"))
-    )
-    return r.join(vector_df, list(vector_key))
 
 
 # ------------------------------------------- distance-within join

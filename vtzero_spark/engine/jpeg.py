@@ -14,10 +14,10 @@ selection + successive approximation live in jpeg_progressive.py),
 which covers 4:4:4, 4:2:2 and the real-world-dominant 4:2:0 — restart
 intervals (DRI + RSTn segment splitting, DC predictor resets), no
 arithmetic coding or hierarchical mode. The encoder emits 4:4:4
-(default) or 4:2:0, optionally with restart markers — and
-jpeg_progressive.encode_progressive emits the 10-scan progressive
-script — so every supported layout verifies end to end without
-external fixtures.
+(default) or 4:2:0, optionally with restart markers — and the tests'
+progressive encoder (tests/scalar_reference.py) emits the 10-scan
+progressive script — so every supported layout verifies end to end
+without external fixtures.
 
 Performance shape: everything per-image is vectorized across blocks
 (level shift, DCT/IDCT as two 8x8 matrix products over the whole block
@@ -350,43 +350,6 @@ def _seg(marker: int, payload: bytes) -> bytes:
     return struct.pack(">HH", marker, len(payload) + 2) + payload
 
 
-def encode_jpeg_gray(lum: np.ndarray, quality: int = 90) -> bytes:
-    """8-bit grayscale (h, w) -> single-component baseline JFIF bytes
-    (the decoder replicates the luma plane into RGB). Exercises the
-    one-component scan path the decoder claims."""
-    h, w = lum.shape
-    assert lum.dtype == np.uint8
-    ql, _ = quality_tables(quality)
-    hp, wp = -(-h // 8) * 8, -(-w // 8) * 8
-    plane = np.pad(lum.astype(np.float64),
-                   ((0, hp - h), (0, wp - w)), mode="edge")
-    zz = _quantized_zigzag(plane, ql)
-    dct_l = _encode_table(DC_LUMA_BITS, DC_LUMA_VALS)
-    act_l = _encode_table(AC_LUMA_BITS, AC_LUMA_VALS)
-    wr = _BitWriter()
-    prev = 0
-    for blk in zz:
-        prev = _encode_block(wr, blk, prev, dct_l, act_l)
-    entropy = wr.finish()
-
-    out = bytearray(b"\xFF\xD8")
-    out += _seg(0xFFE0, b"JFIF\x00" + bytes([1, 1, 0])
-                + struct.pack(">HHBB", 1, 1, 0, 0))
-    out += _seg(0xFFDB, bytes([0]) + bytes(ql.astype(np.uint8)[ZIGZAG]))
-    out += _seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1)
-                + bytes([1, 0x11, 0]))
-    for cls, tid, bits, vals in (
-        (0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
-        (1, 0, AC_LUMA_BITS, AC_LUMA_VALS),
-    ):
-        out += _seg(0xFFC4, bytes([(cls << 4) | tid])
-                    + bytes(bits) + bytes(vals))
-    out += _seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += entropy
-    out += b"\xFF\xD9"
-    return bytes(out)
-
-
 def _quantized_zigzag(plane: np.ndarray, qt: np.ndarray) -> list:
     """(hp, wp) plane (8-multiples) -> per-block zigzag coefficient
     lists in raster block order; DCT + quantize vectorized across the
@@ -697,13 +660,6 @@ def _parse_jpeg(data: bytes) -> dict:
         "segments": entropy, "qt_by_comp": qt_by_comp, "luts": luts,
         "sampf": sampf, "grids": grids,
     }
-
-
-def restart_segment_count(data: bytes) -> int:
-    """Number of independently-decodable entropy segments (1 when the
-    stream has no restart markers) — the intra-image parallelism
-    available to a distributed decode."""
-    return len(_parse_jpeg(data)["segments"])
 
 
 @_valueerror_on_corruption

@@ -1,4 +1,4 @@
-"""Progressive JPEG (SOF2) — decode and encode, pure numpy + stdlib.
+"""Progressive JPEG (SOF2) decode, pure numpy + stdlib.
 
 Implements ITU-T T.81 Annex G progressive DCT: spectral selection
 (per-scan Ss..Se coefficient bands) and successive approximation
@@ -16,15 +16,12 @@ identical), so a progressive stream decodes to EXACTLY the pixels of
 a baseline stream with the same quantized coefficients; the round-trip
 tests pin that equality.
 
-The encoder exists to exercise every decoder path without external
-fixtures (this container has no image libraries): it emits the
-standard 10-scan script (DC first Al=1, spectral-split AC first scans,
-AC refinement chain, DC refinement) — or any caller-supplied scan
-script — over 4:4:4, 4:2:2, 4:2:0 or grayscale, optionally with
-restart intervals. Scan entropy uses simple COMPLETE canonical
-Huffman tables carried in DHT (the Annex K tables lack the EOBn
-symbols progressive needs); tables travel in the stream, so the
-decoder exercises its real DHT path.
+The matching encoder, which exists only to exercise every decoder path
+without external fixtures, is the tests' (tests/scalar_reference.py
+encode_progressive): the standard 10-scan script or any caller-supplied
+one, over 4:4:4, 4:2:2, 4:2:0 or grayscale, optionally with restart
+intervals, with its Huffman tables carried in DHT so the decoder
+exercises its real DHT path.
 
 Entry points raise ValueError (only) on malformed streams, matching
 engine/jpeg.py's errors-as-data contract.
@@ -36,10 +33,7 @@ import struct
 
 import numpy as np
 
-from .jpeg import (
-    ZIGZAG, _BitReader, _BitWriter, _decode_lut, _quantized_zigzag,
-    _rgb_to_ycbcr, _seg, _valueerror_on_corruption, quality_tables,
-)
+from .jpeg import _BitReader, _decode_lut, _valueerror_on_corruption
 from . import jpeg as J
 
 # ------------------------------------------------------------- parser
@@ -408,267 +402,3 @@ def decode_progressive(data: bytes) -> np.ndarray:
     for scan in p["scans"]:
         _decode_scan(p, scan, coefs)
     return J._assemble_planes(p, coefs)
-
-
-# ------------------------------------------------------------- encoder
-
-# Simple COMPLETE canonical tables (progressive needs EOBn symbols the
-# Annex K tables lack): DC sizes 0..15 at 5 bits; AC symbols 0..254 at
-# 9 bits + symbol 255 at 10 (a DHT BITS entry is one byte, so one
-# length can hold at most 255 codes). Kraft sums ~0.5 — legal
-# incomplete trees, no all-ones code.
-_P_DC_BITS = [0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_P_DC_VALS = list(range(16))
-_P_AC_BITS = [0, 0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0]
-_P_AC_VALS = list(range(256))
-_P_DC_TAB = J._encode_table(_P_DC_BITS, _P_DC_VALS)
-_P_AC_TAB = J._encode_table(_P_AC_BITS, _P_AC_VALS)
-
-# the libjpeg default progression (published scan script): DC first at
-# Al=1, luma AC split 1-5 / 6-63 at Al=2, chroma AC at Al=1, then the
-# refinement chain down to Al=0
-_DEFAULT_SCANS_3 = [
-    ((0, 1, 2), 0, 0, 0, 1),
-    ((0,), 1, 5, 0, 2),
-    ((2,), 1, 63, 0, 1),
-    ((1,), 1, 63, 0, 1),
-    ((0,), 6, 63, 0, 2),
-    ((0,), 1, 63, 2, 1),
-    ((0, 1, 2), 0, 0, 1, 0),
-    ((0,), 1, 63, 1, 0),
-    ((2,), 1, 63, 1, 0),
-    ((1,), 1, 63, 1, 0),
-]
-_DEFAULT_SCANS_1 = [
-    ((0,), 0, 0, 0, 1),
-    ((0,), 1, 5, 0, 2),
-    ((0,), 6, 63, 0, 2),
-    ((0,), 1, 63, 2, 1),
-    ((0,), 0, 0, 1, 0),
-    ((0,), 1, 63, 1, 0),
-]
-
-
-class _ScanWriter:
-    """Entropy writer for one scan: wraps _BitWriter with EOB-run and
-    correction-bit buffering (T.81 G.1.2.2-3) and restart emission."""
-
-    def __init__(self) -> None:
-        self.wr = _BitWriter()
-        self.eobrun = 0
-        self.be: list[int] = []   # buffered correction bits
-
-    def sym(self, tab: dict, s: int) -> None:
-        code, length = tab[s]
-        self.wr.write(code, length)
-
-    def emit_eobrun(self) -> None:
-        if self.eobrun > 0:
-            nbits = self.eobrun.bit_length() - 1
-            self.sym(_P_AC_TAB, nbits << 4)
-            if nbits:
-                self.wr.write(self.eobrun, nbits)
-            self.eobrun = 0
-        for b in self.be:
-            self.wr.write(b, 1)
-        self.be = []
-
-    def restart(self, idx: int) -> None:
-        self.emit_eobrun()
-        self.wr.align()
-        self.wr.raw_marker(0xD0 + (idx % 8))
-
-    def finish(self) -> bytes:
-        self.emit_eobrun()
-        return self.wr.finish()
-
-
-def _enc_ac_first(sw: _ScanWriter, zz, ss: int, se: int, al: int) -> None:
-    r = 0
-    for k in range(ss, se + 1):
-        v = zz[k]
-        mag = (v if v >= 0 else -v) >> al
-        if mag == 0:
-            r += 1
-            continue
-        sw.emit_eobrun()
-        while r > 15:
-            sw.sym(_P_AC_TAB, 0xF0)
-            r -= 16
-        s = mag.bit_length()
-        sw.sym(_P_AC_TAB, (r << 4) | s)
-        sw.wr.write(mag if v >= 0 else -mag + (1 << s) - 1, s)
-        r = 0
-    if r > 0:
-        sw.eobrun += 1
-        if sw.eobrun == 0x7FFF:
-            sw.emit_eobrun()
-
-
-def _enc_ac_refine(sw: _ScanWriter, zz, ss: int, se: int, al: int) -> None:
-    mags = [((v if v >= 0 else -v) >> al) for v in zz[ss:se + 1]]
-    eob = 0                        # k past the last NEWLY significant
-    for j, m in enumerate(mags):
-        if m == 1:
-            eob = j + 1
-    r = 0
-    br: list[int] = []
-    for j, m in enumerate(mags):
-        if m == 0:
-            r += 1
-            continue
-        while r > 15 and j < eob:
-            sw.emit_eobrun()
-            sw.sym(_P_AC_TAB, 0xF0)
-            r -= 16
-            for b in br:
-                sw.wr.write(b, 1)
-            br = []
-        if m > 1:                  # already significant: correction bit
-            br.append(m & 1)
-            continue
-        sw.emit_eobrun()           # newly significant
-        sw.sym(_P_AC_TAB, (r << 4) | 1)
-        sw.wr.write(1 if zz[ss + j] >= 0 else 0, 1)
-        for b in br:
-            sw.wr.write(b, 1)
-        br = []
-        r = 0
-    if r > 0 or br:
-        sw.eobrun += 1
-        sw.be.extend(br)
-        if sw.eobrun == 0x7FFF or len(sw.be) > 900:
-            sw.emit_eobrun()
-
-
-def encode_progressive(arr: np.ndarray, quality: int = 90,
-                       subsampling: str = "444",
-                       restart_interval: int = 0,
-                       scans=None) -> bytes:
-    """8-bit RGB (h, w, 3) or grayscale (h, w) -> progressive (SOF2)
-    JFIF bytes, default 10-scan script. Decodes (here and in any
-    conformant decoder) to EXACTLY the pixels of the baseline encode
-    at the same quality/subsampling — progressive reorders the entropy
-    stream, the quantized coefficients are identical."""
-    gray = arr.ndim == 2
-    if gray:
-        h, w = arr.shape
-        ql, _ = quality_tables(quality)
-        hp, wp = -(-h // 8) * 8, -(-w // 8) * 8
-        plane = np.pad(arr.astype(np.float64),
-                       ((0, hp - h), (0, wp - w)), mode="edge")
-        zz = [_quantized_zigzag(plane, ql)]
-        samp = (0x11,)
-        qts = (ql,)
-        comp_ids = (1,)
-        tq_ids = (0,)
-        scans = scans or _DEFAULT_SCANS_1
-    else:
-        h, w, c = arr.shape
-        assert c == 3 and arr.dtype == np.uint8
-        if subsampling not in ("444", "422", "420"):
-            raise ValueError(f"unsupported subsampling {subsampling!r}")
-        ql, qc = quality_tables(quality)
-        ycc = _rgb_to_ycbcr(arr)
-        if subsampling == "444":
-            hp, wp = -(-h // 8) * 8, -(-w // 8) * 8
-            ycc = np.pad(ycc, ((0, hp - h), (0, wp - w), (0, 0)),
-                         mode="edge")
-            zz = [_quantized_zigzag(ycc[..., ci], (ql, qc, qc)[ci])
-                  for ci in range(3)]
-            samp = (0x11, 0x11, 0x11)
-        elif subsampling == "422":
-            hp, wp = -(-h // 8) * 8, -(-w // 16) * 16
-            ycc = np.pad(ycc, ((0, hp - h), (0, wp - w), (0, 0)),
-                         mode="edge")
-            cb = ycc[..., 1].reshape(hp, wp // 2, 2).mean(axis=2)
-            cr = ycc[..., 2].reshape(hp, wp // 2, 2).mean(axis=2)
-            zz = [_quantized_zigzag(ycc[..., 0], ql),
-                  _quantized_zigzag(cb, qc), _quantized_zigzag(cr, qc)]
-            samp = (0x21, 0x11, 0x11)
-        else:
-            hp, wp = -(-h // 16) * 16, -(-w // 16) * 16
-            ycc = np.pad(ycc, ((0, hp - h), (0, wp - w), (0, 0)),
-                         mode="edge")
-            cb = ycc[..., 1].reshape(
-                hp // 2, 2, wp // 2, 2).mean(axis=(1, 3))
-            cr = ycc[..., 2].reshape(
-                hp // 2, 2, wp // 2, 2).mean(axis=(1, 3))
-            zz = [_quantized_zigzag(ycc[..., 0], ql),
-                  _quantized_zigzag(cb, qc), _quantized_zigzag(cr, qc)]
-            samp = (0x22, 0x11, 0x11)
-        qts = (ql, qc)
-        comp_ids = (1, 2, 3)
-        tq_ids = (0, 1, 1)
-        scans = scans or _DEFAULT_SCANS_3
-
-    nc = len(comp_ids)
-    hmax = max(s >> 4 for s in samp)
-    vmax = max(s & 0x0F for s in samp)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    sampf = [(s >> 4, s & 0x0F) for s in samp]
-    grids = [(mcuy * vi, mcux * hi) for hi, vi in sampf]
-    ni_grids = []
-    for hi, vi in sampf:
-        cw, ch = -(-w * hi // hmax), -(-h * vi // vmax)
-        ni_grids.append((-(-ch // 8), -(-cw // 8)))
-    p = {"mcux": mcux, "mcuy": mcuy, "sampf": sampf, "grids": grids,
-         "ni_grids": ni_grids}
-    ri = int(restart_interval)
-
-    def scan_entropy(comps, ss, se, ah, al) -> bytes:
-        sw = _ScanWriter()
-        pred = {ci: 0 for ci in comps}
-        scan = {"comps": [(ci, 0, 0) for ci in comps]}
-        nmcu = 0
-        for group in _scan_blocks(p, scan):
-            if ri and nmcu and nmcu % ri == 0:
-                sw.restart(nmcu // ri - 1)
-                pred = {ci: 0 for ci in pred}
-            nmcu += 1
-            for ci, bi in group:
-                blk = zz[ci][bi]
-                if ss == 0 and ah == 0:       # DC first
-                    dcv = blk[0] >> al        # arithmetic shift
-                    diff = dcv - pred[ci]
-                    pred[ci] = dcv
-                    s = diff.bit_length() if diff >= 0 \
-                        else (-diff).bit_length()
-                    sw.sym(_P_DC_TAB, s)
-                    if s:
-                        sw.wr.write(
-                            diff if diff >= 0 else diff + (1 << s) - 1,
-                            s)
-                elif ss == 0:                 # DC refine
-                    sw.wr.write((blk[0] >> al) & 1, 1)
-                elif ah == 0:
-                    _enc_ac_first(sw, blk, ss, se, al)
-                else:
-                    _enc_ac_refine(sw, blk, ss, se, al)
-        return sw.finish()
-
-    out = bytearray(b"\xFF\xD8")
-    out += _seg(0xFFE0, b"JFIF\x00" + bytes([1, 1, 0])
-                + struct.pack(">HHBB", 1, 1, 0, 0))
-    for tid, qt in enumerate(qts):
-        out += _seg(0xFFDB, bytes([tid])
-                    + bytes(qt.astype(np.uint8)[ZIGZAG]))
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for i in range(nc):
-        sof += bytes([comp_ids[i], samp[i], tq_ids[i]])
-    out += _seg(0xFFC2, sof)                       # SOF2 progressive
-    out += _seg(0xFFC4, bytes([0x00]) + bytes(_P_DC_BITS)
-                + bytes(_P_DC_VALS))
-    out += _seg(0xFFC4, bytes([0x10]) + bytes(_P_AC_BITS)
-                + bytes(_P_AC_VALS))
-    if ri:
-        out += _seg(0xFFDD, struct.pack(">H", ri))
-    for comps, ss, se, ah, al in scans:
-        sos = bytes([len(comps)])
-        for ci in comps:
-            sos += bytes([comp_ids[ci], 0x00])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += _seg(0xFFDA, sos)
-        out += scan_entropy(comps, ss, se, ah, al)
-    out += b"\xFF\xD9"
-    return bytes(out)

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from ..mvt.geometry import (
     GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON, GeometryError)
 
-__all__ = ["merge_group_parts", "merge_lines", "merge_lines_cmds"]
+__all__ = ["merge_group_parts", "merge_lines_cmds"]
 
 
 def _pack(pts: np.ndarray) -> int:
@@ -225,7 +225,7 @@ def _merge_group_rows(pdf: "pd.DataFrame", keys: Sequence[str],
 def _explode_parts(features: DataFrame, passthrough: Sequence[str]
                    ) -> DataFrame:
     """Shared pre-kernel shape: one part per row as two flat long
-    arrays (_xs, _ys) + _pos/_pnull (see merge_lines), and _bad
+    arrays (_xs, _ys) + _pos/_pnull, and _bad
     flagging a null part or a null point/coordinate inside one."""
     return (features
             .where(F.col("geom_type").isNotNull())
@@ -243,7 +243,8 @@ def _explode_parts(features: DataFrame, passthrough: Sequence[str]
 def merge_lines_cmds(features: DataFrame,
                      keys: Sequence[str] = ("z", "x", "y", "layer_name"),
                      accumulate: dict | None = None) -> DataFrame:
-    """``cmds_from_parts(merge_lines(features))`` fused into the ONE
+    """``cmds_from_parts(merge_lines(features))`` (the unfused form,
+    tests/scalar_reference.py) fused into the ONE
     merge kernel: each output row's chains feed the shared
     ``geomops._cmds_group`` encoder in-process, so the merged parts
     never re-cross the Arrow boundary through a second Python stage
@@ -290,70 +291,3 @@ def merge_lines_cmds(features: DataFrame,
         return pd.DataFrame(out_rows, columns=out_cols)
 
     return ex.groupBy(*keys).applyInPandas(fn, schema=kernel_schema)
-
-
-def merge_lines(features: DataFrame,
-                keys: Sequence[str] = ("z", "x", "y", "layer_name"),
-                accumulate: dict | None = None,
-                ) -> DataFrame:
-    """Merge linestring features per group into maximal chains.
-
-    Input/output schema: the pre-encode features table
-    (z,x,y,layer_name,feature_ordinal,feature_id,geom_type,parts)
-    with parts: array<array<struct<x,y>>>. Non-linestring rows pass
-    through untouched. Each group of linestring features becomes ONE
-    feature whose parts are the merged chains (a MultiLineString),
-    carrying min(feature_ordinal) and the min non-null feature_id.
-    Put property columns in ``keys`` to forbid merging across
-    attribute boundaries; ``accumulate`` maps other columns to
-    sum/min/max/count (tippecanoe --accumulate-attribute) — columns
-    neither in ``keys`` nor accumulated carry the group-first value.
-    """
-    keys = list(keys)
-    cols = [c for c in features.columns]
-    acc = _check_accumulate(accumulate, cols, keys)
-
-    out_schema = features.schema
-
-    # ONE scan: linestrings and passthrough rows ride the SAME
-    # explode -> group kernel.  (The old lines/rest filter split put
-    # TWO consumers on the input plan; Python stages cannot be
-    # exchange-reused, so the whole upstream — e.g. contour's
-    # marching-squares kernel and the clip pass — executed twice;
-    # measured a full extra kernel pass under contour_tiles.)
-    #
-    # One part per row before the pandas kernel, carried as TWO flat
-    # long arrays (_xs, _ys) instead of an array<struct> cell: the
-    # arrow->pandas converter then hands the kernel clean int64
-    # ndarrays (a struct-array cell materializes one Python dict per
-    # VERTEX on the way in and needed one per vertex on the way out —
-    # measured ~3x the kernel wall on the contour chain corpus).
-    # _pos keeps the within-feature part order, so the chain
-    # materialization stays deterministic; per-feature accumulation
-    # dedups on feature_ordinal so exploding never double-counts.
-    # posexplode_outer + _pnull keep empty/null-parts NON-line rows
-    # alive through the explode (the old rest branch passed them
-    # through verbatim); empty-parts LINE features drop, exactly as
-    # the old posexplode did.
-    passthrough = [c for c in cols if c != "parts"]
-    ex = _explode_parts(features, passthrough)
-
-    kernel_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}"
-         for f in out_schema if f.name != "parts"]
-        + ["_cx array<array<bigint>>", "_cy array<array<bigint>>"])
-    out_cols = [c for c in cols if c != "parts"] + ["_cx", "_cy"]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_rows = _merge_group_rows(pdf, keys, passthrough, acc)
-        return pd.DataFrame(out_rows, columns=out_cols)
-
-    merged = ex.groupBy(*keys).applyInPandas(fn, schema=kernel_schema)
-    # reassemble array<array<struct<x,y>>> in the JVM (zip_with is a
-    # pure codegen projection) and restore the caller's column order
-    parts_col = F.zip_with(
-        "_cx", "_cy",
-        lambda cx, cy: F.zip_with(
-            cx, cy, lambda x, y: F.struct(x.alias("x"), y.alias("y"))))
-    merged = merged.withColumn("parts", parts_col).select(*cols)
-    return merged

@@ -36,8 +36,7 @@ from pyspark.sql import functions as F
 
 from .synth import WORLD
 
-__all__ = ["MAX_LAT", "lonlat_to_world", "world_to_lonlat",
-           "lonlat_to_world_py", "world_to_lonlat_py"]
+__all__ = ["MAX_LAT", "lonlat_to_world", "world_to_lonlat"]
 
 # tan/atan-exact edge of the Mercator square: atan(sinh(pi)) in degrees
 MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.05112877980659
@@ -79,29 +78,6 @@ def world_to_lonlat(wx: Column, wy: Column,
     return lon, lat
 
 
-def lonlat_to_world_py(lon: float, lat: float,
-                       world: int = WORLD) -> tuple[int, int]:
-    """Scalar reference implementation (the tests' oracle twin)."""
-    lon = ((lon + 180.0) % 360.0 + 360.0) % 360.0
-    lat = max(-MAX_LAT, min(MAX_LAT, lat))
-    xf = lon / 360.0 * world
-    latr = math.radians(lat)
-    merc = math.log(math.tan(latr) + 1.0 / math.cos(latr))
-    yf = (1.0 - merc / math.pi) / 2.0 * world
-    wx = min(world - 1, max(0, math.floor(xf)))
-    wy = min(world - 1, max(0, math.floor(yf)))
-    return int(wx), int(wy)
-
-
-def world_to_lonlat_py(wx: int, wy: int,
-                       world: int = WORLD) -> tuple[float, float]:
-    cx = (wx + 0.5) / world
-    cy = (wy + 0.5) / world
-    lon = cx * 360.0 - 180.0
-    lat = math.degrees(math.atan(math.sinh(math.pi * (1.0 - 2.0 * cy))))
-    return lon, lat
-
-
 def project(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
             world: int = WORLD) -> DataFrame:
     """Convenience: append (wx, wy) world columns to a lon/lat frame —
@@ -111,7 +87,7 @@ def project(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
 
 
 def world_to_lonlat_np(wx, wy, world: int = WORLD):
-    """Vectorized numpy twin of world_to_lonlat_py (same cell-center
+    """Vectorized numpy twin of world_to_lonlat (same cell-center
     inverse), for batch kernels (e.g. polyline.encode_tracks)."""
     import numpy as np
 

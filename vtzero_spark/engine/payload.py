@@ -10,9 +10,7 @@ codecs are implemented here from public specs:
 - "jpeg" is a REAL baseline JPEG codec (engine/jpeg.py: ITU-T T.81
   sequential DCT, Annex K tables, JFIF 4:4:4, canonical Huffman) at
   quality 90 — PSNR 43+ dB on the synthetic corpus, ~10:1 compression,
-  so the >=40 dB gate exercises an actual transform codec. The
-  rounds-1..3 quantize+zlib stand-in remains as encode_jpeg_stub /
-  decode_jpeg_stub (legacy fixtures only; no fmt routes to it).
+  so the >=40 dB gate exercises an actual transform codec.
 
 Pixels are synthesized deterministically from (phash, w, h) — no
 external data. The field is smooth (low-frequency cosines + faint
@@ -23,8 +21,6 @@ content is a correctness requirement of the gate, not a convenience.
 
 from __future__ import annotations
 
-import struct
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -49,27 +45,6 @@ def decode_png(data: bytes) -> np.ndarray:
     filters, gray/palette/alpha/16-bit normalized by
     engine/png.decode_rgb8; ValueError on malformed streams."""
     return pngcodec.decode_rgb8(data)
-
-
-_JPEG_STUB_MAGIC = b"JPGSTUB1"
-
-
-def encode_jpeg_stub(arr: np.ndarray) -> bytes:
-    """LEGACY stub lossy codec (rounds 1-3): quantize channels to
-    multiples of 8 then zlib. NOT a real JPEG; no fmt routes here any
-    more — fmt="jpeg" uses the real baseline codec in engine/jpeg.py.
-    Kept only so old fixtures/tests remain decodable."""
-    h, w, _ = arr.shape
-    q = (arr.astype(np.int32) // 8 * 8 + 4).clip(0, 255).astype(np.uint8)
-    return (_JPEG_STUB_MAGIC + struct.pack(">II", w, h)
-            + zlib.compress(q.tobytes(), 6))
-
-
-def decode_jpeg_stub(data: bytes) -> np.ndarray:
-    if data[:8] != _JPEG_STUB_MAGIC:
-        raise ValueError("not a jpeg-stub payload")
-    w, h = struct.unpack(">II", data[8:16])
-    return np.frombuffer(zlib.decompress(data[16:]), dtype=np.uint8).reshape(h, w, 3)
 
 
 def synth_pixels(phash: int, w: int, h: int) -> np.ndarray:
@@ -177,127 +152,6 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     if mse == 0:
         return 99.0
     return 10.0 * np.log10(255.0 * 255.0 / mse)
-
-
-def decode_jpeg_distributed(spark, data: bytes,
-                            band_mcu_rows: int = 4) -> np.ndarray:
-    """Intra-image parallel decode of ONE restart-interval JPEG: the
-    entropy segments (the inherently-serial part of JPEG decode) fan
-    out as DataFrame rows, each task decodes its segments against a
-    broadcast of the stream and keys the coefficient blocks by
-    MCU-ROW BAND; a second stage groups by band and runs the full
-    dequant + IDCT + upsample + color-convert assembly EXECUTOR-SIDE
-    (jpeg._assemble_band — band assembly is byte-identical to the
-    whole-image pass because every per-pixel step is band-local).
-    This is the scale path for GIANT images (satellite scenes,
-    stitched mosaics) where one image exceeds a single core's decode
-    budget — restart markers are exactly the format feature that makes
-    the split safe (byte-aligned segments, fresh DC predictors).
-
-    Driver materialization is exactly the OUTPUT array (uint8 pixel
-    strips, concatenated once): the int64 coefficient volume — 8x the
-    pixels, the r4 bottleneck — now moves executor-to-executor in the
-    band shuffle and never lands on the driver. A pipeline that wants
-    the strips in storage instead of an array writes the stage-2
-    DataFrame (band, y0, nrows, strip) to parquet and skips the
-    collect entirely."""
-    from . import jpeg as J
-    from . import jpeg_progressive as JP
-
-    if JP.is_progressive(data):
-        # progressive scans refine each other sequentially — no
-        # independent entropy segments to fan out; decode serially
-        return JP.decode_progressive(data)
-    p = J._parse_jpeg(data)
-    nseg = len(p["segments"])
-    if nseg == 1:
-        return J.decode_jpeg(data)
-    sc = spark.sparkContext
-    bc = sc.broadcast(data)
-    # stage-2 metadata: the decode plan minus the entropy payload
-    # (headers + tables only — small no matter how giant the image)
-    meta = {k: p[k] for k in ("h", "w", "nc", "hmax", "vmax", "mcux",
-                              "mcuy", "ri", "qt_by_comp", "sampf",
-                              "grids")}
-    bc_meta = sc.broadcast(meta)
-    mcuy = p["mcuy"]
-    nband = -(-mcuy // band_mcu_rows)
-
-    def decode_segs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parsed = None
-        for pdf in batches:
-            rows = []
-            for si in pdf["si"]:
-                if parsed is None:
-                    parsed = J._parse_jpeg(bc.value)
-                for ci, idx, mat in J._decode_segment(parsed, int(si)):
-                    if not idx.size:
-                        continue
-                    bw = parsed["grids"][ci][1]
-                    vi = parsed["sampf"][ci][1]
-                    band = (idx // bw) // vi // band_mcu_rows
-                    for b in np.unique(band):
-                        m = band == b
-                        rows.append({
-                            "band": int(b), "ci": int(ci),
-                            "n": int(m.sum()),
-                            "idx": idx[m].tobytes(),
-                            "coefs": mat[m].tobytes()})
-            yield pd.DataFrame(
-                rows, columns=["band", "ci", "n", "idx", "coefs"])
-
-    def assemble_band(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = bc_meta.value
-        band = int(pdf["band"].iloc[0])
-        m0 = band * band_mcu_rows
-        m1 = min(m0 + band_mcu_rows, m["mcuy"])
-        vals = []
-        for ci in range(m["nc"]):
-            bh, bw = m["grids"][ci]
-            vi = m["sampf"][ci][1]
-            r0, r1 = m0 * vi, min(m1 * vi, bh)
-            vals.append(np.zeros(((r1 - r0) * bw, 64), dtype=np.int64))
-        for row in pdf.itertuples(index=False):
-            ci = int(row.ci)
-            bw = m["grids"][ci][1]
-            vi = m["sampf"][ci][1]
-            idx = np.frombuffer(row.idx, dtype=np.int64)
-            mat = np.frombuffer(row.coefs, dtype=np.int64) \
-                .reshape(int(row.n), 64)
-            vals[ci][idx - m0 * vi * bw] = mat
-        strip = J._assemble_band(m, vals, m0, m1)
-        return pd.DataFrame([{
-            "band": band, "y0": m0 * 8 * m["vmax"],
-            "nrows": strip.shape[0], "strip": strip.tobytes()}])
-
-    from pyspark.sql import functions as F
-
-    segs = spark.range(nseg).select(F.col("id").cast("int").alias("si"))
-    try:
-        strips = (
-            segs.repartition(min(nseg, 64))
-            .mapInPandas(decode_segs,
-                         schema="band int, ci int, n long, "
-                                "idx binary, coefs binary")
-            .groupBy("band")
-            .applyInPandas(assemble_band,
-                           schema="band int, y0 long, nrows long, "
-                                  "strip binary")
-            .collect()
-        )
-    finally:
-        bc.unpersist(blocking=False)      # one-shot broadcasts,
-        bc_meta.unpersist(blocking=False)  # don't leak
-    if len(strips) != nband:
-        raise ValueError(
-            f"band assembly returned {len(strips)} of {nband} strips")
-    w = p["w"]
-    out = np.empty((p["h"], w, 3), dtype=np.uint8)
-    for r in strips:
-        block = np.frombuffer(r["strip"], dtype=np.uint8) \
-            .reshape(r["nrows"], w, 3)
-        out[r["y0"]:r["y0"] + r["nrows"]] = block
-    return out
 
 
 # ------------------------------------------------------------ Spark side
@@ -565,38 +419,6 @@ def image_quality(df: DataFrame) -> DataFrame:
          & (F.col("entropy") >= 1.0)).alias("quality_ok"))
 
 
-def curate_images(df: DataFrame, max_d: int = 10) -> DataFrame:
-    """Composed image-curation pipeline — the image twin of
-    textops.curation_pipeline: payload verification (PSNR + caption
-    gate) -> quality gating -> perceptual near-dup dedup, one
-    declarative plan. Input: rows with (image_id, bytes, fmt, phash,
-    w, h, caption). Output: surviving rows + the per-stage verdicts
-    (verified, quality_ok) for lineage/debugging. Each stage is the
-    already-tested operator; the composition adds two broadcast-able
-    id joins and the dedup anti-join.
-
-    Cost note: composing the stock operators decodes each payload
-    once per stage (verify, quality, hash) — three decode passes. At
-    100 TB you would fuse them into one decode pass emitting all
-    three verdict column sets (the operators share decode_payload, so
-    the fusion is mechanical); the composition here optimizes for
-    operator reuse and per-stage testability."""
-    from pyspark.sql import functions as F
-
-    from .imagehash import dedup_phash
-
-    verdicts = verify_payloads(df).select(
-        "image_id",
-        (F.col("pixels_ok") & F.col("caption_ok")).alias("verified"))
-    quality = image_quality(df).select("image_id", "quality_ok")
-    good = (
-        df.join(verdicts, "image_id")
-        .join(quality, "image_id")
-        .where(F.col("verified") & F.col("quality_ok"))
-    )
-    return dedup_phash(good, max_d=max_d)
-
-
 _CURATION_FACTS_SCHEMA = ("image_id string, verified boolean, "
                           "quality_ok boolean, b0 long, b1 long, "
                           "b2 long, b3 long, ctag long")
@@ -605,8 +427,7 @@ _CURATION_FACTS_SCHEMA = ("image_id string, verified boolean, "
 def _curation_facts_gen(batches: "Iterator[pd.DataFrame]"):
     """ONE decode per image emitting all three verdict sets: the
     verification gate (PSNR + caption), the quality gate, and the
-    perceptual hash. Shared by curation_facts / curate_images_fused /
-    curate_images_checkpointed phase 1."""
+    perceptual hash."""
     from .imagehash import _HASH_COLS, blockhash
 
     cols = ["image_id", "verified", "quality_ok"] + _HASH_COLS
@@ -658,12 +479,16 @@ def curation_facts(df: DataFrame) -> DataFrame:
 
 
 def curate_images_fused(df: DataFrame, max_d: int = 10) -> DataFrame:
-    """curate_images with the decode fused: the composed form decodes
-    every payload once per stage (verify, quality, hash — three
-    passes, the docstring's 100 TB note); this one runs the shared
-    one-pass kernel and composes the gates + dedup over the SMALL fact
-    table (8 columns/row). Returns exactly the rows and verdict
-    columns of curate_images (equality pinned in test_payload)."""
+    """Image curation — the image twin of textops.curation_pipeline:
+    payload verification (PSNR + caption gate) -> quality gating ->
+    perceptual near-dup dedup. Input: rows with (image_id, bytes, fmt,
+    phash, w, h, caption). Output: surviving rows + the per-stage
+    verdicts (verified, quality_ok). ONE decode per payload: the
+    shared kernel emits all three verdict sets, and the gates + dedup
+    run over that SMALL fact table (8 columns/row). Composing the
+    stock operators (verify_payloads, image_quality, dedup_phash)
+    keeps exactly the same rows and verdicts at three decodes per
+    payload (equality pinned in test_payload)."""
     from pyspark.sql import functions as F
 
     from .imagehash import phash_neardup_pairs
@@ -684,54 +509,6 @@ def curate_images_fused(df: DataFrame, max_d: int = 10) -> DataFrame:
     keep = good.select("image_id", "verified", "quality_ok") \
         .join(losers, "image_id", "left_anti")
     return df.join(keep, "image_id")
-
-
-def curate_images_checkpointed(spark, images: DataFrame, out_dir: str,
-                               n_buckets: int = 8,
-                               max_d: int = 10) -> DataFrame:
-    """Resumable image curation — the north-rule checkpoint discipline
-    applied to the image pipeline, in two phases:
-
-    PHASE 1 (expensive, row-local, CHECKPOINTED): one decode pass per
-    bucket wave computes the verification verdict, the quality gate,
-    and the perceptual hash per image; each bucket commits a manifest
-    row (rows, wall time, lineage), so a killed job resumes at the
-    first uncommitted bucket and never re-decodes finished work. All
-    phase-1 columns are per-row facts — bucket-independent by
-    construction, safe to compute in any wave order.
-
-    PHASE 2 (cheap, graph-shaped, RE-RUN ON RESUME): near-dup
-    components over the checkpointed HASH TABLE (6 longs/row — orders
-    of magnitude smaller than the payloads) and the min-id
-    representative anti-join. Re-running phase 2 after a resume is
-    deliberate: the pair graph spans buckets, so it must see the
-    complete hash table; its cost is proportional to the hash table,
-    not the corpus bytes.
-
-    Returns the curated id set (image_id of survivors)."""
-    from pyspark.sql import functions as F
-
-    from . import checkpoint as cp
-    from .imagehash import phash_neardup_pairs
-    from .textops import neardup_components
-
-    def phase1(part: DataFrame) -> DataFrame:
-        # the shared fused kernel (_curation_facts_gen): one decode
-        # per image -> verification + quality + perceptual hash
-        return part.select(
-            "image_id", "bytes", "fmt", "phash", "w", "h", "caption"
-        ).mapInPandas(_curation_facts_gen, schema=_CURATION_FACTS_SCHEMA)
-
-    cp.run_with_checkpoint(
-        spark, images, phase1, out_dir, bucket_col="image_id",
-        n_buckets=n_buckets, lineage={"stage": "image-curation-phase1"})
-    facts = cp.read_checkpointed(spark, out_dir)
-    good = facts.where(F.col("verified") & F.col("quality_ok"))
-    pairs = phash_neardup_pairs(good, max_d=max_d)
-    comp = neardup_components(pairs, a_col="image_id", b_col="other_id")
-    losers = comp.where(F.col("component") != F.col("doc_id")) \
-        .select(F.col("doc_id").alias("image_id"))
-    return good.select("image_id").join(losers, "image_id", "left_anti")
 
 
 def verify_payloads(df: DataFrame) -> DataFrame:

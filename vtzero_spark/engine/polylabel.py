@@ -192,17 +192,6 @@ def polylabel_flat(px: np.ndarray, py: np.ndarray, roff: np.ndarray,
     return best_x, best_y, best_d
 
 
-def polylabel_rings(rings, precision: float = 1.0):
-    """Scalar convenience: rings as lists of (x, y) pairs (closed or
-    open). The pytest reference entry point."""
-    lens = np.array([len(r) for r in rings], dtype=np.int64)
-    roff = np.zeros(lens.size + 1, dtype=np.int64)
-    np.cumsum(lens, out=roff[1:])
-    px = np.array([p[0] for r in rings for p in r], dtype=np.float64)
-    py = np.array([p[1] for r in rings for p in r], dtype=np.float64)
-    return polylabel_flat(px, py, roff, precision)
-
-
 # ---------------------------------------------------------- DataFrame op
 
 

@@ -52,45 +52,6 @@ def encode_e(vals: np.ndarray) -> str:
     return out.decode("ascii")
 
 
-def decode_e(s: str) -> np.ndarray:
-    """Inverse of encode_e: polyline string -> (n, 2) int64 scaled
-    coordinate pairs. Raises ValueError on a truncated or out-of-band
-    stream (errors-as-data at the operator layer)."""
-    vals = []
-    acc = 0
-    shift = 0
-    for ch in s.encode("ascii"):
-        c = ch - 63
-        if c < 0 or c > 0x3F:
-            raise ValueError(f"polyline byte out of range: {ch}")
-        acc |= (c & 0x1F) << shift
-        if c & 0x20:
-            shift += 5
-        else:
-            vals.append((acc >> 1) ^ -(acc & 1))
-            acc = 0
-            shift = 0
-    if shift != 0:
-        raise ValueError("truncated polyline chunk")
-    if len(vals) % 2:
-        raise ValueError("odd value count in polyline")
-    d = np.array(vals, dtype=np.int64).reshape(-1, 2)
-    return np.cumsum(d, axis=0)
-
-
-def encode_polyline(coords, precision: int = 5) -> str:
-    """Float convenience wrapper: sequence of (lat, lng) pairs."""
-    scale = 10 ** precision
-    v = np.asarray([(round(la * scale), round(ln * scale))
-                    for la, ln in coords], dtype=np.int64)
-    return encode_e(v.reshape(-1, 2))
-
-
-def decode_polyline(s: str, precision: int = 5):
-    scale = float(10 ** precision)
-    return [(a / scale, b / scale) for a, b in decode_e(s)]
-
-
 # ---------------------------------------------------------- Spark op
 
 def encode_tracks(tracks: DataFrame, precision: int = 5,

@@ -71,7 +71,7 @@ from ..mvt import geometry as G
 
 __all__ = [
     "poly_crossing_diff", "line_point_mask", "resolve_mask",
-    "rasterize_tile", "rasterize_scalar",
+    "rasterize_tile",
     "render_tiles", "render_partials",
     "vectorize_mask", "contour_tiles",
 ]
@@ -227,72 +227,6 @@ def rasterize_tile(px: np.ndarray, py: np.ndarray, roff: np.ndarray,
         *subset(gtypes_per_ring == G.GEOM_POINT), size, extent,
         as_points=True)
     return resolve_mask(diff, np.maximum(lmask, pmask), rule)
-
-
-# ------------------------------------------------------------ scalar oracle
-
-
-def rasterize_scalar(features: list, size: int, extent: int,
-                     rule: str = "nonzero") -> np.ndarray:
-    """Per-pixel reference rasterizer (slow, loops): features are
-    (geom_type, [[(x, y), ...], ...]) tuples. Uses the SAME crossing
-    convention and the same float expression for intersection x as
-    the batch kernel, so equality is exact, not approximate.
-
-    Winding accumulates GLOBALLY across all polygon features (compound
-    -path semantics — what makes the distributed kernel a monoid); for
-    validly-wound MVT polygons (CW outers, CCW holes inside them,
-    spec 4.3.3.3 — what lint.py checks upstream) the nonzero rule
-    makes this identical to per-feature painter's union, pinned in
-    tests/test_raster.py."""
-    img = np.zeros((size, size), np.uint8)
-    s = extent / size
-    poly_rings = [ring for gt, parts in features if gt == G.GEOM_POLYGON
-                  for ring in parts]
-    if poly_rings:
-        for r in range(size):
-            yc = (r + 0.5) * s
-            for c in range(size):
-                cx = (c + 0.5) * s
-                wind = 0
-                for ring in poly_rings:
-                    m = len(ring)
-                    for i in range(m):
-                        x0, y0 = ring[i]
-                        x1, y1 = ring[(i + 1) % m]
-                        if y0 == y1:
-                            continue
-                        if y0 <= yc < y1 or y1 <= yc < y0:
-                            xc = float(x0) + (yc - y0) * float(x1 - x0) \
-                                / float(y1 - y0)
-                            if cx >= xc:
-                                wind += 1 if y1 > y0 else -1
-                inside = wind != 0 if rule == "nonzero" else wind % 2 != 0
-                if inside:
-                    img[r, c] = 1
-    for gt, parts in features:
-        if gt == G.GEOM_POLYGON:
-            continue
-        elif gt == G.GEOM_LINESTRING:
-            for part in parts:
-                if len(part) == 1:
-                    part = part + part
-                for (x0, y0), (x1, y1) in zip(part, part[1:]):
-                    span = max(abs(x1 - x0), abs(y1 - y0)) / s
-                    n = max(int(np.ceil(span)) + 1, 2)
-                    for k in range(n):
-                        t = k / (n - 1)
-                        xs, ys = x0 + t * (x1 - x0), y0 + t * (y1 - y0)
-                        c, r = int(np.floor(xs / s)), int(np.floor(ys / s))
-                        if 0 <= c < size and 0 <= r < size:
-                            img[r, c] = 1
-        else:
-            for part in parts:
-                for (x, y) in part:
-                    c, r = int(np.floor(x / s)), int(np.floor(y / s))
-                    if 0 <= c < size and 0 <= r < size:
-                        img[r, c] = 1
-    return img
 
 
 # ------------------------------------------------------------ Spark stages

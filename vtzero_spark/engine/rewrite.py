@@ -347,17 +347,6 @@ def _rewrite_batches(batches, layer_sel: str | None, key_b: bytes | None,
                 schema=_TILE_ARROW)
 
 
-def filter_tile_bytes(buf: bytes, key_b: bytes,
-                      val_bs: bytes | list[bytes]) -> bytes:
-    """One tile's vtzero-streets pass: keep features whose tag pairs
-    reference ``key_b`` with ANY of the ``val_bs`` wire values in the
-    layer dictionaries, rebuild, drop empty layers. Malformed input ->
-    empty tile. Thin wrapper over the generalized rewrite_tile_bytes."""
-    if isinstance(val_bs, bytes):
-        val_bs = [val_bs]
-    return rewrite_tile_bytes(buf, None, key_b, list(val_bs))
-
-
 def rewrite_tile_bytes(buf: bytes, layer_sel: str | None,
                        key_b: bytes | None,
                        val_bs: list[bytes] | None) -> bytes:

@@ -36,8 +36,7 @@ from pyspark.sql import DataFrame
 from ..mvt import geometry as G
 from .clip import _flat_parts, _rebuild_parts, _seg_take, _seg_sums
 
-__all__ = ["dp_mask", "simplify_parts_scalar", "simplify_features",
-           "tolerance_for_zoom"]
+__all__ = ["dp_mask", "simplify_features", "tolerance_for_zoom"]
 
 
 def tolerance_for_zoom(z: int, max_zoom: int, base: float = 1.0) -> float:
@@ -107,71 +106,6 @@ def dp_mask(
         S = np.concatenate([S[sp], M])
         E = np.concatenate([M, E[sp]])
     return keep
-
-
-# --------------------------------------------------------- scalar oracle
-
-
-def simplify_parts_scalar(parts, geom_type, tol):
-    """Per-feature reference DP (recursive), the test oracle."""
-    def dp(pts, s, e, keep):
-        if e - s < 2:
-            return
-        ax, ay = pts[s]
-        bx, by = pts[e]
-        dx, dy = bx - ax, by - ay
-        L2 = dx * dx + dy * dy
-        best, bi = -1.0, -1
-        for i in range(s + 1, e):
-            qx, qy = pts[i][0] - ax, pts[i][1] - ay
-            if L2 > 0:
-                c = qx * dy - qy * dx
-                d2 = c * c / L2
-            else:
-                d2 = qx * qx + qy * qy
-            if d2 > best:
-                best, bi = d2, i
-        if best > tol * tol:
-            keep[bi] = True
-            dp(pts, s, bi, keep)
-            dp(pts, bi, e, keep)
-
-    if geom_type == G.GEOM_POINT:
-        return [list(p) for p in parts]
-    out = []
-    for part in parts:
-        pts = [(float(x), float(y)) for x, y in part]
-        m = len(pts)
-        keep = [False] * m
-        keep[0] = keep[m - 1] = True
-        if geom_type == G.GEOM_POLYGON:
-            ax, ay = pts[0]
-            far, best = 1, -1.0
-            for i in range(1, m - 1):
-                d2 = (pts[i][0] - ax) ** 2 + (pts[i][1] - ay) ** 2
-                if d2 > best:
-                    best, far = d2, i
-            keep[far] = True
-            dp(pts, 0, far, keep)
-            dp(pts, far, m - 1, keep)
-        else:
-            dp(pts, 0, m - 1, keep)
-        kept = [p for p, k in zip(part, keep) if k]
-        if geom_type == G.GEOM_POLYGON:
-            if len(kept) - 1 >= 3:
-                out.append([tuple(p) for p in kept])
-        else:
-            if len(kept) >= 2:
-                out.append([tuple(p) for p in kept])
-    if geom_type == G.GEOM_POLYGON:
-        def area2(r):
-            s = 0.0
-            for i in range(len(r) - 1):
-                s += r[i][0] * r[i + 1][1] - r[i + 1][0] * r[i][1]
-            return s
-        if not any(area2(r) > 0 for r in out):
-            return []
-    return out
 
 
 # ---------------------------------------------------------- DataFrame op

@@ -229,19 +229,16 @@ def ivf_train(q: DataFrame, init: np.ndarray, iters: int = 2) -> np.ndarray:
     return C
 
 
-# codebook cache: (plan semantic hash, train params) -> trained
-# centroids. Training is a pure function of the input plan + params, so
-# repeated ivf_topk calls over the same table (the serving pattern — a
-# bench loop, a query service) skip the Lloyd jobs entirely; the entry
-# is ncentroids x dim floats, driver-resident by design.
-#
-# STALENESS CAVEAT: semanticHash() hashes the LOGICAL PLAN, not the
-# data. If the files behind the same path/plan are rewritten, a cached
-# codebook is silently stale — recall degrades with no error. For
-# mutable tables pass ``use_cache=False`` (or an explicit pre-trained
-# codebook), or call ``clear_codebook_cache()`` after a rewrite. Both
-# caches are bounded FIFO (oldest entry evicted) so a long-lived
-# session cannot grow driver memory without limit.
+# codebook caches: (data identity, train params) -> trained centroids.
+# Training is a pure function of the input data + params, so repeated
+# ivf_topk / pq_topk calls over the same table (the serving pattern —
+# a bench loop, a query service) skip the Lloyd jobs entirely; the
+# entry is ncentroids x dim floats, driver-resident by design. The
+# data identity is the logical plan's semantic hash plus (path, size,
+# mtime) of every input file: the plan alone cannot see a rewrite of
+# the files behind the same path. Both caches are bounded FIFO (oldest
+# entry evicted) so a long-lived session cannot grow driver memory
+# without limit.
 _CACHE_MAX_ENTRIES = 16
 _CODEBOOK_CACHE: dict[tuple, np.ndarray] = {}
 
@@ -252,18 +249,20 @@ def _cache_put(cache: dict, key: tuple, val: np.ndarray) -> None:
     cache[key] = val
 
 
-def clear_codebook_cache() -> None:
-    """Drop every cached IVF and PQ codebook. Call after rewriting the
-    data behind a previously-searched table (the caches key on the
-    logical plan, which cannot see file-level rewrites)."""
-    _CODEBOOK_CACHE.clear()
-    _PQ_CACHE.clear()
-
-
-def _codebook_key(emb: DataFrame, n_queries: int, ncentroids: int,
-                  train_iters: int) -> tuple | None:
+def _cache_key(emb: DataFrame, *params) -> tuple | None:
+    """Cache key for a codebook trained on ``emb`` with ``params``:
+    the plan's semantic hash, (path, size, mtime) of each input file,
+    then the params. None (train, do not cache) when either cannot be
+    read."""
     try:
-        return (emb.semanticHash(), n_queries, ncentroids, train_iters)
+        sc = emb.sparkSession.sparkContext
+        conf = sc._jsc.hadoopConfiguration()
+        files = []
+        for uri in sorted(emb.inputFiles()):
+            path = sc._jvm.org.apache.hadoop.fs.Path(uri)
+            st = path.getFileSystem(conf).getFileStatus(path)
+            files.append((uri, st.getLen(), st.getModificationTime()))
+        return (emb.semanticHash(), tuple(files), *params)
     except Exception:
         return None
 
@@ -299,7 +298,6 @@ def ivf_topk(
     nprobe: int = 8,
     train_iters: int = 2,
     codebook: np.ndarray | None = None,
-    use_cache: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k with a TRAINED k-means codebook: Lloyd
     iterations run distributed (ivf_train), every vector is
@@ -309,11 +307,10 @@ def ivf_topk(
 
     The query path is assign -> probe -> refine only: pass a
     pre-trained ``codebook`` (ivf_build), or let the module-level cache
-    key the trained centroids by the input plan's semantic hash —
-    training then runs at most once per (table, params) per session.
-    The plan hash cannot see file-level rewrites behind the same path;
-    pass ``use_cache=False`` (or call clear_codebook_cache) when the
-    underlying data is mutable.
+    key the trained centroids by the input's data identity (plan hash
+    plus input files' path, size and mtime) — training then runs at
+    most once per (data, params) per session, and again after the
+    files behind the table are rewritten.
 
     Scale shape: the candidate scan touches ~nprobe/ncentroids of the
     data; the probe list is broadcast; the inverted lists are just a
@@ -324,8 +321,8 @@ def ivf_topk(
     from .textops import _spread
 
     key = None
-    if codebook is None and use_cache:
-        key = _codebook_key(emb, n_queries, ncentroids, train_iters)
+    if codebook is None:
+        key = _cache_key(emb, n_queries, ncentroids, train_iters)
         if key is not None:
             codebook = _CODEBOOK_CACHE.get(key)
 
@@ -547,7 +544,6 @@ def pq_topk(
     overfetch: int = 8,
     train_iters: int = 2,
     codebooks: np.ndarray | None = None,
-    use_cache: bool = True,
 ) -> DataFrame:
     """PQ-compressed approximate top-k with exact re-rank — the third
     ANN tier (brute force -> IVF -> PQ): the scan reads m-code rows
@@ -560,19 +556,14 @@ def pq_topk(
     ann_topk whenever the true top-k survive the overfetch.
 
     Codebooks: pass pq_train output, or let the module cache key them
-    by the input plan's semantic hash (training runs at most once per
-    table+params per session; ``use_cache=False`` bypasses it for
-    mutable tables — the plan hash cannot see file-level rewrites).
+    by the input's data identity (training runs at most once per
+    data+params per session, as in ivf_topk).
     Compose with IVF by bucketing the codes
     table on the coarse cell — the scan then touches nprobe cells of
     m-code rows, the standard IVF-PQ layout."""
     key = None
-    if codebooks is None and use_cache:
-        try:
-            key = (emb.semanticHash(), "pq", m, ksub, train_iters,
-                   n_queries)
-        except Exception:
-            key = None
+    if codebooks is None:
+        key = _cache_key(emb, "pq", m, ksub, train_iters, n_queries)
         if key is not None:
             codebooks = _PQ_CACHE.get(key)
     if codebooks is None:
@@ -656,7 +647,6 @@ def ivfpq_topk(
     train_iters: int = 2,
     coarse: np.ndarray | None = None,
     codebooks: np.ndarray | None = None,
-    use_cache: bool = True,
 ) -> DataFrame:
     """The full Faiss-style IVF-PQ layout: the coarse IVF codebook
     buckets every vector into a cell (partition/bucket key at scale),
@@ -671,8 +661,7 @@ def ivfpq_topk(
     from .textops import _spread
 
     if coarse is None:
-        ckey = (_codebook_key(emb, n_queries, ncentroids, train_iters)
-                if use_cache else None)
+        ckey = _cache_key(emb, n_queries, ncentroids, train_iters)
         coarse = _CODEBOOK_CACHE.get(ckey) if ckey is not None else None
         if coarse is None:
             coarse = ivf_build(emb, n_queries=n_queries,
@@ -681,13 +670,7 @@ def ivfpq_topk(
             if ckey is not None:
                 _cache_put(_CODEBOOK_CACHE, ckey, coarse)
     if codebooks is None:
-        key = None
-        if use_cache:
-            try:
-                key = (emb.semanticHash(), "pq", m, ksub, train_iters,
-                       n_queries)
-            except Exception:
-                pass
+        key = _cache_key(emb, "pq", m, ksub, train_iters, n_queries)
         codebooks = _PQ_CACHE.get(key) if key is not None else None
         if codebooks is None:
             codebooks = pq_train(emb, m=m, ksub=ksub,

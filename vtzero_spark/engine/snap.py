@@ -28,17 +28,15 @@ builder_impl.hpp:67-71): each segment's bbox is inflated by the snap
 radius and exploded to the flat grid cells it overlaps — any point
 within `radius` of the segment lies inside that inflated bbox, so a
 point only ever probes its OWN cell (proof in snap_points). The
-dimension side is grouped per cell into ONE array-of-structs row, so
-the point side does two integer divs, one broadcast hash-join probe,
-and an array_min — zero shuffles, zero fan-out, inside whole-stage
-codegen. Road networks too large to broadcast (OSM-scale, ~1e9
-segments) take the same plan with a plain shuffle hash join on the
-cell key (broadcast=False); AQE handles hot urban cells.
+segment table ships to every worker as a numpy CSR index (cell ->
+candidates sorted by (road_id, seg)), so the point side does two
+integer divs per point and one vectorized argmin per Arrow batch —
+zero joins, zero shuffles, zero fan-out.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from . import synth
@@ -122,34 +120,9 @@ def _nc(radius: int, cell: int) -> int:
     return (synth.WORLD + radius) // cell + 2
 
 
-def _seg_cells(segs: DataFrame, radius: int, cell: int) -> DataFrame:
-    """Dimension-side prep: explode each segment to every flat-grid
-    cell its radius-inflated bbox overlaps, then pack each cell's
-    candidates into ONE array-of-structs row. Bounded work: O(segments
-    x covering cells); the output is the broadcast/join payload."""
-    # low edge clamped to the world grid (keeps floor == truncation)
-    cx_lo = F.greatest(
-        F.least(F.col("ax"), F.col("bx")) - radius, F.lit(0)) / cell
-    cx_hi = (F.greatest(F.col("ax"), F.col("bx")) + radius) / cell
-    cy_lo = F.greatest(
-        F.least(F.col("ay"), F.col("by")) - radius, F.lit(0)) / cell
-    cy_hi = (F.greatest(F.col("ay"), F.col("by")) + radius) / cell
-    return (
-        segs
-        .withColumn("_cx", F.explode(F.sequence(
-            F.floor(cx_lo), F.floor(cx_hi))))
-        .withColumn("_cy", F.explode(F.sequence(
-            F.floor(cy_lo), F.floor(cy_hi))))
-        .groupBy((F.col("_cx") * _nc(radius, cell) + F.col("_cy"))
-                 .alias("_cell"))
-        .agg(F.collect_list(F.struct(
-            "road_id", "seg", "ax", "ay", "bx", "by")).alias("_segs"))
-    )
-
-
 def _snap_pandas(points: DataFrame, segs: DataFrame,
                  radius: int, cell: int, len2: int) -> DataFrame:
-    """Broadcast-tier fast path: the segment table (a bounded
+    """The snap: the segment table (a bounded
     dimension, same contract as pip_join's broadcast tier) ships to
     every worker as plain numpy arrays; each Arrow batch of points is
     snapped by PER-CELL VECTORIZED argmin — the candidate scan that
@@ -280,8 +253,7 @@ def _snap_pandas(points: DataFrame, segs: DataFrame,
 
 def snap_points(points: DataFrame, segs: DataFrame,
                 radius: int = RADIUS, cell: int | None = None,
-                len2: int = LEN2, broadcast: bool = True,
-                engine: str = "pandas") -> DataFrame:
+                len2: int = LEN2) -> DataFrame:
     """Snap each point to its nearest road segment within `radius`
     (Euclidean, boundary inclusive). Appends (road_id, seg, d2xl,
     sxn, syn) where d2xl = distance^2 * len2 and (sxn/len2, syn/len2)
@@ -299,69 +271,16 @@ def snap_points(points: DataFrame, segs: DataFrame,
     (pinned in tests/test_snap.py; DuckDB twin in snap_points_sql).
 
     Scale shape: the point side NEVER shuffles, replicates, or fans
-    out under either engine. engine='pandas' (default, broadcast
-    tier) is _snap_pandas: numpy candidate index shipped once per
-    worker, per-cell vectorized argmin inside mapInPandas — zero
-    joins, zero exchanges, an order of magnitude faster than the
+    out. _snap_pandas ships the numpy candidate index once per
+    worker and runs a per-cell vectorized argmin inside mapInPandas —
+    zero joins, zero exchanges, an order of magnitude faster than an
     interpreted transform/array_min refine (A/B in BENCH.md session
-    13). engine='sql' is the all-JVM declarative twin: candidate
-    arrays per cell, one broadcast hash-join probe, higher-order-
-    function refine; with broadcast=False it becomes the SHUFFLE-HASH
-    tier for networks too large to broadcast (OSM-scale), the one
-    configuration where the point side pays a shuffle.
+    13).
     """
     cell = radius if cell is None else cell
     if cell < radius:
         raise ValueError("cell must be >= radius (own-cell covering proof)")
-    if engine == "pandas":
-        if not broadcast:
-            raise ValueError("engine='pandas' is the broadcast tier; "
-                             "use engine='sql' with broadcast=False "
-                             "for the shuffle-hash tier")
-        return _snap_pandas(points, segs, radius, cell, len2)
-    if engine != "sql":
-        raise ValueError(f"unknown engine {engine!r}")
-    by_cell = _seg_cells(segs, radius, cell)
-    # broadcast=False pins the shuffle-hash tier (OSM-scale networks);
-    # without the hint Catalyst would auto-broadcast a small dim anyway
-    by_cell = F.broadcast(by_cell) if broadcast else \
-        by_cell.hint("shuffle_hash")
-    pcell = (F.expr(f"wx div {cell}") * _nc(radius, cell)
-             + F.expr(f"wy div {cell}"))
-    j = points.withColumn("_cell", pcell).join(by_cell, "_cell")
-
-    def key(s: Column) -> Column:
-        apx, apy = F.col("wx") - s["ax"], F.col("wy") - s["ay"]
-        abx, aby = s["bx"] - s["ax"], s["by"] - s["ay"]
-        dot = apx * abx + apy * aby
-        tn = F.least(F.greatest(dot, F.lit(0)), F.lit(len2))
-        raw = (apx * apx + apy * apy) * len2 - 2 * tn * dot + tn * tn
-        # the key is only d^2*len2 when |AB|^2 == len2; a ragged
-        # segment would corrupt the ranking SILENTLY, so fail loudly
-        d2xl = F.when(abx * abx + aby * aby == len2, raw).otherwise(
-            F.raise_error(F.format_string(
-                "snap_points: segment (road %s, seg %s) has |AB|^2 != "
-                f"{len2}; densify the network to uniform length first",
-                s["road_id"], s["seg"])).cast("long"))
-        return F.struct(
-            d2xl.alias("d2xl"), s["road_id"].alias("road_id"),
-            s["seg"].alias("seg"),
-            (s["ax"] * len2 + tn * abx).alias("sxn"),
-            (s["ay"] * len2 + tn * aby).alias("syn"))
-
-    best = F.array_min(F.filter(
-        F.transform(F.col("_segs"), key),
-        lambda c: c["d2xl"] <= radius * radius * len2))
-    return (
-        j.withColumn("_best", best)
-        .where(F.col("_best").isNotNull())
-        .withColumn("road_id", F.col("_best.road_id"))
-        .withColumn("seg", F.col("_best.seg"))
-        .withColumn("d2xl", F.col("_best.d2xl"))
-        .withColumn("sxn", F.col("_best.sxn"))
-        .withColumn("syn", F.col("_best.syn"))
-        .drop("_cell", "_segs", "_best")
-    )
+    return _snap_pandas(points, segs, radius, cell, len2)
 
 
 def snap_points_sql(points_cte: str, segs_cte: str = "segs",
@@ -393,15 +312,15 @@ def snap_points_sql(points_cte: str, segs_cte: str = "segs",
 # ------------------------------------------------- composed road usage
 
 def road_usage(points: DataFrame, segs: DataFrame,
-               radius: int = RADIUS, user_col: str = "user_id",
-               **kw) -> DataFrame:
+               radius: int = RADIUS, user_col: str = "user_id"
+               ) -> DataFrame:
     """Road usage rollup: snap every GPS event, then aggregate hits
     and distinct users per road — the map-matched completion of the
     OD flow matrix (trajectory.tile_flows). One map-side-combined
     groupBy on top of the shuffle-free snap; exact-count distinct
     (the hash gate needs exactness; swap approx_count_distinct at
     100 TB the same way tileset_stats' exact=False tier does)."""
-    snapped = snap_points(points, segs, radius=radius, **kw)
+    snapped = snap_points(points, segs, radius=radius)
     return snapped.groupBy("road_id").agg(
         F.count("*").alias("n_hits"),
         F.countDistinct(user_col).alias("n_users"),

@@ -213,7 +213,7 @@ def stream_tile_pipeline(
     """The COMPOSED continuous tile pipeline — file-fed micro-batch
     ingest -> assign -> encode -> lint -> .mvt sink, built from the
     individually stream==batch-tested pieces (stream_encode_tiles,
-    lint_stream, mvt_files.write_mvt_files). This is the job an
+    lint.tile_lint, mvt_files.write_mvt_files). This is the job an
     ingestion-time production user runs; the reference has no streaming
     analog (vtzero is a batch library, SURVEY §2.10).
 
@@ -352,18 +352,6 @@ def exif_ingest_stream(image_stream: DataFrame) -> DataFrame:
     from . import exif
 
     return exif.exif_index(image_stream.select("image_id", "bytes"))
-
-
-def lint_stream(tile_stream: DataFrame) -> DataFrame:
-    """Continuous vtzero-check: lint every tile of a STREAM of
-    (z, x, y, tile_bytes) rows with the same per-tile pass as the
-    batch tile_lint — mapInPandas is stateless, so the operator
-    attaches to a streaming DataFrame unchanged and each micro-batch
-    emits its tiles' finding rows (append mode, no state, no
-    watermark needed)."""
-    from . import lint
-
-    return lint.tile_lint(tile_stream.select("z", "x", "y", "tile_bytes"))
 
 
 def table_batch_sink(table_path: str, query_name: str,

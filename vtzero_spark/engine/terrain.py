@@ -135,44 +135,6 @@ def rtin_mesh(heights: np.ndarray, max_error: int = 0
     return extract_mesh(h2, compute_errors(h2), max_error)
 
 
-def max_deviation_x2(verts: np.ndarray, tris: np.ndarray,
-                     h2: np.ndarray) -> tuple[int, int]:
-    """EXACT max vertical deviation of the mesh surface from the true
-    doubled heights over every grid point each triangle covers,
-    returned as a fraction (num, den): deviation = num/den doubled
-    units. Interpolated values at grid points under COARSE triangles
-    are dyadic rationals, so the comparison is cross-multiplied
-    integer math — no float ever appears (the law the tests pin)."""
-    size = h2.shape[0]
-    best_n, best_d = 0, 1
-    covered = np.zeros((size, size), dtype=bool)
-    for a, b, c in tris:
-        ax, ay, ah = (int(v) for v in verts[a])
-        bx, by, bh = (int(v) for v in verts[b])
-        cx, cy, ch = (int(v) for v in verts[c])
-        x0, x1 = min(ax, bx, cx), max(ax, bx, cx)
-        y0, y1 = min(ay, by, cy), max(ay, by, cy)
-        den = (by - ay) * (cx - ax) - (bx - ax) * (cy - ay)
-        ys, xs = np.mgrid[y0:y1 + 1, x0:x1 + 1]
-        w0 = (by - ay) * (xs - ax) - (bx - ax) * (ys - ay)   # weight c
-        w1 = (ys - ay) * (cx - ax) - (xs - ax) * (cy - ay)   # weight b
-        s = 1 if den > 0 else -1
-        inside = (w0 * s >= 0) & (w1 * s >= 0) \
-            & ((w0 + w1) * s <= den * s)
-        w2 = den - w0 - w1                                    # weight a
-        num = w2 * ah + w1 * bh + w0 * ch
-        dev = np.abs(num[inside] - h2[ys[inside], xs[inside]] * den)
-        covered[ys[inside], xs[inside]] = True
-        if dev.size:
-            k = int(dev.max())
-            # k/|den| vs best_n/best_d, cross-multiplied
-            if k * best_d > best_n * abs(den):
-                best_n, best_d = k, abs(den)
-    if not covered.all():
-        raise ValueError("mesh does not cover the grid")
-    return best_n, best_d
-
-
 # ---------------------------------------------------------- Spark op
 
 MESH_SCHEMA = StructType([

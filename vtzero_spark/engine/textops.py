@@ -724,91 +724,6 @@ def decontaminate(docs: DataFrame, bench_mod: int = 50, n: int = 13,
         (F.coalesce("n_hits", F.lit(0)) > 0).alias("contaminated"))
 
 
-def decontaminate_fuzzy(docs: DataFrame, bench_mod: int = 50,
-                        threshold_x1000: int = 500,
-                        prefix: int = 64) -> DataFrame:
-    """FUZZY benchmark decontamination — the paraphrase tier the exact
-    13-gram probe (``decontaminate``) cannot see: a light rewrite that
-    breaks every 13-char window shares zero exact grams but keeps most
-    of its 3-char shingle set, so its MinHash similarity to the source
-    benchmark doc stays high. A training doc is fuzzy-contaminated if
-    its estimated Jaccard (matching MinHash lanes / 64, the
-    minhash_lsh_pairs estimator) against ANY benchmark doc is >=
-    threshold_x1000 / 1000.
-
-    Plan shape for 100 TB (mirrors ``decontaminate``): the benchmark
-    sketch table is small by definition — its banded (band, bucket,
-    bench_id) index AND its full signatures are BROADCAST. The training
-    side computes signatures once (the same batched kernel as the LSH
-    pipeline, so sketches are byte-identical), explodes 16 thin band
-    rows, and probes the broadcast index with a BroadcastHashJoin — the
-    training side never shuffles for the probe. Only the surviving
-    CANDIDATE rows (a benchmark-sized trickle) shuffle for the
-    per-(doc, bench) dedup before the broadcast signature refine.
-
-    Returns (doc_id, n_bench_matches, max_sim_x1000,
-    fuzzy_contaminated) for every training doc. Banding recall follows
-    the LSH S-curve: at true J=0.65 a pair surfaces with p~0.96, at
-    J=0.5 with p~0.66 — tighten by lowering _N_BANDS rows-per-band if
-    the contamination bar is lower (the GPT-3 discipline pairs the
-    exact tier with a generous fuzzy margin)."""
-    bench = docs.where(F.col("doc_id") % bench_mod == 0)
-    train = docs.where(F.col("doc_id") % bench_mod != 0)
-    rows_per_band = _N_HASH // _N_BANDS
-
-    bsig = minhash_signatures(bench).select(
-        F.col("doc_id").alias("bench_id"), F.col("sig").alias("bsig"))
-    # materialize the (small) benchmark sketch once: it feeds both the
-    # band index and the refine table
-    bsig = bsig.localCheckpoint(eager=True)
-    bbands = bsig.select(
-        "bench_id",
-        F.explode(F.sequence(F.lit(0), F.lit(_N_BANDS - 1))).alias("band"),
-        "bsig",
-    ).select(
-        "bench_id", "band",
-        F.xxhash64(F.col("band"), F.expr(
-            f"slice(bsig, band * {rows_per_band} + 1, {rows_per_band})")
-        ).alias("bucket"),
-    )
-
-    tsig = minhash_signatures(train)
-    tbands = tsig.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(_N_BANDS - 1))).alias("band"),
-        "sig",
-    ).select(
-        "doc_id", "band", "sig",
-        F.xxhash64(F.col("band"), F.expr(
-            f"slice(sig, band * {rows_per_band} + 1, {rows_per_band})")
-        ).alias("bucket"),
-    )
-    # the signature rides THROUGH the broadcast probe (probe side never
-    # shuffles, so the extra width is free until the candidate dedup,
-    # which only moves candidate rows)
-    cand = (
-        tbands.join(F.broadcast(bbands), ["band", "bucket"])
-        .select("doc_id", "bench_id", "sig")
-        .dropDuplicates(["doc_id", "bench_id"])
-    )
-    refined = (
-        cand.join(F.broadcast(bsig), "bench_id")
-        .withColumn("est_x1000", F.expr(
-            "(1000 * size(filter(zip_with(sig, bsig,"
-            " (a, b) -> a = b), m -> m))) div 64"))
-        .where(F.col("est_x1000") >= threshold_x1000)
-    )
-    agg = refined.groupBy("doc_id").agg(
-        F.count("*").alias("n_bench_matches"),
-        F.max("est_x1000").alias("max_sim_x1000"))
-    return train.select("doc_id").join(agg, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_bench_matches", F.lit(0)).alias("n_bench_matches"),
-        F.coalesce("max_sim_x1000", F.lit(0)).alias("max_sim_x1000"),
-        (F.coalesce("n_bench_matches", F.lit(0)) > 0)
-        .alias("fuzzy_contaminated"))
-
-
 def decontaminate_sql(bench_mod: int = 50, n: int = 13,
                       prefix: int = 64) -> str:
     sh = (f"list_distinct([substr(substr(text, 1, {prefix}), "
@@ -925,8 +840,9 @@ def decontaminate_fuzzy_md5(docs: DataFrame, bench_mod: int = 50,
                             min_lanes: int = 4, prefix: int = 64,
                             n: int = 3) -> DataFrame:
     """Fuzzy benchmark decontamination on the md5 basis — the
-    oracle-verifiable twin of ``decontaminate_fuzzy`` (which keeps the
-    xxhash64/16-band production shape).  A training doc is flagged if
+    paraphrase tier the exact 13-gram probe (``decontaminate``) cannot
+    see, verifiable by an independent engine (decontaminate_fuzzy_md5_sql).
+    A training doc is flagged if
     its signature agrees with ANY benchmark doc's on >= ``min_lanes``
     of 8 lanes.  Returns (doc_id, n_bench_matches, max_match_lanes,
     fuzzy_contaminated) for every training doc.

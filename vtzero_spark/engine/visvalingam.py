@@ -114,37 +114,6 @@ def effective_areas(xs, ys, ring: bool = False) -> np.ndarray:
     return eff
 
 
-def vw_keep(xs, ys, tol2: int, ring: bool = False) -> np.ndarray:
-    """The classical one-tolerance form: keep mask at doubled-area
-    tolerance ``tol2`` — by the slicing law, a pure comparison."""
-    return effective_areas(xs, ys, ring=ring) >= tol2
-
-
-def vw_reference(xs, ys, tol2: int, ring: bool = False) -> np.ndarray:
-    """Naive from-the-paper oracle: recompute the global minimum each
-    pass, remove it while it is below tol2 (same index tie-break),
-    stop at the structural floor.  O(n^2) — tests only."""
-    n = len(xs)
-    min_keep = 3 if ring else 2
-    alive = list(range(n))
-    while len(alive) > min_keep:
-        best = None
-        for k, i in enumerate(alive):
-            if i == 0 or (not ring and k == len(alive) - 1):
-                continue
-            p = alive[(k - 1) % len(alive)]
-            q = alive[(k + 1) % len(alive)]
-            a2 = _area2(xs, ys, p, i, q)
-            if best is None or (a2, i) < best[:2]:
-                best = (a2, i, k)
-        if best is None or best[0] >= tol2:
-            break
-        alive.pop(best[2])
-    keep = np.zeros(n, dtype=bool)
-    keep[alive] = True
-    return keep
-
-
 def attach_effective_areas(features):
     """One kernel pass per feature: adds ``eff: array<array<long>>``
     aligned slot-for-slot with ``parts`` (a ring's closing duplicate

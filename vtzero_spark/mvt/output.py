@@ -108,81 +108,6 @@ def format_command_stream(cmds) -> list[str]:
     return out
 
 
-def _fmt_value(vb: bytes, value_types: bool) -> str:
-    from . import values as V
-
-    tag, pv = V.decode_value(bytes(vb))
-    if tag == V.VT_STRING:
-        s = f'"{pv}"'
-    elif tag == V.VT_BOOL:
-        s = "true" if pv else "false"
-    else:
-        s = str(pv)
-    if value_types:
-        s += f" [{property_value_type_name(tag)}]"
-    return s
-
-
-def show_tile(buf: bytes, tables: bool = False,
-              value_types: bool = False) -> str:
-    """vtzero-show (examples/vtzero-show.cpp:124-174): the full
-    human-readable tile dump — layer headers, optional key/value
-    tables, per-feature id / geomtype / decoded geometry
-    (POINT/LINESTRING/RING lines with ring orientation) and
-    properties."""
-    from . import geometry as G
-    from . import tile as T
-    from .errors import MVTError
-
-    out: list[str] = []
-    for layer_num, layer in enumerate(T.parse_tile(bytes(buf))):
-        out.append("=" * 61)
-        out.append(f"layer: {layer_num}")
-        out.append(f"  name: {layer.name}")
-        out.append(f"  version: {layer.version}")
-        out.append(f"  extent: {layer.extent}")
-        if tables:
-            out.append("  keys:")
-            for n, k in enumerate(layer.keys):
-                out.append(f"    {n}: {k.decode('utf-8', errors='surrogateescape')}")
-            out.append("  values:")
-            for n, vb in enumerate(layer.values):
-                out.append(f"    {n}: {_fmt_value(vb, value_types)}")
-        for fnum, f in enumerate(layer.features):
-            out.append(f"  feature: {fnum}")
-            out.append(f"    id: {f.id if f.id is not None else '(none)'}")
-            out.append(f"    geomtype: {geom_type_name(f.geom_type)}")
-            out.append("    geometry:")
-            try:
-                parts, ring_types = G.decode_geometry(
-                    f.geom_type, f.geometry, f.geometry_nbytes)
-                num = 0
-                for pi, part in enumerate(parts):
-                    if f.geom_type == G.GEOM_POINT:
-                        for p in part:
-                            out.append(f"      [{num}] POINT({p[0]},{p[1]})")
-                            num += 1
-                    elif f.geom_type == G.GEOM_LINESTRING:
-                        pts = ",".join(f"{p[0]} {p[1]}" for p in part)
-                        out.append(f"      [{num}] LINESTRING[count={len(part)}]({pts})")
-                        num += 1
-                    else:
-                        pts = ",".join(f"{p[0]} {p[1]}" for p in part)
-                        rt = {G.RING_OUTER: "OUTER", G.RING_INNER: "INNER"}.get(
-                            int(ring_types[pi]) if ring_types is not None
-                            else G.RING_INVALID, "INVALID")
-                        out.append(f"      [{num}] RING[count={len(part)}]"
-                                   f"({pts})[{rt}]")
-                        num += 1
-            except MVTError as e:
-                out.append(f"      <geometry error: {type(e).__name__}: {e}>")
-            out.append("    properties:")
-            for kb, vb in layer.properties(f):
-                k = kb.decode("utf-8", errors="surrogateescape")
-                out.append(f"      {k}={_fmt_value(vb, value_types)}")
-    return "\n".join(out) + ("\n" if out else "")
-
-
 def geom_type_label(col: Column | str) -> Column:
     """Plan-side geom-type label for decoded feature frames (pure
     Catalyst CASE, no UDF)."""

@@ -238,10 +238,6 @@ def varint_field(field: int, value: int) -> bytes:
     return tag_key(field, WT_VARINT) + encode_varint(value)
 
 
-def fixed32_field(field: int, payload4: bytes) -> bytes:
-    return tag_key(field, WT_FIXED32) + payload4
-
-
 def scan_fields(buf: bytes) -> Iterator[tuple[int, int, object]]:
     """Iterate (field, wire_type, value) over a message.
 
