@@ -189,15 +189,14 @@ def q_dict_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("z", "x", "y", "layer_name", "fmt", "value_idx")
 
 
-def _geom_roundtrip(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    """images -> rect/path footprints -> MVT encode -> decode ->
-    vectorized geometry stats, aggregated per layer. Exercises the
-    polygon / linestring builders (builder.hpp:778-1141) and the full
-    decoder (§2.5) end-to-end on the distributed path."""
+def q_polygon_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """images -> rect footprints -> MVT encode -> decode -> vectorized
+    geometry stats, aggregated per layer. Exercises the polygon
+    builder (builder.hpp:778-1141) and the full decoder (§2.5)
+    end-to-end on the distributed path."""
     img = synth.images(spark, sf_dir)
     assigned = tiling.assign_tiles(img, zoom=ZOOM, extent=EXTENT, buffer=0)
-    feats = (geomops.rect_stream_features(assigned) if kind == "rect"
-             else geomops.path_stream_features(assigned))
+    feats = geomops.rect_stream_features(assigned)
     tiles = assemble.encode_geom_tiles(feats)
     stats = geomops.tile_geometry_stats(tiles)
     return stats.where(F.col("decode_status") == "ok").groupBy(
@@ -209,14 +208,6 @@ def _geom_roundtrip(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
         F.sum("sum_y").alias("sum_y"),
         F.sum("area2").alias("area2"),
     )
-
-
-def q_polygon_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _geom_roundtrip(spark, sf_dir, "rect")
-
-
-def q_linestring_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _geom_roundtrip(spark, sf_dir, "path")
 
 
 def q_donut_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -945,18 +936,10 @@ def q_raster_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event sessionization (30-min gap) over the events stream table —
-    batch form of the stateful streaming operator in engine/sessions.py
-    (stream==batch asserted in tests)."""
+    """Event sessionization (30-min gap) over the events table
+    (engine/sessions.py)."""
     ev = synth.load(spark, sf_dir, "events")
     return sessions.sessionize(ev).drop("value_sum")
-
-
-def q_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same sessionization through Catalyst's NATIVE gap-session
-    operator (F.session_window) — same oracle as sessionize."""
-    ev = synth.load(spark, sf_dir, "events")
-    return sessions.sessionize_native(ev).drop("value_sum")
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,18 +1057,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.decontaminate(docs)
 
 
-def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the MinHash-LSH pair graph
-    (distributed min-label propagation with pointer jumping,
-    textops.neardup_components) — exact vs a union-find oracle in
-    tests; rows-only here (the pair graph is sketch-defined)."""
-    docs = synth.load(spark, sf_dir, "documents").select("doc_id", "text")
-    comp = textops.neardup_components(textops.minhash_lsh_pairs(docs))
-    return comp.groupBy("component").agg(
-        F.count("*").alias("n_docs"),
-        F.max("doc_id").alias("max_doc_id"))
-
-
 def q_image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image dedup end to end (engine/imagehash.py): plant
     a JPEG-q75 re-encode of every 10th image, then decode -> 256-bit
@@ -1158,22 +1129,11 @@ def q_dedup_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("doc_id", F.length("text").alias("n_chars"))
 
 
-def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ-compressed ANN (simsearch.pq_topk): ADC scan over m-code
-    rows + exact re-rank of the shortlist — the third ANN tier
-    (recall floor + exact-rerank equality tested, not SQL-expressible)."""
-    return simsearch.pq_topk(synth.load(spark, sf_dir, "embeddings"))
-
-
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed IVF-PQ ANN (simsearch.ivfpq_topk): coarse cells bound
     the scan, PQ codes compress it, exact re-rank restores true
     distances (full-probe == brute force tested)."""
     return simsearch.ivfpq_topk(synth.load(spark, sf_dir, "embeddings"))
-
-
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simsearch.cosine_topk_udf(synth.load(spark, sf_dir, "embeddings"))
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1299,209 +1259,16 @@ def q_tile_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Exactly 50 entries — the driver's correctness harness records at
-    most 50, and round 3 silently dropped the last five (the whole
-    multimodal surface). Five redundant rows-only twins were retired
-    from this dict (their code and pytest coverage remain):
-    pyramid_tiles / pyramid_tiles_hot (chunked-encoder byte parity is
-    covered by polygon_tiles_hot + the oracle-matched pyramid),
-    cosine_topk (float twin of the oracle-matched ann_topk),
-    dedup_neardup (representative anti-join over the same component
-    machinery image_phash_neardup runs end to end; both remain
-    union-find-exact-tested in pytest), and pq_topk (subsumed by
-    ivfpq_topk, which trains and scans the same PQ path). Round 4
-    swapped neardup_clusters (also pytest-exact vs union-find) for
-    image_phash_neardup, which drives those same components through
-    the full perceptual image-dedup pipeline.  Round 5 upgraded the
-    sketch surface from rows-only to ORACLE-BEARING by re-expressing
-    MinHash on the cross-engine md5 basis (Spark md5 == DuckDB md5;
-    lexicographic min over fixed-width hex == numeric min):
-    neardup_md5 and decontaminate_fuzzy replace the rows-only
-    minhash_lsh / simhash_neardup slots — the xxhash64 tiers those
-    slots ran remain golden-pinned in tests/test_scale_sketches.py
-    (minhash_lsh_pairs byte-identical golden, simhash band
-    semantics).
-    Round-5 session 3 swapped sessionize_native (oracle TWIN of the
-    still-present sessionize — same rows, same SQL, Catalyst's
-    F.session_window instead of the pandas-UDF state machine; the
-    native operator stays stream==batch + oracle-tested in pytest)
-    for pip_hex, which puts the new hexagonal cell index under the
-    driver's hash gate: join rows AND the integer cube-rounding cell
-    arithmetic, both reproduced in DuckDB via hexcells.hex_cell_sql.
-    Round-5 session 4 swapped two redundant oracle twins for two NEW
-    oracle-bearing spatial joins: linestring_roundtrip (same decode
-    path and tile grid as the still-present polygon_roundtrip /
-    donut_roundtrip, which pin ring winding AND closing-point
-    re-emission — the linestring case stays oracle-tested in pytest
-    via check_oracles parity and byte round-trips) and dedup_exact
-    (subsumed by the still-present dedup_hashed — the same groupBy
-    dedup on the scalable fixed-width key; the raw-text twin stays in
-    the bench HEADLINE via BENCH_ONLY and in pytest) made room for
-    dwithin (radius join, ST_DWithin analog: 3x3 neighbor-cell
-    broadcast + exact integer d2 refine) and zonal_stats (dense-raster
-    zonal aggregation under polygon zones, pixel-center semantics) —
-    both hash-matched against DuckDB cross-join oracles. The same
-    session retired streets_filter_fused (one of THREE window slots
-    whose oracle SQL is literally identical — streets_filter and
-    streets_filter_decoded remain, and the fused rewrite's byte parity
-    vs the distributed rebuild plus its zero-shuffle plan stay pinned
-    in test_rewrite.py/test_plans.py; bench timing continues via
-    BENCH_ONLY) for overlay — the polygon x polygon intersection-AREA
-    join (overlay.overlay_join), hash-matched against a closed-form
-    DuckDB oracle via the 45-degree rotation. Finally layer_stats
-    (the plan-side twin of mvt_layer_stats — their oracle SQL is the
-    same text; mvt_layer_stats stays and exercises the REAL encoded
-    dictionary path, and a pytest pins the two paths equal) made room
-    for cell_compact — H3 polygonToCellsCompact analog (polyfill +
-    recursive quartet promotion, cells.compact_cells), hash-matched
-    against a chained-CTE DuckDB oracle. And pip_cells (row-identical
-    to the still-present pip by pytest pin test_pip_cells_equals_pip_join;
-    the single-join-key cell strategy stays oracle-checked via pip_hex
-    and exercised by cell_compact/zonal_stats) made room for
-    raster_stencil — the distributed 3x3 halo-exchange convolution
-    over the dense raster band (raster.raster_stencil). Round-5
-    session 5 swapped layer_filter (rows-only tile-byte output whose
-    passthrough byte identity is pytest-pinned across all three
-    encoders in test_layer_passthrough.py, and whose sibling
-    mvt_tiles stays in the window as the tile-byte sink
-    representative; bench timing continues via BENCH_ONLY) for
-    tile_diff — the ORACLE-BEARING tileset version diff
-    (diff.tile_diff vs a DuckDB full-outer-join oracle over the
-    deterministic images_v2 mutation). Round-5 session 6 swapped
-    polygon_roundtrip (subsumed by the still-present donut_roundtrip,
-    which pins BOTH winding classes and the closing-point re-emission
-    on the same encode->decode->stats path; the rectangle case stays
-    byte-round-tripped in test_codec_geometry.py + hypothesis and its
-    HEADLINE timing continues via BENCH_ONLY) for overzoom_counts —
-    the ORACLE-BEARING overzoom (composite.overzoom_tiles, the
-    vtcomposite archive->wire op): children decoded back and
-    hash-matched against pure DuckDB integer math at the child grid,
-    with the stronger byte-identity law pinned in
-    tests/test_composite.py. Round-5 session 7 swapped the remaining
-    two plan-side rollup twins for the two NEW archive-level
-    operators (engine/enrich.py): streets_filter (its oracle SQL is
-    the filtered form of the still-present streets_filter_decoded's —
-    the decoded query proves the same relational answer THROUGH the
-    byte round trip; the plan-side twin stays pytest-pinned equal in
-    test_enrich.py and keeps its HEADLINE timing via BENCH_ONLY) made
-    room for join_attrs — the distributed tile-join, hash-matched
-    against a DuckDB broadcast-join oracle through a full decode ->
-    join -> re-encode -> decode round trip; and tile_counts (a pure
-    rollup of the still-present row-level tile_assign, pinned equal
-    in test_enrich.py; never in the bench suite) made room for
-    tilestats — the mapbox-geostats per-(layer, attribute) summary,
-    hash-matched against a UNION-ALL DuckDB oracle including numeric
-    ranges and distinct-value cardinalities. Round-5 session 8 swapped
-    quality (its scoring expressions run verbatim inside the
-    still-present curation's oracle — curation_pipeline gates its
-    WHERE on quality_score's output, so the expressions stay under
-    the driver hash gate via that slot; the standalone query keeps a
-    DuckDB-parity pin in tests/test_thin.py::test_quality_oracle_pin)
-    for thin_cluster — deterministic per-tile feature thinning with
-    attribute accumulation (engine/thin.py): mass-conserving
-    drop/cluster/accumulate in ONE shuffle, hash-matched against a
-    window-function DuckDB oracle. The same session swapped lang_id
-    (the identical-justification sibling: curation_pipeline joins
-    lang_id's output and gates on pred_lang, so its n-gram scoring
-    expressions stay under the driver hash gate via the still-present
-    curation slot; standalone DuckDB-parity pin kept in
-    tests/test_geojson.py::test_lang_id_oracle_pin) for
-    geojson_roundtrip — the GeoJSON text boundary (engine/geojson.py,
-    the vt2geojson/tippecanoe surface): encode -> decode -> Feature
-    strings -> pure-JVM JSON parse -> vertex rows, hash-matched
-    against closed-form DuckDB integer math with NO JSON on the
-    oracle side. And fingerprint (third sibling of the same
-    justification: curation's output carries the fp column, so the
-    fingerprint expressions stay driver-gated via that slot;
-    standalone pin in tests/test_hilbert.py::test_fingerprint_oracle_pin)
-    made room for hilbert_index — the Hilbert-curve cell ordering
-    (engine/hilbert.py, S2's real ordering / PMTiles' tile-id space),
-    hash-matched against a chained-CTE DuckDB twin of the unrolled
-    rotate-and-accumulate walk. Round-5 session 10 swapped pip (the
-    broadcast twin of the still-present pip_salted — their oracle SQL
-    is literally identical, and test_pip_salted_equals_broadcast /
-    test_pip_two_tier_salting_row_identical pin the two strategies
-    row-identical; pip's HEADLINE timing continues via BENCH_ONLY and
-    its broadcast plan stays asserted in test_plans.py) for
-    exif_tiles — geotagged-image ingest (engine/exif.py): tile
-    assignment recovered from real Exif APP1 / eXIf METADATA BYTES
-    (TIFF IFD walk, GPS DMS rationals, both byte orders), hash-matched
-    against the closed form of the planted metadata. Round-5 session
-    11 swapped ivf_topk (approximate by design, so never
-    oracle-matchable; its recall floor, trained>=untrained ordering
-    and train-once codebook cache stay pytest-pinned in
-    test_streaming_payload.py, and the composed ivfpq_topk — which
-    trains and probes the SAME coarse-quantizer path plus PQ — stays
-    in the window as the ANN-scale representative; ivf_topk's HEADLINE
-    timing continues via BENCH_ONLY) for heatmap — ORACLE-BEARING
-    point-density tiles (engine/heatmap.py): integer-Epanechnikov
-    scatter onto the global pixel grid, per-tile rollup hash-matched
-    against the identical scatter-then-group DuckDB formulation.
-    Round-5 session 12 swapped roundtrip_counts (its decoded
-    coordinate-sum law is pinned by the richer donut_roundtrip /
-    centroid polygon path through the SAME encode->decode->stats
-    machinery, the point-decode path stays in the window via
-    tile_check, and a DuckDB-parity pin remains in
-    tests/test_trajectory.py::test_roundtrip_counts_oracle_pin) for
-    centroid — exact ST_Centroid numerators through the wire format
-    (signed shoelace 6*A*C terms, hole-subtracting, hash-matched
-    against the closed form of the planted donuts); and ngram_jaccard
-    (the exact-Jaccard law stays as the MinHash recall baseline in
-    tests/test_scale_sketches.py plus a DuckDB-parity pin in
-    tests/test_trajectory.py::test_ngram_jaccard_oracle_pin; its
-    HEADLINE timing continues via BENCH_ONLY) for trajectory — the
-    ST_MakeLine/track-statistics surface (engine/trajectory.py):
-    per-user time-ordered leg walk reduced to exact-int64 path
-    length / bbox / longest-leg / net-displacement metrics,
-    hash-matched against the identical DuckDB window formulation.
-    The same session swapped dedup_hashed (rows pytest-pinned equal
-    to the raw-text dedup groups in test_scale_sketches.py:109, the
-    keep-first dedup law stays driver-gated inside curation's oracle,
-    and the fixed-width-key plan shape stays asserted in
-    test_plans.py; timing continues via BENCH_ONLY) for hull — the
-    distributed ST_ConvexHull aggregate (engine/hull.py):
-    partition-local partial hulls + one per-group reduction
-    (map-side combine), hash-matched against a pure-SQL
-    maximal-edge hull oracle (vertex count, vertex sums, exact
-    shoelace area).  Round-5 session 13 swapped two thin twins for
-    the map-matching pair (engine/snap.py): feature_lookup (min-id
-    per layer — a strict subset of the still-present layer_lookup,
-    which pins first_feature_id THROUGH the codec; the retired query
-    keeps its exact DuckDB gate in tests/test_snap.py) -> snap_points,
-    and tile_check (extent/warning-band classification — subsumed by
-    the composed tile_lint rule table, which oracle-checks the same
-    band plus four more finding classes; same pytest gate kept) ->
-    road_usage. Round-5 session 16 swapped heatmap for contour —
-    marching-squares isolines over the SAME density field: contour's
-    oracle textually composes heatmap_tiles_sql's hm_pixels scatter
-    CTEs, so the kernel-scatter law STAYS under the driver hash gate
-    through this slot; only the per-tile rollup tail (hm_tiles)
-    leaves the window, and it keeps its own DuckDB-parity pin in
-    tests/test_heatmap.py::test_duckdb_twin_matches plus its HEADLINE
-    timing via BENCH_ONLY. The contour slot additionally gates the
-    2x2 cell pivot, the saddle center rule and the integer edge
-    interpolation (tests/test_contour.py pins all three tiers
-    row-identical, so the fused 'direct' scale tier is what runs).
-    Round-5 session 17 swapped dwithin for dbscan — exact distributed
-    density clustering (engine/dbscan.py), hash-matched against a
-    DuckDB recursive-CTE transitive-closure oracle. The retired slot's
-    law stays driver-gated: dbscan's neighbor stage IS the dwithin
-    radius join run as a SELF-join (same 3x3 cell cull, same exact
-    integer d2 refine — the oracle's nbr CTE is the same cross-join
-    text), and dwithin keeps a direct DuckDB-parity pin in
-    tests/test_dwithin_zonal.py::test_dwithin_oracle_pin plus its
-    brute-force/broadcast-plan pytest gates and its HEADLINE timing
-    via BENCH_ONLY. Round-5 session 19 swapped token_stats for
-    supercluster — hierarchical greedy map clustering
-    (engine/supercluster.py), hash-matched against a DuckDB
-    recursive-CTE wavefront oracle. token_stats is the FOURTH sibling
-    of the quality/lang_id/fingerprint retirements: its whitespace
-    token count and length expressions run verbatim inside curation's
-    oracle (the quality CTE), so the core law stays driver-gated via
-    the still-present curation slot; the standalone query keeps a
-    direct DuckDB-parity pin in
-    tests/test_supercluster.py::test_token_stats_oracle_pin and its
-    HEADLINE timing via BENCH_ONLY."""
+    """The query registry: exactly 50 entries, because the
+    correctness harness that runs it records at most 50 and silently
+    drops the rest. Each slot is an operator the product runs; 41
+    carry a DuckDB oracle in oracle_sql(), the rows-only tail (codec
+    bytes, sketches, approximate ANN, media payloads) is checked in
+    tests/. A q_*
+    function outside the registry is kept because bench.py times it
+    or a test pins its oracle SQL against DuckDB; q_pyramid_tiles,
+    q_pyramid_tiles_hot and q_dedup_neardup are the exceptions, kept
+    until the tests of the engine defs only they call are retargeted."""
     return {
         "tile_assign": q_tile_assign,
         "tilestats": q_tilestats,

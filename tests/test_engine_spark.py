@@ -285,23 +285,6 @@ def test_ann_topk_self_consistency(spark, sf_dir):
         assert qid not in set(grp["vec_id"])  # self excluded
 
 
-def test_cosine_topk_matches_numpy(spark, sf_dir):
-    emb = synth.load(spark, sf_dir, "embeddings")
-    out = simsearch.cosine_topk_udf(emb, n_queries=2, k=3).toPandas()
-    pdf = emb.toPandas()
-    mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-    ids = pdf["vec_id"].to_numpy()
-    norm = np.linalg.norm(mat, axis=1)
-    for qid in (0, 1):
-        qv = mat[ids == qid][0]
-        cos = mat @ qv / (norm * np.linalg.norm(qv))
-        mask = ids != qid
-        order = np.lexsort((ids[mask], -cos[mask]))[:3]
-        want = list(ids[mask][order])
-        sub = out[out["qid"] == qid].sort_values("rank")
-        assert list(sub["vec_id"]) == want
-
-
 def test_pyramid_rollup_consistency(spark, sf_dir):
     """Every pyramid level partitions the full image set; each parent
     tile's count equals the sum of its four children."""

@@ -3,11 +3,9 @@ shard/merge discipline, parallel ranged reads.
 """
 
 import gzip
-import os
 import sqlite3
 
 import pytest
-from pyspark.sql import functions as F
 
 from vtzero_spark.engine import assemble, geomops, mbtiles, synth, tiling
 
@@ -168,68 +166,3 @@ def test_archive_job_emits_consistent_artifacts(spark, sf_dir, tmp_path):
         == meta["vector_layers"]
     assert _pm.read_pmtiles_metadata(
         out + "/tileset.pmtiles")["vector_layers"] == meta["vector_layers"]
-
-
-def test_stream_mbtiles_shards_equals_batch(spark, sf_dir, tmp_path):
-    """Streaming MBTiles production: two micro-batches of tiles land
-    as two shard directories, the accumulated tree reads back through
-    the shard-routing source EQUAL to the batch archive of the same
-    tiles, and a foreachBatch replay (same batch dir) converges
-    instead of duplicating."""
-    from vtzero_spark.engine import streaming
-
-    tiles = _tiles(spark, sf_dir).select("z", "x", "y", "tile_bytes")
-    rows = tiles.collect()
-    half = len(rows) // 2
-    schema = mbtiles.TILES_SCHEMA
-    src = str(tmp_path / "in")
-    spark.createDataFrame(rows[:half], schema).coalesce(1) \
-        .write.parquet(src + "/f1")
-    spark.createDataFrame(rows[half:], schema).coalesce(1) \
-        .write.parquet(src + "/f2")
-
-    out = str(tmp_path / "shards")
-    sdf = spark.readStream.schema(
-        spark.read.parquet(src + "/*").schema
-    ).option("maxFilesPerTrigger", 1).parquet(src + "/*")
-    q = streaming.stream_mbtiles_shards(sdf, out, str(tmp_path / "ck"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    batch_dirs = sorted(os.listdir(out))
-    assert len(batch_dirs) == 2 and all(
-        d.startswith("batch=") for d in batch_dirs)
-    got = {}
-    for d in batch_dirs:
-        for r in mbtiles.read_mbtiles(spark, f"{out}/{d}").collect():
-            got[(r.z, r.x, r.y)] = bytes(r.tile_bytes)
-    want = {(r.z, r.x, r.y): bytes(r.tile_bytes) for r in rows}
-    assert got == want
-
-    # replay convergence: re-running a batch id replaces its dir and
-    # the served CONTENT is unchanged (shard count may differ with
-    # partitioning; addresses and bytes may not)
-    before = {(r.z, r.x, r.y): bytes(r.tile_bytes)
-              for r in mbtiles.read_mbtiles(spark, f"{out}/batch=0")
-              .collect()}
-    bdf = spark.createDataFrame(rows[:half], schema)
-    import shutil as _sh
-    _sh.rmtree(f"{out}/batch=0")
-    mbtiles.write_mbtiles_shards(
-        bdf.select("z", "x", "y", "tile_bytes"),
-        f"{out}/batch=0").collect()
-    after = {(r.z, r.x, r.y): bytes(r.tile_bytes)
-             for r in mbtiles.read_mbtiles(spark, f"{out}/batch=0")
-             .collect()}
-    assert after == before
-    # and the merged single-file archive equals the batch writer's
-    shards = sorted(
-        f"{out}/{d}/{f}" for d in sorted(os.listdir(out))
-        for f in os.listdir(f"{out}/{d}"))
-    merged = str(tmp_path / "merged.mbtiles")
-    mbtiles.merge_mbtiles(shards, merged, {"name": "s", "format": "pbf"})
-    back = {(r.z, r.x, r.y): bytes(r.tile_bytes)
-            for r in mbtiles.read_mbtiles(spark, merged).collect()}
-    assert back == want

@@ -1,18 +1,21 @@
-"""Every top-level def in vtzero_spark/ has a product caller.
+"""Every top-level def and module-level constant in vtzero_spark/ has
+a product caller.
 
-A source scan, no Spark. A def is used when its name appears as an
-identifier (an ast.Name or an ast.Attribute) in the product:
+A source scan, no Spark. A def (function or class) or a constant (a
+name bound by a top-level assignment) is used when its name appears as
+an identifier (an ast.Name or an ast.Attribute) in the product:
 vtzero_spark/, __spark_entry__.py, bench*.py, perfbench/ or tools/,
-outside the def's own statement. Strings, comments, docstrings and
-``__all__`` lists are not identifiers, so a mention there is not a use.
-A test is not a caller: a reference the tests compare against lives
-under tests/ (scalar_reference.py).
+outside the statement that defines it. Strings, comments, docstrings
+and ``__all__`` lists are not identifiers, so a mention there is not a
+use. A test is not a caller: a reference the tests compare against
+lives under tests/ (scalar_reference.py).
 
-Exempt: DuckDB twins (``*_sql``), which are the oracles, and ALLOWED,
-each entry with its category:
+Exempt: dunders, DuckDB twins (``*_sql`` functions and ``*_SQL``
+strings), which are the oracles, and ALLOWED, each entry with its
+category:
 
 - (a) the only path for input the production path rejects
-- (b) a vtzero public function the codec mirrors, cited by header:line
+- (b) a vtzero public name the codec mirrors, cited by header:line
 - (c) the client reader of an archive format the engine writes
 
 PENDING lists the engine defs that only tests still call, each with
@@ -47,6 +50,10 @@ ALLOWED = {
     "geom_type_name": ("b", "geom_type_name, types.hpp:62-67"),
     "property_value_type_name": (
         "b", "property_value_type_name, types.hpp:83-88"),
+    "GEOM_UNKNOWN": ("b", "GeomType::UNKNOWN, types.hpp:52-57"),
+    "MAX_POINTS": (
+        "b", "the builder's 0 < count < 2^29 point bound, "
+        "builder.hpp:377-381"),
     "get_tile": (
         "c", "one-tile client lookup in the PMTiles archive "
         "pmtiles.write_pmtiles writes"),
@@ -62,25 +69,6 @@ ALLOWED = {
 }
 
 PENDING = {
-    # streaming twins of batch operators; no tool or query starts them
-    "geofence_stream": ("test_geofence",),
-    "sessionize_stream": ("test_regressions", "test_streaming_payload"),
-    "sessionize_stream_native": ("test_streaming_payload",),
-    "append_table_stream": ("test_table",),
-    "dedup_stream": ("test_streaming_payload",),
-    "exif_ingest_stream": ("test_streaming_payload",),
-    "image_neardup_band_stream": ("test_streaming_payload",),
-    "neardup_band_stream": ("test_streaming_payload",),
-    "neardup_first_owners": ("test_streaming_payload",),
-    "stream_encode_tiles": ("test_streaming_payload",),
-    "stream_mbtiles_shards": ("test_mbtiles",),
-    "tile_stream_counts": ("test_streaming_payload",),
-    "transform_stream": ("test_transform_job",),
-    "verify_payload_stream": ("test_streaming_payload",),
-    "with_event_time": ("test_streaming_payload",),
-    "flow_legs_stream": ("test_trajectory",),
-    "track_stats_stream": ("test_trajectory",),
-    "track_stops_stream": ("test_trajectory",),
     # operators and helpers no query, bench leaf or tool calls
     "select_layer": ("test_layer_passthrough",),
     "read_bucketed": ("test_bucketed",),
@@ -93,8 +81,6 @@ PENDING = {
     "tile_diff_summary": ("test_diff",),
     "dissolve_tiles": ("test_dissolve",),
     "oriented_phash": ("test_exif",),
-    "device_positions": ("test_geofence",),
-    "geofence_transitions": ("test_geofence",),
     "geohash_col": ("test_geohash",),
     "geohash_decode": ("test_geohash",),
     "to_features": ("test_geojson", "test_polylabel"),
@@ -145,30 +131,47 @@ def _identifiers(node: ast.AST) -> set[str]:
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
+def _defined(stmt: ast.stmt) -> list[str]:
+    """Names a top-level statement defines: a def's name, or the names
+    an assignment binds (dunders excluded)."""
+    if isinstance(stmt, _DEF):
+        return [stmt.name]
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+            and not (n.id.startswith("__") and n.id.endswith("__"))]
+
+
 def _unused_defs(files, package: Path = PACKAGE,
                  root: Path = ROOT) -> dict[str, str]:
-    """Top-level defs of ``package``'s files that no statement of
-    ``files`` other than their own def names as an identifier:
-    name -> path:line."""
-    defs: dict[tuple[Path, str], int] = {}
+    """Top-level defs and constants of ``package``'s files that no
+    statement of ``files`` other than the one defining them names as
+    an identifier: name -> path:line."""
+    defs: dict[tuple[Path, str], tuple[int, tuple]] = {}
     users: dict[str, set] = {}
     for path in files:
         tree = ast.parse(path.read_text(), str(path))
-        for stmt in tree.body:
-            own = (path, stmt.name) if isinstance(stmt, _DEF) else None
-            if own and path.is_relative_to(package):
-                defs[own] = stmt.lineno
+        for i, stmt in enumerate(tree.body):
+            own = (path, i)
+            if path.is_relative_to(package):
+                for name in _defined(stmt):
+                    defs[(path, name)] = (stmt.lineno, own)
             for name in _identifiers(stmt):
                 users.setdefault(name, set()).add(own)
     return {name: f"{path.relative_to(root)}:{line}"
-            for (path, name), line in defs.items()
-            if not users.get(name, set()) - {(path, name)}}
+            for (path, name), (line, own) in defs.items()
+            if not users.get(name, set()) - {own}}
 
 
 def test_every_engine_def_has_a_product_caller():
     unused = _unused_defs(list(_product_files()))
     flagged = {n: at for n, at in unused.items()
-               if not n.endswith("_sql") and n not in ALLOWED
+               if not n.endswith(("_sql", "_SQL")) and n not in ALLOWED
                and n not in PENDING}
     assert flagged == {}, (
         "no product caller: delete these defs (with the tests that "
@@ -195,11 +198,14 @@ def test_scan_sees_identifiers_not_text(tmp_path):
     """Only identifier uses count: a mention in a string, a docstring,
     a comment or __all__ leaves a def unused, and so does a call from
     inside its own body; a call or attribute access elsewhere uses
-    it."""
+    it. A module-level constant is a def too: unused until another
+    statement reads it; dunders are not scanned."""
     pkg = tmp_path / "vtzero_spark"
     pkg.mkdir()
     (pkg / "m.py").write_text(
         '__all__ = ["only_named", "recursive", "called", "attr"]\n'
+        "UNREAD, READ = 1, 2\n"
+        "LIMIT: int = UNREAD\n"
         "def only_named():\n"
         '    """called attr"""\n'
         "    # recursive()\n"
@@ -214,6 +220,6 @@ def test_scan_sees_identifiers_not_text(tmp_path):
         "from . import m\n"
         "X = m.attr\n"
         "def f():\n"
-        "    return called()\n")
+        "    return called() + m.READ\n")
     unused = _unused_defs(sorted(pkg.glob("*.py")), pkg, tmp_path)
-    assert set(unused) == {"only_named", "recursive", "f"}
+    assert set(unused) == {"only_named", "recursive", "f", "X", "LIMIT"}

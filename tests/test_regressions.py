@@ -3,11 +3,11 @@
 1. geometry_stats must not crash on null feature_id (feature id is
    optional in the MVT spec / vtzero feature.hpp has_id()) — the
    vectorized fast path used to astype(int64) and TypeError on NaN.
-2. sessionize_stream must sort a user's events ACROSS Arrow chunks,
-   not per-chunk, or sessions split wrongly when a user spans batches.
-3. The batch tile encoder (assemble._encode_chunk) must not
+2. The batch tile encoder (assemble._encode_chunk) must not
    IndexError when the trailing feature(s) of a layer carry empty
    geometry (an old reduceat offset == len).
+3. sessionize splits sessions on a gap strictly greater than the
+   limit, measured on whole seconds, as its DuckDB oracle does.
 """
 
 from __future__ import annotations
@@ -16,8 +16,6 @@ import datetime
 
 import numpy as np
 import pandas as pd
-
-from pyspark.sql import functions as F
 
 from vtzero_spark.engine import assemble, geomops
 from vtzero_spark.mvt import geometry as G
@@ -46,84 +44,6 @@ def test_geometry_stats_null_feature_id(spark):
     out2 = geomops.geometry_stats(feats2).toPandas()
     assert len(out2) == 7
     assert out2["feature_id"].notna().sum() == 1
-
-
-def test_sessionize_stream_sorts_across_chunks(spark, tmp_path):
-    """One user, events interleaved between two far-apart time clusters
-    in FILE order, forced through tiny Arrow batches: only a global
-    (concat-then-sort) pass yields the correct 2-session split."""
-    from vtzero_spark.engine import sessions
-
-    base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
-    rows = []
-    eid = 0
-    # interleave: cluster A at +0..+19 min, cluster B at +600..+619 min
-    for i in range(20):
-        rows.append((1, eid, base + datetime.timedelta(minutes=i), 1.0))
-        eid += 1
-        rows.append((1, eid, base + datetime.timedelta(minutes=600 + i), 1.0))
-        eid += 1
-    pdf = pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "value"])
-    events = spark.createDataFrame(pdf)
-    src = str(tmp_path / "ev_in")
-    events.coalesce(1).write.parquet(src)
-
-    batch = sessions.sessionize(spark.read.parquet(src)).toPandas()
-    assert len(batch) == 2  # two clusters -> two sessions
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-    try:
-        sdf = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
-        q = (sessions.sessionize_stream(sdf)
-             .writeStream.format("memory").queryName("regr_sessions")
-             .outputMode("append").start())
-        try:
-            q.processAllAvailable()
-            got = spark.table("regr_sessions").toPandas()
-        finally:
-            q.stop()
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    # exactly the closed (first) session, with all 20 cluster-A events
-    assert len(got) == 1
-    assert int(got["n_events"].iloc[0]) == 20
-    want = batch[batch["session_id"] == 0].iloc[0]
-    assert int(got["first_ts"].iloc[0]) == int(want["first_ts"])
-    assert int(got["last_ts"].iloc[0]) == int(want["last_ts"])
-
-
-def test_sessionize_native_gap_boundary(spark):
-    """Pin the session_window boundary semantics against the analytic
-    form: an event exactly gap seconds after the previous one stays in
-    the session (split on strictly >), including with fractional
-    sub-second timestamps."""
-    from vtzero_spark.engine import sessions
-
-    base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
-    rows = [
-        (1, 0, base, 1.0),
-        (1, 1, base + datetime.timedelta(seconds=1800), 1.0),   # same
-        (1, 2, base + datetime.timedelta(seconds=3601), 1.0),   # new
-        # fractional: tsec diff is 1801 (split) though raw diff < 1801
-        (2, 3, base + datetime.timedelta(seconds=0, milliseconds=900), 1.0),
-        (2, 4, base + datetime.timedelta(seconds=1801, milliseconds=100), 1.0),
-    ]
-    ev = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "value"]))
-    a = sessions.sessionize(ev).orderBy("user_id", "session_id").toPandas()
-    b = sessions.sessionize_native(ev).orderBy("user_id", "session_id").toPandas()
-    assert a[["user_id", "session_id", "n_events", "first_ts", "last_ts"]] \
-        .equals(b[["user_id", "session_id", "n_events", "first_ts", "last_ts"]])
-    u1 = a[a.user_id == 1]
-    assert u1["n_events"].tolist() == [2, 1]
-    u2 = a[a.user_id == 2]
-    assert u2["n_events"].tolist() == [1, 1]
 
 
 def test_geomstream_trailing_empty_geometry():
@@ -164,3 +84,37 @@ def test_geomstream_trailing_empty_geometry():
     # all-empty layer also survives (geometry values fully empty)
     lb2, nf2 = layer([[]])
     assert nf2 == 1
+
+
+def test_sessionize_gap_boundary(spark):
+    """An event exactly gap seconds after the previous one stays in the
+    session (split on strictly >), and fractional sub-second
+    timestamps compare by their floored seconds; the DuckDB oracle
+    (sessionize_sql) returns the same rows."""
+    import duckdb
+
+    from vtzero_spark.engine import sessions
+
+    base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    rows = [
+        (1, 0, base, 1.0),
+        (1, 1, base + datetime.timedelta(seconds=1800), 1.0),   # same
+        (1, 2, base + datetime.timedelta(seconds=3601), 1.0),   # new
+        # fractional: tsec diff is 1801 (split) though raw diff < 1801
+        (2, 3, base + datetime.timedelta(seconds=0, milliseconds=900), 1.0),
+        (2, 4, base + datetime.timedelta(seconds=1801, milliseconds=100), 1.0),
+    ]
+    pdf = pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "value"])
+    a = sessions.sessionize(spark.createDataFrame(pdf)) \
+        .orderBy("user_id", "session_id").toPandas()
+    con = duckdb.connect()
+    con.register("events", pdf)
+    b = con.execute(sessions.sessionize_sql()).df() \
+        .sort_values(["user_id", "session_id"]).reset_index(drop=True)
+    cols = ["user_id", "session_id", "n_events", "first_ts", "last_ts",
+            "value_cents"]
+    pd.testing.assert_frame_equal(a[cols], b[cols], check_dtype=False)
+    u1 = a[a.user_id == 1]
+    assert u1["n_events"].tolist() == [2, 1]
+    u2 = a[a.user_id == 2]
+    assert u2["n_events"].tolist() == [1, 1]

@@ -5,7 +5,6 @@ the storage layer under the image+caption pipeline."""
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 
@@ -291,59 +290,6 @@ def test_rewrite_fences_incremental_and_conflicts(spark, tmp_path):
     with pytest.raises(CommitConflict, match="concurrent rewrite"):
         t._commit([], "delete",  replace=False,
                   removed_paths={e["path"] for e in doomed})
-
-
-def test_streaming_ingest_exactly_once(spark, tmp_path):
-    """Streaming sink into the table: each micro-batch is one atomic
-    commit stamped with its batch id; a replayed batch (at-least-once
-    foreachBatch) is skipped, so restarts converge instead of
-    double-appending."""
-    from vtzero_spark.engine import streaming as st
-    from vtzero_spark.engine.table import SnapshotTable
-
-    src = tmp_path / "src"
-    tbl, ckpt = str(tmp_path / "tbl"), str(tmp_path / "ckpt")
-    spark.range(0, 10).write.mode("append").parquet(str(src))
-
-    def run():
-        sdf = spark.readStream.schema("id long").parquet(str(src))
-        q = st.append_table_stream(sdf, tbl, ckpt, "ingest",
-                                   stats_cols=["id"])
-        q.awaitTermination()
-
-    run()
-    t = SnapshotTable(tbl)
-    assert t.read(spark).count() == 10
-    v1 = t.current_version()
-    assert t.snapshot()["props"]["stream_query"] == "ingest"
-    assert all("stats" in e for e in t.snapshot()["files"])
-
-    # second drain picks up only the new files (source checkpoint)
-    spark.range(10, 15).write.mode("append").parquet(str(src))
-    run()
-    assert sorted(r["id"] for r in t.read(spark).collect()) \
-        == list(range(15))
-    # the committed delta is exactly what an incremental consumer sees
-    inc = t.read_incremental(spark, v1)
-    assert sorted(r["id"] for r in inc.collect()) == list(range(10, 15))
-
-    # sink-side replay of an already-committed batch: no-op
-    sink = st.table_batch_sink(tbl, "ingest", stats_cols=["id"])
-    last = t.last_stream_batch("ingest")
-    assert last is not None
-    head = t.current_version()
-    sink(spark.range(10, 15), last)
-    assert t.current_version() == head
-    assert t.read(spark).count() == 15
-
-    # empty micro-batch: skipped without a commit
-    sink(spark.range(0, 0), last + 100)
-    assert t.current_version() == head
-
-    # a genuinely new batch id commits and advances the marker
-    sink(spark.range(15, 18), last + 1)
-    assert t.read(spark).count() == 18
-    assert t.last_stream_batch("ingest") == last + 1
 
 
 def test_image_caption_table_end_to_end(spark, sf_dir, tmp_path):

@@ -284,161 +284,6 @@ def test_tile_flows_planted(spark):
                                   check_dtype=False)
 
 
-def test_track_stats_stream_matches_batch(spark, sf_dir, tmp_path):
-    """The streaming twin folds each micro-batch into per-user state
-    via the chunk-merge monoid; after a TWO-batch time-ordered feed
-    (maxFilesPerTrigger=1) the latest update per user equals batch
-    track_stats exactly — stitching legs across the batch boundary
-    included."""
-    import os
-
-    pts = trajectory.event_points(synth.load(spark, sf_dir, "events"))
-    want = trajectory.track_stats(pts).toPandas() \
-        .sort_values("user_id").reset_index(drop=True)
-
-    med = pts.approxQuantile("event_id", [0.5], 0.0)[0]
-    src = str(tmp_path / "pts_in")
-    os.makedirs(src)
-    pts.where(F.col("event_id") <= med).coalesce(1) \
-        .write.parquet(src + "/h1")
-    pts.where(F.col("event_id") > med).coalesce(1) \
-        .write.parquet(src + "/h2")
-    # one file per half, time-ordered arrival (event_id increases
-    # with ts in the synthetic stream, so half 1 precedes half 2)
-    files = []
-    for half in ("h1", "h2"):
-        for f in os.listdir(f"{src}/{half}"):
-            if f.endswith(".parquet"):
-                files.append(f"{src}/{half}/{f}")
-    assert len(files) == 2
-    now = 1_700_000_000
-    for i, f in enumerate(files):
-        os.utime(f, (now + i * 10, now + i * 10))
-
-    schema = spark.read.parquet(files[0]).schema
-    sdf = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1)
-           .option("latestFirst", "false")
-           .parquet(src + "/*"))
-    q = (trajectory.track_stats_stream(sdf)
-         .writeStream.format("memory").queryName("tracks_out")
-         .outputMode("update").start())
-    try:
-        q.processAllAvailable()
-        got = spark.table("tracks_out").toPandas()
-    finally:
-        q.stop()
-    # latest update per user = the row with the largest n_points
-    got = got.sort_values(["user_id", "n_points"]) \
-        .groupby("user_id").tail(1) \
-        .sort_values("user_id").reset_index(drop=True)
-    cols = list(want.columns)
-    pd.testing.assert_frame_equal(want[cols], got[cols],
-                                  check_dtype=False)
-
-
-def test_track_stops_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Closed streaming stops == batch track_stops minus each user's
-    OPEN run (the one holding the user's last point), over a forced
-    two-batch time-ordered feed — run ids matching the batch cumsum
-    exactly."""
-    import os
-
-    r2, dur = 1_500_000, 600
-    pts = trajectory.event_points(synth.load(spark, sf_dir, "events"))
-    batch = trajectory.track_stops(pts, r2=r2, min_duration_s=dur) \
-        .toPandas()
-    # drop the open run: the qualifying run that contains the user's
-    # final point (last_ts == the user's max event second)
-    last = pts.groupBy("user_id").agg(
-        F.max(F.unix_timestamp("ts")).alias("max_ts")).toPandas() \
-        .set_index("user_id")["max_ts"]
-    want = batch[batch.apply(
-        lambda r: r["last_ts"] != last[r["user_id"]], axis=1)] \
-        .sort_values(["user_id", "run_id"]).reset_index(drop=True)
-
-    med = pts.approxQuantile("event_id", [0.5], 0.0)[0]
-    src = str(tmp_path / "stops_in")
-    os.makedirs(src)
-    pts.where(F.col("event_id") <= med).coalesce(1) \
-        .write.parquet(src + "/h1")
-    pts.where(F.col("event_id") > med).coalesce(1) \
-        .write.parquet(src + "/h2")
-    files = [f"{src}/{h}/{f}" for h in ("h1", "h2")
-             for f in os.listdir(f"{src}/{h}") if f.endswith(".parquet")]
-    assert len(files) == 2
-    now = 1_700_000_000
-    for i, f in enumerate(files):
-        os.utime(f, (now + i * 10, now + i * 10))
-
-    schema = spark.read.parquet(files[0]).schema
-    sdf = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1)
-           .option("latestFirst", "false")
-           .parquet(src + "/*"))
-    q = (trajectory.track_stops_stream(sdf, r2=r2, min_duration_s=dur)
-         .writeStream.format("memory").queryName("stops_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        got = spark.table("stops_out").toPandas() \
-            .sort_values(["user_id", "run_id"]).reset_index(drop=True)
-    finally:
-        q.stop()
-    cols = ["user_id", "run_id", "n_points", "first_ts", "last_ts",
-            "sum_x", "sum_y"]
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(want[cols], got[cols],
-                                  check_dtype=False)
-
-
-def test_flow_legs_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Streaming flow legs over a forced two-batch time-ordered feed
-    reproduce batch tile_flows exactly (n_legs AND n_users), stitch
-    legs across the batch boundary included."""
-    import os
-
-    pts = trajectory.event_points(synth.load(spark, sf_dir, "events"))
-    want = trajectory.tile_flows(pts).toPandas() \
-        .sort_values(["fx", "fy", "tx", "ty"]).reset_index(drop=True)
-
-    med = pts.approxQuantile("event_id", [0.5], 0.0)[0]
-    src = str(tmp_path / "flows_in")
-    os.makedirs(src)
-    pts.where(F.col("event_id") <= med).coalesce(1) \
-        .write.parquet(src + "/h1")
-    pts.where(F.col("event_id") > med).coalesce(1) \
-        .write.parquet(src + "/h2")
-    files = sorted(
-        f"{src}/{h}/{f}" for h in ("h1", "h2")
-        for f in os.listdir(f"{src}/{h}") if f.endswith(".parquet"))
-    assert len(files) == 2
-    now = 1_700_000_000
-    for i, f in enumerate(sorted(files, key=lambda p: "h2" in p)):
-        os.utime(f, (now + i * 10, now + i * 10))
-
-    schema = spark.read.parquet(files[0]).schema
-    sdf = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1)
-           .option("latestFirst", "false")
-           .parquet(src + "/*"))
-    q = (trajectory.flow_legs_stream(sdf)
-         .writeStream.format("memory").queryName("flow_legs_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        legs = spark.table("flow_legs_out").toPandas()
-    finally:
-        q.stop()
-    got = legs.groupby(["fx", "fy", "tx", "ty"]).agg(
-        n_legs=("user_id", "size"),
-        n_users=("user_id", "nunique")).reset_index() \
-        .sort_values(["fx", "fy", "tx", "ty"]).reset_index(drop=True)
-    cols = ["fx", "fy", "tx", "ty", "n_legs", "n_users"]
-    pd.testing.assert_frame_equal(want[cols], got[cols],
-                                  check_dtype=False)
-
-
 def test_roundtrip_counts_oracle_pin(spark, sf_dir):
     """roundtrip_counts left the 50-entry window in round-5 session 12
     (the decoded coordinate-sum law is pinned by donut_roundtrip /

@@ -65,40 +65,3 @@ def test_transform_mvt_to_mbtiles(spark, tmp_path):
         assert len(ly.features) == 1
         assert V.decode_value(ly.values[ly.features[0].tags[1]])[1] \
             == "street"
-
-
-def test_transform_stream_matches_batch(spark, tmp_path):
-    """stream==batch for the transform pipeline: the same filter +
-    projection over a file stream equals the batch operators row for
-    row, byte for byte."""
-    from vtzero_spark.engine import exprfilter, propmap, streaming
-
-    schema = "z long, x long, y long, tile_bytes binary"
-    rows = [(z, x, y, bytearray(buf))
-            for (z, x, y), buf in _tileset().items()]
-    src = str(tmp_path / "in")
-    spark.createDataFrame(rows[:1], schema).write.parquet(src + "/f1")
-    spark.createDataFrame(rows[1:], schema).write.parquet(src + "/f2")
-
-    sdf = spark.readStream.schema(
-        spark.read.parquet(src + "/*").schema
-    ).option("maxFilesPerTrigger", 1).parquet(src + "/*")
-    out = streaming.transform_stream(
-        sdf, filt=["==", "class", "street"], drop=["name"])
-    q = out.writeStream.format("memory").queryName("xform") \
-        .outputMode("append").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {(r.z, r.x, r.y): bytes(r.tile_bytes)
-           for r in spark.sql("SELECT * FROM xform").collect()}
-
-    batch = propmap.remap_properties(
-        exprfilter.filter_tiles_expr(
-            spark.createDataFrame(rows, schema),
-            ["==", "class", "street"]),
-        drop=["name"])
-    want = {(r.z, r.x, r.y): bytes(r.tile_bytes)
-            for r in batch.collect()}
-    assert got == want and len(want) == 3

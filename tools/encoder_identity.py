@@ -189,8 +189,10 @@ def _encode_cases(res: dict, spark, sf_dir: str) -> None:
     images = synth.images(spark, sf_dir)
     assigned = tiling.assign_tiles(images, zoom=ZOOM, extent=EXTENT, buffer=0)
     region = [("region", 1, "region")]
-    for name in ("rect", "path", "donut"):
-        f = getattr(geomops, f"{name}_stream_features")(assigned)
+    for name, make in (("rect", geomops.rect_stream_features),
+                       ("path", geomops.path_stream_features),
+                       ("donut", geomops.donut_stream_features)):
+        f = make(assigned)
         res[f"geom_{name}"] = _tiles(assemble.encode_geom_tiles(f))
         f = f.withColumn("region", F.concat(
             F.lit("R"), (F.col("feature_id") % 7).cast("string")))

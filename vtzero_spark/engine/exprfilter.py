@@ -67,8 +67,6 @@ _COMBINATORS = {"all", "any", "none"}
 
 _GEOM_NAMES = {"Unknown": 0, "Point": 1, "LineString": 2, "Polygon": 3}
 
-_NUM_TAGS = (V.VT_FLOAT, V.VT_DOUBLE, V.VT_INT, V.VT_UINT, V.VT_SINT)
-
 
 def compile_filter(filt) -> tuple:
     """Validate a legacy-filter JSON tree -> immutable AST tuple.

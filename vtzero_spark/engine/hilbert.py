@@ -26,9 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# quadrant number for (rx, ry) = (3*rx) XOR ry — the xy2d walk
-_QUAD = {(0, 0): 0, (0, 1): 1, (1, 0): 3, (1, 1): 2}
-
 
 def with_hilbert(df: DataFrame, x: str, y: str, level: int,
                  out: str = "hd") -> DataFrame:

@@ -353,14 +353,13 @@ def nearest_fence(points: DataFrame, polys: DataFrame) -> DataFrame:
     smallest pid.
 
     Scale shape: the fence table is collected (bounded, same
-    broadcast-dimension assumption as pip_join's broadcast tier and
-    geofence_stream's closure table) into ONE array-of-structs column
-    literal; the argmin is `transform` + `array_min` over struct
-    (d2x2, pid) — lexicographic struct comparison IS the tie rule —
-    so the whole operator is a single zero-join, zero-shuffle
-    projection inside whole-stage codegen. A fence set too large to
-    inline would use knn.py's ring expansion over the cell index
-    instead.
+    broadcast-dimension assumption as pip_join's broadcast tier) into
+    ONE array-of-structs column literal; the argmin is `transform` +
+    `array_min` over struct (d2x2, pid) — lexicographic struct
+    comparison IS the tie rule — so the whole operator is a single
+    zero-join, zero-shuffle projection inside whole-stage codegen. A
+    fence set too large to inline would use knn.py's ring expansion
+    over the cell index instead.
     """
     rows = polys.select("pid", "cx", "cy", "r").collect()
     if not rows:

@@ -35,7 +35,6 @@ from __future__ import annotations
 from collections import Counter
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -44,8 +43,6 @@ from pyspark.sql import functions as F
 from ..mvt import geometry as G
 from ..mvt import tile as T
 from ..mvt.errors import MVTError
-
-LINT_SCHEMA = "z long, x long, y long, check string, severity int, n long"
 
 # stable check keys (golden-pinned in tests/test_lint.py)
 FATAL_PARSE = "fatal_parse"

@@ -1,47 +1,19 @@
-"""Sessionization over the events table — batch (oracle-matched) and
-custom stateful streaming (applyInPandasWithState).
+"""Sessionization over the events table (oracle-matched).
 
-The reference has no streaming/state (SURVEY §2.10); this is the
-engine-side "custom stateful operator" surface the north_star calls
-for. Semantics: per user, events sorted by (ts, event_id) split into
-sessions at gaps > ``gap_minutes``; a session reports its event count,
-first/last timestamps (epoch seconds) and value sum.
+The reference has no event-time or state concept (SURVEY §2.10); this
+is engine-side surface. Semantics: per user, events sorted by
+(ts, event_id) split into sessions at gaps > ``gap_minutes``; a
+session reports its event count, first/last timestamps (epoch seconds)
+and value sum.
 
-Batch = two window functions (lag + running sum of gap flags) — pure
-Catalyst, one shuffle on user_id. Streaming = grouped state per user:
-closed sessions are emitted as soon as a later event proves the gap;
-the open tail session lives in state (flushed by timeout in a real
-deployment; the test compares closed sessions to batch)."""
+Two window functions (lag + running sum of gap flags) — pure Catalyst,
+one shuffle on user_id."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType, LongType, StructField, StructType, TimestampType,
-)
 from pyspark.sql.window import Window
-
-SESSION_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_id", LongType()),
-    StructField("n_events", LongType()),
-    StructField("first_ts", LongType()),
-    StructField("last_ts", LongType()),
-    StructField("value_sum", DoubleType()),
-])
-
-_STATE_SCHEMA = StructType([
-    StructField("session_id", LongType()),
-    StructField("start_ts", LongType()),
-    StructField("last_ts", LongType()),
-    StructField("n_events", LongType()),
-    StructField("value_sum", DoubleType()),
-])
 
 
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
@@ -90,110 +62,3 @@ SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
        CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
 FROM g GROUP BY user_id, session_id
 """
-
-
-def sessionize_native(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Built-in F.session_window form of sessionize — Catalyst's native
-    gap-session operator instead of the two analytic windows. Spark's
-    session end is INCLUSIVE (an event exactly gap seconds after the
-    last one still joins the session), which is precisely the oracle's
-    strictly-greater split rule, so the duration is the gap itself.
-    session_id is renumbered 0..n-1 per user by session start to match
-    the oracle's ordering exactly."""
-    gap = gap_minutes * 60
-    # truncate to whole seconds first: the gap comparison must run on
-    # the same floor(epoch) values the analytic form and the oracle
-    # use, or fractional sub-second offsets flip boundary sessions
-    ev = events.withColumn(
-        "_tsec", F.timestamp_seconds(F.unix_timestamp("ts")))
-    agg = ev.groupBy(
-        "user_id",
-        F.session_window("_tsec", f"{gap} seconds").alias("w"),
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.min(F.unix_timestamp("ts")).alias("first_ts"),
-        F.max(F.unix_timestamp("ts")).alias("last_ts"),
-        F.sum("value").alias("value_sum"),
-        F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("w.start"))
-    return agg.withColumn(
-        "session_id", (F.row_number().over(w) - 1).cast("long")
-    ).select("user_id", "session_id", "n_events", "first_ts", "last_ts",
-             "value_sum", "value_cents")
-
-
-def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Stateful streaming sessionization: per-user GroupState holds the
-    open session; every event either extends it or closes it (emitting
-    the closed session) and starts a new one."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap = gap_minutes * 60
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            sid, start, last, n, vsum = state.get
-        else:
-            sid, start, last, n, vsum = -1, None, None, 0, 0.0
-        out = []
-        # a user's events may span multiple Arrow batches; concatenate
-        # before the single global sort or events can be replayed out of
-        # time order (wrong session splits vs the batch-twin oracle)
-        chunks = list(pdfs)
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(["ts", "event_id"], kind="stable")
-            for ts, val in zip(pdf["ts"].astype("int64") // 10**9, pdf["value"]):
-                ts = int(ts)
-                if start is None:
-                    sid, start, last, n, vsum = sid + 1, ts, ts, 1, float(val)
-                elif ts - last > gap:
-                    out.append((user_id, sid, n, start, last, vsum))
-                    sid, start, last, n, vsum = sid + 1, ts, ts, 1, float(val)
-                else:
-                    last, n, vsum = ts, n + 1, vsum + float(val)
-        state.update((sid, start, last, n, vsum))
-        yield pd.DataFrame(
-            out, columns=["user_id", "session_id", "n_events",
-                          "first_ts", "last_ts", "value_sum"])
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn, SESSION_SCHEMA, _STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout)
-
-
-def sessionize_stream_native(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark_delay: str = "10 seconds",
-) -> DataFrame:
-    """STREAMING twin of sessionize_native: the built-in
-    ``session_window`` gap-session operator run inside Structured
-    Streaming. Spark's state store holds open session fragments, merges
-    them across micro-batches, and emits a session in append mode once
-    the watermark passes its end — the fully declarative scale path (no
-    custom state schema, state pruned by the watermark, same inclusive
-    gap semantics as the batch form).
-
-    Append mode cannot renumber sessions per user (``row_number`` needs
-    a complete partition), so the output carries no ``session_id``;
-    sessions are identified by (user_id, first_ts). ``value_cents``
-    (exact integer cents) rides along like the batch twin so equality
-    checks don't depend on float summation order."""
-    gap = gap_minutes * 60
-    ev = events.withColumn(
-        "_tsec", F.timestamp_seconds(F.unix_timestamp("ts"))
-    ).withWatermark("_tsec", watermark_delay)
-    return ev.groupBy(
-        "user_id",
-        F.session_window("_tsec", f"{gap} seconds").alias("w"),
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.min(F.unix_timestamp("ts")).alias("first_ts"),
-        F.max(F.unix_timestamp("ts")).alias("last_ts"),
-        F.sum("value").alias("value_sum"),
-        F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
-    ).select("user_id", "n_events", "first_ts", "last_ts",
-             "value_sum", "value_cents")

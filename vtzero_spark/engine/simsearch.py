@@ -4,9 +4,9 @@ Two tiers per the training-pipeline requirement:
 - exact brute-force top-k on integer-quantized vectors (oracle-exact:
   floor(x*1024) quantization makes Spark and DuckDB agree bit-for-bit,
   no FP summation-order hazards);
-- LSH sign-bucketed variants as the scale path (bucket prune, then
-  exact refine within buckets) plus a true-cosine vectorized pandas
-  UDF path for float-precision ranking.
+- approximate scale paths: LSH sign buckets (bucket prune, then exact
+  refine within buckets), IVF (probe the nearest trained cells) and
+  IVF-PQ (probe cells, scan product-quantized codes, exact re-rank).
 """
 
 from __future__ import annotations
@@ -231,7 +231,7 @@ def ivf_train(q: DataFrame, init: np.ndarray, iters: int = 2) -> np.ndarray:
 
 # codebook caches: (data identity, train params) -> trained centroids.
 # Training is a pure function of the input data + params, so repeated
-# ivf_topk / pq_topk calls over the same table (the serving pattern —
+# ivf_topk / ivfpq_topk calls over the same table (the serving pattern —
 # a bench loop, a query service) skip the Lloyd jobs entirely; the
 # entry is ncentroids x dim floats, driver-resident by design. The
 # data identity is the logical plan's semantic hash plus (path, size,
@@ -381,54 +381,6 @@ def ivf_topk(
         q.unpersist(blocking=False)
 
 
-# ------------------------------------------------- float cosine (UDF path)
-
-def cosine_topk_udf(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
-    """True float cosine top-k via a vectorized numpy pandas UDF: the
-    query matrix rides along as a broadcast literal inside the closure;
-    each Arrow batch does one (batch x dim) @ (dim x nq) matmul. This is
-    the high-throughput path when exactness-vs-oracle isn't required."""
-    qrows = (
-        emb.where(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            cos = (mat @ qmat.T) / norms[:, None] / qnorm[None, :]
-            vec_ids = pdf["vec_id"].to_numpy(np.int64)
-            recs = []
-            for j, qid in enumerate(qids):
-                mask = vec_ids != qid
-                order = np.lexsort((vec_ids[mask], -cos[mask, j]))[:k]
-                sel = np.flatnonzero(mask)[order]
-                for rank, idx in enumerate(sel):
-                    recs.append({"qid": int(qid), "vec_id": int(vec_ids[idx]),
-                                 "cosine": float(cos[idx, j]), "rank": rank + 1})
-            yield pd.DataFrame(recs, columns=["qid", "vec_id", "cosine", "rank"])
-
-    from .textops import _spread
-
-    partial = _spread(emb.select("vec_id", "embedding")).mapInPandas(
-        batch_fn, schema="qid long, vec_id long, cosine double, rank int"
-    )
-    # per-batch top-k -> global top-k (classic two-phase exact top-k)
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        partial.withColumn("grank", F.row_number().over(w))
-        .where(F.col("grank") <= k)
-        .select("qid", "vec_id", "cosine", F.col("grank").alias("rank"))
-    )
-
-
 # ------------------------------------------------------------ PQ path
 
 _PQ_CACHE: dict[tuple, np.ndarray] = {}
@@ -535,106 +487,6 @@ def _pq_encode_q(qdf: DataFrame, codebooks: np.ndarray) -> DataFrame:
         fn, schema="vec_id long, codes array<long>")
 
 
-def pq_topk(
-    emb: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    overfetch: int = 8,
-    train_iters: int = 2,
-    codebooks: np.ndarray | None = None,
-) -> DataFrame:
-    """PQ-compressed approximate top-k with exact re-rank — the third
-    ANN tier (brute force -> IVF -> PQ): the scan reads m-code rows
-    (dim/m-fold narrower than the vectors), computes asymmetric
-    distances by summing per-query lookup tables (one m x ksub LUT per
-    query, built driver-side from the tiny query set), keeps the
-    k*overfetch best candidates per query partial-topk-first (no
-    global sort of scan rows), then re-ranks ONLY those candidates
-    exactly against the true vectors — same final total order as
-    ann_topk whenever the true top-k survive the overfetch.
-
-    Codebooks: pass pq_train output, or let the module cache key them
-    by the input's data identity (training runs at most once per
-    data+params per session, as in ivf_topk).
-    Compose with IVF by bucketing the codes
-    table on the coarse cell — the scan then touches nprobe cells of
-    m-code rows, the standard IVF-PQ layout."""
-    key = None
-    if codebooks is None:
-        key = _cache_key(emb, "pq", m, ksub, train_iters, n_queries)
-        if key is not None:
-            codebooks = _PQ_CACHE.get(key)
-    if codebooks is None:
-        codebooks = pq_train(emb, m=m, ksub=ksub,
-                             train_iters=train_iters, n_queries=n_queries)
-        if key is not None:
-            _cache_put(_PQ_CACHE, key, codebooks)
-    C = codebooks
-    _, _, dsub = C.shape
-
-    from .textops import _spread
-
-    q = _spread(quantized(emb)).persist()
-    try:
-        q_rows = q.where(F.col("vec_id") < n_queries) \
-            .select("vec_id", "q").collect()
-        qmat = np.array(
-            [r["q"] for r in sorted(q_rows, key=lambda r: r["vec_id"])],
-            dtype=np.float64).reshape(len(q_rows), m, dsub)
-        # per-query LUT: distance from query subvector to every
-        # sub-centroid — (nq, m, ksub), rides in the closure
-        lut = ((qmat[:, :, None, :] - C[None, :, :, :]) ** 2).sum(-1)
-        nq = lut.shape[0]
-        fetch = k * overfetch
-
-        codes = _pq_encode_q(q, C)
-
-        def adc_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            """Per-batch ADC + partial top-fetch per query: emits at
-            most nq*fetch rows per batch regardless of batch size."""
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cd = np.array(pdf["codes"].tolist(), np.int64)  # (n, m)
-                vid = pdf["vec_id"].to_numpy(np.int64)
-                # dist[qi, row] = sum_s lut[qi, s, cd[row, s]]
-                d = lut[:, np.arange(m)[None, :], cd].sum(-1)  # (nq, n)
-                rows = []
-                for qi in range(nq):
-                    mask = vid != qi
-                    dv, vv = d[qi][mask], vid[mask]
-                    top = np.argsort(dv, kind="stable")[:fetch]
-                    rows.append(pd.DataFrame({
-                        "qid": qi, "vec_id": vv[top], "adc": dv[top]}))
-                yield pd.concat(rows, ignore_index=True)
-
-        cand = codes.mapInPandas(
-            adc_scan, schema="qid long, vec_id long, adc double")
-        w_adc = Window.partitionBy("qid").orderBy("adc", "vec_id")
-        short = cand.withColumn("_r", F.row_number().over(w_adc)) \
-            .where(F.col("_r") <= fetch).drop("_r", "adc")
-
-        # exact re-rank of the surviving candidates only
-        qq = q.sparkSession.createDataFrame(
-            [(int(r["vec_id"]), list(r["q"])) for r in q_rows],
-            "qid long, qv array<bigint>")
-        exact = short.join(q, "vec_id").join(F.broadcast(qq), "qid") \
-            .withColumn(
-                "dist_q",
-                F.expr("aggregate(zip_with(q, qv, (a, b) -> (a-b)*(a-b)),"
-                       " CAST(0 AS BIGINT), (acc, v) -> acc + v)"))
-        w = Window.partitionBy("qid").orderBy("dist_q", "vec_id")
-        return (
-            exact.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("qid", "vec_id", "dist_q", "rank")
-        )
-    finally:
-        q.unpersist(blocking=False)
-
-
 def ivfpq_topk(
     emb: DataFrame,
     n_queries: int = 8,
@@ -655,7 +507,7 @@ def ivfpq_topk(
     rows with its lookup table, (c) exactly re-ranks the shortlist
     against the true vectors. The scan thus touches
     ~nprobe/ncentroids of the data AND reads dim/m-fold less per row
-    — multiplicative with pq_topk's compression. Both codebooks come
+    — multiplicative with the PQ compression. Both codebooks come
     from the existing distributed trainers (ivf_train via ivf_build,
     pq_train) and cache the same way."""
     from .textops import _spread

@@ -23,7 +23,6 @@ ZOOM = 4
 EXTENT = 4096
 WORLD = (1 << ZOOM) * EXTENT  # 65536
 ZOOM_R = 6
-RASTER_TILE = WORLD >> ZOOM_R  # 1024
 
 # LCG multipliers (public-domain constants: glibc / MS / Park-Miller)
 _AX, _BX = 48271, 11

@@ -217,7 +217,6 @@ class SnapshotTable:
 
     def _commit(self, new_files: list[dict], operation: str,
                 replace: bool, removed_paths: set[str] | None = None,
-                props: dict | None = None,
                 new_delete_files: list[dict] | None = None,
                 required_paths: set[str] | None = None,
                 known_delete_paths: set[str] | None = None,
@@ -296,8 +295,6 @@ class SnapshotTable:
                 snap["delete_files"] = dels
             if removed_paths:
                 snap["removed"] = sorted(removed_paths)
-            if props:
-                snap["props"] = props
             try:
                 with open(_version_file(self.path, head + 1), "x") as f:
                     json.dump(snap, f)
@@ -308,33 +305,14 @@ class SnapshotTable:
             f"lost {max_retries} commit races at {self.path}")
 
     def append(self, df: DataFrame,
-               stats_cols: list[str] | None = None,
-               props: dict | None = None) -> int:
+               stats_cols: list[str] | None = None) -> int:
         """Stage df as new data files and commit them on top of the
         current head. Returns the committed version. ``stats_cols``
         records per-file min/max for those columns in the snapshot
         metadata (see ``_stage``), enabling ``read(where=...)`` to
-        prune files without opening them. ``props`` lands verbatim in
-        the snapshot (e.g. a streaming sink's batch-id marker)."""
+        prune files without opening them."""
         return self._commit(self._stage(df, stats_cols), "append",
-                            replace=False, props=props)
-
-    def last_stream_batch(self, query_name: str) -> int | None:
-        """Newest committed stream_batch_id for ``query_name`` across
-        retained snapshots — the replay-dedupe marker a foreachBatch
-        sink checks before re-committing a micro-batch (Iceberg's
-        spark.streaming query-id/batch-id snapshot properties).
-        Returns None if no retained commit carries the marker; expired
-        snapshots lose theirs, so keep_last must cover the restart
-        horizon (documented in streaming.table_batch_sink)."""
-        names = sorted(n for n in os.listdir(_meta_dir(self.path))
-                       if n.startswith("v") and n.endswith(".json"))
-        for name in reversed(names):  # newest first, one read each
-            with open(os.path.join(_meta_dir(self.path), name)) as f:
-                p = json.load(f).get("props") or {}
-            if p.get("stream_query") == query_name:
-                return int(p["stream_batch_id"])
-        return None
+                            replace=False)
 
     def overwrite(self, df: DataFrame,
                   stats_cols: list[str] | None = None) -> int:

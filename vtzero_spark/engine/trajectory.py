@@ -1,7 +1,7 @@
 """Per-entity trajectory assembly and exact-integer track statistics.
 
 The ST_MakeLine / MovingPandas surface of the engine: the events
-stream carries per-user timestamped observations; planting each event
+table carries per-user timestamped observations; planting each event
 at a deterministic integer position (a per-user anchor plus a bounded
 per-event offset — a synthetic GPS track, derived by the same pure
 LCG column math as synth.images so the DuckDB oracle reproduces it
@@ -25,8 +25,7 @@ here except the ordered lag is monoidal (sums, min/max, bbox), and
 the lag itself only couples ADJACENT points, so the mitigation is
 range-chunking a hot user's track by time and merging chunk results
 (the chunk boundary contributes one stitching leg computed from the
-per-chunk first/last points). The chunked merge is exactly how the
-streaming twin would maintain state under a watermark.
+per-chunk first/last points).
 
 Reference analog: none in vtzero (batch tile codec only) — this is
 north_star-side trajectory support over the same integer world model
@@ -34,11 +33,6 @@ north_star-side trajectory support over the same integer world model
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -222,44 +216,6 @@ GROUP BY fx, fy, tx, ty
 """
 
 
-def flow_legs_stream(points: DataFrame, zoom: int | None = None) -> DataFrame:
-    """Streaming front half of tile_flows: per-user GroupState holds
-    the last tile visited (2 int64s); each micro-batch emits one row
-    per boundary-crossing leg, INCLUDING the stitch from the stored
-    state to the batch's first point. Compose with a streaming
-    groupBy('fx','fy','tx','ty').count() for live flow totals (exact
-    n_legs; distinct users over a stream needs
-    approx_count_distinct — the batch twin stays the exact form).
-    Same cross-batch ordering contract as track_stats_stream."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if zoom is None:
-        zoom = synth.ZOOM
-    tw = synth.WORLD >> zoom
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (user_id,) = key
-        ltx, lty = state.get if state.exists else (None, None)
-        chunks = [c for c in pdfs if len(c)]
-        rows = []
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(["ts", "event_id"], kind="stable")
-            txs = (pdf["wx"].to_numpy("int64") // tw)
-            tys = (pdf["wy"].to_numpy("int64") // tw)
-            for tx, ty in zip(txs.tolist(), tys.tolist()):
-                if ltx is not None and (tx != ltx or ty != lty):
-                    rows.append((user_id, ltx, lty, tx, ty))
-                ltx, lty = tx, ty
-            state.update((ltx, lty))
-        yield pd.DataFrame(
-            rows, columns=["user_id", "fx", "fy", "tx", "ty"])
-
-    return points.groupBy("user_id").applyInPandasWithState(
-        fn, "user_id long, fx long, fy long, tx long, ty long",
-        "ltx long, lty long", "append", GroupStateTimeout.NoTimeout)
-
-
 def track_stops(points: DataFrame, r2: int = 400,
                 min_duration_s: int = 1800) -> DataFrame:
     """Stay-point (stop) detection — the trajectory-mining step that
@@ -326,159 +282,6 @@ GROUP BY user_id, run_id
 HAVING count(*) >= 2
    AND max(floor(epoch(ts))) - min(floor(epoch(ts))) >= {min_duration_s}
 """
-
-
-def track_stops_stream(points: DataFrame, r2: int = 400,
-                       min_duration_s: int = 1800) -> DataFrame:
-    """Streaming twin of track_stops — the sessionize of SPACE: the
-    per-user GroupState is the OPEN run (anchor continuation: last
-    point, run counter, open run's count/time-span/coordinate sums —
-    8 int64s). A fast leg closes the run, emitting it iff it
-    qualifies (>= 2 points, >= min_duration_s), and opens the next;
-    run ids match the batch form's cumulative fast-leg count exactly,
-    so closed stops equal batch track_stops minus each user's open
-    (last) run. Same cross-batch ordering contract as the other
-    trajectory streams."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            lx, ly, rid, n, fts, lts, sx, sy = state.get
-        else:
-            lx = ly = None
-            rid, n, fts, lts, sx, sy = 0, 0, 0, 0, 0, 0
-        out = []
-
-        def close():
-            if n >= 2 and lts - fts >= min_duration_s:
-                out.append((user_id, rid, n, fts, lts, sx, sy))
-
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(["ts", "event_id"], kind="stable")
-            xs = pdf["wx"].to_numpy("int64")
-            ys = pdf["wy"].to_numpy("int64")
-            tss = (pdf["ts"].astype("int64") // 10**9).to_numpy("int64")
-            for x, y, t in zip(xs.tolist(), ys.tolist(), tss.tolist()):
-                dx = None if lx is None else x - lx
-                fast = dx is None or dx * dx + (y - ly) * (y - ly) > r2
-                if fast:
-                    close()
-                    rid += 1
-                    n, fts, lts, sx, sy = 1, t, t, x, y
-                else:
-                    n += 1
-                    lts = t
-                    sx += x
-                    sy += y
-                lx, ly = x, y
-            state.update((lx, ly, rid, n, fts, lts, sx, sy))
-        yield pd.DataFrame(
-            out, columns=["user_id", "run_id", "n_points",
-                          "first_ts", "last_ts", "sum_x", "sum_y"])
-
-    return points.groupBy("user_id").applyInPandasWithState(
-        fn,
-        ("user_id long, run_id long, n_points long, first_ts long, "
-         "last_ts long, sum_x long, sum_y long"),
-        ("lx long, ly long, rid long, n long, fts long, lts long, "
-         "sx long, sy long"),
-        "append", GroupStateTimeout.NoTimeout)
-
-
-_TRACK_STATE_SCHEMA = (
-    "n_points long, path_l1 long, path_d2 long, max_leg_d2 long, "
-    "min_x long, max_x long, min_y long, max_y long, "
-    "first_ts long, last_ts long, first_wx long, first_wy long, "
-    "last_wx long, last_wy long"
-)
-
-_TRACK_OUT_SCHEMA = (
-    "user_id long, n_points long, path_l1 long, path_d2 long, "
-    "max_leg_d2 long, min_x long, max_x long, min_y long, max_y long, "
-    "first_ts long, last_ts long, net_d2 long"
-)
-
-
-def track_stats_stream(points: DataFrame) -> DataFrame:
-    """Streaming twin of track_stats: per-user GroupState IS the
-    chunk-merge monoid tested in test_trajectory.py — it holds the
-    running metrics plus the track's first and LAST points, and each
-    micro-batch folds in as one chunk joined by a single stitching
-    leg. Emits the updated track row per user per batch ("update"
-    mode; the latest row per user is the track so far).
-
-    Ordering contract: rows WITHIN a micro-batch are sorted here
-    before folding; ACROSS batches the source must deliver each
-    user's points in time order (the same contract the chunk merge
-    states — a Kafka key-partitioned feed or time-ordered files).
-    State is 14 int64s per user, independent of track length."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            (n, l1, d2, mx, minx, maxx, miny, maxy,
-             fts, lts, fx, fy, lx, ly) = state.get
-        else:
-            n = 0
-            l1 = d2 = mx = 0
-            minx = maxx = miny = maxy = fx = fy = lx = ly = None
-            fts = lts = None
-        # guard empty Arrow batches (a key can be invoked with no rows);
-        # folding an empty chunk must be the identity
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(["ts", "event_id"], kind="stable")
-            xs = pdf["wx"].to_numpy("int64")
-            ys = pdf["wy"].to_numpy("int64")
-            tss = (pdf["ts"].astype("int64") // 10**9).to_numpy("int64")
-            dxs = np.diff(xs)
-            dys = np.diff(ys)
-            legs = dxs * dxs + dys * dys
-            cl1 = int(np.abs(dxs).sum() + np.abs(dys).sum())
-            cd2 = int(legs.sum())
-            cmx = int(legs.max()) if legs.size else 0
-            if n == 0:
-                n = len(xs)
-                l1, d2, mx = cl1, cd2, cmx
-                minx, maxx = int(xs.min()), int(xs.max())
-                miny, maxy = int(ys.min()), int(ys.max())
-                fts, lts = int(tss[0]), int(tss[-1])
-                fx, fy = int(xs[0]), int(ys[0])
-            else:
-                sdx = int(xs[0]) - lx
-                sdy = int(ys[0]) - ly
-                stitch = sdx * sdx + sdy * sdy
-                n += len(xs)
-                l1 += cl1 + abs(sdx) + abs(sdy)
-                d2 += cd2 + stitch
-                mx = max(mx, cmx, stitch)
-                minx = min(minx, int(xs.min()))
-                maxx = max(maxx, int(xs.max()))
-                miny = min(miny, int(ys.min()))
-                maxy = max(maxy, int(ys.max()))
-                lts = int(tss[-1])
-            lx, ly = int(xs[-1]), int(ys[-1])
-        if n == 0:       # key invoked with no rows and no prior state
-            return
-        state.update((n, l1, d2, mx, minx, maxx, miny, maxy,
-                      fts, lts, fx, fy, lx, ly))
-        ndx, ndy = lx - fx, ly - fy
-        yield pd.DataFrame([{
-            "user_id": user_id, "n_points": n, "path_l1": l1,
-            "path_d2": d2, "max_leg_d2": mx, "min_x": minx,
-            "max_x": maxx, "min_y": miny, "max_y": maxy,
-            "first_ts": fts, "last_ts": lts,
-            "net_d2": ndx * ndx + ndy * ndy,
-        }])
-
-    return points.groupBy("user_id").applyInPandasWithState(
-        fn, _TRACK_OUT_SCHEMA, _TRACK_STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
 
 
 def track_stats_sql(points_cte: str = "pts") -> str:

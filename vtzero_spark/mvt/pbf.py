@@ -23,7 +23,6 @@ WT_LEN = 2
 WT_FIXED32 = 5
 
 _U64 = np.uint64
-_MASK32 = np.uint64(0xFFFFFFFF)
 
 
 # ---------------------------------------------------------------- zigzag
